@@ -15,10 +15,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def canonicalize(edges: DataFrame) -> DataFrame:
-    """Drop nulls + self-loops, deduplicate. Reference: sort+unique ingest
-    (src/bitpack_triangle_count.cpp:34-37) and self-loop drop
-    (src/org_maximal_clique.cpp:20)."""
+def drop_nulls_and_loops(edges: DataFrame) -> DataFrame:
+    """Cast to long, drop null endpoints and self-loops (reference:
+    src/org_maximal_clique.cpp:20) — ``canonicalize`` without its
+    distinct, for callers that deduplicate on their own partitioning."""
     return (
         edges.select(
             F.col("src").cast("long").alias("src"),
@@ -26,8 +26,14 @@ def canonicalize(edges: DataFrame) -> DataFrame:
         )
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))
-        .distinct()
     )
+
+
+def canonicalize(edges: DataFrame) -> DataFrame:
+    """Drop nulls + self-loops, deduplicate. Reference: sort+unique ingest
+    (src/bitpack_triangle_count.cpp:34-37) and self-loop drop
+    (src/org_maximal_clique.cpp:20)."""
+    return drop_nulls_and_loops(edges).distinct()
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -54,14 +60,7 @@ def symmetrize_partitioned(
     so the multi-GB edge side is shuffled once per RUN instead of once
     per ROUND (``symmetrize(canonicalize(e))`` + per-round joins was
     re-exchanging it every iteration)."""
-    e = (
-        edges.select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .where(F.col("src") != F.col("dst"))
-    )
+    e = drop_nulls_and_loops(edges)
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     und = e.union(rev)
     if self_pairs is not None:

@@ -1,7 +1,7 @@
 """Shared preparation for iterative ship-vertex-state algorithms (label
 propagation, min-label connected components) — the same join-strategy
-machinery ``pagerank_df_prepare`` uses (operators/pagerank.py:106-166),
-extracted so every per-round loop gets it:
+machinery ``pagerank_df_prepare`` (operators/pagerank.py) uses, extracted
+so every per-round loop gets it:
 
 - While the vertex-state vector fits in executor memory it is BROADCAST
   into each round's join and the symmetrized edge frame is cached
@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.operators.edges import (
+    drop_nulls_and_loops,
     symmetrize_partitioned,
     vertices,
 )
@@ -83,15 +84,7 @@ def prepare_undirected(
     # save the repeated input-plan scans was MEASURED SLOWER end-to-end —
     # the cache materialization barrier cost more than the parallel
     # re-scans it saved — so the uncached shape stands.)
-    filtered = (
-        edges.select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .where(F.col("src") != F.col("dst"))
-    )
-    verts = vertices(filtered).persist()
+    verts = vertices(drop_nulls_and_loops(edges)).persist()
     n = verts.count()
     if broadcast_labels is None:
         broadcast_labels = n <= BROADCAST_STATE_MAX_VERTICES

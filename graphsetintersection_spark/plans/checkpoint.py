@@ -23,6 +23,9 @@ configured Iceberg catalog, for clusters that carry the runtime jar):
         {run_id, algorithm, iteration, parent_iteration, params,
          metrics: {...user metrics...},
          partitions: [{partition_id, rows}, ...]}
+    A line commits once its newline is written: an unterminated last line
+    is a commit cut short by a crash; it is ignored, and the next commit
+    cuts it off.
 
 With Iceberg, snapshots live at ``<table_prefix>_iter_NNNNN`` and Iceberg
 keeps its own table-level manifests; the run-level MANIFEST.jsonl (lineage
@@ -63,10 +66,16 @@ class CheckpointManager:
 
     # -- manifest ----------------------------------------------------------
     def committed(self) -> list[dict]:
+        """The manifest entries, in commit order. A crash during a
+        manifest append leaves an unterminated final line: that iteration
+        never committed and is skipped. A bad line anywhere else is
+        corruption and raises."""
         if not os.path.exists(self.manifest_path):
             return []
-        with open(self.manifest_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        with open(self.manifest_path, "rb") as f:
+            lines = f.read().split(b"\n")
+        lines.pop()  # b"", or the unterminated line of a torn append
+        return [json.loads(line) for line in lines if line.strip()]
 
     def latest_iteration(self) -> int | None:
         entries = self.committed()
@@ -105,11 +114,6 @@ class CheckpointManager:
         metrics, append the manifest line (commit point), and return the
         read-back DataFrame (fresh lineage — plan growth truncated)."""
         back = self._write_snapshot(df, iteration)
-        part_rows = (
-            back.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        )
         entry = {
             "run_id": self.run_id,
             "algorithm": self.algorithm,
@@ -117,15 +121,41 @@ class CheckpointManager:
             "parent_iteration": iteration - 1 if iteration > 0 else None,
             "params": self.params,
             "metrics": metrics or {},
-            "partitions": sorted(
-                ({"partition_id": r["partition_id"], "rows": r["rows"]}
-                 for r in part_rows),
-                key=lambda d: d["partition_id"],
-            ),
+            "partitions": self._partition_rows(back, iteration),
         }
-        with open(self.manifest_path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        with open(self.manifest_path, "a+b") as f:
+            # drop a torn final line (crash mid-append) so this entry
+            # starts a line of its own
+            f.seek(0)
+            data = f.read()
+            if data and not data.endswith(b"\n"):
+                f.truncate(data.rfind(b"\n") + 1)
+            f.write(json.dumps(entry).encode() + b"\n")
         return back
+
+    def _partition_rows(self, back: DataFrame, iteration: int) -> list[dict]:
+        """Rows per written partition. Parquet snapshots read them from the
+        files' footers on the driver (part-NNNNN is the writing task's
+        partition), which runs no Spark job; Iceberg tables are counted."""
+        if self.storage == "iceberg":
+            rows = (
+                back.groupBy(F.spark_partition_id().alias("partition_id"))
+                .agg(F.count("*").alias("rows"))
+                .collect()
+            )
+            parts = [(r["partition_id"], r["rows"]) for r in rows]
+        else:
+            import pyarrow.parquet as pq
+
+            path = self._snapshot_path(iteration)
+            counts: dict[int, int] = {}  # a task may split its output
+            for name in os.listdir(path):
+                if name.startswith("part-") and name.endswith(".parquet"):
+                    meta = pq.ParquetFile(os.path.join(path, name)).metadata
+                    pid = int(name.split("-")[1])
+                    counts[pid] = counts.get(pid, 0) + meta.num_rows
+            parts = counts.items()
+        return [{"partition_id": p, "rows": r} for p, r in sorted(parts)]
 
     def restore(self, spark: SparkSession) -> tuple[int, DataFrame] | None:
         """(iteration, snapshot) of the last committed iteration, or None."""

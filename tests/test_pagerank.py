@@ -1,8 +1,13 @@
 """PageRank vs dense numpy power-iteration oracle (allclose 1e-6 — the
 north rule's parity criterion), plus checkpoint/resume equivalence."""
 
+import json
+import os
+import shutil
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import random_graph, undirected_simple
 
@@ -253,3 +258,172 @@ def test_ppr_shuffle_salted_path_parity(spark, tiny_graph):
         broadcast_ranks=False, salt_hubs=4,
     )
     _assert_allclose(res.ranks, numpy_ppr(pairs, seeds_list, iters=20))
+
+
+# ---------------------------------------------------------------------------
+# the prepare's shape, parity with the previous prepare, torn manifests
+# ---------------------------------------------------------------------------
+
+REF_DIR = os.path.join(os.path.dirname(__file__), "data", "pagerank_reference")
+
+
+def _load_reference():
+    """Ranks recorded with the engine at git 35dc669, whose broadcast
+    prepare joined the out-degree onto every edge row (8 iterations,
+    alpha 0.85, the session of ``conftest``)."""
+    with open(os.path.join(REF_DIR, "ranks.json")) as f:
+        return {k: {int(v): r for v, r in d.items()} for k, d in json.load(f).items()}
+
+
+def _assert_matches(result_df, expected, atol=1e-15):
+    got = {row["v"]: row["rank"] for row in result_df.collect()}
+    assert set(got) == set(expected)
+    assert max(abs(got[v] - expected[v]) for v in expected) <= atol
+
+
+@pytest.mark.parametrize("case", ["pagerank", "dedup_false", "shuffle",
+                                  "shuffle_salted", "ppr"])
+def test_pagerank_matches_previous_prepare(spark, tiny_graph, case):
+    from graphsetintersection_spark.operators.pagerank import (
+        personalized_pagerank,
+    )
+
+    pairs, df = tiny_graph
+    expected = _load_reference()[case]
+    if case == "dedup_false":
+        # real self-loops and multi-edges stay edges without dedup
+        loops = random_graph(30, 200, seed=7)
+        assert any(u == v for u, v in loops) and len(set(loops)) < len(loops)
+        res = pagerank(spark.createDataFrame(loops, "src long, dst long"),
+                       max_iter=8, tol=None, dedup=False)
+    elif case == "ppr":
+        seeds = sorted({x for e in pairs for x in e})[:3]
+        res = personalized_pagerank(
+            df, spark.createDataFrame([(s,) for s in seeds], "v long"),
+            max_iter=8, tol=None,
+        )
+    else:
+        kw = {"shuffle": {"broadcast_ranks": False},
+              "shuffle_salted": {"broadcast_ranks": False, "salt_hubs": 4},
+              }.get(case, {})
+        res = pagerank(df, max_iter=8, tol=None, **kw)
+    _assert_matches(res.ranks, expected)
+
+
+def test_pagerank_resumes_snapshot_of_previous_prepare(spark, tiny_graph, tmp_path):
+    """A run checkpointed by the previous prepare (its snapshots carry
+    (v, rank, _dang), no out_deg) resumes to the uninterrupted ranks."""
+    _, df = tiny_graph
+    shutil.copytree(os.path.join(REF_DIR, "snapshot"), str(tmp_path),
+                    dirs_exist_ok=True)
+    ck = CheckpointManager(str(tmp_path), "pr-run", "pagerank")
+    assert ck.latest_iteration() == 2
+    res = pagerank(df, max_iter=8, tol=None, checkpointer=ck)
+    _assert_matches(res.ranks, _load_reference()["pagerank"])
+    assert [e["iteration"] for e in ck.committed()] == list(range(8))
+
+
+def test_pagerank_resume_after_torn_manifest(spark, tiny_graph, tmp_path):
+    """A crash during the manifest append leaves an unterminated final
+    line: resume ignores it, re-runs that iteration, and the ranks equal
+    an uninterrupted run's."""
+    _, df = tiny_graph
+    full = {r["v"]: r["rank"] for r in pagerank(df, max_iter=8, tol=None).ranks.collect()}
+    ck = CheckpointManager(str(tmp_path), "pr-torn", "pagerank")
+    pagerank(df, max_iter=5, tol=None, checkpointer=ck)
+    with open(ck.manifest_path, "rb") as f:
+        data = f.read()
+    last = data.rstrip(b"\n").rfind(b"\n") + 1
+    with open(ck.manifest_path, "wb") as f:  # cut the last line in half
+        f.write(data[: last + (len(data) - last) // 2])
+    assert ck.latest_iteration() == 3
+
+    resumed = pagerank(df, max_iter=8, tol=None, checkpointer=ck)
+    got = {r["v"]: r["rank"] for r in resumed.ranks.collect()}
+    assert set(got) == set(full)
+    assert max(abs(got[v] - full[v]) for v in full) <= 1e-12
+    entries = ck.committed()
+    assert [e["iteration"] for e in entries] == list(range(8))
+    # per-partition row counts come from the snapshot files' footers
+    assert all(sum(p["rows"] for p in e["partitions"]) == len(full) for e in entries)
+
+
+def test_manifest_corruption_before_the_last_line_raises(tmp_path):
+    ck = CheckpointManager(str(tmp_path), "bad", "pagerank")
+    line = json.dumps({"iteration": 0, "metrics": {}})
+    with open(ck.manifest_path, "w") as f:
+        f.write(line + "\n" + line[:7] + "\n" + line + "\n")
+    with pytest.raises(json.JSONDecodeError):
+        ck.committed()
+    with open(ck.manifest_path, "w") as f:  # unterminated: not committed
+        f.write(line + "\n" + line)
+    assert [e["iteration"] for e in ck.committed()] == [0]
+
+
+def _stages_of(sc, group):
+    """Completed stages whose job ran under job group ``group``, from the
+    status store (populated with the UI disabled)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    empty = sc._gateway.new_array(sc._gateway.jvm.double, 0)
+    stages = store.stageList(None, False, False, empty, None)
+    out = []
+    for i in range(stages.size()):
+        s = stages.apply(i)
+        d = s.description()
+        if d.isDefined() and d.get() == group and s.status().toString() == "COMPLETE":
+            out.append(s)
+    return out
+
+
+def test_prepare_shuffles_the_edge_table_once(spark):
+    """On an uncached input built by a join, with duplicate edges,
+    self-loops and null ids: the ranks equal the numpy oracle, the input
+    is scanned once, and of the prepare's stages exactly one writes the
+    edge table (at most one shuffle record per input row, plus one self
+    row per vertex); every other stage is a per-vertex aggregate, at most
+    one record per vertex and task."""
+    from graphsetintersection_spark.operators.pagerank import (
+        pagerank_df_iterate,
+        pagerank_df_prepare,
+    )
+
+    sc = spark.sparkContext
+    raw = random_graph(100, 8000, seed=11)
+    raw += [(7, 7), (9, 9), (None, 3), (4, None), (None, None)]
+    ids = {k: 10 * k + 7 for k in range(100)}
+    pairs = [(ids[a], ids[b]) for a, b in raw if a is not None and b is not None]
+    scans = sc.accumulator(0)
+
+    @F.udf("long")
+    def tick(x):
+        scans.add(1)
+        return x
+
+    # broadcast: the input's own join writes no shuffle of its own
+    idmap = F.broadcast(spark.createDataFrame(list(ids.items()), "k long, id long"))
+    edges = (
+        spark.createDataFrame(raw, "a long, b long")
+        .select(tick.asNondeterministic()("a").alias("a"), "b")
+        .join(idmap.toDF("a", "src"), "a", "left")
+        .join(idmap.toDF("b", "dst"), "b", "left")
+        .select("src", "dst")
+    )
+    group = "pagerank-prepare-shape"
+    sc.setJobGroup(group, group)
+    try:
+        prep = pagerank_df_prepare(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    try:
+        assert scans.value == len(raw)
+        assert len(set(pairs) - {(u, u) for u, _ in pairs}) > 10 * prep.n
+        stages = sorted(_stages_of(sc, group), key=lambda s: -s.shuffleWriteRecords())
+        assert stages[0].shuffleWriteRecords() <= len(raw) + prep.n
+        for s in stages[1:]:
+            assert s.shuffleWriteRecords() <= prep.n * s.numTasks()
+        res = pagerank_df_iterate(prep, max_iter=30, tol=None)
+        _assert_allclose(res.ranks, numpy_pagerank(pairs, iters=30))
+    finally:
+        prep.unpersist()
