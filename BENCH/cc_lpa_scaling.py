@@ -81,9 +81,8 @@ edges = spark.read.parquet(%(edges)r)
 t0 = time.perf_counter()
 prep = prepare_undirected(
     edges, broadcast_labels=(None if config == "broadcast" else False))
-und_j, verts, plan = prep.und_j, prep.verts, prep.salt_plan
-bl = prep.broadcast_labels
-assert bl == (config == "broadcast")
+verts, plan = prep.verts, prep.salt_plan
+assert prep.broadcast_labels == (config == "broadcast")
 n_und, n_verts = prep.n_und, prep.n
 prep_secs = round(time.perf_counter() - t0, 2)
 
@@ -97,8 +96,7 @@ res = {"cores": cores, "config": config, "local_dir": %(localdir)r,
 # measured REPEATS times from the SAME input labels so every measurement
 # does identical work (the tc_scaling re-run-the-identical-job method)
 labels0 = verts.select("v", F.col("v").alias("label"))
-labels1 = lpa_round(und_j, labels0, salt_plan=plan, broadcast_labels=bl,
-                    self_rows=prep.self_rows).localCheckpoint(True)
+labels1 = lpa_round(prep, labels0).localCheckpoint(True)
 labels2 = None
 for _ in range(%(rounds)d):
     if labels2 is not None:
@@ -110,8 +108,7 @@ for _ in range(%(rounds)d):
     spark.sparkContext._jvm.System.gc()
     time.sleep(2)
     t0 = time.perf_counter()
-    labels2 = lpa_round(und_j, labels1, salt_plan=plan, broadcast_labels=bl,
-                        self_rows=prep.self_rows).localCheckpoint(True)
+    labels2 = lpa_round(prep, labels1).localCheckpoint(True)
     res["lpa_secs"].append(round(time.perf_counter() - t0, 2))
 res["lpa_distinct"] = labels2.select("label").distinct().count()
 labels1.unpersist(); labels2.unpersist()
@@ -119,8 +116,7 @@ labels1.unpersist(); labels2.unpersist()
 # ---- min-label CC: same shape; per-round cost includes the convergence
 # signature aggregate (one aggregate per round, as in the operator loop)
 comp0 = verts.select("v", F.col("v").alias("component"))
-comp1 = cc_minlabel_round(und_j, comp0, salt_plan=plan, broadcast_labels=bl,
-                          self_rows=prep.self_rows).localCheckpoint(True)
+comp1 = cc_minlabel_round(prep, comp0).localCheckpoint(True)
 sig = content_signature(comp1, "v", "component")
 comp2 = None
 for _ in range(%(rounds)d):
@@ -129,8 +125,7 @@ for _ in range(%(rounds)d):
     spark.sparkContext._jvm.System.gc()
     time.sleep(2)
     t0 = time.perf_counter()
-    comp2 = cc_minlabel_round(und_j, comp1, salt_plan=plan, broadcast_labels=bl,
-                              self_rows=prep.self_rows).localCheckpoint(True)
+    comp2 = cc_minlabel_round(prep, comp1).localCheckpoint(True)
     sig = content_signature(comp2, "v", "component")
     res["cc_secs"].append(round(time.perf_counter() - t0, 2))
 res["cc_distinct"] = comp2.select("component").distinct().count()
@@ -150,8 +145,8 @@ def main():
         sys.argv[2].split(",") if len(sys.argv) > 2 else ["shuffle", "broadcast"]
     )
     # Validate up front: a typo like "bcast" would otherwise silently run
-    # the shuffle path (the worker's bl assert passes with both sides
-    # False) and log results under the bogus label; passes=0 would leave
+    # the shuffle path (the worker's broadcast_labels assert passes with both
+    # sides False) and log results under the bogus label; passes=0 would leave
     # `out` empty and KeyError in the summary loop.
     bad = [c for c in configs if c not in ("shuffle", "broadcast")]
     if bad:

@@ -58,19 +58,6 @@ def _lgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spark_edges(spark, sf_dir, _LGRAPH_EDGES)
 
 
-def _lgraph_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``_lgraph`` in already-canonical form: the SQL emits DISTINCT
-    non-null ``src <> dst`` pairs, so only ``canonicalize``'s long cast is
-    applied here and the downstream operators are told to skip their
-    normalization re-distinct (one full exchange of the derived edge
-    table per query, spent deduplicating an already-distinct set)."""
-    g = _lgraph(spark, sf_dir)
-    return g.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    )
-
-
 def _sgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spark_edges(spark, sf_dir, _SGRAPH_EDGES)
 
@@ -164,11 +151,7 @@ def _q_pagerank(spark, sf_dir):
     from graphsetintersection_spark.operators.pagerank import pagerank
 
     res = pagerank(
-        _lgraph_canonical(spark, sf_dir),
-        alpha=PR_ALPHA,
-        max_iter=PR_ITERS,
-        tol=None,
-        dedup=False,  # the SQL already emits distinct src <> dst pairs
+        _lgraph(spark, sf_dir), alpha=PR_ALPHA, max_iter=PR_ITERS, tol=None
     )
     return res.ranks.select(
         "v", F.round(F.col("rank") * 1e6, 0).cast("long").alias("rank_ppm")
@@ -198,11 +181,10 @@ def _q_personalized_pagerank(spark, sf_dir):
     # materialize the derived graph once: the seed scan and the PageRank
     # prepare otherwise each re-run the lineitem distinct (localCheckpoint
     # blocks are GC-released with the frame)
-    g = _lgraph_canonical(spark, sf_dir).localCheckpoint(eager=True)
+    g = _lgraph(spark, sf_dir).localCheckpoint(eager=True)
     seeds = vertices(g).orderBy("v").limit(PPR_SEEDS)
     res = personalized_pagerank(
-        g, seeds, alpha=PR_ALPHA, max_iter=PR_ITERS, tol=None,
-        dedup=False,  # the SQL already emits distinct src <> dst pairs
+        g, seeds, alpha=PR_ALPHA, max_iter=PR_ITERS, tol=None
     )
     return res.ranks.select(
         "v", F.round(F.col("rank") * 1e6, 0).cast("long").alias("rank_ppm")
@@ -214,12 +196,7 @@ def _q_hits(spark, sf_dir):
     iterations over the link graph."""
     from graphsetintersection_spark.operators.hits import hits
 
-    res = hits(
-        _lgraph_canonical(spark, sf_dir),
-        max_iter=HITS_ITERS,
-        tol=None,
-        pre_canonical=True,  # the SQL already emits distinct src <> dst
-    )
+    res = hits(_lgraph(spark, sf_dir), max_iter=HITS_ITERS, tol=None)
     return res.scores.select(
         "v",
         F.round(F.col("hub") * 1e6, 0).cast("long").alias("hub_ppm"),

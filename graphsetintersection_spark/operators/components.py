@@ -6,9 +6,10 @@ at convergence).
 
 1. ``connected_components_minlabel`` — synchronous min-label propagation:
    each round every vertex takes min(own label, neighbors' labels) over the
-   symmetrized edge set. One shuffle-agg per round; converges in
-   O(diameter) rounds. Web graphs have small effective diameter, and each
-   round is a single map-side-combinable ``min`` aggregate (hub-skew safe).
+   symmetrized edge set, which carries one (v, v) row per vertex, so a
+   round is one state join plus one map-side-combinable ``min`` aggregate
+   (hub-skew safe) that emits every vertex. Converges in O(diameter)
+   rounds; web graphs have small effective diameter.
 
 2. ``connected_components_starcontraction`` — alternating large-star /
    small-star contraction (Kiveris et al., "Connected Components in
@@ -16,7 +17,9 @@ at convergence).
    graph — the scale path for high-diameter graphs. Each round rewrites a
    parent-pointer edge set; both stars are pure groupBy/join dataflow.
 
-Both checkpoint per round via plans.checkpoint and resume mid-algorithm.
+Both checkpoint per round via plans.checkpoint and resume mid-algorithm;
+a durable round is staged in a transient cache, so the convergence
+signature and the commit read it without running it twice.
 Parity of the two implementations is itself a test (the reference's
 Org/BP/Roaring pattern, src/tc.cpp:14-16).
 """
@@ -29,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.operators.edges import canonicalize, symmetrize, vertices
-from graphsetintersection_spark.plans.checkpoint import CheckpointManager
+from graphsetintersection_spark.plans.checkpoint import CheckpointManager, staged
 
 
 @dataclass
@@ -39,59 +42,35 @@ class ComponentsResult:
     converged: bool
 
 
-def cc_minlabel_round(
-    und_j, labels, salt_plan=None, broadcast_labels=False, self_rows=False
-):
-    """One synchronous min-label round over the symmetrized edge set:
-    every vertex takes min(own label, incoming neighbor labels). ``und_j``
-    must carry a ``_hub`` column when ``salt_plan`` is given (mark_hubs).
+def cc_minlabel_round(prep, labels):
+    """One synchronous min-label round over the symmetrized edge set of
+    ``prep`` (operators.iterative.prepare_undirected): every vertex takes
+    min(own label, incoming neighbor labels). The prepared frame carries
+    a synthetic (v, v) row per vertex, so each vertex's OWN component
+    flows through the join and min(own, neighbors) IS the aggregate — the
+    round is join + one aggregation, one output row per vertex.
 
-    min is map-side combinable; with a salt plan, hub dsts pre-combine
-    under salts so no single reducer owns a whole hub (the Zipf-hub
-    shuffle-skew guard shared with PageRank/LPA, plans.skew). With
-    ``broadcast_labels`` (und cached dst-partitioned,
-    operators.iterative.prepare_undirected) the join and the dst-keyed
-    min both run without exchanging the edge frame.
-
-    ``self_rows``: ``und_j`` carries synthetic (v, v) rows (prepare's
-    default), so each vertex's OWN component flows through the join and
-    min(own, neighbors) IS the aggregate — the round is join + one
-    aggregation, no finalize join, one output row per vertex.
-
-    ``und_j`` may be the ``PreparedUnd`` itself — then salt_plan /
-    broadcast_labels / self_rows are taken from it and must not be passed
-    (operators.iterative.resolve_round_args, ADVICE r4 #3)."""
-    from graphsetintersection_spark.operators.iterative import (
-        resolve_round_args,
-        state_join,
-    )
+    min is map-side combinable; with the prep's salt plan, hub dsts
+    pre-combine under salts so no single reducer owns a whole hub (the
+    Zipf-hub shuffle-skew guard shared with PageRank/LPA, plans.skew). On
+    the broadcast path (und cached dst-partitioned) the join and the
+    dst-keyed min both run without exchanging the edge frame."""
+    from graphsetintersection_spark.operators.iterative import state_join
     from graphsetintersection_spark.plans.skew import two_stage_agg
 
-    und_j, salt_plan, broadcast_labels, self_rows = resolve_round_args(
-        und_j, salt_plan, broadcast_labels, self_rows
-    )
-    joined = state_join(und_j, labels, broadcast_labels)
-    if salt_plan is not None:
-        nbr_min = two_stage_agg(
+    joined = state_join(prep, labels)
+    if prep.salt_plan is not None:
+        return two_stage_agg(
             joined.withColumnRenamed("dst", "v"),
             ["v"],
             F.min("component"),
             F.min,
             salt_from="src",
-            salts=salt_plan.salts,
-            out_col="nbr_min",
+            salts=prep.salt_plan.salts,
+            out_col="component",
         )
-    else:
-        nbr_min = joined.groupBy(F.col("dst").alias("v")).agg(
-            F.min("component").alias("nbr_min")
-        )
-    if self_rows:
-        return nbr_min.withColumnRenamed("nbr_min", "component")
-    return labels.join(nbr_min, "v", "left").select(
-        "v",
-        F.least(
-            F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-        ).alias("component"),
+    return joined.groupBy(F.col("dst").alias("v")).agg(
+        F.min("component").alias("component")
     )
 
 
@@ -118,46 +97,47 @@ def connected_components_minlabel(
 
     spark = edges.sparkSession
     prep = prepare_undirected(edges, salt_hubs=salt_hubs)
-    verts = prep.verts
-
-    labels = verts.select("v", F.col("v").alias("component"))
-    start = 0
-    if checkpointer is not None:
-        restored = checkpointer.restore(spark)
-        if restored is not None:
-            start, labels = restored
-            start += 1
-    sig_old = content_signature(labels, "v", "component")
-
-    converged = False
-    rounds = start
-    prev_snapshot: DataFrame | None = None  # superseded localCheckpoint
-    for rounds in range(start, max_rounds):
-        new_labels = cc_minlabel_round(prep, labels)
-        # materialize FIRST (lineage truncation), then one aggregate over
-        # the materialized frame decides convergence — no per-round
-        # changed-count join-shuffle
-        if checkpointer is None:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        sig_new = content_signature(new_labels, "v", "component")
-        changed = sig_new != sig_old
-        sig_old = sig_new
+    try:
+        labels = prep.verts.select("v", F.col("v").alias("component"))
+        start = 0
         if checkpointer is not None:
-            new_labels = checkpointer.commit(
-                new_labels, rounds, metrics={"changed": bool(changed)}
-            )
-        if prev_snapshot is not None:
-            prev_snapshot.unpersist()
-        prev_snapshot = new_labels
-        labels = new_labels
-        if not changed:
-            converged = True
-            rounds += 1
-            break
-    else:
-        rounds = max_rounds
+            restored = checkpointer.restore(spark)
+            if restored is not None:
+                start, labels = restored
+                start += 1
+        sig_old = content_signature(labels, "v", "component")
 
-    prep.unpersist()
+        converged = False
+        rounds = start
+        prev_snapshot: DataFrame | None = None  # superseded localCheckpoint
+        for rounds in range(start, max_rounds):
+            new_labels = cc_minlabel_round(prep, labels)
+            # materialize FIRST (lineage truncation, or a transient cache
+            # that the durable commit then writes), then one aggregate
+            # over the materialized frame decides convergence — no
+            # per-round changed-count join-shuffle
+            if checkpointer is None:
+                new_labels = new_labels.localCheckpoint(eager=True)
+            with staged(new_labels, checkpointer is not None) as new_labels:
+                sig_new = content_signature(new_labels, "v", "component")
+                changed = sig_new != sig_old
+                if checkpointer is not None:
+                    new_labels = checkpointer.commit(
+                        new_labels, rounds, metrics={"changed": bool(changed)}
+                    )
+            sig_old = sig_new
+            if prev_snapshot is not None:
+                prev_snapshot.unpersist()
+            prev_snapshot = new_labels
+            labels = new_labels
+            if not changed:
+                converged = True
+                rounds += 1
+                break
+        else:
+            rounds = max_rounds
+    finally:
+        prep.unpersist()
     return ComponentsResult(labels, rounds, converged)
 
 
@@ -256,23 +236,18 @@ def connected_components_starcontraction(
             )
         ls = _large_star(sym)
         ss = _small_star(ls)
-        # materialize ONCE (the round's only copy), then run the
-        # convergence signature as one cheap aggregate over the cached
-        # leaf — the previous shape staged a persist AND a localCheckpoint
-        # (two full copies of the pairs frame per round) just to feed the
-        # same aggregate
-        if checkpointer is not None:
-            staged = ss.persist()
-            sig_new = content_signature(staged, "u", "w")
-            delta = 0 if sig_new == sig_old else max(abs(sig_new[0] - sig_old[0]), 1)
-            new_pairs = checkpointer.commit(
-                staged, rounds, metrics={"delta_edges": int(delta)}
-            )
-            staged.unpersist()
-        else:
-            new_pairs = ss.localCheckpoint(eager=True)
+        # materialize ONCE (the round's only copy: a localCheckpoint, or
+        # a transient cache the durable commit writes), then run the
+        # convergence signature as one cheap aggregate over it
+        if checkpointer is None:
+            ss = ss.localCheckpoint(eager=True)
+        with staged(ss, checkpointer is not None) as new_pairs:
             sig_new = content_signature(new_pairs, "u", "w")
             delta = 0 if sig_new == sig_old else max(abs(sig_new[0] - sig_old[0]), 1)
+            if checkpointer is not None:
+                new_pairs = checkpointer.commit(
+                    new_pairs, rounds, metrics={"delta_edges": int(delta)}
+                )
         sig_old = sig_new
         if prev_snapshot is not None:
             prev_snapshot.unpersist()

@@ -45,9 +45,9 @@ def symmetrize(edges: DataFrame) -> DataFrame:
 
 def symmetrize_partitioned(
     edges: DataFrame,
+    self_pairs: DataFrame,
     key: str = "dst",
     num_partitions: int | None = None,
-    self_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Symmetrized canonical view hash-partitioned by ``key`` in ONE
     shuffle: cast/null/self-loop-filter both directions, union,
@@ -59,22 +59,17 @@ def symmetrize_partitioned(
     and every per-round join or aggregation keyed on ``key`` reuses it,
     so the multi-GB edge side is shuffled once per RUN instead of once
     per ROUND (``symmetrize(canonicalize(e))`` + per-round joins was
-    re-exchanging it every iteration)."""
+    re-exchanging it every iteration).
+
+    ``self_pairs`` (its first column holds vertex ids) adds one synthetic
+    (v, v) row per id — real self-loops were filtered above, so src == dst
+    unambiguously marks them downstream. Iterative rounds use them to fold
+    a vertex's OWN state into the per-dst aggregation (min includes own
+    label; counts skip them via src != dst), with no finalize join."""
     e = drop_nulls_and_loops(edges)
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    und = e.union(rev)
-    if self_pairs is not None:
-        # synthetic (v, v) rows — real self-loops were filtered above, so
-        # src == dst unambiguously marks them downstream. Iterative rounds
-        # use them to fold a vertex's OWN state into the per-dst
-        # aggregation (min includes own label; counts skip them via
-        # src != dst), eliminating the per-round finalize join entirely.
-        und = und.union(
-            self_pairs.select(
-                F.col(self_pairs.columns[0]).cast("long").alias("src"),
-                F.col(self_pairs.columns[0]).cast("long").alias("dst"),
-            )
-        )
+    v = F.col(self_pairs.columns[0]).cast("long")
+    und = e.union(rev).union(self_pairs.select(v.alias("src"), v.alias("dst")))
     und = (
         und.repartition(num_partitions, key)
         if num_partitions

@@ -8,21 +8,27 @@ analytics engine is expected to carry it next to PageRank — same corpus,
 same iterative-DataFrame machinery, and the web-spam / topical-ranking
 use cases the north rule's Common-Crawl corpus exists for.
 
-Execution strategy mirrors operators/pagerank.py exactly:
+Execution strategy mirrors operators/pagerank.py:
 
-- the edge table is cached TWICE, hash-partitioned by ``dst`` and by
-  ``src`` — HITS aggregates alternately on both keys, and a stationary
+- the input is cleaned once (``drop_nulls_and_loops``) and the edge table
+  is cached TWICE, hash-partitioned by ``dst`` and by ``src`` and
+  deduplicated on that partitioning (no further exchange) — HITS
+  aggregates alternately on both keys, and a stationary
   correctly-partitioned cache per key is what keeps the rounds
   exchange-free (the iterative-graph discipline of
   operators/iterative.py);
 - below the ~10M-vertex cutover the score vectors are BROADCAST each
   half-step and the matching edge cache makes the aggregation
-  exchange-free: zero per-iteration shuffle;
+  exchange-free: zero per-iteration shuffle. Both caches carry one
+  synthetic (v, v) row per vertex (src == dst marks them), so each
+  half-step aggregation emits every vertex and its L2 norm is a lazy
+  view over the one materialized raw vector;
 - above it, the scores shuffle into a sort-merge join against the
   pre-sorted opposite cache and the aggregation is the one exchange per
   half-step, with the shared salted two-stage aggregation
   (plans/skew.two_stage_agg) engaged per aggregation key when that key's
-  degree distribution is Zipf-skewed;
+  degree distribution is Zipf-skewed; the sparse result is joined onto
+  the vertex set and normalized (``_l2_normalized``);
 - every iteration's vectors are materialized with lineage truncation
   (localCheckpoint) and the superseded snapshots released, so the
   logical plan stays O(1) across iterations and long runs do not
@@ -36,7 +42,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphsetintersection_spark.operators.edges import canonicalize, vertices
+from graphsetintersection_spark.operators.edges import (
+    drop_nulls_and_loops,
+    vertices,
+)
 from graphsetintersection_spark.operators.iterative import (
     BROADCAST_STATE_MAX_VERTICES,
 )
@@ -98,45 +107,30 @@ def hits(
     edges: DataFrame,
     max_iter: int = 10,
     tol: float | None = None,
-    dedup: bool = True,
     broadcast_scores: bool | None = None,
     salt_hubs: int | str | None = "auto",
-    pre_canonical: bool = False,
 ) -> HITSResult:
     """Run HITS for ``max_iter`` iterations (or until the hub vector's max
     absolute change drops below ``tol``). Returns per-vertex (hub, auth)
-    scores, both L2-normalized.
+    scores, both L2-normalized. Null endpoints, self-loops and duplicate
+    edges do not count.
 
     ``broadcast_scores`` None picks by vertex count (the pagerank
     cutover); ``salt_hubs`` engages the salted two-stage aggregation on
     the shuffle path per aggregation key ("auto" probes each key's skew,
-    an int forces that salt count, None disables).
-
-    ``pre_canonical``: the caller asserts ``edges`` is ALREADY canonical —
-    long-typed, distinct, null-free, self-loop-free (e.g. the gate graphs'
-    ``select distinct … where src <> dst`` SQL). The normalization
-    re-distinct (one full exchange of the edge table) is skipped while
-    every canonical-input round shape (the self-row total aggregation)
-    stays engaged — unlike ``dedup=False``, which must assume real self
-    loops may exist and drops to the legacy round shape."""
+    an int forces that salt count, None disables)."""
     if max_iter < 1:
         raise ValueError("hits: max_iter must be >= 1")
     spark = edges.sparkSession
-    # transient cache for the SETUP phase only: the canonicalized edge
-    # frame feeds the vertex count, up to two skew probes, and both
-    # stationary cache builds — uncached that is four full scans of the
-    # raw edge table (the 100 TB input) instead of one. Released once
-    # the two per-key caches hold their own copies.
-    e = (
-        canonicalize(edges)
-        if dedup and not pre_canonical
-        else edges.select("src", "dst")
-    )
-    # an input the caller already cached/checkpointed needs no second
-    # copy — its scans are cache reads and the extra persist is a pure
-    # materialization barrier (same check as pagerank_df_prepare)
-    e_cached_here = not edges.is_cached
-    if e_cached_here:
+    # transient cache for the SETUP phase only: the filtered edge frame
+    # feeds the vertex count, up to two skew probes, and both stationary
+    # cache builds — uncached that is four full scans of the raw edge
+    # table (the 100 TB input) instead of one. An input the caller
+    # already cached/checkpointed needs no second copy (same check as
+    # pagerank_df_prepare). Released once the two per-key caches hold
+    # their own copies, which also deduplicate.
+    e = drop_nulls_and_loops(edges)
+    if not edges.is_cached:
         e = e.persist()
     verts = vertices(e).persist()
     n = verts.count()
@@ -147,12 +141,6 @@ def hits(
         return HITSResult(empty, 0, True)
     if broadcast_scores is None:
         broadcast_scores = n <= BROADCAST_STATE_MAX_VERTICES
-    # the self-row total-aggregation round shape relies on src != dst
-    # identifying the synthetic rows, which canonicalize guarantees by
-    # dropping real self loops (and pre_canonical asserts); with plain
-    # dedup=False a real self loop must keep contributing, so that case
-    # stays on the legacy round shape
-    total_agg = broadcast_scores and (dedup or pre_canonical)
 
     from graphsetintersection_spark.plans.skew import (
         decide_hub_salting,
@@ -170,9 +158,9 @@ def hits(
         """One aggregation half-step: Σ over incident edges of the other
         side's score, grouped on ``agg_key``. On the broadcast path the
         cache carries synthetic (v, v) self rows (real self loops were
-        dropped by canonicalize), so the aggregation emits one row per
-        vertex — the self row's score is excluded by the src ≠ dst guard
-        and null-skipping sum."""
+        dropped by drop_nulls_and_loops), so the aggregation emits one row
+        per vertex — the self row's score is excluded by the src ≠ dst
+        guard and null-skipping sum."""
         sc = scores.withColumnRenamed("v", join_key)
         if broadcast_scores:
             sc = F.broadcast(sc)
@@ -189,7 +177,7 @@ def hits(
             )
         term = (
             F.when(F.col("src") != F.col("dst"), F.col("s"))
-            if total_agg
+            if broadcast_scores
             else F.col("s")
         )
         return joined.groupBy(F.col(agg_key).alias("v")).agg(
@@ -227,26 +215,25 @@ def hits(
             e_dst = mark_hubs(e_dst, "dst", plan_dst)
         if plan_src is not None:
             e_src = mark_hubs(e_src, "src", plan_src)
+        # each cache deduplicates on its own partitioning: the partition
+        # key is a dedup key, so the dedup adds no exchange
         if broadcast_scores:
-            if total_agg:
-                # synthetic self rows → total (one-row-per-vertex)
-                # half-step aggregations: no verts ⟕ raw finalize join and
-                # no separate normalized-vector materialization per
-                # half-step (guide §2.4)
-                self_rows = verts.select(
-                    F.col("v").alias("src"), F.col("v").alias("dst")
-                )
-                e_dst = e_dst.unionByName(self_rows)
-                e_src = e_src.unionByName(self_rows)
-            e_dst = e_dst.repartition("dst").persist()
-            e_src = e_src.repartition("src").persist()
+            # synthetic self rows → total (one-row-per-vertex) half-step
+            # aggregations: no verts ⟕ raw finalize join and no separate
+            # normalized-vector materialization per half-step (guide §2.4)
+            diag = verts.select(F.col("v").alias("src"), F.col("v").alias("dst"))
+            e_dst = e_dst.unionByName(diag).repartition("dst").dropDuplicates()
+            e_src = e_src.unionByName(diag).repartition("src").dropDuplicates()
         else:
             e_dst = (
-                e_dst.repartition("src").sortWithinPartitions("src").persist()
+                e_dst.repartition("src").dropDuplicates()
+                .sortWithinPartitions("src")
             )
             e_src = (
-                e_src.repartition("dst").sortWithinPartitions("dst").persist()
+                e_src.repartition("dst").dropDuplicates()
+                .sortWithinPartitions("dst")
             )
+        e_dst, e_src = e_dst.persist(), e_src.persist()
         # materialize the two stationary caches CONCURRENTLY: the builds
         # are independent jobs over the same setup cache, and submitting
         # them from one thread would serialize two shuffle latencies
@@ -282,7 +269,7 @@ def hits(
         # unmaterialized cache with a nested norm-aggregate broadcast
         # spawns MORE AQE stage jobs than the checkpoint it replaces.
         for it in range(max_iter):
-            if total_agg:
+            if broadcast_scores:
                 # OPTIMIZED BROADCAST ROUND: each half-step materializes
                 # only the RAW total vector (one localCheckpoint); the
                 # L2-normalized form is a lazy projection over that leaf
@@ -329,21 +316,15 @@ def hits(
         else:
             it = max_iter
 
-        if total_agg:
-            # both views are total (one row per vertex, same vertex set)
-            scores = (
-                hub.withColumnRenamed("s", "hub")
-                .join(auth.withColumnRenamed("s", "auth"), "v")
-                .select("v", "hub", "auth")
-                .localCheckpoint(eager=True)
-            )
-        else:
-            scores = (
-                verts.join(hub.withColumnRenamed("s", "hub"), "v")
-                .join(auth.withColumnRenamed("s", "auth"), "v")
-                .select("v", "hub", "auth")
-                .localCheckpoint(eager=True)
-            )
+        # both views are total (one row per vertex, same vertex set): the
+        # broadcast half-steps aggregate over the self rows, the shuffle
+        # ones join the vertex set in _l2_normalized
+        scores = (
+            hub.withColumnRenamed("s", "hub")
+            .join(auth.withColumnRenamed("s", "auth"), "v")
+            .select("v", "hub", "auth")
+            .localCheckpoint(eager=True)
+        )
         for leaf in live_leaves:
             leaf.unpersist()
         return HITSResult(scores, it, converged, deltas)

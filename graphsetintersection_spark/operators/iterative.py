@@ -14,6 +14,10 @@ so every per-round loop gets it:
   exchanges and sorts only the (small) label side; Zipf-hub skew on the
   aggregation key is handled by the shared salted two-stage aggregation
   (plans.skew), probed once here.
+- Either way the edge frame carries one synthetic (v, v) row per vertex,
+  so a round is ``state_join(prep, state)`` plus one aggregation that
+  emits every vertex: no finalize join. Rounds take the ``PreparedUnd``
+  itself, so the strategy travels with the frame it was built for.
 
 The reference runs single-node in-memory arrays (label/state updates in
 ``src/``'s per-vertex loops); this module is the distributed analog of
@@ -43,7 +47,9 @@ BROADCAST_STATE_MAX_VERTICES = 10_000_000
 
 @dataclass
 class PreparedUnd:
-    """Stationary state for iterative undirected vertex-state loops."""
+    """Stationary state for iterative undirected vertex-state loops.
+    ``und_j`` carries one synthetic (v, v) row per vertex (src == dst
+    marks them: real self-loops are dropped)."""
 
     verts: DataFrame
     n: int
@@ -51,7 +57,6 @@ class PreparedUnd:
     und_j: DataFrame  # symmetrized, partitioned, hub-marked when salted
     broadcast_labels: bool
     salt_plan: HubSaltPlan | None
-    self_rows: bool  # und_j carries synthetic (v, v) rows
     _caches: tuple
 
     def unpersist(self) -> None:
@@ -64,16 +69,15 @@ def prepare_undirected(
     broadcast_labels: bool | None = None,
     salt_hubs: int | str | None = "auto",
     num_partitions: int | None = None,
-    self_rows: bool = True,
 ) -> PreparedUnd:
     """One-time index build: symmetrize + partition for the chosen join
     strategy, cache, probe skew (shuffle path only). Callers own the
     returned caches via ``unpersist()``.
 
-    ``self_rows`` appends a synthetic (v, v) row per vertex so each
-    round's per-dst aggregation sees the vertex's own state — the rounds
-    then emit one row per vertex straight from the aggregate and the
-    per-round labels⨝result finalize join disappears."""
+    A synthetic (v, v) row per vertex lets each round's per-dst
+    aggregation see the vertex's own state — the rounds emit one row per
+    vertex straight from the aggregate, with no labels⨝result finalize
+    join."""
     # the partition key depends on the strategy, which depends on n — so
     # the vertex set (same either way) is counted first, off the filtered
     # view, and the big frame is built ONCE with the right key.
@@ -89,12 +93,7 @@ def prepare_undirected(
     if broadcast_labels is None:
         broadcast_labels = n <= BROADCAST_STATE_MAX_VERTICES
     key = "dst" if broadcast_labels else "src"
-    und = symmetrize_partitioned(
-        edges,
-        key,
-        num_partitions=num_partitions,
-        self_pairs=verts if self_rows else None,
-    )
+    und = symmetrize_partitioned(edges, verts, key, num_partitions)
     if not broadcast_labels:
         und = und.sortWithinPartitions("src")
     und = und.persist()
@@ -122,44 +121,16 @@ def prepare_undirected(
         und_j=und_j,
         broadcast_labels=broadcast_labels,
         salt_plan=plan,
-        self_rows=self_rows,
         _caches=(und, verts),
     )
 
 
-def resolve_round_args(
-    und_or_prep, salt_plan, broadcast_labels, self_rows
-):
-    """Resolve a round's (und_j, salt_plan, broadcast_labels, self_rows).
-
-    Rounds accept the ``PreparedUnd`` itself as the edge argument — the
-    safe calling convention (ADVICE r4 #3): the three strategy flags
-    travel WITH the prepared frame, so a caller cannot pair self-row
-    edges with ``self_rows=False`` (which would silently count each
-    synthetic (v, v) row as a real vote in LPA's count aggregate).
-    Passing a PreparedUnd together with explicit non-default flags is an
-    error — the flags are the prep's to own. Raw-DataFrame callers keep
-    the explicit flags (tests build hand-rolled frames)."""
-    if isinstance(und_or_prep, PreparedUnd):
-        if salt_plan is not None or broadcast_labels or self_rows:
-            raise ValueError(
-                "pass either a PreparedUnd OR explicit flags, not both — "
-                "the prep already carries salt_plan/broadcast_labels/"
-                "self_rows"
-            )
-        p = und_or_prep
-        return p.und_j, p.salt_plan, p.broadcast_labels, p.self_rows
-    return und_or_prep, salt_plan, broadcast_labels, self_rows
-
-
-def state_join(
-    und_j: DataFrame, labels: DataFrame, broadcast_labels: bool
-) -> DataFrame:
+def state_join(prep: PreparedUnd, labels: DataFrame) -> DataFrame:
     """The per-round edge ⨝ state join: state renamed to src, broadcast
     when the strategy says so (then the cached dst-partitioned edge frame
     is never exchanged and the downstream dst-keyed aggregation runs
     exchange-free on top of it)."""
     labels_src = labels.withColumnRenamed("v", "src")
-    if broadcast_labels:
+    if prep.broadcast_labels:
         labels_src = F.broadcast(labels_src)
-    return und_j.join(labels_src, "src")
+    return prep.und_j.join(labels_src, "src")

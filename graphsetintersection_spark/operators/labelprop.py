@@ -8,11 +8,13 @@ result is exactly reproducible and exactly comparable):
                      labels at time t, ties broken by SMALLEST label;
                      vertices with no neighbors keep their label.
 
-Each round: one join (labels onto edges) + one count aggregate + one
-max-struct aggregate — every aggregate map-side combinable (the argmax is
-``max(struct(cnt, -label))``, NOT a row_number window: a hub's window
-partition would sort all its distinct neighbor labels on one reducer,
-while the partial-max combines everywhere). Zipf-hub dst keys optionally
+Each round: one join (labels onto the symmetrized edges, which carry one
+(v, v) row per vertex so the round emits every vertex without a finalize
+join) + one count aggregate + one max-struct aggregate — every aggregate
+map-side combinable (the argmax is ``max(struct(cnt, -label))``, NOT a
+row_number window: a hub's window partition would sort all its distinct
+neighbor labels on one reducer, while the partial-max combines
+everywhere). Zipf-hub dst keys optionally
 pre-combine under salts (plans.skew two-stage aggregation — the north
 rule's "salted high-degree hubs"). Deterministic tie-break makes the
 fixpoint (or the state after a fixed number of rounds) exactly equal
@@ -20,7 +22,9 @@ across engines, which is what the DuckDB oracle checks.
 
 Early-stop convergence uses the one-aggregate content signature of the
 materialized label frame (plans.skew.content_signature) — no per-round
-changed-count join. Checkpoint/resume identical to PageRank.
+changed-count join. Checkpoint/resume identical to PageRank: a durable
+round that the early stop also reads is staged in a transient cache, so it
+runs once.
 """
 
 from __future__ import annotations
@@ -30,12 +34,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphsetintersection_spark.plans.checkpoint import CheckpointManager
-from graphsetintersection_spark.plans.skew import (
-    HubSaltPlan,
-    content_signature,
-    two_stage_agg,
-)
+from graphsetintersection_spark.plans.checkpoint import CheckpointManager, staged
+from graphsetintersection_spark.plans.skew import content_signature, two_stage_agg
 
 
 @dataclass
@@ -45,55 +45,30 @@ class LabelPropResult:
     converged: bool
 
 
-def lpa_round(
-    und: DataFrame,
-    labels: DataFrame,
-    salt_plan: HubSaltPlan | None = None,
-    broadcast_labels: bool = False,
-    self_rows: bool = False,
-) -> DataFrame:
-    """One synchronous LPA round over the symmetrized edge set. ``und``
-    must carry a ``_hub`` column when ``salt_plan`` is given (mark_hubs).
-    With ``broadcast_labels`` (and ``und`` cached dst-partitioned, see
-    operators.iterative.prepare_undirected) the whole round's heavy side
-    is exchange-free: broadcast join, then the (v=dst, label) count and
-    the per-v argmax both reuse the dst partitioning.
+def lpa_round(prep, labels: DataFrame) -> DataFrame:
+    """One synchronous LPA round over the symmetrized edge set of ``prep``
+    (operators.iterative.prepare_undirected). On the broadcast path (und
+    cached dst-partitioned) the whole round's heavy side is
+    exchange-free: broadcast join, then the (v=dst, label) count and the
+    per-v argmax both reuse the dst partitioning.
 
-    ``self_rows``: ``und`` carries synthetic (v, v) rows (prepare's
-    default). They vote with COUNT ZERO — ``count(src != v)`` — so a
-    vertex's own label enters every argmax as the (0, own) floor: real
-    neighbor votes (cnt ≥ 1) always beat it, and a vertex with no
-    neighbors keeps its label. The round then emits one row per vertex
-    straight off the aggregate — no finalize join. Without self rows the
-    legacy labels⨝best left join folds the isolated vertices instead.
+    The prepared frame's synthetic (v, v) rows vote with COUNT ZERO —
+    ``count(src != v)`` — so a vertex's own label enters every argmax as
+    the (0, own) floor: real neighbor votes (cnt ≥ 1) always beat it, and
+    a vertex with no neighbors keeps its label. The round emits one row
+    per vertex straight off the aggregate."""
+    from graphsetintersection_spark.operators.iterative import state_join
 
-    ``und`` may be the ``PreparedUnd`` itself — then salt_plan /
-    broadcast_labels / self_rows are taken from it and must not be passed
-    (operators.iterative.resolve_round_args, ADVICE r4 #3)."""
-    from graphsetintersection_spark.operators.iterative import (
-        resolve_round_args,
-        state_join,
-    )
-
-    und, salt_plan, broadcast_labels, self_rows = resolve_round_args(
-        und, salt_plan, broadcast_labels, self_rows
-    )
-    nbr_labels = state_join(und, labels, broadcast_labels).withColumnRenamed(
-        "dst", "v"
-    )
-    first = (
-        F.count(F.when(F.col("src") != F.col("v"), F.lit(1)))
-        if self_rows
-        else F.count("*")
-    )
-    if salt_plan is not None:
+    nbr_labels = state_join(prep, labels).withColumnRenamed("dst", "v")
+    first = F.count(F.when(F.col("src") != F.col("v"), F.lit(1)))
+    if prep.salt_plan is not None:
         counts = two_stage_agg(
             nbr_labels,
             ["v", "label"],
             first,
             F.sum,
             salt_from="src",
-            salts=salt_plan.salts,
+            salts=prep.salt_plan.salts,
             out_col="cnt",
         )
     else:
@@ -101,16 +76,9 @@ def lpa_round(
     # argmax with (cnt desc, label asc) tie-break as ONE combinable
     # aggregate: max over struct(cnt, -label) — labels are non-negative
     # vertex ids, so -label inverts the order safely in int64
-    best = counts.groupBy("v").agg(
+    return counts.groupBy("v").agg(
         F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m")
-    ).select("v", (-F.col("m.neg")).alias("new_label"))
-    if self_rows:
-        return best.withColumnRenamed("new_label", "label")
-    # labels carries every vertex (the loop invariant), so one left join
-    # folds isolated/no-incoming vertices
-    return labels.join(best, "v", "left").select(
-        "v", F.coalesce("new_label", "label").alias("label")
-    )
+    ).select("v", (-F.col("m.neg")).alias("label"))
 
 
 def label_propagation(
@@ -130,47 +98,51 @@ def label_propagation(
 
     spark = edges.sparkSession
     prep = prepare_undirected(edges, salt_hubs=salt_hubs)
-    verts = prep.verts
-
-    labels = verts.select("v", F.col("v").alias("label"))
-    start = 0
-    if checkpointer is not None:
-        restored = checkpointer.restore(spark)
-        if restored is not None:
-            start, labels = restored
-            start += 1
-    sig_old = content_signature(labels, "v", "label") if not fixed_rounds else None
-
-    converged = False
-    rounds = start
-    prev_snapshot: DataFrame | None = None  # superseded localCheckpoint
-    for rounds in range(start, max_rounds):
-        new_labels = lpa_round(prep, labels)
-        if checkpointer is None:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        changed = None
-        if not fixed_rounds:
-            # one aggregate over the (materialized) frame — no join-shuffle
-            sig_new = content_signature(new_labels, "v", "label")
-            changed = sig_new != sig_old
-            sig_old = sig_new
+    try:
+        labels = prep.verts.select("v", F.col("v").alias("label"))
+        start = 0
         if checkpointer is not None:
-            new_labels = checkpointer.commit(
-                new_labels, rounds,
-                metrics={"changed": bool(changed) if changed is not None else None},
-            )
-        # the previous round's snapshot is superseded (unpersist is a no-op
-        # on committed parquet-backed frames)
-        if prev_snapshot is not None:
-            prev_snapshot.unpersist()
-        prev_snapshot = new_labels
-        labels = new_labels
-        if changed is False:
-            converged = True
-            rounds += 1
-            break
-    else:
-        rounds = max_rounds
+            restored = checkpointer.restore(spark)
+            if restored is not None:
+                start, labels = restored
+                start += 1
+        sig_old = content_signature(labels, "v", "label") if not fixed_rounds else None
 
-    prep.unpersist()
+        converged = False
+        rounds = start
+        prev_snapshot: DataFrame | None = None  # superseded localCheckpoint
+        for rounds in range(start, max_rounds):
+            new_labels = lpa_round(prep, labels)
+            if checkpointer is None:
+                new_labels = new_labels.localCheckpoint(eager=True)
+            # a durable round the stop test also reads is staged once
+            with staged(
+                new_labels, checkpointer is not None and not fixed_rounds
+            ) as new_labels:
+                changed = None
+                if not fixed_rounds:
+                    # one aggregate over the (materialized) frame — no
+                    # join-shuffle
+                    sig_new = content_signature(new_labels, "v", "label")
+                    changed = sig_new != sig_old
+                    sig_old = sig_new
+                if checkpointer is not None:
+                    new_labels = checkpointer.commit(
+                        new_labels, rounds,
+                        metrics={"changed": bool(changed) if changed is not None else None},
+                    )
+            # the previous round's snapshot is superseded (unpersist is a
+            # no-op on committed parquet-backed frames)
+            if prev_snapshot is not None:
+                prev_snapshot.unpersist()
+            prev_snapshot = new_labels
+            labels = new_labels
+            if changed is False:
+                converged = True
+                rounds += 1
+                break
+        else:
+            rounds = max_rounds
+    finally:
+        prep.unpersist()
     return LabelPropResult(labels, rounds, converged)

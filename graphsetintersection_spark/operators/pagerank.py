@@ -27,9 +27,8 @@ Above the cutover (the shuffle path) edges carry out_deg, cached by src
 and src-sorted; each round exchanges the rank vector for the join and the
 contributions for the dst aggregation (salted two-stage for Zipf-hub dst
 keys), then verts ⟕ contribs plus the closed-form dangling/teleport
-terms. ``dedup=False`` keeps real self-loops, so its broadcast cache
-carries out_deg on the edge rows and marks its synthetic rows by a null
-out_deg instead of src == dst.
+terms. The prepare reads the input through ``drop_nulls_and_loops``, so
+on the broadcast path src == dst marks exactly the synthetic self rows.
 
 Each iteration materializes the new rank vector with lineage truncation
 (localCheckpoint, or a ``plans.checkpoint`` snapshot commit) → the plan
@@ -45,7 +44,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.operators.edges import (
@@ -56,7 +55,7 @@ from graphsetintersection_spark.operators.edges import (
 from graphsetintersection_spark.operators.iterative import (
     BROADCAST_STATE_MAX_VERTICES,
 )
-from graphsetintersection_spark.plans.checkpoint import CheckpointManager
+from graphsetintersection_spark.plans.checkpoint import CheckpointManager, staged
 
 
 @dataclass
@@ -74,7 +73,6 @@ def pagerank(
     tol: float | None = 1e-8,
     checkpointer: CheckpointManager | None = None,
     checkpoint_every: int = 1,
-    dedup: bool = True,
     broadcast_ranks: bool | None = None,
     salt_hubs: int | str | None = "auto",
 ) -> PageRankResult:
@@ -89,10 +87,7 @@ def pagerank(
     salting would add cost for nothing. "auto" enables S=16 salts when the
     in-degree distribution is skewed; an int forces that salt count."""
     prep = pagerank_df_prepare(
-        edges,
-        dedup=dedup,
-        broadcast_ranks=broadcast_ranks,
-        salt_hubs=salt_hubs,
+        edges, broadcast_ranks=broadcast_ranks, salt_hubs=salt_hubs
     )
     try:
         return pagerank_df_iterate(
@@ -116,7 +111,6 @@ def personalized_pagerank(
     weight_col: str | None = None,
     checkpointer: CheckpointManager | None = None,
     checkpoint_every: int = 1,
-    dedup: bool = True,
     broadcast_ranks: bool | None = None,
     salt_hubs: int | str | None = "auto",
 ) -> PageRankResult:
@@ -134,10 +128,7 @@ def personalized_pagerank(
     the salted shuffle path above it; per-iteration lineage truncation;
     checkpoint/resume."""
     prep = pagerank_df_prepare(
-        edges,
-        dedup=dedup,
-        broadcast_ranks=broadcast_ranks,
-        salt_hubs=salt_hubs,
+        edges, broadcast_ranks=broadcast_ranks, salt_hubs=salt_hubs
     )
     try:
         w = (
@@ -185,18 +176,18 @@ class PreparedDFGraph:
     """Stationary state for the DataFrame power iteration.
 
     ``verts`` is the vertex state: ``v`` and the no-out-edges flag
-    ``_dang``, plus ``out_deg`` where the edge rows do not carry it (the
-    deduplicated broadcast layout). ``e_deg`` is the cached edge table in
-    the layout the join strategy needs; on the broadcast path it holds one
-    synthetic (v, v) row per vertex, which ``self_row`` marks.
-    ``unpersist()`` releases every cache the prepare made (``_caches``)."""
+    ``_dang``, plus ``out_deg`` on the broadcast path (where the edge rows
+    do not carry it). ``e_deg`` is the cached edge table in the layout the
+    join strategy needs; on the broadcast path it holds one synthetic
+    (v, v) row per vertex, marked by src == dst (the prepare drops real
+    self-loops). ``unpersist()`` releases every cache the prepare made
+    (``_caches``)."""
 
     verts: DataFrame
     n: int
     e_deg: DataFrame
     broadcast_ranks: bool
     salt_s: int | None
-    self_row: Column | None
     _caches: tuple
 
     def unpersist(self) -> None:
@@ -208,36 +199,33 @@ class PreparedDFGraph:
 
 def pagerank_df_prepare(
     edges: DataFrame,
-    dedup: bool = True,
     broadcast_ranks: bool | None = None,
     salt_hubs: int | str | None = "auto",
 ) -> PreparedDFGraph:
     """One-time index build for the DataFrame path, separated from the
     loop so repeated runs (and the scaling bench) pay it once per graph —
     the analog of the reference's printed index-build phase
-    (src/tc.cpp:28-29).
+    (src/tc.cpp:28-29). The input is cast to long with null endpoints and
+    self-loops dropped (``drop_nulls_and_loops``) and deduplicated below.
 
-    With ``dedup`` on the broadcast path the edge table crosses the
-    network ONCE: the distinct vertex ids (a small, partially aggregated
-    exchange) give n and one (v, v) self row per vertex; the null/loop
-    filtered edges plus those rows are repartitioned by dst and
-    deduplicated on that partitioning (dst is a dedup key, so no further
-    exchange) and cached; out-degree and the dangling flag are one
-    per-src count over that cache, cached as the vertex state. One count
-    materializes both caches.
+    On the broadcast path the edge table crosses the network ONCE: the
+    distinct vertex ids (a small, partially aggregated exchange) give n
+    and one (v, v) self row per vertex; the filtered edges plus those rows
+    are repartitioned by dst and deduplicated on that partitioning (dst is
+    a dedup key, so no further exchange) and cached; out-degree and the
+    dangling flag are one per-src count over that cache, cached as the
+    vertex state. One count materializes both caches.
 
-    ``dedup=False`` (multi-edges and real self-loops are kept, so src ==
-    dst cannot mark the synthetic rows) and the shuffle path join the
-    out-degree onto the edge rows instead: one union + aggregate gives the
-    vertex set and out-degrees, the join result is cached by dst (with
-    null-out_deg self rows) or by src, sorted."""
+    The shuffle path joins the out-degree onto the distinct edge rows
+    instead: one union + aggregate gives the vertex set and out-degrees,
+    the join result is cached by src, sorted."""
     made: list[DataFrame] = []  # every persist of this call
 
     def cache(df: DataFrame) -> DataFrame:
         made.append(df.persist())
         return df
 
-    e = drop_nulls_and_loops(edges) if dedup else edges.select("src", "dst")
+    e = drop_nulls_and_loops(edges)
     # both the vertex aggregate and the edge build read the input; an
     # input the caller has not cached would re-run its whole lineage for
     # each (the input scan is the cost at scale), so it is persisted for
@@ -245,20 +233,14 @@ def pagerank_df_prepare(
     scan_once = (lambda df: df) if edges.is_cached else cache
     prep = None
     try:
-        if dedup and broadcast_ranks is not False:
+        if broadcast_ranks is not False:
             e = scan_once(e)
             ids = cache(vertices(e))
             n = ids.count()
             if broadcast_ranks or n <= BROADCAST_STATE_MAX_VERTICES:
                 prep = _prepare_dst_layout(e, ids, n, cache)
                 return prep
-            broadcast_ranks = False
-        prep = _prepare_edge_out_deg(
-            scan_once(e.distinct() if dedup else e),
-            broadcast_ranks,
-            salt_hubs,
-            cache,
-        )
+        prep = _prepare_edge_out_deg(scan_once(e.distinct()), salt_hubs, cache)
         return prep
     finally:
         # the setup caches must not outlive this call on ANY exit path,
@@ -275,24 +257,19 @@ def _prepare_dst_layout(e, ids, n, cache) -> PreparedDFGraph:
         .repartition("dst")
         .dropDuplicates(["src", "dst"])
     )
-    is_self = F.col("src") == F.col("dst")
     # every vertex has its self row, so the per-src count covers the
     # dangling ones too (out_deg 0) without a join against the ids
     verts = cache(
         e_deg.groupBy(F.col("src").alias("v"))
-        .agg(F.count(F.when(~is_self, 1)).alias("out_deg"))
+        .agg(F.count(F.when(F.col("src") != F.col("dst"), 1)).alias("out_deg"))
         .withColumn("_dang", F.col("out_deg") == 0)
     )
     if n:
         verts.count()  # builds e_deg on the way
-    return PreparedDFGraph(
-        verts, n, e_deg, True, None, is_self, (e_deg, verts)
-    )
+    return PreparedDFGraph(verts, n, e_deg, True, None, (e_deg, verts))
 
 
-def _prepare_edge_out_deg(
-    e, broadcast_ranks, salt_hubs, cache
-) -> PreparedDFGraph:
+def _prepare_edge_out_deg(e, salt_hubs, cache) -> PreparedDFGraph:
     # ONE union + aggregate yields the complete vertex set AND each
     # vertex's out-degree (dst-only vertices fall out with out_deg 0) —
     # replacing the previous vertices-distinct + out-degree aggregate +
@@ -312,28 +289,16 @@ def _prepare_edge_out_deg(
     out_deg = vdeg.where(F.col("out_deg") > 0)
     verts = cache(vdeg.select("v", (F.col("out_deg") == 0).alias("_dang")))
     n = verts.count()
-    # ranks-side join strategy: while the rank vector fits comfortably in
-    # executor memory it is BROADCAST each iteration and the edge table is
-    # hash-partitioned by dst — then the contribution aggregation needs NO
-    # exchange at all (already co-located on its grouping key): zero
-    # per-iteration shuffle, the edges stay stationary. The cutover is
-    # ~10M vertices (a rank row is ~16B + row overhead → a few hundred MB
-    # broadcast, the practical executor-memory ceiling); beyond it, edges
-    # partition by src (Catalyst-visible), only ranks shuffles for the
-    # join, and the dst aggregation is the one remaining exchange — the
-    # standard ship-vertex-state iterative-graph strategy either way.
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= BROADCAST_STATE_MAX_VERTICES
 
-    # salted-hub decision (shuffle path only): mark dst vertices whose
-    # in-degree dominates; their contribution rows are pre-aggregated
-    # under S salts so no single reducer sums a whole hub alone. Shared
-    # probe/marking with CC and LPA: plans.skew.
+    # salted-hub decision: mark dst vertices whose in-degree dominates;
+    # their contribution rows are pre-aggregated under S salts so no
+    # single reducer sums a whole hub alone. Shared probe/marking with CC
+    # and LPA: plans.skew.
     from graphsetintersection_spark.plans.skew import decide_hub_salting, mark_hubs
 
     salt_s: int | None = None
     plan = None
-    if not broadcast_ranks and salt_hubs and n:
+    if salt_hubs and n:
         if salt_hubs == "auto":
             plan = decide_hub_salting(e, "dst")
         else:
@@ -343,30 +308,13 @@ def _prepare_edge_out_deg(
     e_deg = e.join(out_deg.withColumnRenamed("v", "src"), "src")
     if plan is not None:
         e_deg = mark_hubs(e_deg, "dst", plan)
-    if broadcast_ranks:
-        # broadcast path: one synthetic (v, v, out_deg=null) row per
-        # vertex makes the per-iteration dst aggregation total (see the
-        # round); a real self-loop keeps its out_deg, so the null marks
-        # the synthetic rows
-        e_deg = e_deg.unionByName(
-            verts.select(
-                F.col("v").alias("src"),
-                F.col("v").alias("dst"),
-                F.lit(None).cast("long").alias("out_deg"),
-            )
-        ).repartition("dst")
-    else:
-        # shuffle path: cache hash(src)-partitioned AND src-sorted so the
-        # per-iteration sort-merge join sorts only the (small) rank side —
-        # the cached edge side satisfies the SMJ ordering for free
-        e_deg = e_deg.repartition("src").sortWithinPartitions("src")
-    e_deg = cache(e_deg)
+    # cached hash(src)-partitioned AND src-sorted so the per-iteration
+    # sort-merge join sorts only the (small) rank side — the cached edge
+    # side satisfies the SMJ ordering for free
+    e_deg = cache(e_deg.repartition("src").sortWithinPartitions("src"))
     if n:
         e_deg.count()  # materialize once
-    self_row = F.col("out_deg").isNull() if broadcast_ranks else None
-    return PreparedDFGraph(
-        verts, n, e_deg, broadcast_ranks, salt_s, self_row, (verts, e_deg)
-    )
+    return PreparedDFGraph(verts, n, e_deg, False, salt_s, (verts, e_deg))
 
 
 def pagerank_df_iterate(
@@ -452,7 +400,7 @@ def pagerank_df_iterate(
             # is one filter-aggregate over the previous rank leaf folded
             # in as a 1-row broadcast, so contribs is referenced exactly
             # once: no per-iteration transient cache.
-            is_self = prep.self_row
+            is_self = F.col("src") == F.col("dst")
             carried = [c for c in ranks.columns if c not in ("v", "rank")]
             ranks_src = F.broadcast(ranks.withColumnRenamed("v", "src"))
             contribs = (
@@ -556,30 +504,30 @@ def pagerank_df_iterate(
         # (or the durable snapshot commit) replaces the logical plan with a
         # leaf — without this, each round's analyzed plan nests the whole
         # history and the driver's analyzer eventually exhausts the heap.
-        if checkpointer is not None and (it % checkpoint_every == 0 or it == max_iter - 1):
-            pre_commit = new_ranks
-            new_ranks = None
-        else:
+        # A committed round that the stop test also reads is staged in a
+        # transient cache first, so the round runs once for both.
+        commit = checkpointer is not None and (
+            it % checkpoint_every == 0 or it == max_iter - 1
+        )
+        if not commit:
             new_ranks = new_ranks.localCheckpoint(eager=True)
-
-        delta = None
-        if tol is not None:
-            target = new_ranks if new_ranks is not None else pre_commit
-            delta = (
-                target.withColumnRenamed("rank", "new_rank")
-                .join(ranks, "v")
-                .agg(F.max(F.abs(F.col("new_rank") - F.col("rank"))))
-                .collect()[0][0]
-            )
-            deltas.append(float(delta))
-
-        if new_ranks is None:
-            new_ranks = checkpointer.commit(
-                pre_commit,
-                it,
-                metrics={"delta": float(delta) if delta is not None else None,
-                         "n_vertices": n},
-            )
+        with staged(new_ranks, commit and tol is not None) as new_ranks:
+            delta = None
+            if tol is not None:
+                delta = (
+                    new_ranks.withColumnRenamed("rank", "new_rank")
+                    .join(ranks, "v")
+                    .agg(F.max(F.abs(F.col("new_rank") - F.col("rank"))))
+                    .collect()[0][0]
+                )
+                deltas.append(float(delta))
+            if commit:
+                new_ranks = checkpointer.commit(
+                    new_ranks,
+                    it,
+                    metrics={"delta": float(delta) if delta is not None else None,
+                             "n_vertices": n},
+                )
 
         # new_ranks is now self-contained; the contribs cache can go, and
         # the PREVIOUS iteration's localCheckpoint blocks are superseded —

@@ -36,7 +36,8 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Any
+from contextlib import contextmanager
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -168,3 +169,20 @@ class CheckpointManager:
         return [
             {"iteration": e["iteration"], **e["metrics"]} for e in self.committed()
         ]
+
+
+@contextmanager
+def staged(df: DataFrame, stage: bool) -> Iterator[DataFrame]:
+    """``df`` in a transient cache while the block runs, when ``stage``:
+    a round that both a stop test and a durable commit read then runs
+    once, not twice. The cache is released on every exit path. Without
+    ``stage`` the block gets ``df`` itself: caching a round that only the
+    commit reads measured one job more per commit."""
+    if not stage:
+        yield df
+        return
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()

@@ -127,13 +127,9 @@ def test_minlabel_round_plan_is_join_plus_aggregate(spark):
     pairs = [(u, v) for u, v in random_graph(60, 300, seed=13) if u != v]
     df = spark.createDataFrame(pairs, "src long, dst long")
     prep = prepare_undirected(df)
-    assert prep.broadcast_labels and prep.self_rows
+    assert prep.broadcast_labels
 
     comp = prep.verts.select("v", F.col("v").alias("component"))
-    # the prep-passing convention: flags travel with the prepared frame
-    # (ADVICE r4 #3) — passing prep + explicit flags is an error
-    with pytest.raises(ValueError):
-        cc_minlabel_round(prep, comp, self_rows=True)
     r = cc_minlabel_round(prep, comp)
     r.collect()  # finalize the adaptive plan
     plan = r._jdf.queryExecution().executedPlan().toString()
@@ -156,6 +152,48 @@ def test_minlabel_round_plan_is_join_plus_aggregate(spark):
     assert "SortMergeJoin" not in round_plan2
     assert "Exchange " not in round_plan2.replace("BroadcastExchange", "")
     prep.unpersist()
+
+
+class _FailingCommit(CheckpointManager):
+    """Commits iteration 0, raises on iteration 1."""
+
+    def commit(self, df, iteration, metrics=None):
+        if iteration == 1:
+            raise RuntimeError("commit failed")
+        return super().commit(df, iteration, metrics)
+
+
+def test_failed_round_releases_caches(spark, tmp_path):
+    """A round that raises (here its durable commit) leaves no cache of
+    min-label CC or of LPA behind: not the prepared edge and vertex
+    caches, not the staged round."""
+    from graphsetintersection_spark.operators.labelprop import (
+        label_propagation,
+    )
+
+    sc = spark.sparkContext
+
+    def cache_rdd_ids():
+        m = sc._jsc.getPersistentRDDs()
+        return {
+            k for k in m.keySet().toArray()
+            if not m.get(k).rdd().isLocallyCheckpointed()
+        }
+
+    pairs = [(u, v) for u, v in random_graph(60, 150, seed=17) if u != v]
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    before = cache_rdd_ids()
+    with pytest.raises(RuntimeError, match="commit failed"):
+        connected_components_minlabel(
+            df, checkpointer=_FailingCommit(str(tmp_path), "cc", "cc")
+        )
+    with pytest.raises(RuntimeError, match="commit failed"):
+        label_propagation(
+            df, fixed_rounds=False,
+            checkpointer=_FailingCommit(str(tmp_path), "lpa", "lpa"),
+        )
+    leaked = cache_rdd_ids() - before
+    assert not leaked, f"leaked caches: {leaked}"
 
 
 def test_components_auto_both_branches(spark):

@@ -281,8 +281,7 @@ def _assert_matches(result_df, expected, atol=1e-15):
     assert max(abs(got[v] - expected[v]) for v in expected) <= atol
 
 
-@pytest.mark.parametrize("case", ["pagerank", "dedup_false", "shuffle",
-                                  "shuffle_salted", "ppr"])
+@pytest.mark.parametrize("case", ["pagerank", "shuffle", "shuffle_salted", "ppr"])
 def test_pagerank_matches_previous_prepare(spark, tiny_graph, case):
     from graphsetintersection_spark.operators.pagerank import (
         personalized_pagerank,
@@ -290,13 +289,7 @@ def test_pagerank_matches_previous_prepare(spark, tiny_graph, case):
 
     pairs, df = tiny_graph
     expected = _load_reference()[case]
-    if case == "dedup_false":
-        # real self-loops and multi-edges stay edges without dedup
-        loops = random_graph(30, 200, seed=7)
-        assert any(u == v for u, v in loops) and len(set(loops)) < len(loops)
-        res = pagerank(spark.createDataFrame(loops, "src long, dst long"),
-                       max_iter=8, tol=None, dedup=False)
-    elif case == "ppr":
+    if case == "ppr":
         seeds = sorted({x for e in pairs for x in e})[:3]
         res = personalized_pagerank(
             df, spark.createDataFrame([(s,) for s in seeds], "v long"),
@@ -360,47 +353,36 @@ def test_manifest_corruption_before_the_last_line_raises(tmp_path):
     assert [e["iteration"] for e in ck.committed()] == [0]
 
 
-def _stages_of(sc, group):
-    """Completed stages whose job ran under job group ``group``, from the
-    status store (populated with the UI disabled)."""
+def _run_with_stages(sc, fn):
+    """(fn(), the completed stages of the jobs fn ran) from the status
+    store (populated with the UI disabled). The stages are the ids the
+    scheduler handed out meanwhile, so jobs fn submits from worker
+    threads count too (a job group would not follow them there)."""
+    sched = sc._jsc.sc().dagScheduler()
+    first = int(sched.nextStageId())
+    out = fn()
+    last = int(sched.nextStageId())
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     store = sc._jsc.sc().statusStore()
     empty = sc._gateway.new_array(sc._gateway.jvm.double, 0)
     stages = store.stageList(None, False, False, empty, None)
-    out = []
-    for i in range(stages.size()):
-        s = stages.apply(i)
-        d = s.description()
-        if d.isDefined() and d.get() == group and s.status().toString() == "COMPLETE":
-            out.append(s)
-    return out
+    return out, [
+        s for s in (stages.apply(i) for i in range(stages.size()))
+        if first <= s.stageId() < last and s.status().toString() == "COMPLETE"
+    ]
 
 
-def test_prepare_shuffles_the_edge_table_once(spark):
-    """On an uncached input built by a join, with duplicate edges,
-    self-loops and null ids: the ranks equal the numpy oracle, the input
-    is scanned once, and of the prepare's stages exactly one writes the
-    edge table (at most one shuffle record per input row, plus one self
-    row per vertex); every other stage is a per-vertex aggregate, at most
-    one record per vertex and task."""
-    from graphsetintersection_spark.operators.pagerank import (
-        pagerank_df_iterate,
-        pagerank_df_prepare,
-    )
-
-    sc = spark.sparkContext
-    raw = random_graph(100, 8000, seed=11)
-    raw += [(7, 7), (9, 9), (None, 3), (4, None), (None, None)]
-    ids = {k: 10 * k + 7 for k in range(100)}
-    pairs = [(ids[a], ids[b]) for a, b in raw if a is not None and b is not None]
-    scans = sc.accumulator(0)
+def _join_built_edges(spark, raw, ids):
+    """(edges, scans): ``raw`` relabelled through ``ids`` by a broadcast
+    join (which writes no shuffle of its own), uncached; ``scans`` counts
+    the input rows read."""
+    scans = spark.sparkContext.accumulator(0)
 
     @F.udf("long")
     def tick(x):
         scans.add(1)
         return x
 
-    # broadcast: the input's own join writes no shuffle of its own
     idmap = F.broadcast(spark.createDataFrame(list(ids.items()), "k long, id long"))
     edges = (
         spark.createDataFrame(raw, "a long, b long")
@@ -409,21 +391,74 @@ def test_prepare_shuffles_the_edge_table_once(spark):
         .join(idmap.toDF("b", "dst"), "b", "left")
         .select("src", "dst")
     )
-    group = "pagerank-prepare-shape"
-    sc.setJobGroup(group, group)
+    return edges, scans
+
+
+def _assert_edge_exchanges(stages, caches, rows, n):
+    """The ``caches`` largest shuffle writers among ``stages`` each write at
+    most one record per input row plus one self row per vertex; every
+    other stage at most one record per vertex and task."""
+    stages = sorted(stages, key=lambda s: -s.shuffleWriteRecords())
+    assert len(stages) > caches
+    for s in stages[:caches]:
+        assert s.shuffleWriteRecords() <= rows + n
+    for s in stages[caches:]:
+        assert s.shuffleWriteRecords() <= n * s.numTasks()
+
+
+def test_prepare_shuffles_the_edge_table_once(spark):
+    """On an uncached input built by a join, with duplicate edges,
+    self-loops and null ids, for PageRank's prepare and for HITS (one
+    cache per aggregation key): the results equal the numpy oracle, the
+    input is scanned once, and each edge cache's exchange writes at most
+    one shuffle record per input row, plus one self row per vertex; every
+    other stage is a per-vertex aggregate, at most one record per vertex
+    and task."""
+    from graphsetintersection_spark.operators.hits import hits
+    from graphsetintersection_spark.operators.pagerank import (
+        pagerank_df_iterate,
+        pagerank_df_prepare,
+    )
+    from tests.test_hits import _assert_scores_allclose, numpy_hits
+
+    sc = spark.sparkContext
+    raw = random_graph(100, 8000, seed=11)
+    raw += [(7, 7), (9, 9), (None, 3), (4, None), (None, None)]
+    ids = {k: 10 * k + 7 for k in range(100)}
+    pairs = [(ids[a], ids[b]) for a, b in raw if a is not None and b is not None]
+    n = len({x for u, v in pairs if u != v for x in (u, v)})
+    assert len(set(pairs) - {(u, u) for u, _ in pairs}) > 10 * n
+
+    edges, scans = _join_built_edges(spark, raw, ids)
+    prep, stages = _run_with_stages(sc, lambda: pagerank_df_prepare(edges))
     try:
-        prep = pagerank_df_prepare(edges)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    try:
-        assert scans.value == len(raw)
-        assert len(set(pairs) - {(u, u) for u, _ in pairs}) > 10 * prep.n
-        stages = sorted(_stages_of(sc, group), key=lambda s: -s.shuffleWriteRecords())
-        assert stages[0].shuffleWriteRecords() <= len(raw) + prep.n
-        for s in stages[1:]:
-            assert s.shuffleWriteRecords() <= prep.n * s.numTasks()
+        assert scans.value == len(raw) and prep.n == n
+        _assert_edge_exchanges(stages, 1, len(raw), n)
         res = pagerank_df_iterate(prep, max_iter=30, tol=None)
         _assert_allclose(res.ranks, numpy_pagerank(pairs, iters=30))
     finally:
         prep.unpersist()
+
+    edges, scans = _join_built_edges(spark, raw, ids)
+    res, stages = _run_with_stages(sc, lambda: hits(edges, max_iter=10, tol=None))
+    assert scans.value == len(raw)
+    _assert_edge_exchanges(stages, 2, len(raw), n)
+    _assert_scores_allclose(res, *numpy_hits(pairs, iters=10))
+
+
+def test_checkpointed_stop_test_runs_each_round_once(spark, tmp_path):
+    """With a stop test and a durable checkpoint, the stop test and the
+    commit read one staged round: the checkpointed run costs at most one
+    job per round more than the plain run (the snapshot write)."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame(random_graph(400, 3000, seed=5), "src long, dst long")
+
+    def jobs(**kw):
+        start = int(sc._jsc.sc().dagScheduler().nextJobId())
+        res = pagerank(df, max_iter=6, tol=1e-12, **kw)
+        assert res.iterations == 6 and not res.converged
+        return int(sc._jsc.sc().dagScheduler().nextJobId()) - start
+
+    plain = jobs()
+    ck = CheckpointManager(str(tmp_path), "pr-staged", "pagerank")
+    assert jobs(checkpointer=ck) <= plain + 6
