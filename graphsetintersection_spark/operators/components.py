@@ -17,9 +17,10 @@ at convergence).
    graph — the scale path for high-diameter graphs. Each round rewrites a
    parent-pointer edge set; both stars are pure groupBy/join dataflow.
 
-Both checkpoint per round via plans.checkpoint and resume mid-algorithm;
-a durable round is staged in a transient cache, so the convergence
-signature and the commit read it without running it twice.
+Both run on ``plans.checkpoint.run_rounds``: each module here keeps its
+round body, and the stop test is the one-aggregate content signature of
+the materialized round (plans.skew.signature_stop). The driver commits
+every round when given a checkpointer and resumes mid-algorithm.
 Parity of the two implementations is itself a test (the reference's
 Org/BP/Roaring pattern, src/tc.cpp:14-16).
 """
@@ -31,8 +32,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphsetintersection_spark.operators.edges import canonicalize, symmetrize, vertices
-from graphsetintersection_spark.plans.checkpoint import CheckpointManager, staged
+from graphsetintersection_spark.operators.edges import canonicalize
+from graphsetintersection_spark.plans.checkpoint import CheckpointManager, run_rounds
+from graphsetintersection_spark.plans.skew import signature_stop
 
 
 @dataclass
@@ -89,53 +91,21 @@ def connected_components_minlabel(
     two-stage salted aggregation of the per-round neighbor-min for
     Zipf-hub dst keys; "auto" probes skew only on graphs large enough for
     it to matter (plans.skew.decide_hub_salting)."""
-    from graphsetintersection_spark.plans.skew import content_signature
-
     from graphsetintersection_spark.operators.iterative import (
         prepare_undirected,
     )
 
-    spark = edges.sparkSession
     prep = prepare_undirected(edges, salt_hubs=salt_hubs)
     try:
-        labels = prep.verts.select("v", F.col("v").alias("component"))
-        start = 0
-        if checkpointer is not None:
-            restored = checkpointer.restore(spark)
-            if restored is not None:
-                start, labels = restored
-                start += 1
-        sig_old = content_signature(labels, "v", "component")
-
-        converged = False
-        rounds = start
-        prev_snapshot: DataFrame | None = None  # superseded localCheckpoint
-        for rounds in range(start, max_rounds):
-            new_labels = cc_minlabel_round(prep, labels)
-            # materialize FIRST (lineage truncation, or a transient cache
-            # that the durable commit then writes), then one aggregate
-            # over the materialized frame decides convergence — no
-            # per-round changed-count join-shuffle
-            if checkpointer is None:
-                new_labels = new_labels.localCheckpoint(eager=True)
-            with staged(new_labels, checkpointer is not None) as new_labels:
-                sig_new = content_signature(new_labels, "v", "component")
-                changed = sig_new != sig_old
-                if checkpointer is not None:
-                    new_labels = checkpointer.commit(
-                        new_labels, rounds, metrics={"changed": bool(changed)}
-                    )
-            sig_old = sig_new
-            if prev_snapshot is not None:
-                prev_snapshot.unpersist()
-            prev_snapshot = new_labels
-            labels = new_labels
-            if not changed:
-                converged = True
-                rounds += 1
-                break
-        else:
-            rounds = max_rounds
+        labels, rounds, converged, _ = run_rounds(
+            prep.verts.select("v", F.col("v").alias("component")),
+            lambda labels, rnd, cache: cc_minlabel_round(prep, labels),
+            max_rounds,
+            signature_stop(
+                ("v", "component"), lambda old, new: {"changed": old != new}
+            ),
+            checkpointer,
+        )
     finally:
         prep.unpersist()
     return ComponentsResult(labels, rounds, converged)
@@ -183,44 +153,21 @@ def connected_components_starcontraction(
 ) -> ComponentsResult:
     """Alternating large-star/small-star until the edge set is a stable
     star forest; then component(v) = its root, roots map to themselves."""
-    spark = edges.sparkSession
     e = canonicalize(edges)
+    # symmetric neighbor pairs (u, w), materialized ONCE (eager
+    # localCheckpoint): round 0 references this frame four times
+    # (groupBy-min + join in each star) and the convergence signature
+    # once more — unchecked, each reference re-ran the full edges scan +
+    # union + distinct (guide §2.4). The leaf also serves as the original
+    # vertex set for the final compose, replacing a fresh vertices(e) scan.
+    sym0 = (
+        e.select(F.col("src").alias("u"), F.col("dst").alias("w"))
+        .union(e.select(F.col("dst").alias("u"), F.col("src").alias("w")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
-    start = 0
-    pairs = None
-    verts = None
-    if checkpointer is not None:
-        restored = checkpointer.restore(spark)
-        if restored is not None:
-            start, pairs = restored
-            start += 1
-    if pairs is None:
-        # symmetric neighbor pairs (u, w), materialized ONCE (eager
-        # localCheckpoint): round 0 references this frame four times
-        # (groupBy-min + join in each star) and the convergence signature
-        # once more — unchecked, each reference re-ran the full edges
-        # scan + union + distinct (guide §2.4). The leaf also serves as
-        # the original vertex set for the final compose, replacing a
-        # fresh vertices(e) scan.
-        pairs = (
-            e.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-            .union(e.select(F.col("dst").alias("u"), F.col("src").alias("w")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        verts = pairs.select(F.col("u").alias("v")).distinct()
-
-    converged = False
-    rounds = start
-    # convergence signature: (row count, order-insensitive XOR checksum) of
-    # the distinct parent set — ONE aggregate on the frame being
-    # materialized anyway, replacing the exceptAll set-difference (a full
-    # extra shuffle per round). Shared helper: plans.skew.content_signature.
-    from graphsetintersection_spark.plans.skew import content_signature
-
-    sig_old = content_signature(pairs, "u", "w")
-    prev_snapshot: DataFrame | None = None  # superseded localCheckpoint
-    for rounds in range(start, max_rounds):
+    def step(pairs: DataFrame, rnd: int, cache) -> DataFrame:
         # large-star operates on symmetric neighborhoods (Kiveris alg. 2);
         # its output edges always point larger→smaller, which is exactly
         # the orientation small-star consumes (alg. 3). The initial pairs
@@ -228,42 +175,31 @@ def connected_components_starcontraction(
         # larger→smaller rows, so the union with the swap is disjoint and
         # needs no distinct. (A checkpoint restore resumes with the
         # larger→smaller orientation, so only literal round 0 skips it.)
-        if rounds == 0:
-            sym = pairs
-        else:
-            sym = pairs.union(
-                pairs.select(F.col("w").alias("u"), F.col("u").alias("w"))
-            )
-        ls = _large_star(sym)
-        ss = _small_star(ls)
-        # materialize ONCE (the round's only copy: a localCheckpoint, or
-        # a transient cache the durable commit writes), then run the
-        # convergence signature as one cheap aggregate over it
-        if checkpointer is None:
-            ss = ss.localCheckpoint(eager=True)
-        with staged(ss, checkpointer is not None) as new_pairs:
-            sig_new = content_signature(new_pairs, "u", "w")
-            delta = 0 if sig_new == sig_old else max(abs(sig_new[0] - sig_old[0]), 1)
-            if checkpointer is not None:
-                new_pairs = checkpointer.commit(
-                    new_pairs, rounds, metrics={"delta_edges": int(delta)}
-                )
-        sig_old = sig_new
-        if prev_snapshot is not None:
-            prev_snapshot.unpersist()
-        prev_snapshot = new_pairs if checkpointer is None else None
-        pairs = new_pairs
-        if delta == 0:
-            converged = True
-            rounds += 1
-            break
-    else:
-        rounds = max_rounds
+        sym = pairs if rnd == 0 else pairs.union(
+            pairs.select(F.col("w").alias("u"), F.col("u").alias("w"))
+        )
+        return _small_star(_large_star(sym))
+
+    # convergence signature: (row count, order-insensitive XOR checksum) of
+    # the distinct parent set — ONE aggregate on the frame being
+    # materialized anyway, replacing the exceptAll set-difference (a full
+    # extra shuffle per round)
+    pairs, rounds, converged, _ = run_rounds(
+        sym0,
+        step,
+        max_rounds,
+        signature_stop(
+            ("u", "w"),
+            lambda old, new: {
+                "delta_edges": 0 if new == old else max(abs(new[0] - old[0]), 1)
+            },
+        ),
+        checkpointer,
+    )
 
     # pairs is now a star forest: (child, root). Roots self-map; isolated-in
     # -graph vertices (none after canonicalize) and singleton roots included
-    if verts is None:  # checkpoint-restored run — original leaf unavailable
-        verts = vertices(e)
+    verts = sym0.select(F.col("u").alias("v")).distinct()
     comp = verts.join(
         pairs.select(F.col("u").alias("v"), F.col("w").alias("parent")),
         "v",

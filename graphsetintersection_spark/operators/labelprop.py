@@ -20,11 +20,12 @@ rule's "salted high-degree hubs"). Deterministic tie-break makes the
 fixpoint (or the state after a fixed number of rounds) exactly equal
 across engines, which is what the DuckDB oracle checks.
 
-Early-stop convergence uses the one-aggregate content signature of the
-materialized label frame (plans.skew.content_signature) — no per-round
-changed-count join. Checkpoint/resume identical to PageRank: a durable
-round that the early stop also reads is staged in a transient cache, so it
-runs once.
+The rounds run on ``plans.checkpoint.run_rounds``, the driver PageRank
+and connected components share: it materializes or commits each round,
+resumes from the last committed one and releases superseded leaves.
+Early-stop convergence (``fixed_rounds=False``) is the one-aggregate
+content signature of the materialized label frame
+(plans.skew.signature_stop) — no per-round changed-count join.
 """
 
 from __future__ import annotations
@@ -34,8 +35,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphsetintersection_spark.plans.checkpoint import CheckpointManager, staged
-from graphsetintersection_spark.plans.skew import content_signature, two_stage_agg
+from graphsetintersection_spark.plans.checkpoint import CheckpointManager, run_rounds
+from graphsetintersection_spark.plans.skew import signature_stop, two_stage_agg
 
 
 @dataclass
@@ -96,53 +97,18 @@ def label_propagation(
         prepare_undirected,
     )
 
-    spark = edges.sparkSession
     prep = prepare_undirected(edges, salt_hubs=salt_hubs)
     try:
-        labels = prep.verts.select("v", F.col("v").alias("label"))
-        start = 0
-        if checkpointer is not None:
-            restored = checkpointer.restore(spark)
-            if restored is not None:
-                start, labels = restored
-                start += 1
-        sig_old = content_signature(labels, "v", "label") if not fixed_rounds else None
-
-        converged = False
-        rounds = start
-        prev_snapshot: DataFrame | None = None  # superseded localCheckpoint
-        for rounds in range(start, max_rounds):
-            new_labels = lpa_round(prep, labels)
-            if checkpointer is None:
-                new_labels = new_labels.localCheckpoint(eager=True)
-            # a durable round the stop test also reads is staged once
-            with staged(
-                new_labels, checkpointer is not None and not fixed_rounds
-            ) as new_labels:
-                changed = None
-                if not fixed_rounds:
-                    # one aggregate over the (materialized) frame — no
-                    # join-shuffle
-                    sig_new = content_signature(new_labels, "v", "label")
-                    changed = sig_new != sig_old
-                    sig_old = sig_new
-                if checkpointer is not None:
-                    new_labels = checkpointer.commit(
-                        new_labels, rounds,
-                        metrics={"changed": bool(changed) if changed is not None else None},
-                    )
-            # the previous round's snapshot is superseded (unpersist is a
-            # no-op on committed parquet-backed frames)
-            if prev_snapshot is not None:
-                prev_snapshot.unpersist()
-            prev_snapshot = new_labels
-            labels = new_labels
-            if changed is False:
-                converged = True
-                rounds += 1
-                break
-        else:
-            rounds = max_rounds
+        labels, rounds, converged, _ = run_rounds(
+            prep.verts.select("v", F.col("v").alias("label")),
+            lambda labels, rnd, cache: lpa_round(prep, labels),
+            max_rounds,
+            None if fixed_rounds else signature_stop(
+                ("v", "label"), lambda old, new: {"changed": old != new}
+            ),
+            checkpointer,
+            record={"changed": None},
+        )
     finally:
         prep.unpersist()
     return LabelPropResult(labels, rounds, converged)

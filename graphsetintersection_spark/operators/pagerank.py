@@ -30,9 +30,12 @@ keys), then verts ⟕ contribs plus the closed-form dangling/teleport
 terms. The prepare reads the input through ``drop_nulls_and_loops``, so
 on the broadcast path src == dst marks exactly the synthetic self rows.
 
-Each iteration materializes the new rank vector with lineage truncation
-(localCheckpoint, or a ``plans.checkpoint`` snapshot commit) → the plan
-stays O(1) and any run resumes from the last committed iteration.
+The iteration is ``plans.checkpoint.run_rounds``: this module supplies
+the round body and the stop test, and the driver materializes each new
+rank vector as a leaf (localCheckpoint, or a durable snapshot committed
+every iteration) so the plan stays O(1), releases the superseded vector
+and the shuffle round's contribution cache, and resumes any run from its
+last committed iteration.
 
 Convergence: l∞(r_{t+1} - r_t) < tol, evaluated as one aggregate on the
 join of consecutive rank vectors. Scores are float64; the north rule's
@@ -55,7 +58,7 @@ from graphsetintersection_spark.operators.edges import (
 from graphsetintersection_spark.operators.iterative import (
     BROADCAST_STATE_MAX_VERTICES,
 )
-from graphsetintersection_spark.plans.checkpoint import CheckpointManager, staged
+from graphsetintersection_spark.plans.checkpoint import CheckpointManager, run_rounds
 
 
 @dataclass
@@ -72,7 +75,6 @@ def pagerank(
     max_iter: int = 20,
     tol: float | None = 1e-8,
     checkpointer: CheckpointManager | None = None,
-    checkpoint_every: int = 1,
     broadcast_ranks: bool | None = None,
     salt_hubs: int | str | None = "auto",
 ) -> PageRankResult:
@@ -96,7 +98,6 @@ def pagerank(
             max_iter=max_iter,
             tol=tol,
             checkpointer=checkpointer,
-            checkpoint_every=checkpoint_every,
         )
     finally:
         prep.unpersist()
@@ -110,7 +111,6 @@ def personalized_pagerank(
     tol: float | None = 1e-8,
     weight_col: str | None = None,
     checkpointer: CheckpointManager | None = None,
-    checkpoint_every: int = 1,
     broadcast_ranks: bool | None = None,
     salt_hubs: int | str | None = "auto",
 ) -> PageRankResult:
@@ -164,7 +164,6 @@ def personalized_pagerank(
             max_iter=max_iter,
             tol=tol,
             checkpointer=checkpointer,
-            checkpoint_every=checkpoint_every,
             teleport=tp,
         )
     finally:
@@ -323,7 +322,6 @@ def pagerank_df_iterate(
     max_iter: int = 20,
     tol: float | None = 1e-8,
     checkpointer: CheckpointManager | None = None,
-    checkpoint_every: int = 1,
     teleport: DataFrame | None = None,
 ) -> PageRankResult:
     """The DataFrame power-iteration loop over a PreparedDFGraph.
@@ -335,11 +333,9 @@ def pagerank_df_iterate(
     r' = (1−α)·p + α·(Aᵀr/outdeg + D·p). Rank mass stays conserved
     (Σr' = (1−α) + α·(Σcontrib + D) = 1), so the same D = 1 − Σcontrib
     dangling trick applies verbatim."""
-    spark = prep.e_deg.sparkSession
-    verts, n, e_deg = prep.verts, prep.n, prep.e_deg
-    broadcast_ranks, salt_s = prep.broadcast_ranks, prep.salt_s
+    verts, n, broadcast_ranks = prep.verts, prep.n, prep.broadcast_ranks
     if n == 0:
-        empty = spark.createDataFrame([], "v long, rank double")
+        empty = prep.e_deg.sparkSession.createDataFrame([], "v long, rank double")
         return PageRankResult(empty, 0, True)
 
     vp = verts
@@ -356,202 +352,142 @@ def pagerank_df_iterate(
     # the broadcast round carries the vertex state (out_deg where the edge
     # rows lack it, the dangling flag, PPR's p) ON the rank vector, one
     # row per vertex, so no round joins it
-    start_iter = 0
     if teleport is not None:
         carried = ["p"] if broadcast_ranks else []
         ranks = vp.select("v", F.col("p").alias("rank"), *carried)
     else:
         carried = verts.columns[1:] if broadcast_ranks else []
         ranks = verts.select("v", F.lit(1.0 / n).alias("rank"), *carried)
-    if checkpointer is not None:
-        restored = checkpointer.restore(spark)
-        if restored is not None:
-            start_iter, ranks = restored
-            start_iter += 1
-    if broadcast_ranks:
-        # attach the state the vector lacks, once: the PPR start has none,
-        # and a restored snapshot may hold only (v, rank) or predate
-        # out_deg on the vector
-        if not set(verts.columns) <= set(ranks.columns):
-            own = [c for c in ranks.columns if c not in verts.columns]
-            ranks = ranks.select("v", *own).join(verts, "v")
-        if teleport is not None and "p" not in ranks.columns:
-            ranks = ranks.join(vp, "v")
 
-    # Per round: the contribution vector is cached transiently (one
-    # execution feeds both the Σcontrib scalar and the new rank view), the
-    # dangling mass is D = 1 − Σcontribs (rank mass is conserved, Σr = 1 —
-    # algebraically identical to summing dangling vertices' ranks, and one
-    # fewer pass over the rank vector), and the new rank vector is
-    # materialized WITH lineage truncation (localCheckpoint / durable
-    # snapshot commit) so the logical plan stays O(1) across iterations.
-    converged = False
-    deltas: list[float] = []
-    it = start_iter
-    prev_snapshot: DataFrame | None = None  # superseded localCheckpoint
-    for it in range(start_iter, max_iter):
-        if broadcast_ranks:
-            # BROADCAST ROUND: join-broadcast → one exchange-free dst
-            # aggregation → project. The self rows make the aggregation
-            # total (one row per vertex), and each self row joins its own
-            # vertex's broadcast row, so the group reads the vertex's
-            # carried state off it: no verts ⟕ contribs finalize join. The
-            # dangling mass D = Σ_{outdeg=0} rank — the oracle's own form —
-            # is one filter-aggregate over the previous rank leaf folded
-            # in as a 1-row broadcast, so contribs is referenced exactly
-            # once: no per-iteration transient cache.
-            is_self = F.col("src") == F.col("dst")
-            carried = [c for c in ranks.columns if c not in ("v", "rank")]
-            ranks_src = F.broadcast(ranks.withColumnRenamed("v", "src"))
-            contribs = (
-                e_deg.join(ranks_src, "src")
-                .groupBy(F.col("dst").alias("v"))
-                .agg(
-                    F.sum(
-                        F.when(~is_self, F.col("rank") / F.col("out_deg"))
-                    ).alias("contrib"),
-                    *[F.max(F.when(is_self, F.col(c))).alias(c) for c in carried],
-                )
-            )
-            dm_df = ranks.where(F.col("_dang")).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-            )
-            if teleport is not None:
-                restart = (
-                    F.lit(1.0 - alpha) * F.col("p")
-                    + F.lit(alpha)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("_dm") * F.col("p")
-                    )
-                )
-            else:
-                restart = (
-                    F.lit((1.0 - alpha) / n)
-                    + F.lit(alpha)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("_dm") / F.lit(float(n))
-                    )
-                )
-            new_ranks = contribs.crossJoin(F.broadcast(dm_df)).select(
-                "v", restart.alias("rank"), *carried
-            )
-            contribs_cache = None
-        else:
-            ranks_src = ranks.withColumnRenamed("v", "src")
-            joined = e_deg.join(ranks_src, "src")
-            term = F.col("rank") / F.col("out_deg")
-            if salt_s:
-                # two-stage salted aggregation (plans.skew.two_stage_agg):
-                # hub dst rows split across salt_s sub-keys (deterministic
-                # salt from src) so the first shuffle spreads each hub over
-                # S reducers; the second stage sums at most S rows per hub.
-                from graphsetintersection_spark.plans.skew import two_stage_agg
+    body = _broadcast_round if broadcast_ranks else _shuffle_round
 
-                contribs = two_stage_agg(
-                    joined.withColumnRenamed("dst", "v"),
-                    ["v"],
-                    F.sum(term),
-                    F.sum,
-                    salt_from="src",
-                    salts=salt_s,
-                    out_col="contrib",
-                ).persist()
-            else:
-                contribs = (
-                    joined.groupBy(F.col("dst").alias("v"))
-                    .agg(F.sum(term).alias("contrib"))
-                    .persist()
-                )
-            contribs_cache = contribs
-            # dangling mass D = 1 − Σcontribs folded into the plan as a
-            # 1-row broadcast over the SAME transient cache — no extra
-            # driver action; the single materialization below executes
-            # contribs exactly once
-            tot_df = contribs.agg(
-                F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("_tot")
-            )
-            if teleport is not None:
-                restart = (
-                    F.lit(1.0 - alpha) * F.col("p")
-                    + F.lit(alpha)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + (F.lit(1.0) - F.col("_tot")) * F.col("p")
-                    )
-                )
-            else:
-                # kept byte-for-byte as the uniform formula (not folded
-                # into the teleport expression with p = 1/n): the gate
-                # hashes rank_ppm against a DuckDB oracle, and a different
-                # float association could flip a .5-boundary rounding
-                restart = (
-                    F.lit((1.0 - alpha) / n)
-                    + F.lit(alpha)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + (F.lit(1.0) - F.col("_tot")) / F.lit(float(n))
-                    )
-                )
-            new_ranks = (
-                vp.join(contribs, "v", "left")
-                .crossJoin(F.broadcast(tot_df))
-                .select("v", restart.alias("rank"))
-            )
+    def step(ranks: DataFrame, it: int, cache) -> DataFrame:
+        return body(prep, ranks, vp, alpha, teleport, cache)
 
-        # materialize + TRUNCATE lineage every iteration: localCheckpoint
-        # (or the durable snapshot commit) replaces the logical plan with a
-        # leaf — without this, each round's analyzed plan nests the whole
-        # history and the driver's analyzer eventually exhausts the heap.
-        # A committed round that the stop test also reads is staged in a
-        # transient cache first, so the round runs once for both.
-        commit = checkpointer is not None and (
-            it % checkpoint_every == 0 or it == max_iter - 1
+    def stop(ranks: DataFrame, new_ranks: DataFrame):
+        delta = float(
+            new_ranks.withColumnRenamed("rank", "new_rank")
+            .join(ranks, "v")
+            .agg(F.max(F.abs(F.col("new_rank") - F.col("rank"))))
+            .collect()[0][0]
         )
-        if not commit:
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-        with staged(new_ranks, commit and tol is not None) as new_ranks:
-            delta = None
-            if tol is not None:
-                delta = (
-                    new_ranks.withColumnRenamed("rank", "new_rank")
-                    .join(ranks, "v")
-                    .agg(F.max(F.abs(F.col("new_rank") - F.col("rank"))))
-                    .collect()[0][0]
-                )
-                deltas.append(float(delta))
-            if commit:
-                new_ranks = checkpointer.commit(
-                    new_ranks,
-                    it,
-                    metrics={"delta": float(delta) if delta is not None else None,
-                             "n_vertices": n},
-                )
+        return delta < tol, {"delta": delta}
 
-        # new_ranks is now self-contained; the contribs cache can go, and
-        # the PREVIOUS iteration's localCheckpoint blocks are superseded —
-        # drop them so long runs don't accumulate cached rank snapshots.
-        # Tracked for EVERY iteration (also the non-commit ones between
-        # sparse checkpoints — checkpoint_every > 1 would otherwise leak a
-        # localCheckpoint per skipped commit); unpersist on a durable
-        # commit's read-back frame is a harmless no-op.
-        if contribs_cache is not None:
-            contribs_cache.unpersist()
-        if prev_snapshot is not None:
-            prev_snapshot.unpersist()
-        prev_snapshot = new_ranks
-        ranks = new_ranks
-        if tol is not None and delta is not None and delta < tol:
-            converged = True
-            it += 1
-            break
-    else:
-        it = max_iter
-
+    ranks, it, converged, history = run_rounds(
+        ranks,
+        step,
+        max_iter,
+        stop if tol is not None else None,
+        checkpointer,
+        record={"delta": None, "n_vertices": n},
+    )
     # the broadcast rounds carry the vertex state on the rank vector; the
     # public result is (v, rank)
+    deltas = [m["delta"] for m in history] if tol is not None else []
     return PageRankResult(ranks.select("v", "rank"), it, converged, deltas)
+
+
+def _broadcast_round(prep, ranks, vp, alpha, teleport, cache) -> DataFrame:
+    """BROADCAST ROUND: join-broadcast → one exchange-free dst aggregation
+    → project. The self rows make the aggregation total (one row per
+    vertex), and each self row joins its own vertex's broadcast row, so
+    the group reads the vertex's carried state off it: no verts ⟕ contribs
+    finalize join. The dangling mass D = Σ_{outdeg=0} rank — the oracle's
+    own form — is one filter-aggregate over the previous rank leaf folded
+    in as a 1-row broadcast, so contribs is referenced exactly once: no
+    per-iteration transient cache."""
+    verts, n = prep.verts, prep.n
+    # attach the state the vector lacks: the PPR start has none, and a
+    # restored snapshot may hold only (v, rank) or predate out_deg on the
+    # vector; once attached, every later round's vector carries it
+    if not set(verts.columns) <= set(ranks.columns):
+        own = [c for c in ranks.columns if c not in verts.columns]
+        ranks = ranks.select("v", *own).join(verts, "v")
+    if teleport is not None and "p" not in ranks.columns:
+        ranks = ranks.join(vp, "v")
+    is_self = F.col("src") == F.col("dst")
+    carried = [c for c in ranks.columns if c not in ("v", "rank")]
+    ranks_src = F.broadcast(ranks.withColumnRenamed("v", "src"))
+    contribs = (
+        prep.e_deg.join(ranks_src, "src")
+        .groupBy(F.col("dst").alias("v"))
+        .agg(
+            F.sum(F.when(~is_self, F.col("rank") / F.col("out_deg"))).alias(
+                "contrib"
+            ),
+            *[F.max(F.when(is_self, F.col(c))).alias(c) for c in carried],
+        )
+    )
+    dm_df = ranks.where(F.col("_dang")).agg(
+        F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
+    )
+    if teleport is not None:
+        restart = F.lit(1.0 - alpha) * F.col("p") + F.lit(alpha) * (
+            F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("_dm") * F.col("p")
+        )
+    else:
+        restart = F.lit((1.0 - alpha) / n) + F.lit(alpha) * (
+            F.coalesce(F.col("contrib"), F.lit(0.0))
+            + F.col("_dm") / F.lit(float(n))
+        )
+    return contribs.crossJoin(F.broadcast(dm_df)).select(
+        "v", restart.alias("rank"), *carried
+    )
+
+
+def _shuffle_round(prep, ranks, vp, alpha, teleport, cache) -> DataFrame:
+    """SHUFFLE ROUND: the contribution vector is cached transiently (one
+    execution feeds both the Σcontrib scalar and the new rank view) and
+    the dangling mass is D = 1 − Σcontribs (rank mass is conserved, Σr = 1
+    — algebraically identical to summing dangling vertices' ranks, and one
+    fewer pass over the rank vector)."""
+    n, salt_s = prep.n, prep.salt_s
+    joined = prep.e_deg.join(ranks.withColumnRenamed("v", "src"), "src")
+    term = F.col("rank") / F.col("out_deg")
+    if salt_s:
+        # two-stage salted aggregation (plans.skew.two_stage_agg): hub dst
+        # rows split across salt_s sub-keys (deterministic salt from src)
+        # so the first shuffle spreads each hub over S reducers; the
+        # second stage sums at most S rows per hub.
+        from graphsetintersection_spark.plans.skew import two_stage_agg
+
+        contribs = two_stage_agg(
+            joined.withColumnRenamed("dst", "v"),
+            ["v"],
+            F.sum(term),
+            F.sum,
+            salt_from="src",
+            salts=salt_s,
+            out_col="contrib",
+        )
+    else:
+        contribs = joined.groupBy(F.col("dst").alias("v")).agg(
+            F.sum(term).alias("contrib")
+        )
+    contribs = cache(contribs)
+    # D = 1 − Σcontribs folded into the plan as a 1-row broadcast over the
+    # SAME transient cache — no extra driver action; the round's single
+    # materialization executes contribs exactly once
+    tot_df = contribs.agg(F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("_tot"))
+    if teleport is not None:
+        restart = F.lit(1.0 - alpha) * F.col("p") + F.lit(alpha) * (
+            F.coalesce(F.col("contrib"), F.lit(0.0))
+            + (F.lit(1.0) - F.col("_tot")) * F.col("p")
+        )
+    else:
+        # kept byte-for-byte as the uniform formula (not folded into the
+        # teleport expression with p = 1/n): the gate hashes rank_ppm
+        # against a DuckDB oracle, and a different float association
+        # could flip a .5-boundary rounding
+        restart = F.lit((1.0 - alpha) / n) + F.lit(alpha) * (
+            F.coalesce(F.col("contrib"), F.lit(0.0))
+            + (F.lit(1.0) - F.col("_tot")) / F.lit(float(n))
+        )
+    return (
+        vp.join(contribs, "v", "left")
+        .crossJoin(F.broadcast(tot_df))
+        .select("v", restart.alias("rank"))
+    )
 
 
 @dataclass

@@ -1,4 +1,5 @@
-"""Iteration checkpointing with per-partition lineage + metrics.
+"""Iteration checkpointing with per-partition lineage + metrics, and the
+round driver the checkpointable engines run on.
 
 The north rule requires every iterative algorithm (PageRank, connected
 components, label propagation) to be resumable mid-algorithm, with each
@@ -13,6 +14,13 @@ in Spark it solves two problems at once:
    iteration; commit is atomic via manifest-line-last ordering (the data
    snapshot is fully written before its manifest line appears).
 
+``run_rounds`` is the one loop of PageRank/PPR, min-label CC, label
+propagation and star contraction: the engines supply a lazy round body
+and an optional stop test, and the driver restores, materializes or
+commits every round, releases the superseded leaf and the round's
+transient caches, and counts rounds. The reference's shape is the same:
+build the index once, then one plain loop over it (src/tc.cpp:28-29).
+
 Layout (``storage="parquet"``, the sandbox default — same
 snapshot-per-iteration semantics as Iceberg; ``storage="iceberg"`` routes
 through ``df.writeTo(...).using("iceberg").createOrReplace()`` against a
@@ -21,7 +29,7 @@ configured Iceberg catalog, for clusters that carry the runtime jar):
     <base>/<run_id>/iter=NNNNN/         parquet snapshot
     <base>/<run_id>/MANIFEST.jsonl      one JSON line per committed iter:
         {run_id, algorithm, iteration, parent_iteration, params,
-         metrics: {...user metrics...},
+         metrics: {...round metrics[, converged]},
          partitions: [{partition_id, rows}, ...]}
     A line commits once its newline is written: an unterminated last line
     is a commit cut short by a crash; it is ignored, and the next commit
@@ -36,8 +44,7 @@ from __future__ import annotations
 
 import json
 import os
-from contextlib import contextmanager
-from typing import Any, Iterator
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -171,18 +178,73 @@ class CheckpointManager:
         ]
 
 
-@contextmanager
-def staged(df: DataFrame, stage: bool) -> Iterator[DataFrame]:
-    """``df`` in a transient cache while the block runs, when ``stage``:
-    a round that both a stop test and a durable commit read then runs
-    once, not twice. The cache is released on every exit path. Without
-    ``stage`` the block gets ``df`` itself: caching a round that only the
-    commit reads measured one job more per commit."""
-    if not stage:
-        yield df
-        return
-    df = df.persist()
-    try:
-        yield df
-    finally:
-        df.unpersist()
+Step = Callable[[DataFrame, int, Callable[[DataFrame], DataFrame]], DataFrame]
+StopTest = Callable[[DataFrame, DataFrame], tuple[bool, dict[str, Any]]]
+
+
+def run_rounds(
+    state: DataFrame,
+    step: Step,
+    max_rounds: int,
+    stop: StopTest | None = None,
+    checkpointer: CheckpointManager | None = None,
+    record: dict[str, Any] | None = None,
+) -> tuple[DataFrame, int, bool, list[dict[str, Any]]]:
+    """Run ``step`` from ``state`` until ``stop`` says done or the state
+    has been through ``max_rounds`` rounds; returns (state, rounds,
+    converged, the metrics of each round run by this call).
+
+    ``step(state, round, cache)`` builds the next state lazily; a frame
+    the round reads twice goes through ``cache`` (a persist), released
+    when the round ends, on every exit path. ``stop(prev, new)`` returns
+    (done, metrics), and the round records both, done as ``converged``;
+    ``record`` holds metrics every round records.
+
+    With ``checkpointer`` the run resumes from the last committed round,
+    so ``rounds`` counts the restored ones too; a run restored from a
+    converged round returns it as is. Each round is then committed: a
+    round the stop test also reads is staged in a transient cache first,
+    so it runs once for both, while a round only the commit reads is
+    written straight through (caching it measured one job more per
+    commit). Without one each round is an eager ``localCheckpoint``.
+    Either way the new state is a leaf, and the leaf it supersedes is
+    released once the next one exists. The initial state is the
+    caller's and is never released."""
+    rounds, converged = 0, False
+    if checkpointer is not None:
+        restored = checkpointer.restore(state.sparkSession)
+        if restored is not None:
+            last, state = restored
+            rounds = last + 1
+            entry = max(checkpointer.committed(), key=lambda e: e["iteration"])
+            converged = bool(entry["metrics"].get("converged"))
+    history: list[dict[str, Any]] = []
+    leaf: DataFrame | None = None  # this call's latest materialized round
+    while not converged and rounds < max_rounds:
+        transient: list[DataFrame] = []
+
+        def cache(df: DataFrame) -> DataFrame:
+            transient.append(df.persist())
+            return df
+
+        try:
+            new = step(state, rounds, cache)
+            if checkpointer is None:
+                new = new.localCheckpoint(eager=True)
+            elif stop is not None:
+                new = cache(new)
+            metrics = dict(record or {})
+            if stop is not None:
+                converged, found = stop(state, new)
+                metrics.update(found, converged=converged)
+            if checkpointer is not None:
+                new = checkpointer.commit(new, rounds, metrics)
+        finally:
+            for df in transient:
+                df.unpersist()
+        if leaf is not None:
+            leaf.unpersist()  # a no-op on a committed round's read-back
+        state = leaf = new
+        history.append(metrics)
+        rounds += 1
+    return state, rounds, converged, history

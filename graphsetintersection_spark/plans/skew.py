@@ -147,3 +147,20 @@ def content_signature(df: DataFrame, *cols: str) -> tuple[int, int]:
     # aggregate over the already-cached leaf it replaces was nearly free.
     # The BFS level loop DOES use an observed row count (relabel.py),
     # where it replaces a whole extra checkpoint, not just an aggregate.
+
+
+def signature_stop(cols: tuple[str, ...], metrics):
+    """A stop test for ``plans.checkpoint.run_rounds``: done when a
+    round's ``content_signature`` over ``cols`` equals its input's. The
+    input's signature is taken once, in the first round; each round's own
+    then carries to the next. ``metrics(old, new)`` is what a round
+    records."""
+    carried: list[tuple[int, int]] = []
+
+    def stop(prev: DataFrame, new: DataFrame):
+        old = carried.pop() if carried else content_signature(prev, *cols)
+        sig = content_signature(new, *cols)
+        carried.append(sig)
+        return sig == old, metrics(old, sig)
+
+    return stop

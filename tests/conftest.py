@@ -21,6 +21,18 @@ def spark():
     yield s
 
 
+def cache_rdd_ids(spark) -> set:
+    """Ids of the persisted RDDs that never auto-release. Local
+    checkpoints are reference-tracked by ContextCleaner (cleaned when the
+    frame is dropped), so only the CacheManager-backed kind counts: a
+    leak test compares this set before and after a call."""
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        k for k in m.keySet().toArray()
+        if not m.get(k).rdd().isLocallyCheckpointed()
+    }
+
+
 def random_graph(n_vertices: int, n_edges: int, seed: int) -> list[tuple[int, int]]:
     """Deterministic directed multigraph (may contain dups/self-loops on
     purpose — canonicalization is under test too)."""

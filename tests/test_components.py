@@ -3,7 +3,7 @@
 
 import pytest
 
-from tests.conftest import random_graph, undirected_simple
+from tests.conftest import cache_rdd_ids, random_graph, undirected_simple
 
 from graphsetintersection_spark.operators.components import (
     connected_components_minlabel,
@@ -78,16 +78,52 @@ def test_components_parity_random(spark):
     assert _collect(connected_components_starcontraction(df).components) == oracle
 
 
-def test_components_resume(spark, tmp_path):
+def _lpa_fixed(df, **kw):
+    from graphsetintersection_spark.operators.labelprop import label_propagation
+
+    res = label_propagation(df, fixed_rounds=True, **kw)
+    return res.labels.withColumnRenamed("label", "component"), res
+
+
+def _components(fn):
+    def run(df, **kw):
+        res = fn(df, **kw)
+        return res.components, res
+
+    return run
+
+
+RESUMABLE = {
+    "minlabel": _components(connected_components_minlabel),
+    "starcontraction": _components(connected_components_starcontraction),
+    "lpa": _lpa_fixed,
+}
+
+
+@pytest.mark.parametrize("engine", sorted(RESUMABLE))
+def test_components_resume(spark, tmp_path, engine):
+    """A run stopped after 3 rounds resumes to exactly the uninterrupted
+    result. A later call capped below the rounds already committed
+    returns the committed state and reports the rounds it has been
+    through, not the cap."""
+    run = RESUMABLE[engine]
     pairs = [(i, i + 1) for i in range(30)]
     df = spark.createDataFrame(pairs, "src long, dst long")
-    ck = CheckpointManager(str(tmp_path), "cc-run", "components")
-    connected_components_minlabel(df, max_rounds=3, checkpointer=ck)
+    full_df, full = run(df)
+    expected = _collect(full_df)
+    assert full.rounds > 3
+    if engine != "lpa":
+        assert full.converged and expected == union_find_components(pairs)
+
+    ck = CheckpointManager(str(tmp_path), f"{engine}-run", engine)
+    run(df, max_rounds=3, checkpointer=ck)
     assert ck.latest_iteration() == 2
-    res = connected_components_minlabel(df, max_rounds=50, checkpointer=ck)
-    assert res.converged
-    oracle = union_find_components(pairs)
-    assert _collect(res.components) == oracle
+    for cap in ({}, {"max_rounds": 2}):  # resume to the end, then past the cap
+        got_df, res = run(df, checkpointer=ck, **cap)
+        assert _collect(got_df) == expected
+        assert (res.rounds, res.converged) == (full.rounds, full.converged)
+        entries = ck.committed()
+        assert [e["iteration"] for e in entries] == list(range(full.rounds))
 
 
 def test_minlabel_salted_parity_on_hub_graph(spark):
@@ -155,34 +191,29 @@ def test_minlabel_round_plan_is_join_plus_aggregate(spark):
 
 
 class _FailingCommit(CheckpointManager):
-    """Commits iteration 0, raises on iteration 1."""
+    """Commits iteration 0; on iteration 1 writes the snapshot (so the
+    round has run), then raises."""
 
     def commit(self, df, iteration, metrics=None):
+        back = super().commit(df, iteration, metrics)
         if iteration == 1:
             raise RuntimeError("commit failed")
-        return super().commit(df, iteration, metrics)
+        return back
 
 
 def test_failed_round_releases_caches(spark, tmp_path):
     """A round that raises (here its durable commit) leaves no cache of
-    min-label CC or of LPA behind: not the prepared edge and vertex
-    caches, not the staged round."""
+    min-label CC, LPA or shuffle-path PageRank behind: not the prepared
+    edge and vertex caches, not the staged round, not the round's
+    contribution cache."""
     from graphsetintersection_spark.operators.labelprop import (
         label_propagation,
     )
-
-    sc = spark.sparkContext
-
-    def cache_rdd_ids():
-        m = sc._jsc.getPersistentRDDs()
-        return {
-            k for k in m.keySet().toArray()
-            if not m.get(k).rdd().isLocallyCheckpointed()
-        }
+    from graphsetintersection_spark.operators.pagerank import pagerank
 
     pairs = [(u, v) for u, v in random_graph(60, 150, seed=17) if u != v]
     df = spark.createDataFrame(pairs, "src long, dst long")
-    before = cache_rdd_ids()
+    before = cache_rdd_ids(spark)
     with pytest.raises(RuntimeError, match="commit failed"):
         connected_components_minlabel(
             df, checkpointer=_FailingCommit(str(tmp_path), "cc", "cc")
@@ -192,7 +223,12 @@ def test_failed_round_releases_caches(spark, tmp_path):
             df, fixed_rounds=False,
             checkpointer=_FailingCommit(str(tmp_path), "lpa", "lpa"),
         )
-    leaked = cache_rdd_ids() - before
+    with pytest.raises(RuntimeError, match="commit failed"):
+        pagerank(
+            df, broadcast_ranks=False, tol=None,
+            checkpointer=_FailingCommit(str(tmp_path), "pr", "pagerank"),
+        )
+    leaked = cache_rdd_ids(spark) - before
     assert not leaked, f"leaked caches: {leaked}"
 
 

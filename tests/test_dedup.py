@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_TINY
+from tests.conftest import SF_TINY, cache_rdd_ids
 
 from graphsetintersection_spark.functions.dedup import (
     dedup_keep_first,
@@ -230,16 +230,7 @@ def test_no_cache_leak_after_pipelines(spark, docs_with_dups):
         simhash_neardup_pairs,
     )
 
-    sc = spark.sparkContext
-
-    def cache_rdd_ids():
-        m = sc._jsc.getPersistentRDDs()
-        return {
-            k for k in m.keySet().toArray()
-            if not m.get(k).rdd().isLocallyCheckpointed()
-        }
-
-    before = cache_rdd_ids()
+    before = cache_rdd_ids(spark)
     sample = docs_with_dups.where(F.col("doc_id") % 7 == 0)
     ngram_jaccard_pairs(sample, threshold=0.3).collect()
     minhash_lsh_pairs(sample, num_perm=32, bands=8, threshold=0.3).collect()
@@ -249,7 +240,7 @@ def test_no_cache_leak_after_pipelines(spark, docs_with_dups):
         F.col("doc_id").alias("id_a"), F.col("doc_id").alias("id_b")
     )
     jaccard_for_pairs(sample, pairs).collect()
-    leaked = cache_rdd_ids() - before
+    leaked = cache_rdd_ids(spark) - before
     assert not leaked, f"leaked non-checkpoint caches: {leaked}"
 
 

@@ -4,7 +4,7 @@ cache hygiene."""
 import numpy as np
 import pytest
 
-from tests.conftest import random_graph
+from tests.conftest import cache_rdd_ids, random_graph
 
 from graphsetintersection_spark.operators.hits import hits
 
@@ -95,17 +95,8 @@ def test_hits_releases_caches(spark, tiny_graph):
     so per the engine-wide convention (tests/test_dedup.py leak test)
     only non-checkpoint persistent RDDs count as leaks."""
     _, df = tiny_graph
-    sc = spark.sparkContext
-
-    def cache_rdd_ids():
-        m = sc._jsc.getPersistentRDDs()
-        return {
-            k for k in m.keySet().toArray()
-            if not m.get(k).rdd().isLocallyCheckpointed()
-        }
-
-    before = cache_rdd_ids()
+    before = cache_rdd_ids(spark)
     res = hits(df, max_iter=4, tol=None)
     res.scores.count()
-    leaked = cache_rdd_ids() - before
+    leaked = cache_rdd_ids(spark) - before
     assert not leaked, f"leaked non-checkpoint caches: {leaked}"

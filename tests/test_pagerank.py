@@ -90,6 +90,14 @@ def test_pagerank_resume_matches_uninterrupted(spark, tiny_graph, tmp_path):
     assert all(e["partitions"] for e in entries)
     assert all("n_vertices" in e["metrics"] for e in entries)
 
+    # a later call capped below the committed iterations returns the
+    # committed ranks and reports the iterations they have had
+    past = pagerank(df, max_iter=2, tol=None, checkpointer=ck)
+    assert past.iterations == 12 and not past.converged
+    got = {r["v"]: r["rank"] for r in past.ranks.collect()}
+    assert max(abs(got[v] - full_ranks[v]) for v in full_ranks) <= 1e-12
+    assert [e["iteration"] for e in ck.committed()] == list(range(12))
+
 
 def test_pagerank_kernel_parity(spark, tiny_graph):
     """Broadcast-vector kernel path ≡ DataFrame path (allclose 1e-12) —
