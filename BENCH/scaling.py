@@ -74,8 +74,7 @@ from pyspark.sql import functions as F
 from graphsetintersection_spark.operators.triangle import (
     _edge_with_lower_adj, _count_batches)
 from graphsetintersection_spark.operators.pagerank import (
-    pagerank_df_prepare, pagerank_df_iterate,
-    pagerank_kernel_prepare, pagerank_kernel_iterate)
+    pagerank_df_prepare, pagerank_df_iterate)
 
 spark = get_spark(app_name=f"gsi-scaling-{cores}", master=f"local[{cores}]",
                   shuffle_partitions=%(sp)d,
@@ -97,21 +96,17 @@ def count(j):
 jw = build(); tri = count(jw)           # warm-up round (JIT, worker pool)
 jw.unpersist(True)
 
-# PageRank: prepare once per path (the index-build phase, timed), then
-# the iteration loops are what scale — measured separately, like the
+# PageRank: prepare once (the index-build phase, timed), then the
+# iteration loop is what scales — measured separately, like the
 # reference's build vs query split (src/tc.cpp:28-29 vs :41-46)
-t0 = time.perf_counter()
-prep_k = pagerank_kernel_prepare(edges, relabel=False)  # corpus pre-relabeled
-prep_k_secs = round(time.perf_counter() - t0, 2)
 t0 = time.perf_counter()
 prep_df = pagerank_df_prepare(edges)
 prep_df_secs = round(time.perf_counter() - t0, 2)
-pagerank_kernel_iterate(prep_k, max_iter=1)                      # warm-up
 pagerank_df_iterate(prep_df, max_iter=1, tol=None).ranks.count() # warm-up
 
 res = {"cores": cores, "n_edges": n_edges, "triangles": tri,
-       "pr_prep_kernel_secs": prep_k_secs, "pr_prep_df_secs": prep_df_secs,
-       "build_secs": [], "count_secs": [], "pr_secs": [], "prk_secs": []}
+       "pr_prep_df_secs": prep_df_secs,
+       "build_secs": [], "count_secs": [], "pr_secs": []}
 for _ in range(%(repeats)d):
     t0 = time.perf_counter(); j = build()
     res["build_secs"].append(round(time.perf_counter() - t0, 2))
@@ -122,8 +117,6 @@ for _ in range(%(repeats)d):
     t0 = time.perf_counter()
     pagerank_df_iterate(prep_df, max_iter=%(pr_iters)d, tol=None).ranks.count()
     res["pr_secs"].append(round(time.perf_counter() - t0, 2))
-    t0 = time.perf_counter(); pagerank_kernel_iterate(prep_k, max_iter=%(pr_iters)d)
-    res["prk_secs"].append(round(time.perf_counter() - t0, 2))
 print(json.dumps(res))
 spark.stop()
 """
@@ -169,7 +162,7 @@ def main():
             if cores not in pooled:
                 pooled[cores] = r
             else:
-                for k in ("build_secs", "count_secs", "pr_secs", "prk_secs"):
+                for k in ("build_secs", "count_secs", "pr_secs"):
                     pooled[cores][k] += r[k]
                 assert pooled[cores]["triangles"] == r["triangles"]
 
@@ -196,8 +189,6 @@ def main():
             e2e_lo, e2e_hi, n_edges),
         row("PageRank (DataFrame path) edges/sec/iteration",
             r_lo["pr_secs"], r_hi["pr_secs"], n_edges * PR_ITERS),
-        row("PageRank (broadcast-vector kernel) edges/sec/iteration",
-            r_lo["prk_secs"], r_hi["prk_secs"], n_edges * PR_ITERS),
     ])
 
     n_meas = PASSES * REPEATS

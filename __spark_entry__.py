@@ -159,11 +159,20 @@ def _q_pagerank(spark, sf_dir):
 
 
 def _q_pagerank_kernel(spark, sf_dir):
-    """The broadcast-vector numpy kernel path, checked against the SAME
-    unrolled-SQL oracle as the DataFrame path."""
-    from graphsetintersection_spark.operators.pagerank import pagerank_kernel
+    """The shuffle-path PageRank round (``broadcast_ranks=False``, the
+    shape that carries the scaling evidence), checked against the SAME
+    unrolled-SQL oracle as ``pagerank``, whose graph always takes the
+    broadcast path. The key name is historical: it once ran a separate
+    numpy kernel engine, since retired."""
+    from graphsetintersection_spark.operators.pagerank import pagerank
 
-    res = pagerank_kernel(_lgraph(spark, sf_dir), alpha=PR_ALPHA, max_iter=PR_ITERS)
+    res = pagerank(
+        _lgraph(spark, sf_dir),
+        alpha=PR_ALPHA,
+        max_iter=PR_ITERS,
+        tol=None,
+        broadcast_ranks=False,
+    )
     return res.ranks.select(
         "v", F.round(F.col("rank") * 1e6, 0).cast("long").alias("rank_ppm")
     )

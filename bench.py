@@ -172,8 +172,6 @@ def main() -> None:
     assert tri_s == tri, "stats-variant kernel diverged"
 
     # ---- PageRank iterations — north-rule throughput metric.
-    # DataFrame path (checkpointable/resumable) and the broadcast-vector
-    # kernel path (the north star's numpy-over-CSR-blocks design).
     timed(
         "pagerank_iters",
         lambda: pagerank(relabeled, max_iter=PR_BENCH_ITERS, tol=None).ranks.count(),
@@ -181,24 +179,7 @@ def main() -> None:
     throughput["pagerank_edges_per_sec_per_iter"] = round(
         n_edges * PR_BENCH_ITERS / timings["pagerank_iters"], 1
     )
-    from graphsetintersection_spark.operators.pagerank import (
-        pagerank_kernel_iterate,
-        pagerank_kernel_prepare,
-    )
-
-    prep = timed(
-        "pagerank_kernel_prepare",
-        lambda: pagerank_kernel_prepare(relabeled, relabel=False),
-        repeatable=False,  # persists its result — must build exactly once
-    )
-    timed(
-        "pagerank_kernel_iters",
-        lambda: pagerank_kernel_iterate(prep, max_iter=PR_BENCH_ITERS),
-    )
-    prep.unpersist()
-    throughput["pagerank_kernel_edges_per_sec_per_iter"] = round(
-        n_edges * PR_BENCH_ITERS / timings["pagerank_kernel_iters"], 1
-    )
+    # keys retired with the numpy kernel engine: pagerank_kernel_{prepare,iters,edges_per_sec_per_iter}
 
     # ---- connected components + LPA on the corpus graph. Both CC
     # implementations timed: min-label wins on low-diameter web graphs,

@@ -51,7 +51,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.operators.edges import (
-    canonicalize,
     drop_nulls_and_loops,
     vertices,
 )
@@ -67,6 +66,23 @@ class PageRankResult:
     iterations: int
     converged: bool
     deltas: list = field(default_factory=list)
+
+
+def _check_args(alpha, max_iter, tol, salt_hubs="auto") -> None:
+    """Reject a misconfigured run before it starts any Spark job. Each
+    test is written so that NaN (false under every comparison) fails it."""
+    if not 0.0 <= alpha <= 1.0:
+        raise ValueError(f"pagerank: alpha must be in [0, 1], got {alpha!r}")
+    if not isinstance(max_iter, int) or max_iter < 0:
+        raise ValueError(f"pagerank: max_iter must be an int >= 0, got {max_iter!r}")
+    if tol is not None and not tol >= 0.0:
+        raise ValueError(f"pagerank: tol must be None or >= 0, got {tol!r}")
+    if not (
+        salt_hubs in ("auto", None) or isinstance(salt_hubs, int) and salt_hubs >= 0
+    ):
+        raise ValueError(
+            f"pagerank: salt_hubs must be 'auto', None or an int >= 0, got {salt_hubs!r}"
+        )
 
 
 def pagerank(
@@ -88,6 +104,7 @@ def pagerank(
     aggregation is already exchange-free (edges stationary by dst), so
     salting would add cost for nothing. "auto" enables S=16 salts when the
     in-degree distribution is skewed; an int forces that salt count."""
+    _check_args(alpha, max_iter, tol, salt_hubs)
     prep = pagerank_df_prepare(
         edges, broadcast_ranks=broadcast_ranks, salt_hubs=salt_hubs
     )
@@ -127,6 +144,7 @@ def personalized_pagerank(
     broadcast-state exchange-free rounds below the 10M-vertex cutover and
     the salted shuffle path above it; per-iteration lineage truncation;
     checkpoint/resume."""
+    _check_args(alpha, max_iter, tol, salt_hubs)
     prep = pagerank_df_prepare(
         edges, broadcast_ranks=broadcast_ranks, salt_hubs=salt_hubs
     )
@@ -333,6 +351,7 @@ def pagerank_df_iterate(
     r' = (1−α)·p + α·(Aᵀr/outdeg + D·p). Rank mass stays conserved
     (Σr' = (1−α) + α·(Σcontrib + D) = 1), so the same D = 1 − Σcontrib
     dangling trick applies verbatim."""
+    _check_args(alpha, max_iter, tol)
     verts, n, broadcast_ranks = prep.verts, prep.n, prep.broadcast_ranks
     if n == 0:
         empty = prep.e_deg.sparkSession.createDataFrame([], "v long, rank double")
@@ -488,180 +507,3 @@ def _shuffle_round(prep, ranks, vp, alpha, teleport, cache) -> DataFrame:
         .crossJoin(F.broadcast(tot_df))
         .select("v", restart.alias("rank"))
     )
-
-
-@dataclass
-class PreparedGraph:
-    """Stationary state for the kernel power iteration: the cached dense-id
-    edge blocks, the out-degree vector, and the id mapping (None when ids
-    were already dense)."""
-
-    blocks: DataFrame
-    outdeg: "object"      # np.ndarray (n,)
-    n: int
-    order: DataFrame | None
-
-    def unpersist(self) -> None:
-        self.blocks.unpersist()
-        if self.order is not None:
-            self.order.unpersist()
-
-
-def pagerank_kernel_prepare(edges: DataFrame, relabel: bool = True) -> PreparedGraph:
-    """One-time index build for ``pagerank_kernel_iterate`` — the analog of
-    the reference's index-build phase (src/tc.cpp:28-29): canonicalize,
-    densify ids (two-phase relabel), cache the edge blocks, collect the
-    out-degree vector."""
-    import numpy as np
-
-    spark = edges.sparkSession
-    e = canonicalize(edges)
-    order = None
-    if relabel:
-        from graphsetintersection_spark.operators.relabel import (
-            apply_order,
-            continuous_ids,
-        )
-
-        order = continuous_ids(e).persist()
-        n = order.count()
-        dense = apply_order(e, order)
-    else:
-        mx = e.agg(F.greatest(F.max("src"), F.max("dst"))).collect()[0][0]
-        n = int(mx) + 1 if mx is not None else 0
-        dense = e
-    # hash-partition by dst ONCE: each partition then owns its dst range,
-    # so every iteration's per-partition bincount emits only that
-    # partition's vertices (total collect ≈ V rows/iteration, not P×V)
-    blocks = (
-        dense.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .repartition("dst")
-        .persist()
-    )
-    blocks.count()
-    outdeg = np.zeros(max(n, 1), dtype=np.float64)
-    if n:
-        out_pdf = blocks.groupBy("src").agg(F.count("*").alias("d")).toPandas()
-        outdeg[out_pdf["src"].to_numpy(dtype=np.int64)] = out_pdf[
-            "d"
-        ].to_numpy(dtype=np.float64)
-    return PreparedGraph(blocks, outdeg, n, order)
-
-
-def pagerank_kernel_iterate(
-    prep: PreparedGraph,
-    alpha: float = 0.85,
-    max_iter: int = 20,
-    tol: float | None = None,
-):
-    """(rank_vector, iterations, converged, deltas) — the pure iteration
-    loop over a PreparedGraph. Each iteration: one ~8B/vertex broadcast,
-    one mapInArrow bincount job over the cached blocks, one ~16B/vertex
-    partial collect. No shuffle."""
-    import numpy as np
-
-    sc = prep.blocks.sparkSession.sparkContext
-    n = prep.n
-    if n == 0:
-        return np.empty(0), 0, True, []
-    dangling_mask = prep.outdeg == 0.0
-    safe_out = np.where(dangling_mask, 1.0, prep.outdeg)
-    ranks_vec = np.full(n, 1.0 / n, dtype=np.float64)
-    converged = False
-    deltas: list[float] = []
-    it = 0
-    for it in range(max_iter):
-        w = np.where(dangling_mask, 0.0, ranks_vec / safe_out)
-        bc = sc.broadcast(w)
-
-        def partials(batches, _bc=bc):
-            import numpy as np
-            import pyarrow as pa
-
-            wv = _bc.value
-            for batch in batches:
-                src = batch.column(0).to_numpy(zero_copy_only=False)
-                dst = batch.column(1).to_numpy(zero_copy_only=False)
-                ud, inv = np.unique(dst, return_inverse=True)
-                c = np.bincount(inv, weights=wv[src])
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ud, type=pa.int64()),
-                     pa.array(c, type=pa.float64())],
-                    ["v", "c"],
-                )
-
-        part = prep.blocks.mapInArrow(partials, "v long, c double").toPandas()
-        contrib = np.bincount(
-            part["v"].to_numpy(dtype=np.int64),
-            weights=part["c"].to_numpy(dtype=np.float64),
-            minlength=n,
-        )
-        bc.destroy()
-        dangling = float(ranks_vec[dangling_mask].sum())
-        new_vec = (1.0 - alpha) / n + alpha * (contrib + dangling / n)
-        if tol is not None:
-            delta = float(np.abs(new_vec - ranks_vec).max())
-            deltas.append(delta)
-            ranks_vec = new_vec
-            if delta < tol:
-                converged = True
-                it += 1
-                break
-        else:
-            ranks_vec = new_vec
-    else:
-        it = max_iter
-    return ranks_vec, it, converged, deltas
-
-
-def pagerank_kernel(
-    edges: DataFrame,
-    alpha: float = 0.85,
-    max_iter: int = 20,
-    tol: float | None = None,
-    relabel: bool = True,
-) -> PageRankResult:
-    """Broadcast-vector power iteration over stationary cached edge
-    partitions — the north star's stated kernel design ("vectorized
-    numpy/Arrow kernels inside pandas UDFs over CSR-blocked edge
-    partitions, never per-row Python").
-
-    Per iteration: broadcast the weight vector w = rank/outdeg (8 B/vertex),
-    one mapInArrow job over the CACHED edge blocks (per Arrow batch:
-    ``np.bincount(dst, weights=w[src])`` — one vectorized gather+scatter),
-    driver-side assembly of the contribution vector + closed-form
-    dangling/teleport terms. NO shuffle at any iteration; the only
-    per-iteration serial costs are a ~8B/vertex broadcast and a ~16B/vertex
-    partial collect.
-
-    Scope: the rank/out-degree vectors must fit on the driver and each
-    executor (~10^8 vertices in a few GB). Beyond that, use ``pagerank``
-    (the DataFrame path, which also owns checkpoint/resume). Parity with
-    it is allclose-1e-12 (same float64 math, different summation order).
-
-    ``relabel=False`` asserts ids are already dense 0..V-1 and skips the
-    continuous-id join."""
-    import numpy as np
-    import pandas as pd
-
-    spark = edges.sparkSession
-    prep = pagerank_kernel_prepare(edges, relabel=relabel)
-    if prep.n == 0:
-        prep.unpersist()
-        empty = spark.createDataFrame([], "v long, rank double")
-        return PageRankResult(empty, 0, True)
-    ranks_vec, it, converged, deltas = pagerank_kernel_iterate(
-        prep, alpha=alpha, max_iter=max_iter, tol=tol
-    )
-    ranks_pdf = pd.DataFrame(
-        {"v": np.arange(prep.n, dtype=np.int64), "rank": ranks_vec}
-    )
-    ranks = spark.createDataFrame(ranks_pdf)
-    if prep.order is not None:
-        ranks = (
-            ranks.withColumnRenamed("v", "new_id")
-            .join(prep.order, "new_id")
-            .select(F.col("org_id").alias("v"), "rank")
-        )
-    prep.unpersist()
-    return PageRankResult(ranks, it, converged, deltas)

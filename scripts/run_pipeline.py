@@ -39,11 +39,6 @@ def main() -> None:
     p.add_argument("--run-id", default="run")
     p.add_argument("--pr-iters", type=int, default=20)
     p.add_argument("--pr-tol", type=float, default=1e-8)
-    p.add_argument("--pr-engine", choices=("dataframe", "kernel"),
-                   default="dataframe",
-                   help="dataframe: checkpointable/resumable shuffle plan; "
-                        "kernel: broadcast-vector numpy path (V must fit "
-                        "in executor memory)")
     args = p.parse_args()
 
     from pyspark.sql import functions as F
@@ -106,18 +101,11 @@ def main() -> None:
             ckm.commit(snap, 0, metrics={"triangles": tri, **tc_counters})
 
     if "pagerank" in algos:
-        from graphsetintersection_spark.operators.pagerank import (
-            pagerank,
-            pagerank_kernel,
-        )
+        from graphsetintersection_spark.operators.pagerank import pagerank
 
         t0 = time.perf_counter()
-        if args.pr_engine == "kernel":
-            res = pagerank_kernel(edges, max_iter=args.pr_iters,
-                                  tol=args.pr_tol)
-        else:
-            res = pagerank(edges, max_iter=args.pr_iters, tol=args.pr_tol,
-                           checkpointer=ck("pagerank"))
+        res = pagerank(edges, max_iter=args.pr_iters, tol=args.pr_tol,
+                       checkpointer=ck("pagerank"))
         res.ranks.write.mode("overwrite").parquet(
             os.path.join(args.out, "pagerank")
         )

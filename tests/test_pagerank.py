@@ -44,12 +44,18 @@ def _assert_allclose(result_df, oracle, atol=1e-6):
 
 def test_pagerank_allclose_tiny(spark, tiny_graph):
     pairs, df = tiny_graph
-    oracle = numpy_pagerank(pairs, iters=40)
-    res = pagerank(df, max_iter=40, tol=None)
-    assert res.iterations == 40
-    _assert_allclose(res.ranks, oracle)
-    total = sum(r["rank"] for r in res.ranks.collect())
-    assert total == pytest.approx(1.0, abs=1e-9)
+    # the graph as given, and with ids shifted off the dense 0..V-1 range
+    shifted = [(u * 7 + 100, v * 7 + 100) for u, v in pairs]
+    for case, frame in (
+        (pairs, df),
+        (shifted, df.selectExpr("src * 7 + 100 as src", "dst * 7 + 100 as dst")),
+    ):
+        oracle = numpy_pagerank(case, iters=40)
+        res = pagerank(frame, max_iter=40, tol=None)
+        assert res.iterations == 40
+        _assert_allclose(res.ranks, oracle)
+        total = sum(r["rank"] for r in res.ranks.collect())
+        assert total == pytest.approx(1.0, abs=1e-9)
 
 
 def test_pagerank_with_dangling_and_disconnected(spark):
@@ -59,6 +65,13 @@ def test_pagerank_with_dangling_and_disconnected(spark):
     oracle = numpy_pagerank(pairs, iters=30)
     res = pagerank(df, max_iter=30, tol=None)
     _assert_allclose(res.ranks, oracle)
+    # run to convergence instead: the dangling mass is redistributed, so
+    # the converged vector still sums to 1
+    conv = pagerank(df, max_iter=100, tol=1e-14)
+    assert conv.converged
+    _assert_allclose(conv.ranks, oracle, atol=1e-9)
+    got = [r["rank"] for r in conv.ranks.collect()]
+    assert abs(sum(got) - 1.0) < 1e-9
 
 
 def test_pagerank_convergence_stop(spark, tiny_graph):
@@ -67,6 +80,53 @@ def test_pagerank_convergence_stop(spark, tiny_graph):
     assert res.converged
     assert res.iterations < 100
     assert res.deltas[-1] < 1e-10
+
+
+_BAD_ARGS = [
+    ("pagerank", {"alpha": 1.5}),
+    ("pagerank", {"alpha": -0.1}),
+    ("pagerank", {"alpha": float("nan")}),
+    ("pagerank", {"max_iter": -3}),
+    ("pagerank", {"max_iter": 2.5}),
+    ("pagerank", {"tol": -1.0}),
+    ("pagerank", {"tol": float("nan")}),
+    ("pagerank", {"salt_hubs": "bogus", "broadcast_ranks": False}),
+    ("pagerank", {"salt_hubs": -2, "broadcast_ranks": False}),
+    ("personalized_pagerank", {"alpha": float("nan")}),
+    ("personalized_pagerank", {"tol": -1.0}),
+    ("personalized_pagerank", {"salt_hubs": "bogus"}),
+    ("pagerank_df_iterate", {"alpha": 1.5}),
+    ("pagerank_df_iterate", {"max_iter": -3}),
+    ("pagerank_df_iterate", {"tol": float("nan")}),
+]
+
+
+@pytest.mark.parametrize(
+    "fn,kwargs",
+    _BAD_ARGS,
+    ids=[f + "-" + ",".join(f"{k}={v}" for k, v in kw.items()) for f, kw in _BAD_ARGS],
+)
+def test_misconfigured_run_fails_before_any_job(spark, fn, kwargs):
+    from graphsetintersection_spark.operators import pagerank as pr
+
+    df = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
+    if fn == "pagerank":
+        call = lambda: pr.pagerank(df, **kwargs)
+    elif fn == "personalized_pagerank":
+        seeds = spark.createDataFrame([(0,)], "v long")
+        call = lambda: pr.personalized_pagerank(df, seeds, **kwargs)
+    else:
+        prep = pr.pagerank_df_prepare(df)
+        call = lambda: pr.pagerank_df_iterate(prep, **kwargs)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    start = int(sched.nextJobId())
+    try:
+        with pytest.raises(ValueError):
+            call()
+        assert int(sched.nextJobId()) == start
+    finally:
+        if fn == "pagerank_df_iterate":
+            prep.unpersist()
 
 
 def test_pagerank_resume_matches_uninterrupted(spark, tiny_graph, tmp_path):
@@ -97,37 +157,6 @@ def test_pagerank_resume_matches_uninterrupted(spark, tiny_graph, tmp_path):
     got = {r["v"]: r["rank"] for r in past.ranks.collect()}
     assert max(abs(got[v] - full_ranks[v]) for v in full_ranks) <= 1e-12
     assert [e["iteration"] for e in ck.committed()] == list(range(12))
-
-
-def test_pagerank_kernel_parity(spark, tiny_graph):
-    """Broadcast-vector kernel path ≡ DataFrame path (allclose 1e-12) —
-    including dangling vertices and non-dense ids."""
-    from graphsetintersection_spark.operators.pagerank import pagerank_kernel
-
-    pairs, df = tiny_graph
-    # shift ids so they are NOT dense 0..V-1 (exercises the relabel)
-    shifted = df.selectExpr("src * 7 + 100 as src", "dst * 7 + 100 as dst")
-    r_df = pagerank(shifted, max_iter=8, tol=None)
-    r_k = pagerank_kernel(shifted, max_iter=8)
-    a = {r["v"]: r["rank"] for r in r_df.ranks.collect()}
-    b = {r["v"]: r["rank"] for r in r_k.ranks.collect()}
-    assert set(a) == set(b)
-    assert max(abs(a[v] - b[v]) for v in a) < 1e-12
-
-
-def test_pagerank_kernel_dangling_and_tol(spark):
-    from graphsetintersection_spark.operators.pagerank import pagerank_kernel
-
-    # 0→1→2, 2 dangling; plus isolated pair 3→4
-    df = spark.createDataFrame(
-        [(0, 1), (1, 2), (3, 4)], "src long, dst long"
-    )
-    r_df = pagerank(df, max_iter=30, tol=None)
-    r_k = pagerank_kernel(df, max_iter=30, tol=1e-14)
-    a = {r["v"]: r["rank"] for r in r_df.ranks.collect()}
-    b = {r["v"]: r["rank"] for r in r_k.ranks.collect()}
-    assert max(abs(a[v] - b[v]) for v in a) < 1e-9
-    assert abs(sum(b.values()) - 1.0) < 1e-9
 
 
 def numpy_ppr(pairs, seeds, alpha=0.85, iters=40, weights=None):
