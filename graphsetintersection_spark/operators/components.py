@@ -33,7 +33,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.operators.edges import canonicalize
-from graphsetintersection_spark.plans.checkpoint import CheckpointManager, run_rounds
+from graphsetintersection_spark.plans.checkpoint import (
+    CheckpointManager,
+    check_round_args,
+    run_rounds,
+)
 from graphsetintersection_spark.plans.skew import signature_stop
 
 
@@ -95,6 +99,9 @@ def connected_components_minlabel(
         prepare_undirected,
     )
 
+    check_round_args(
+        "connected_components_minlabel", "max_rounds", max_rounds, salt_hubs=salt_hubs
+    )
     prep = prepare_undirected(edges, salt_hubs=salt_hubs)
     try:
         labels, rounds, converged, _ = run_rounds(
@@ -153,6 +160,7 @@ def connected_components_starcontraction(
 ) -> ComponentsResult:
     """Alternating large-star/small-star until the edge set is a stable
     star forest; then component(v) = its root, roots map to themselves."""
+    check_round_args("connected_components_starcontraction", "max_rounds", max_rounds)
     e = canonicalize(edges)
     # symmetric neighbor pairs (u, w), materialized ONCE (eager
     # localCheckpoint): round 0 references this frame four times
@@ -238,6 +246,9 @@ def connected_components_auto(
     Exactness: component id = min vertex id in the component, identical
     to both underlying implementations (their parity is pytest-pinned).
     """
+    op = "connected_components_auto"
+    check_round_args(op, "probe_rounds", probe_rounds, salt_hubs=salt_hubs)
+    check_round_args(op, "max_rounds", max_rounds)
     pre = connected_components_minlabel(
         edges, max_rounds=probe_rounds, salt_hubs=salt_hubs
     )

@@ -27,12 +27,15 @@ Execution strategy mirrors operators/pagerank.py:
   pre-sorted opposite cache and the aggregation is the one exchange per
   half-step, with the shared salted two-stage aggregation
   (plans/skew.two_stage_agg) engaged per aggregation key when that key's
-  degree distribution is Zipf-skewed; the sparse result is joined onto
-  the vertex set and normalized (``_l2_normalized``);
-- every iteration's vectors are materialized with lineage truncation
-  (localCheckpoint) and the superseded snapshots released, so the
-  logical plan stays O(1) across iterations and long runs do not
-  accumulate cached score vectors.
+  degree distribution is Zipf-skewed; the sparse result is left-joined
+  onto the previous round's normalized view, which is total;
+- the loop is ``plans.checkpoint.run_rounds``, one round per half-step
+  (auth on even rounds, hub on odd ones). The state is the raw total
+  score vector (v, s[, carried]), normalized by the lazy ``_l2_view``.
+  The hub round carries the auth scores, so the result is one projection
+  of the last leaf; with ``tol`` the auth round carries the hub it read,
+  so the stop test reads one leaf with no join. Each round is a
+  localCheckpoint leaf, released once the next exists.
 """
 
 from __future__ import annotations
@@ -49,6 +52,7 @@ from graphsetintersection_spark.operators.edges import (
 from graphsetintersection_spark.operators.iterative import (
     BROADCAST_STATE_MAX_VERTICES,
 )
+from graphsetintersection_spark.plans.checkpoint import check_round_args, run_rounds
 
 
 @dataclass
@@ -59,48 +63,18 @@ class HITSResult:
     deltas: list = field(default_factory=list)
 
 
-def _l2_view(raw_cp: DataFrame) -> DataFrame:
-    """L2-normalized VIEW over a materialized total score vector (one row
-    per vertex, null s = no incident edges): the norm is a 1-row broadcast
-    folded into a lazy projection over the leaf — no separate
-    materialization per half-step. Consumers (the next half-step's
-    broadcast build, the delta aggregate, the final scores join) re-run
-    only this cheap projection against the cached leaf. Zeros/nulls
-    contribute nothing to the norm, so the null-skipping aggregate equals
-    the full-vector L2 norm."""
-    nm = raw_cp.agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("_nm"))
-    return raw_cp.crossJoin(F.broadcast(nm)).select(
-        "v", (F.coalesce(F.col("s"), F.lit(0.0)) / F.col("_nm")).alias("s")
+def _l2_view(raw: DataFrame) -> DataFrame:
+    """L2-normalized VIEW over a total score vector (v, s, carried...),
+    one row per vertex, null s = no incident edges: the norm is a 1-row
+    broadcast folded into a lazy projection over the leaf, so no
+    half-step materializes its normalized form. Zeros/nulls add nothing
+    to the norm. The carried columns pass through."""
+    nm = raw.agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("_nm"))
+    return raw.crossJoin(F.broadcast(nm)).select(
+        "v",
+        (F.coalesce(F.col("s"), F.lit(0.0)) / F.col("_nm")).alias("s"),
+        *[c for c in raw.columns if c not in ("v", "s")],
     )
-
-
-def _l2_normalized(raw: DataFrame, verts: DataFrame) -> DataFrame:
-    """Full-vertex score vector from a sparse aggregation result,
-    MATERIALIZED (eager localCheckpoint): missing vertices get 0, then the
-    whole vector divides by its L2 norm (zeros contribute nothing, so the
-    norm over the sparse frame equals the norm over the full vector — one
-    small aggregate, broadcast as one row). ``raw`` is persisted
-    transiently because the plan references it twice (the norm aggregate
-    and the vector itself) and Spark does not dedupe common subtrees — an
-    uncached half-step aggregation would execute twice (the same reason
-    pagerank's per-round contribs are transiently cached); the cache is
-    released once the checkpoint holds the result."""
-    raw = raw.persist()
-    try:
-        nm = raw.agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("_nm"))
-        return (
-            verts.join(raw, "v", "left")
-            .crossJoin(F.broadcast(nm))
-            .select(
-                "v",
-                (F.coalesce(F.col("s"), F.lit(0.0)) / F.col("_nm")).alias(
-                    "s"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        raw.unpersist()
 
 
 def hits(
@@ -119,8 +93,7 @@ def hits(
     cutover); ``salt_hubs`` engages the salted two-stage aggregation on
     the shuffle path per aggregation key ("auto" probes each key's skew,
     an int forces that salt count, None disables)."""
-    if max_iter < 1:
-        raise ValueError("hits: max_iter must be >= 1")
+    check_round_args("hits", "max_iter", max_iter, tol, salt_hubs, minimum=1)
     spark = edges.sparkSession
     # transient cache for the SETUP phase only: the filtered edge frame
     # feeds the vertex count, up to two skew probes, and both stationary
@@ -155,18 +128,28 @@ def hits(
     e_src = e
 
     def half_step(edge_cache, scores, join_key, agg_key, plan):
-        """One aggregation half-step: Σ over incident edges of the other
-        side's score, grouped on ``agg_key``. On the broadcast path the
-        cache carries synthetic (v, v) self rows (real self loops were
-        dropped by drop_nulls_and_loops), so the aggregation emits one row
-        per vertex — the self row's score is excluded by the src ≠ dst
-        guard and null-skipping sum."""
-        sc = scores.withColumnRenamed("v", join_key)
+        """Σ over incident edges of the other side's score, grouped on
+        ``agg_key``: the normalized view (v, s, carried...) in, the next
+        raw total vector (v, s, carried...) out. On the broadcast path the
+        synthetic (v, v) self rows make the aggregation total: the src ≠
+        dst guard drops their score and the carried columns are read off
+        them. The shuffle path exchanges only (v, s) and left-joins the
+        sparse aggregate onto the view, which is total."""
+        cols = scores.columns if broadcast_scores else ["v", "s"]
+        sc = scores.select(*cols).withColumnRenamed("v", join_key)
         if broadcast_scores:
-            sc = F.broadcast(sc)
+            is_self = F.col("src") == F.col("dst")
+            return (
+                edge_cache.join(F.broadcast(sc), join_key)
+                .groupBy(F.col(agg_key).alias("v"))
+                .agg(
+                    F.sum(F.when(~is_self, F.col("s"))).alias("s"),
+                    *[F.max(F.when(is_self, F.col(c))).alias(c) for c in cols[2:]],
+                )
+            )
         joined = edge_cache.join(sc, join_key)
         if plan is not None:
-            return two_stage_agg(
+            agg = two_stage_agg(
                 joined.withColumnRenamed(agg_key, "v"),
                 ["v"],
                 F.sum("s"),
@@ -175,18 +158,36 @@ def hits(
                 salts=plan.salts,
                 out_col="s",
             )
-        term = (
-            F.when(F.col("src") != F.col("dst"), F.col("s"))
-            if broadcast_scores
-            else F.col("s")
-        )
-        return joined.groupBy(F.col(agg_key).alias("v")).agg(
-            F.sum(term).alias("s")
-        )
+        else:
+            agg = joined.groupBy(F.col(agg_key).alias("v")).agg(
+                F.sum("s").alias("s")
+            )
+        return scores.drop("s").join(agg, "v", "left")
 
-    converged = False
-    deltas: list[float] = []
-    it = 0
+    def step(state: DataFrame, rnd: int, cache) -> DataFrame:
+        """Even rounds: auth from the hub view (kept as ``hub_prev`` for
+        the stop test). Odd rounds: hub from the auth view, kept as
+        ``auth`` for the result."""
+        view = _l2_view(state)
+        if rnd % 2 == 0:
+            keep = [F.col("s").alias("hub_prev")] if tol is not None else []
+            scores = view.select("v", "s", *keep)
+            return half_step(e_dst, scores, "src", "dst", plan_dst)
+        keep = ["hub_prev"] if tol is not None else []
+        scores = view.select("v", "s", F.col("s").alias("auth"), *keep)
+        return half_step(e_src, scores, "dst", "src", plan_src)
+
+    def stop(prev: DataFrame, new: DataFrame):
+        """max |Δhub|, off the new leaf alone; auth rounds run no job."""
+        if "auth" not in new.columns:
+            return False, {}
+        delta = float(
+            _l2_view(new)
+            .agg(F.max(F.abs(F.col("s") - F.col("hub_prev"))))
+            .collect()[0][0]
+        )
+        return delta < tol, {"delta": delta}
+
     # try/finally: an exception anywhere in the rounds must not leave the
     # two edge caches (multi-GB at corpus scale) or the vertex cache
     # registered for the session lifetime; blocking drops, because a
@@ -203,9 +204,8 @@ def hits(
                 plan_dst = decide_hub_salting(e, "dst")
                 plan_src = decide_hub_salting(e, "src")
             else:
-                s = int(salt_hubs)
-                plan_dst = decide_hub_salting(e, "dst", salts=s, force=True)
-                plan_src = decide_hub_salting(e, "src", salts=s, force=True)
+                plan_dst = decide_hub_salting(e, "dst", salts=salt_hubs, force=True)
+                plan_src = decide_hub_salting(e, "src", salts=salt_hubs, force=True)
 
         # two stationary caches — one per aggregation key. Broadcast
         # rounds aggregate ON the partitioning key (exchange-free);
@@ -246,14 +246,6 @@ def hits(
                 f.result()
         e.unpersist()  # the per-key caches are self-contained from here
 
-        hub = verts.select("v", F.lit(1.0).alias("s")).localCheckpoint(
-            eager=True
-        )
-        auth = None
-        # leaves whose blocks the CURRENT hub/auth views still read; they
-        # are released only after the next iteration's leaves (and the
-        # delta aggregate) have consumed them
-        live_leaves: list[DataFrame] = [hub]
         # NOTE (r6): deferring the per-half-step localCheckpoint to a
         # periodic barrier (lazy transient caches in between, checkpoint
         # every 4 iterations) was implemented and MEASURED MUCH SLOWER
@@ -268,66 +260,21 @@ def hits(
         # warm 5.7 → 6.1 s, jobs 104 → 112): the broadcast build over an
         # unmaterialized cache with a nested norm-aggregate broadcast
         # spawns MORE AQE stage jobs than the checkpoint it replaces.
-        for it in range(max_iter):
-            if broadcast_scores:
-                # OPTIMIZED BROADCAST ROUND: each half-step materializes
-                # only the RAW total vector (one localCheckpoint); the
-                # L2-normalized form is a lazy projection over that leaf
-                # with the norm folded in as a 1-row broadcast (_l2_view).
-                # Per iteration: 2 checkpoint jobs instead of 2 transient
-                # persists + 2 checkpointed normalize passes + 2 verts
-                # finalize joins.
-                a_raw = half_step(
-                    e_dst, hub, "src", "dst", plan_dst
-                ).localCheckpoint(eager=True)
-                auth_new = _l2_view(a_raw)
-                h_raw = half_step(
-                    e_src, auth_new, "dst", "src", plan_src
-                ).localCheckpoint(eager=True)
-                hub_new = _l2_view(h_raw)
-                new_leaves = [a_raw, h_raw]
-            else:
-                auth_new = _l2_normalized(
-                    half_step(e_dst, hub, "src", "dst", plan_dst), verts
-                )
-                hub_new = _l2_normalized(
-                    half_step(e_src, auth_new, "dst", "src", plan_src), verts
-                )
-                new_leaves = [auth_new, hub_new]
-
-            delta = None
-            if tol is not None:
-                delta = (
-                    hub_new.withColumnRenamed("s", "ns")
-                    .join(hub, "v")
-                    .agg(F.max(F.abs(F.col("ns") - F.col("s"))))
-                    .collect()[0][0]
-                )
-                deltas.append(float(delta))
-
-            for leaf in live_leaves:
-                leaf.unpersist()
-            live_leaves = new_leaves
-            hub, auth = hub_new, auth_new
-            if tol is not None and delta is not None and delta < tol:
-                converged = True
-                it += 1
-                break
-        else:
-            it = max_iter
-
-        # both views are total (one row per vertex, same vertex set): the
-        # broadcast half-steps aggregate over the self rows, the shuffle
-        # ones join the vertex set in _l2_normalized
+        state, rounds, converged, history = run_rounds(
+            verts.select("v", F.lit(1.0).alias("s")),
+            step,
+            2 * max_iter,
+            stop if tol is not None else None,
+        )
+        # the last round is a hub round: its leaf carries the auth scores
         scores = (
-            hub.withColumnRenamed("s", "hub")
-            .join(auth.withColumnRenamed("s", "auth"), "v")
-            .select("v", "hub", "auth")
+            _l2_view(state)
+            .select("v", F.col("s").alias("hub"), "auth")
             .localCheckpoint(eager=True)
         )
-        for leaf in live_leaves:
-            leaf.unpersist()
-        return HITSResult(scores, it, converged, deltas)
+        state.unpersist()
+        deltas = [m["delta"] for m in history if "delta" in m]
+        return HITSResult(scores, rounds // 2, converged, deltas)
     finally:
         verts.unpersist(blocking=True)
         e.unpersist()

@@ -35,7 +35,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphsetintersection_spark.plans.checkpoint import CheckpointManager, run_rounds
+from graphsetintersection_spark.plans.checkpoint import (
+    CheckpointManager,
+    check_round_args,
+    run_rounds,
+)
 from graphsetintersection_spark.plans.skew import signature_stop, two_stage_agg
 
 
@@ -97,6 +101,7 @@ def label_propagation(
         prepare_undirected,
     )
 
+    check_round_args("label_propagation", "max_rounds", max_rounds, salt_hubs=salt_hubs)
     prep = prepare_undirected(edges, salt_hubs=salt_hubs)
     try:
         labels, rounds, converged, _ = run_rounds(

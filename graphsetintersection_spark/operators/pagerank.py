@@ -57,7 +57,11 @@ from graphsetintersection_spark.operators.edges import (
 from graphsetintersection_spark.operators.iterative import (
     BROADCAST_STATE_MAX_VERTICES,
 )
-from graphsetintersection_spark.plans.checkpoint import CheckpointManager, run_rounds
+from graphsetintersection_spark.plans.checkpoint import (
+    CheckpointManager,
+    check_round_args,
+    run_rounds,
+)
 
 
 @dataclass
@@ -69,20 +73,11 @@ class PageRankResult:
 
 
 def _check_args(alpha, max_iter, tol, salt_hubs="auto") -> None:
-    """Reject a misconfigured run before it starts any Spark job. Each
-    test is written so that NaN (false under every comparison) fails it."""
+    """Reject a misconfigured run before it starts any Spark job (NaN
+    fails every test)."""
     if not 0.0 <= alpha <= 1.0:
         raise ValueError(f"pagerank: alpha must be in [0, 1], got {alpha!r}")
-    if not isinstance(max_iter, int) or max_iter < 0:
-        raise ValueError(f"pagerank: max_iter must be an int >= 0, got {max_iter!r}")
-    if tol is not None and not tol >= 0.0:
-        raise ValueError(f"pagerank: tol must be None or >= 0, got {tol!r}")
-    if not (
-        salt_hubs in ("auto", None) or isinstance(salt_hubs, int) and salt_hubs >= 0
-    ):
-        raise ValueError(
-            f"pagerank: salt_hubs must be 'auto', None or an int >= 0, got {salt_hubs!r}"
-        )
+    check_round_args("pagerank", "max_iter", max_iter, tol, salt_hubs)
 
 
 def pagerank(

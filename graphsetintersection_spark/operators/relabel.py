@@ -26,12 +26,14 @@ Also here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.kernels import PACK_SHIFT, PACK_WIDTH
 from graphsetintersection_spark.operators.edges import canonicalize, degrees, symmetrize
+from graphsetintersection_spark.operators.iterative import BROADCAST_STATE_MAX_VERTICES
 from graphsetintersection_spark.plans.assign import global_order_stats
+from graphsetintersection_spark.plans.checkpoint import run_rounds
 
 
 def degree_order(
@@ -186,11 +188,11 @@ def _bfs_levels(
     max_levels: int,
     n: int | None = None,
     broadcast_state: bool | None = None,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """Level-synchronous BFS from ``root`` over out-edges, lineage
-    truncated per round. Returns the (v, level) frame plus the live
-    localCheckpoint handles the caller must unpersist once a downstream
-    result is materialized.
+) -> DataFrame:
+    """Level-synchronous BFS from ``root`` over out-edges, one
+    ``run_rounds`` round per level (round r expands level r). Returns the
+    (v, level) leaf; the caller unpersists it once a downstream result is
+    materialized.
 
     Join strategy per level — the same stationary-graph/ship-state
     switch as the CC/LPA/PageRank rounds (operators/iterative.py):
@@ -204,22 +206,15 @@ def _bfs_levels(
     - SHUFFLE (above the cutover, or forced): the original
       frontier⨝edges hash join — each level exchanges the frontier AND
       the edge frame; correct at any state size, the fallback shape."""
-    from graphsetintersection_spark.operators.iterative import (
-        BROADCAST_STATE_MAX_VERTICES,
-    )
-
     spark = edges.sparkSession
     if broadcast_state is None:
         broadcast_state = n is not None and n <= BROADCAST_STATE_MAX_VERTICES
-    levels = spark.createDataFrame([(root, 0)], "v long, level int")
-    frontier = levels
     ej = edges.select("src", "dst")
     # an already-cached input needs no second cache copy — the per-level
     # joins read the caller's cache through the cheap projection
     ej_cached_here = broadcast_state and not edges.is_cached
     if ej_cached_here:
         ej = ej.persist()
-    prev_levels: DataFrame | None = None
     # NOTE (r6): replacing the per-level levels re-checkpoint with a lazy
     # union of frontier leaves was MEASURED SLOWER here (13-21s vs 7s on
     # the 20k-vertex bench graph, degrading with plan depth) — the
@@ -231,11 +226,12 @@ def _bfs_levels(
     # view is a lazy filter over that leaf, and termination reads the
     # union's row count from an observed metric of the checkpoint job
     # itself (exact integer count — order-insensitive, no extra action)
-    # instead of a separate isEmpty job. 5 jobs/level → 3.
-    from pyspark.sql import Observation
+    # instead of a separate isEmpty job. 5 jobs/level → 3 (r6); 4 as counted now.
+    n_prev, obs = 1, None  # visited rows (the root row); the round's count
 
-    n_prev = 1  # the root row
-    for lvl in range(1, max_levels + 1):
+    def step(levels: DataFrame, rnd: int, cache) -> DataFrame:
+        nonlocal obs
+        frontier = levels.where(F.col("level") == rnd)
         if broadcast_state:
             nxt = (
                 ej.join(
@@ -254,61 +250,64 @@ def _bfs_levels(
                 .join(levels, "v", "left_anti")
             )
         obs = Observation()
-        new_levels = (
-            levels.unionByName(nxt.withColumn("level", F.lit(lvl)))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        return levels.unionByName(nxt.withColumn("level", F.lit(rnd + 1))).observe(
+            obs, F.count(F.lit(1)).alias("n")
         )
+
+    def stop(levels: DataFrame, new: DataFrame):
+        # read after the driver's eager localCheckpoint filled the
+        # observation: no extra job. A level that adds no vertex leaves a
+        # leaf with the previous one's content, and the search is done.
+        nonlocal n_prev
         n_new = int(obs.get["n"])
-        # the previous round's snapshot is superseded (the terminal
-        # union — no new vertices — has identical content to it)
-        if prev_levels is not None:
-            prev_levels.unpersist()
-        prev_levels = new_levels
-        levels = new_levels
-        if n_new == n_prev:
-            break
-        n_prev = n_new
-        frontier = new_levels.where(F.col("level") == lvl)
-    if ej_cached_here:
-        ej.unpersist()
-    live = [prev_levels] if prev_levels is not None else []
-    return levels, live
+        done, n_prev = n_new == n_prev, n_new
+        return done, {}
+
+    try:
+        levels, _, _, _ = run_rounds(
+            spark.createDataFrame([(root, 0)], "v long, level int"),
+            step,
+            max_levels,
+            stop,
+        )
+    finally:
+        if ej_cached_here:
+            ej.unpersist()
+    return levels
 
 
 def _level_order(
     edges: DataFrame,
     root_exprs: list,
-    level_tiebreak: list,
+    order: list,
     max_levels: int,
     rank_col: str = "new_id",
-) -> DataFrame | None:
-    """Shared body of bfs_order / rcm_order: BFS levels from the extreme-
-    degree root, then the two-phase rank over (level, <tiebreak>).
-    Returns the materialized (v, deg, level, rank) frame or None if the
-    graph is empty. All BFS working caches are released before return."""
+) -> DataFrame:
+    """Shared body of the BFS orderings: BFS levels from the first vertex
+    under ``root_exprs``, then the two-phase rank over ``order`` (columns
+    v, deg, level; vertices the search did not reach get level
+    max_levels + 1). Returns the materialized (v, level, deg, rank) frame,
+    or an empty (v, rank) frame for an empty graph. The BFS working caches
+    are released on every exit path."""
     deg = degrees(edges).persist()
-    root_row = deg.orderBy(*root_exprs).first()
-    if root_row is None:
+    try:
+        root_row = deg.orderBy(*root_exprs).first()
+        if root_row is None:
+            return edges.sparkSession.createDataFrame([], f"v long, {rank_col} long")
+        levels = _bfs_levels(edges, int(root_row["v"]), max_levels, n=deg.count())
+        ranked = deg.join(levels, "v", "left").select(
+            "v",
+            F.coalesce("level", F.lit(max_levels + 1)).alias("level"),
+            "deg",
+        )
+        out = global_order_stats(ranked, order, rank_col=rank_col)
+        # global_order_stats returned an EAGERLY MATERIALIZED frame (its
+        # contract) — the BFS levels leaf is no longer referenced by any
+        # recomputable lineage and can be dropped safely
+        levels.unpersist()
+        return out
+    finally:
         deg.unpersist()
-        return None
-    root = int(root_row["v"])
-    levels, live = _bfs_levels(edges, root, max_levels, n=deg.count())
-    ranked = deg.join(levels, "v", "left").select(
-        "v",
-        F.coalesce("level", F.lit(max_levels + 1)).alias("level"),
-        "deg",
-    )
-    out = global_order_stats(
-        ranked, [F.col("level").asc(), *level_tiebreak], rank_col=rank_col
-    )
-    # global_order_stats returned an EAGERLY MATERIALIZED frame (its
-    # contract) — the BFS working localCheckpoints are no longer referenced
-    # by any recomputable lineage and can be dropped safely
-    deg.unpersist()
-    for f in live:
-        f.unpersist()
-    return out
 
 
 def bfs_order(edges: DataFrame, max_levels: int = 64) -> DataFrame:
@@ -324,15 +323,12 @@ def bfs_order(edges: DataFrame, max_levels: int = 64) -> DataFrame:
     Vertices unreachable from the root (the reference restarts BFS per
     component, :548-563) are appended after all reached levels as one
     final wave, ordered by the same (deg desc, v asc) tie-break."""
-    spark = edges.sparkSession
     out = _level_order(
         edges,
         [F.col("deg").desc(), F.col("v").asc()],
-        [F.col("deg").desc(), F.col("v").asc()],
+        [F.col("level").asc(), F.col("deg").desc(), F.col("v").asc()],
         max_levels,
     )
-    if out is None:
-        return spark.createDataFrame([], "org_id long, new_id long")
     return out.select(F.col("v").alias("org_id"), "new_id")
 
 
@@ -349,16 +345,13 @@ def rcm_order(edges: DataFrame, max_levels: int = 64) -> DataFrame:
     ascending-degree order (:600-603); unreached vertices here form one
     final wave under the same (deg asc, v) order — same locality class,
     deterministic."""
-    spark = edges.sparkSession
     out = _level_order(
         edges,
         [F.col("deg").asc(), F.col("v").asc()],
-        [F.col("deg").asc(), F.col("v").asc()],
+        [F.col("level").asc(), F.col("deg").asc(), F.col("v").asc()],
         max_levels,
         rank_col="_r",
     )
-    if out is None:
-        return spark.createDataFrame([], "org_id long, new_id long")
     n = out.count()
     return out.select(
         F.col("v").alias("org_id"),
@@ -390,27 +383,12 @@ def hybrid_bfsdeg_order(edges: DataFrame, max_levels: int = 64) -> DataFrame:
     components. The correctness gate's SQL oracle encodes THIS
     re-expression (level/id tiebreak), so it pins this implementation's
     semantics, not reference-exact parity."""
-    spark = edges.sparkSession
-    deg = degrees(edges).persist()
-    root_row = deg.orderBy(F.col("v").asc()).first()
-    if root_row is None:
-        deg.unpersist()
-        return spark.createDataFrame([], "org_id long, new_id long")
-    root = int(root_row["v"])
-    levels, live = _bfs_levels(edges, root, max_levels, n=deg.count())
-    ranked = deg.join(levels, "v", "left").select(
-        "v",
-        F.coalesce("level", F.lit(max_levels + 1)).alias("level"),
-        "deg",
-    )
-    out = global_order_stats(
-        ranked,
+    out = _level_order(
+        edges,
+        [F.col("v").asc()],
         [F.col("deg").desc(), F.col("level").asc(), F.col("v").asc()],
-        rank_col="new_id",
+        max_levels,
     )
-    deg.unpersist()
-    for f in live:
-        f.unpersist()
     return out.select(F.col("v").alias("org_id"), "new_id")
 
 

@@ -14,12 +14,15 @@ in Spark it solves two problems at once:
    iteration; commit is atomic via manifest-line-last ordering (the data
    snapshot is fully written before its manifest line appears).
 
-``run_rounds`` is the one loop of PageRank/PPR, min-label CC, label
-propagation and star contraction: the engines supply a lazy round body
-and an optional stop test, and the driver restores, materializes or
-commits every round, releases the superseded leaf and the round's
-transient caches, and counts rounds. The reference's shape is the same:
-build the index once, then one plain loop over it (src/tc.cpp:28-29).
+``run_rounds`` is the one loop of every iterative engine: PageRank/PPR,
+min-label CC, label propagation, star contraction, HITS (one round per
+half-step) and the BFS levels of the BFS orderings. The engines supply a
+lazy round body and an optional stop test, and the driver restores,
+materializes or commits every round, releases the superseded leaf and
+the round's transient caches, and counts rounds; ``check_round_args``
+rejects a misconfigured run before its first job. The reference's shape
+is the same: build the index once, then one plain loop over it
+(src/tc.cpp:28-29).
 
 Layout (``storage="parquet"``, the sandbox default — same
 snapshot-per-iteration semantics as Iceberg; ``storage="iceberg"`` routes
@@ -176,6 +179,26 @@ class CheckpointManager:
         return [
             {"iteration": e["iteration"], **e["metrics"]} for e in self.committed()
         ]
+
+
+def check_round_args(
+    op: str, rounds_name: str, rounds, tol=None, salt_hubs="auto", minimum: int = 0
+) -> None:
+    """Reject a misconfigured iterative run before its first Spark job: the
+    round count must be an int >= ``minimum``, ``tol`` None or >= 0 and
+    ``salt_hubs`` "auto", None or an int >= 0. Each test is written so
+    that NaN (false under every comparison) fails it."""
+    if not isinstance(rounds, int) or rounds < minimum:
+        name, value, want = rounds_name, rounds, f"an int >= {minimum}"
+    elif tol is not None and not tol >= 0.0:
+        name, value, want = "tol", tol, "None or >= 0"
+    elif salt_hubs not in ("auto", None) and not (
+        isinstance(salt_hubs, int) and salt_hubs >= 0
+    ):
+        name, value, want = "salt_hubs", salt_hubs, "'auto', None or an int >= 0"
+    else:
+        return
+    raise ValueError(f"{op}: {name} must be {want}, got {value!r}")
 
 
 Step = Callable[[DataFrame, int, Callable[[DataFrame], DataFrame]], DataFrame]

@@ -28,18 +28,32 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+ALGORITHMS = ("pagerank", "components", "labelprop", "triangles")
+
+
 def main() -> None:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--pages", help="pages table: Iceberg/catalog name or parquet path")
     p.add_argument("--synthetic", type=int, default=0,
                    help="generate N synthetic pages instead of --pages")
     p.add_argument("--out", required=True, help="output directory")
-    p.add_argument("--algorithms", default="pagerank,components,labelprop,triangles")
+    p.add_argument("--algorithms", default=",".join(ALGORITHMS))
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--run-id", default="run")
     p.add_argument("--pr-iters", type=int, default=20)
     p.add_argument("--pr-tol", type=float, default=1e-8)
     args = p.parse_args()
+    # every argument is checked before the session starts and the ingest runs
+    algos = set(args.algorithms.split(","))
+    unknown = algos - set(ALGORITHMS)
+    if unknown:
+        p.error(f"unknown --algorithms {sorted(unknown)}; choose from {ALGORITHMS}")
+    if args.pr_iters < 0:
+        p.error(f"--pr-iters must be >= 0, got {args.pr_iters}")
+    if not args.pr_tol >= 0.0:
+        p.error(f"--pr-tol must be >= 0, got {args.pr_tol}")
+    if not (args.synthetic or args.pages):
+        p.error("one of --pages / --synthetic is required")
 
     from pyspark.sql import functions as F
 
@@ -57,12 +71,10 @@ def main() -> None:
 
     if args.synthetic:
         pages = generate_pages(spark, args.synthetic, seed=42)
-    elif args.pages:
+    else:
         from graphsetintersection_spark.sources.pages import read_pages
 
         pages = read_pages(spark, args.pages)
-    else:
-        p.error("one of --pages / --synthetic is required")
 
     # ingest: links → relabeled edge table, persisted for all algorithms
     edges_raw = link_edges(pages)
@@ -72,8 +84,6 @@ def main() -> None:
     report["comp_ratio"] = comp_ratio(edges)
     edges.write.mode("overwrite").parquet(os.path.join(args.out, "edges"))
     order.write.mode("overwrite").parquet(os.path.join(args.out, "vertex_order"))
-
-    algos = set(args.algorithms.split(","))
 
     def ck(name):
         if args.checkpoint_dir is None:

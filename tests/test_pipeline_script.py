@@ -9,6 +9,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -61,3 +63,27 @@ def test_pipeline_triangles_checkpoint_counters(tmp_path):
     assert entries[-1]["metrics"]["inter_cnt"] == rep["tc_counters"]["inter_cnt"]
     assert entries[-1]["metrics"]["cmp_cnt"] == rep["tc_counters"]["cmp_cnt"]
     assert entries[-1]["metrics"]["triangles"] == rep["triangles"]
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [
+        ["--algorithms", "pagrank"],
+        ["--algorithms", "pagerank,"],
+        ["--pr-iters", "-1"],
+        ["--pr-tol", "-1"],
+        ["--pr-tol", "nan"],
+    ],
+    ids=lambda extra: " ".join(extra),
+)
+def test_pipeline_rejects_bad_arguments_before_the_ingest(tmp_path, extra):
+    """A bad argument is a usage error (exit code 2) raised before the
+    Spark session starts: nothing is ingested or written."""
+    out = str(tmp_path / "bad")
+    res = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "run_pipeline.py"),
+         "--synthetic", "300", "--out", out, *extra],
+        capture_output=True, text=True, cwd=REPO, timeout=120,
+    )
+    assert res.returncode == 2, res.stderr[-2000:]
+    assert not os.path.exists(out)

@@ -2,7 +2,9 @@
 relabel, and comp_ratio densification (the reference's reorder contract —
 src/porder.cpp:471-495, metric :295-351)."""
 
-from tests.conftest import brute_triangles, random_graph
+import pytest
+
+from tests.conftest import brute_triangles, cache_rdd_ids, random_graph
 
 from graphsetintersection_spark.operators.relabel import (
     apply_order,
@@ -613,10 +615,63 @@ def test_bfs_levels_broadcast_equals_shuffle(spark):
     )
     df = spark.createDataFrame(pairs, "src long, dst long")
     root = pairs[0][0]
-    lv_b, live_b = _bfs_levels(df, root, 32, broadcast_state=True)
-    lv_s, live_s = _bfs_levels(df, root, 32, broadcast_state=False)
+    lv_b = _bfs_levels(df, root, 32, broadcast_state=True)
+    lv_s = _bfs_levels(df, root, 32, broadcast_state=False)
     got_b = {(r["v"], r["level"]) for r in lv_b.collect()}
     got_s = {(r["v"], r["level"]) for r in lv_s.collect()}
     assert got_b == got_s and got_b
-    for f in live_b + live_s:
-        f.unpersist()
+    lv_b.unpersist()
+    lv_s.unpersist()
+
+
+def test_bfs_levels_job_count_per_level(spark):
+    """One run_rounds round per level. On the broadcast path a level costs
+    4 jobs (the frontier and visited-set broadcast builds, the candidate
+    distinct's shuffle stage and the level's checkpoint, whose observed
+    row count is the stop test); measured the same before the move to
+    run_rounds (21 jobs for the 4-edge chain, 37 for the 8-edge one)."""
+    from graphsetintersection_spark.operators.relabel import _bfs_levels
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(k):
+        df = spark.createDataFrame(
+            [(i, i + 1) for i in range(k)], "src long, dst long"
+        )
+        start = int(sched.nextJobId())
+        levels = _bfs_levels(df, 0, 64, broadcast_state=True)
+        used = int(sched.nextJobId()) - start
+        assert {(r["v"], r["level"]) for r in levels.collect()} == {
+            (i, i) for i in range(k + 1)
+        }
+        levels.unpersist()
+        return used
+
+    assert jobs(8) - jobs(4) == 4 * 4
+
+
+def test_bfs_orderings_release_caches_when_a_level_fails(spark, monkeypatch):
+    """A level that raises (here the second localCheckpoint, i.e. the
+    second BFS level) leaves neither the BFS edge cache nor the caller's
+    degree cache behind."""
+    from graphsetintersection_spark.operators import relabel
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(6)], "src long, dst long")
+    cls = type(df)
+    real = cls.localCheckpoint
+    for fn in (relabel.bfs_order, relabel.rcm_order, relabel.hybrid_bfsdeg_order):
+        calls = []
+
+        def flaky(self, *args, **kwargs):
+            calls.append(1)
+            if len(calls) == 2:
+                raise RuntimeError("injected level failure")
+            return real(self, *args, **kwargs)
+
+        before = cache_rdd_ids(spark)
+        monkeypatch.setattr(cls, "localCheckpoint", flaky)
+        with pytest.raises(RuntimeError, match="injected"):
+            fn(df)
+        monkeypatch.setattr(cls, "localCheckpoint", real)
+        leaked = cache_rdd_ids(spark) - before
+        assert not leaked, f"{fn.__name__} leaked caches: {leaked}"
