@@ -319,17 +319,18 @@ SIMHASH_THRESHOLD = 0.5    # mid-gap: corpus pairs are either ≥0.9 or ≤0.31
 
 def _q_minhash_lsh(spark, sf_dir):
     """MinHash LSH in its high-recall regime (rows_per_band=1, 256 perms:
-    miss prob (1-j)^256 < 1e-24 at j=0.2) + exact string-shingle verify —
-    the emitted set equals the exact ngram-Jaccard pair set, so the
-    DuckDB brute-force oracle applies EXACTLY. verify_hashed=False keeps
-    the verify byte-identical to the SQL string shingles; verify_mode=
-    "index" keeps the dense-candidate verify at inverted-index cost."""
+    miss prob (1-j)^256 < 1e-24 at j=0.2) + the exact verify — the
+    emitted set equals the exact ngram-Jaccard pair set, so the DuckDB
+    brute-force oracle applies EXACTLY. The verify counts hashed byte
+    n-grams and the oracle string char n-grams; on the gate corpora (all
+    ASCII, shortest text 44 chars) the rolling hash has no collision and
+    every document's n-gram count is the same either way, so the two
+    Jaccards are equal."""
     from graphsetintersection_spark.functions.dedup import minhash_lsh_pairs
 
     docs = _docs(spark, sf_dir).where(F.col("doc_id") < NGRAM_DOCS)
     return minhash_lsh_pairs(
         docs, num_perm=256, bands=256, threshold=NGRAM_THRESHOLD, verify=True,
-        verify_hashed=False, verify_mode="index",
     ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -342,9 +343,11 @@ def _q_stream_neardup(spark, sf_dir):
     micro-batch (streaming parity is pytest-pinned; a DuckDB gate cannot
     execute a stream). High-recall regime (bands=num_perm=256: candidate
     iff ANY slot agrees, per-pair miss prob (1-j)^256 — < 1e-24 at the
-    gate's j ≥ 0.2, negligible) + exact string-shingle verify, so the
-    output equals the exact cross-set Jaccard pair set up to that
-    vanishing miss probability and the brute-force SQL oracle applies."""
+    gate's j ≥ 0.2, negligible) + the exact verify, so the output equals
+    the exact cross-set Jaccard pair set up to that vanishing miss
+    probability and the brute-force SQL oracle applies (hashed byte
+    n-grams equal the oracle's char n-grams on this ASCII corpus: no
+    collision, same per-document n-gram counts — see _q_minhash_lsh)."""
     from graphsetintersection_spark.streaming.dedup import (
         batch_minhash_neardup,
         minhash_band_index,
@@ -362,7 +365,6 @@ def _q_stream_neardup(spark, sf_dir):
     return batch_minhash_neardup(
         incoming, index, num_perm=256, bands=256,
         threshold=NGRAM_THRESHOLD, exact_verify_docs=docs,
-        verify_hashed=False,
     ).select("doc_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -371,14 +373,16 @@ def _q_simhash(spark, sf_dir):
     Jaccard verify). max_hamming=7 is comfortably above the corpus's
     near-dup Hamming band (≤5) and far below unrelated pairs (≥10 only
     below jaccard 0.31), so the emitted set equals the exact
-    jaccard ≥ 0.5 pair set — checked against a brute-force SQL oracle."""
+    jaccard ≥ 0.5 pair set — checked against a brute-force SQL oracle
+    (the verify's hashed byte n-grams equal the oracle's char n-grams on
+    this ASCII corpus: no collision, same per-document n-gram counts —
+    see _q_minhash_lsh)."""
     from graphsetintersection_spark.functions.dedup import simhash_neardup_pairs
 
     return simhash_neardup_pairs(
         _docs(spark, sf_dir),
         max_hamming=SIMHASH_MAX_HAMMING,
         threshold=SIMHASH_THRESHOLD,
-        verify_hashed=False,
     ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 

@@ -231,13 +231,13 @@ def main() -> None:
         "minhash_lsh_prod",
         lambda: minhash_lsh_pairs(
             docs_full, num_perm=128, bands=32, threshold=0.5,
-            verify=True, verify_hashed=True, est_prefilter_sigmas=4.0,
+            verify=True, est_prefilter_sigmas=4.0,
         ).collect(),
     )
     timed(
         "simhash_prod",
         lambda: simhash_neardup_pairs(
-            docs_full, max_hamming=3, threshold=0.5, verify_hashed=True
+            docs_full, max_hamming=3, threshold=0.5
         ).collect(),
     )
     vecs = read_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")

@@ -169,14 +169,14 @@ def section_dedup(spark, prof):
         "dedup_lsh_prod_cold",
         lambda: minhash_lsh_pairs(
             docs, num_perm=128, bands=32, threshold=0.5,
-            verify=True, verify_hashed=True, est_prefilter_sigmas=4.0,
+            verify=True, est_prefilter_sigmas=4.0,
         ).collect(),
     )
     prof.run(
         "dedup_lsh_prod_warm",
         lambda: minhash_lsh_pairs(
             docs, num_perm=128, bands=32, threshold=0.5,
-            verify=True, verify_hashed=True, est_prefilter_sigmas=4.0,
+            verify=True, est_prefilter_sigmas=4.0,
         ).collect(),
     )
     cand = prof.run(
@@ -188,7 +188,7 @@ def section_dedup(spark, prof):
     prof.run("dedup_cand_count", cand.count)
     prof.run(
         "dedup_verify_pairs",
-        lambda: jaccard_for_pairs(docs, cand, hashed=True, mode="pairs").collect(),
+        lambda: jaccard_for_pairs(docs, cand).collect(),
     )
     cand.unpersist()
 

@@ -9,26 +9,30 @@ Exact and near-duplicate detection over a ``(doc_id, text)`` table:
   same contract as the reference's intersect kernels, re-expressed as
   join + groupBy.count; SQL-oracle-checkable).
 - ``minhash_signatures`` / ``minhash_lsh_pairs`` — MinHash + banded LSH:
-  shingle → 64-bit hash → per-row min over P permutations (vectorized via
-  xxhash64 + universal hashing, all JVM-side) → band buckets → bucket
-  self-join. Candidate pairs are verified with exact Jaccard.
+  shingle → 64-bit hash → per-doc min over P universal-hash permutations
+  (one fused Arrow pass) → band buckets → bucket self-join.
 - ``simhash_signatures`` / ``simhash_pairs`` — 64-bit SimHash over token
   hashes; near-dups = signatures within Hamming distance k, found via
   4-way block rotation (Charikar / Manku-Jain-Sarma scheme).
-- ``embedding_neardup_pairs`` — cosine near-dup over an embedding column
-  (delegates to functions.similarity).
+- ``jaccard_for_pairs`` — THE exact verify of every candidate pipeline
+  (MinHash, SimHash, the streaming index's batch twin): per candidate
+  pair, |A∩B| of the two documents' sorted shingle-hash arrays
+  (``hashed_shingles``) in one batch intersection pass.
 
 Scale notes: every op is one or two hash shuffles; the shingle inverted
 index join is skew-prone on stop-shingles — ``ngram_jaccard_pairs`` filters
 shingles whose document frequency exceeds ``max_shingle_df`` (the standard
-stop-shingle cut, which also removes noise pairs). MinHash shingle hashes
-come from the LINEAR ``hashed_shingles`` Arrow kernel — the JVM substr
-shingle transform is O(len²) per document (UTF8 code-point addressing), a
-non-starter on MB-size pages; the string form is kept only for the exact
-SQL-oracle ops.
+stop-shingle cut, which also removes noise pairs). Signatures and the
+verify roll shingle hashes with the LINEAR ``_doc_shingle_hashes`` kernel —
+the JVM substr shingle transform is O(len²) per document (UTF8 code-point
+addressing), a non-starter on MB-size pages; string shingles serve only
+``shingles`` / ``ngram_jaccard_pairs``.
 """
 
 from __future__ import annotations
+
+import math
+from numbers import Integral
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -111,13 +115,34 @@ def shingles(
     )
 
 
+def check_lsh_args(
+    n: int | None = None,
+    threshold: float | None = None,
+    num_perm: int | None = None,
+    bands: int | None = None,
+) -> None:
+    """Reject near-dup parameters before any Spark job: each of these used
+    to fail late (a ZeroDivisionError, or a ValueError after the index
+    aggregate) or run to a silently wrong answer (n=0 or num_perm=0
+    returned garbage pairs, a threshold outside [0, 1] returned none)."""
+    for name, v in (("n", n), ("num_perm", num_perm), ("bands", bands)):
+        if v is not None and (
+            isinstance(v, bool) or not isinstance(v, Integral) or v < 1
+        ):
+            raise ValueError(f"{name} must be a positive integer, got {v!r}")
+    if bands is not None and num_perm % bands:
+        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
+    if threshold is not None and not 0.0 <= threshold <= 1.0:
+        raise ValueError(f"threshold must lie in [0, 1], got {threshold!r}")
+
+
 def _doc_shingle_hashes(t, n: int):
     """Unique int64 rolling hashes of one document's byte n-grams, or
-    None for null/short texts — the single definition both the shingle
-    kernel and the fused minhash kernel roll (same hashes, so hashed
-    verify and kernel signatures agree bit-for-bit). Runs on executors:
-    cloudpickle serializes the closure's reference, workers re-import
-    this module."""
+    None for null/short texts — the single definition both the verify's
+    shingle arrays and the fused minhash kernel roll. The array is sorted
+    as UNSIGNED values (``np.unique`` over uint64, then an int64 view).
+    Runs on executors: cloudpickle serializes the closure's reference,
+    workers re-import this module."""
     import numpy as np
 
     if t is None:
@@ -148,64 +173,65 @@ def _mersenne31_mod(x):
     return x
 
 
+def _doc_texts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, _t): the input of both per-document Arrow kernels, raised
+    to the session's parallelism (``ensure_min_parallelism``)."""
+    from graphsetintersection_spark.session import ensure_min_parallelism
+
+    return ensure_min_parallelism(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
+    )
+
+
+def _doc_arrays(src: DataFrame, n: int, col: str, per_doc) -> DataFrame:
+    """(doc_id, ``col``: array<long>) over a ``_doc_texts`` frame in ONE
+    Arrow pass: ``per_doc`` of each document's ``_doc_shingle_hashes``,
+    one row per document with at least one n-gram. The body of both
+    per-document kernels (shingle arrays and MinHash signatures)."""
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            ids: list[int] = []
+            arrs = []
+            for did, t in zip(
+                batch.column(0).to_pylist(), batch.column(1).to_pylist()
+            ):
+                hu = _doc_shingle_hashes(t, n)
+                if hu is not None:
+                    ids.append(did)
+                    arrs.append(per_doc(hu))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids, type=pa.int64()),
+                 pa.array(arrs, type=pa.list_(pa.int64()))],
+                ["doc_id", col],
+            )
+
+    return src.mapInArrow(gen, f"doc_id long, {col} array<long>")
+
+
 def hashed_shingles(
     docs: DataFrame,
     n: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """(doc_id, h: long) DISTINCT hashed character n-gram shingles in ONE
-    LINEAR vectorized Arrow pass.
+    """(doc_id, h: array<long>) — each document's sorted unique hashed
+    character n-gram shingles, one row per document, in ONE LINEAR
+    vectorized Arrow pass. Documents with no n-gram (null, or shorter
+    than ``n`` bytes) get no row.
 
-    Why not the string ``shingles`` op for MinHash: Spark's ``substr``
-    addresses UTF8 strings by CODE POINT, scanning from the start of the
-    string on every call — the shingle ``transform`` is therefore
-    O(len²) per document (measured: a 2 MB page effectively never
-    finishes). This kernel rolls a polynomial hash over the UTF-8 bytes
-    with numpy stride tricks — O(len·n), vectorized over each document's
-    bytes (the only Python loop is per document, not per char). MinHash only
-    ever consumes the shingle HASH, so the string form is never needed on
-    the scale path; the exact-Jaccard ops (``ngram_jaccard_pairs``,
-    ``jaccard_for_pairs``) keep string shingles for SQL-oracle exactness.
-    (Byte n-grams coincide with char n-grams on ASCII; multi-byte chars
-    just shift window boundaries — an internal hashing detail.)"""
-    import pyarrow as pa  # noqa: F401
-
-    from graphsetintersection_spark.session import ensure_min_parallelism
-
-    src = ensure_min_parallelism(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_ids: list[int] = []
-            out_h: list[np.ndarray] = []
-            for did, t in zip(ids, texts):
-                hu = _doc_shingle_hashes(t, n)
-                if hu is None:
-                    continue
-                out_ids.extend([did] * len(hu))
-                out_h.append(hu)
-            hcat = (
-                np.concatenate(out_h)
-                if out_h
-                else np.empty(0, dtype=np.int64)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=pa.int64()),
-                    pa.array(hcat, type=pa.int64()),
-                ],
-                ["doc_id", "h"],
-            )
-
-    return src.mapInArrow(gen, "doc_id long, h long")
+    Why not the string ``shingles`` op: Spark's ``substr`` addresses UTF8
+    strings by CODE POINT, scanning from the start of the string on every
+    call — the shingle ``transform`` is therefore O(len²) per document
+    (measured: a 2 MB page effectively never finishes). This kernel rolls
+    a polynomial hash over the UTF-8 bytes with numpy stride tricks —
+    O(len·n), vectorized over each document's bytes. Jaccard over these
+    sets equals string-shingle Jaccard up to 64-bit hash collisions; byte
+    n-grams coincide with char n-grams on ASCII text (multi-byte chars
+    just shift window boundaries). ``h`` is sorted as UNSIGNED values."""
+    return _doc_arrays(_doc_texts(docs, id_col, text_col), n, "h", lambda h: h)
 
 
 def ngram_jaccard_pairs(
@@ -256,6 +282,15 @@ def ngram_jaccard_pairs(
     return _materialized(out, sh)
 
 
+def _perm_params(num_perm: int, seed: int) -> list[tuple[int, int]]:
+    """The (a_p, b_p) of the P universal-hash permutations."""
+    import random
+
+    rnd = random.Random(seed)
+    return [(rnd.randrange(1, _MH_PRIME, 2), rnd.randrange(0, _MH_PRIME))
+            for _ in range(num_perm)]
+
+
 def minhash_signatures(
     docs: DataFrame,
     num_perm: int = 64,
@@ -263,129 +298,57 @@ def minhash_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
     seed: int = 1,
-    method: str = "auto",
 ) -> DataFrame:
     """(doc_id, sig: array<long>) MinHash signatures.
 
     Shingle → rolling 64-bit hash → P universal-hash permutations
     h_p(x) = (a_p·x + b_p) mod 2^31-1, min per doc per permutation.
 
-    ``method``:
+    The signature is computed INSIDE the same Arrow pass that rolls the
+    shingle hashes (``_doc_shingle_hashes``): per document, one
+    (n_shingles × P) broadcast-multiply + min reduction in numpy. ZERO
+    shuffle — the shingle table (10-100× the corpus row count) never
+    exists as a Spark frame, and the map emits exactly one P-long row per
+    document; the working buffer is O(P) per doc regardless of length.
+    All arithmetic is exact int64 (h < 2^31, a < 2^31 → a·h < 2^62), so
+    the signatures are bit-identical to P relational ``min`` aggregates
+    over the exploded shingle hashes (pytest-pinned against that form)."""
+    import numpy as np
 
-    - ``"kernel"`` (the ``"auto"`` default — the scale path): the
-      signature is computed INSIDE the same Arrow pass that rolls the
-      shingle hashes (``_doc_shingle_hashes``): per document, one
-      (n_shingles × P) broadcast-multiply + min reduction in numpy.
-      ZERO shuffle — the shingle table (10-100× the corpus row count)
-      never exists as a Spark frame, and the map emits exactly one
-      P-long row per document. All arithmetic is exact int64
-      (h < 2^31, a < 2^31 → a·h < 2^62), so kernel signatures are
-      bit-identical to the agg path's (pytest-pinned).
-    - ``"agg"``: shingle rows from ``hashed_shingles``, then the P
-      per-permutation minima as P independent ``min`` AGGREGATE COLUMNS
-      in one groupBy — map-side combinable with a fixed P-long buffer
-      per doc (plan shows partial_min; the relational form, kept as the
-      Catalyst-visible fallback). Shuffles (doc_id, P mins) per doc
-      after partial aggregation — fine, but the explode itself and the
-      P interpreted hash expressions PER SHINGLE ROW cost ~2× the fused
-      kernel at P = 128 (measured sf0.1).
+    check_lsh_args(n=n, num_perm=num_perm)
+    params = _perm_params(num_perm, seed)
+    a_vec = np.array([a for a, _ in params], dtype=np.int64)
+    b_vec = np.array([b for _, b in params], dtype=np.int64)
+    prime = np.int64(_MH_PRIME)
 
-    (The r2 form folded a ``collect_list`` of one P-long array per
-    shingle and reduced it with ``zip_with``: a 100k-shingle document
-    held P·100k longs in one aggregation buffer row — a row-level memory
-    hazard on long docs, VERDICT r2 #2. Both current forms are O(P) per
-    doc regardless of length.)
-
-    Both paths hash shingles with the LINEAR rolling kernel — the JVM
-    substr shingle path is O(len²) per document (see
-    ``hashed_shingles``) and MinHash never needs the shingle strings."""
-    import random
-
-    rnd = random.Random(seed)
-    params = [(rnd.randrange(1, _MH_PRIME, 2), rnd.randrange(0, _MH_PRIME))
-              for _ in range(num_perm)]
-    if method == "auto":
-        method = "kernel"
-    if method not in ("kernel", "agg"):
-        raise ValueError(
-            f"unknown minhash signature method {method!r}; expected "
-            "'auto', 'kernel', or 'agg'"
-        )
-    if method == "kernel":
-        import numpy as np
-
-        a_vec = np.array([a for a, _ in params], dtype=np.int64)
-        b_vec = np.array([b for _, b in params], dtype=np.int64)
-        from graphsetintersection_spark.session import (
-            ensure_min_parallelism,
-        )
-
-        src = ensure_min_parallelism(
-            docs.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
+    def signature(hu):
+        hv = hu % prime  # numpy % == pmod for negatives
+        # chunk the shingle axis: the full (n_shingles × P) product on a
+        # 100k-shingle page at P=256 would be a ~200 MB transient — the r2
+        # row-memory hazard in kernel form. 8k-chunks cap it at 16 MB (and
+        # keep the working set cache-resident — a batch-level fused form
+        # with 32k chunks was MEASURED memory-bandwidth bound and slower;
+        # see OPTIMIZATION_r06.md).
+        sig = np.full(len(a_vec), _MH_PRIME, dtype=np.int64)
+        for lo in range(0, len(hv), 8192):
+            blk = hv[lo:lo + 8192, None]
+            np.minimum(
+                sig,
+                _mersenne31_mod(blk * a_vec[None, :] + b_vec[None, :]).min(axis=0),
+                out=sig,
             )
-        )
+        return sig
 
-        def gen(batches):
-            import pyarrow as pa
+    return _doc_arrays(_doc_texts(docs, id_col, text_col), n, "sig", signature)
 
-            prime = np.int64(_MH_PRIME)
-            for batch in batches:
-                ids = batch.column(0).to_pylist()
-                texts = batch.column(1).to_pylist()
-                out_ids: list[int] = []
-                sigs: list[np.ndarray] = []
-                for did, t in zip(ids, texts):
-                    hu = _doc_shingle_hashes(t, n)
-                    if hu is None:
-                        continue
-                    hv = hu % prime  # numpy % == pmod for negatives
-                    # chunk the shingle axis: the full (n_shingles × P)
-                    # product on a 100k-shingle page at P=256 would be a
-                    # ~200 MB transient — the r2 row-memory hazard in
-                    # kernel form. 8k-chunks cap it at 16 MB (and keep the
-                    # working set cache-resident — a batch-level fused
-                    # form with 32k chunks was MEASURED memory-bandwidth
-                    # bound and slower; see OPTIMIZATION_r06.md).
-                    sig = np.full(len(a_vec), _MH_PRIME, dtype=np.int64)
-                    for lo in range(0, len(hv), 8192):
-                        blk = hv[lo:lo + 8192, None]
-                        np.minimum(
-                            sig,
-                            _mersenne31_mod(
-                                blk * a_vec[None, :] + b_vec[None, :]
-                            ).min(axis=0),
-                            out=sig,
-                        )
-                    sigs.append(sig)
-                    out_ids.append(did)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_ids, type=pa.int64()),
-                        pa.array(
-                            list(np.stack(sigs)) if sigs else [],
-                            type=pa.list_(pa.int64()),
-                        ),
-                    ],
-                    ["doc_id", "sig"],
-                )
 
-        return src.mapInArrow(gen, "doc_id long, sig array<long>")
-
-    sh = hashed_shingles(docs, n, id_col, text_col)
-    hval = F.pmod(F.col("h"), F.lit(_MH_PRIME))
-    per_shingle = sh.select("doc_id", hval.alias("_h"))
-    mins = [
-        F.min((F.col("_h") * F.lit(a) + F.lit(b)) % F.lit(_MH_PRIME)).alias(f"_s{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    return (
-        per_shingle.groupBy("doc_id")
-        .agg(*mins)
-        .select(
-            "doc_id",
-            F.array(*[F.col(f"_s{i}") for i in range(num_perm)]).alias("sig"),
-        )
+def minhash_estimate(sig_a: str, sig_b: str, num_perm: int):
+    """Column: the MinHash Jaccard estimate of two signature columns —
+    equal slots / num_perm, JVM-side via ``zip_with``. Shared by the
+    batch prefilter and the streaming match."""
+    return F.expr(
+        f"size(filter(zip_with({sig_a}, {sig_b}, (x, y) -> x = y), z -> z))"
+        f" / cast({num_perm} as double)"
     )
 
 
@@ -406,7 +369,7 @@ def banded_rows(
     bands ≥ 256); otherwise bucket = xxhash64 of the band's signature
     slice. ``carry`` keeps extra columns (e.g. the signature itself, for
     a downstream estimated-Jaccard check) on every band row."""
-    assert num_perm % bands == 0
+    check_lsh_args(num_perm=num_perm, bands=bands)
     rows_per_band = num_perm // bands
     keep = [F.col(c) for c in ("doc_id", *carry)]
     if rows_per_band == 1:
@@ -444,25 +407,18 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     verify: bool = True,
     verify_hashed: bool = True,
-    verify_mode: str = "pairs",
-    sig_method: str = "auto",
     est_prefilter_sigmas: float | None = None,
 ) -> DataFrame:
-    """Banded-LSH candidate pairs, optionally verified with exact Jaccard.
+    """Banded-LSH candidate pairs (id_a < id_b), optionally verified with
+    exact Jaccard.
 
     bands × rows_per_band = num_perm; a pair collides if any band's slice
     of the signature matches exactly (bucket hash join — one shuffle on
-    (band, bucket)). With verify=True, candidates are filtered to
-    jaccard ≥ threshold via the exact shingle join restricted to the
-    candidate set (cheap: candidates ≪ all pairs). ``verify_hashed``
-    (default True) routes the verify through the linear hashed-shingle
-    kernel — the string-shingle path is O(len²) per document (the exact
-    hazard the kernel exists to remove) and is kept only for byte-exact
-    SQL-oracle comparisons (pass False there). ``verify_mode`` picks the
-    verify join strategy (see ``jaccard_for_pairs``): "pairs" for the
-    normal sparse-candidate regime, "index" when LSH runs in a
-    high-recall regime (rows_per_band 1-2) where candidates approach
-    all-pairs-sharing-a-shingle.
+    (band, bucket)). With verify=True, candidates go through the one
+    candidate → verify step (``jaccard_for_pairs``, restricted to the
+    candidate documents) and are filtered to jaccard ≥ threshold. The
+    verify always runs over hashed shingles; ``verify_hashed`` is still
+    accepted for callers that pass it, and must be True.
 
     High-recall regime note: with ``bands == num_perm`` (one row per
     band) a pair is a candidate if ANY of the ``num_perm`` minhashes
@@ -471,95 +427,134 @@ def minhash_lsh_pairs(
     ``ngram_jaccard_pairs`` set. The correctness gate runs this regime
     to get an exact SQL oracle; production dedup runs rows_per_band 4-8
     where candidates stay sparse."""
-    assert num_perm % bands == 0
-    # persist: the banded self-join references the signature subtree on
-    # both sides — unpersisted, the full shingle+aggregate pipeline runs
-    # twice
-    sigs = minhash_signatures(
-        docs, num_perm, n, id_col, text_col, method=sig_method
-    ).persist()
-    # try/finally from the persist onward: an exception while BUILDING the
-    # banded join or the prefilter joins (before _materialized or the
-    # verify's own try/finally runs) must not leak the signature cache for
-    # the session — the CacheManager-leak class _materialized exists to
-    # eliminate (unpersist is idempotent, so the early releases stay)
-    try:
-        return _minhash_lsh_pairs_body(
-            docs, sigs, num_perm, bands, n, threshold, id_col, text_col,
-            verify, verify_hashed, verify_mode, est_prefilter_sigmas,
+    check_lsh_args(n=n, threshold=threshold, num_perm=num_perm, bands=bands)
+    if verify_hashed is not True:
+        raise ValueError(
+            "the verify always hashes shingles: verify_hashed must be True"
         )
+    if est_prefilter_sigmas is not None and not (
+        0.0 <= est_prefilter_sigmas < math.inf
+    ):
+        raise ValueError(
+            "est_prefilter_sigmas must be None or a finite number ≥ 0, got "
+            f"{est_prefilter_sigmas!r}"
+        )
+    # persist: the banded self-join references the signature subtree on
+    # both sides — unpersisted, the full signature kernel runs twice.
+    # try/finally from the persist onward: an exception while BUILDING the
+    # banded join or the prefilter joins must not leak the signature cache
+    # for the session — the CacheManager-leak class _materialized exists to
+    # eliminate (unpersist is idempotent)
+    sigs = minhash_signatures(docs, num_perm, n, id_col, text_col).persist()
+    try:
+        banded = banded_rows(sigs, num_perm, bands)
+        a = banded.select(F.col("doc_id").alias("id_a"), "band", "bucket")
+        b = banded.select(F.col("doc_id").alias("id_b"), "band", "bucket")
+        cand = (
+            a.join(b, ["band", "bucket"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        if not verify:
+            return _materialized(cand, sigs)
+        if est_prefilter_sigmas is not None:
+            # Estimate-prefilter (production regimes): drop candidates
+            # whose MinHash slot-agreement estimate sits more than k·σ
+            # below the threshold BEFORE the exact verify — the verify is
+            # the cost center when a templated corpus floods the banding
+            # with sub-threshold candidates (measured sf0.1: 350,653
+            # candidates, 256 true pairs — the prefilter removes ~99% of
+            # the verify work). σ = sqrt(t(1-t)/P) is the estimator's
+            # binomial sd; at k=4, P=128, t=0.5 a TRUE pair is lost with
+            # probability ~3e-5 (one-sided tail) — the documented recall
+            # trade. The GATE regimes leave this None: their exactness
+            # proof needs every band candidate verified.
+            margin = est_prefilter_sigmas * math.sqrt(
+                threshold * (1.0 - threshold) / num_perm
+            )
+            cand = (
+                cand.join(
+                    sigs.select(F.col("doc_id").alias("id_a"),
+                                F.col("sig").alias("_sig_a")),
+                    "id_a",
+                )
+                .join(
+                    sigs.select(F.col("doc_id").alias("id_b"),
+                                F.col("sig").alias("_sig_b")),
+                    "id_b",
+                )
+                .where(
+                    minhash_estimate("_sig_a", "_sig_b", num_perm)
+                    >= threshold - margin
+                )
+                .select("id_a", "id_b")
+            )
+        return verified_pairs(docs, cand, n, threshold, id_col, text_col)
     finally:
         sigs.unpersist()
 
 
-def _minhash_lsh_pairs_body(
-    docs, sigs, num_perm, bands, n, threshold, id_col, text_col,
-    verify, verify_hashed, verify_mode, est_prefilter_sigmas,
-):
-    banded = banded_rows(sigs, num_perm, bands)
-    a = banded.select(F.col("doc_id").alias("id_a"), "band", "bucket")
-    b = banded.select(F.col("doc_id").alias("id_b"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    if not verify:
-        return _materialized(cand, sigs)
-    if est_prefilter_sigmas is not None:
-        # Estimate-prefilter (production regimes): drop candidates whose
-        # MinHash slot-agreement estimate sits more than k·σ below the
-        # threshold BEFORE the exact shingle verify — the verify's pair ×
-        # shingle join is the cost center when a templated corpus floods
-        # the banding with sub-threshold candidates (measured sf0.1:
-        # 350,653 candidates, 256 true pairs — the prefilter removes
-        # ~99% of the verify work). σ = sqrt(t(1-t)/P) is the estimator's
-        # binomial sd; at k=4, P=128, t=0.5 a TRUE pair is lost with
-        # probability ~3e-5 (one-sided tail) — the documented recall
-        # trade. The GATE regimes leave this None: their exactness proof
-        # needs every band candidate verified.
-        import math
-
-        margin = est_prefilter_sigmas * math.sqrt(
-            threshold * (1.0 - threshold) / num_perm
-        )
-        est = F.expr(
-            "size(filter(zip_with(_sig_a, _sig_b, (x, y) -> x = y),"
-            f" z -> z)) / cast({num_perm} as double)"
-        )
-        cand = (
-            cand.join(
-                sigs.select(
-                    F.col("doc_id").alias("id_a"), F.col("sig").alias("_sig_a")
-                ),
-                "id_a",
-            )
-            .join(
-                sigs.select(
-                    F.col("doc_id").alias("id_b"), F.col("sig").alias("_sig_b")
-                ),
-                "id_b",
-            )
-            .where(est >= threshold - margin)
-            .select("id_a", "id_b")
-        )
-    # the verify references the candidate set several times (doc
-    # restriction, intersection keep, final left join) — persist so the
-    # banded join runs once; jaccard_for_pairs materializes its result
-    # eagerly, so both builder caches can be released right after it
+def verified_pairs(
+    docs: DataFrame,
+    cand: DataFrame,
+    n: int,
+    threshold: float,
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """The candidate → exact-verify step every near-dup pipeline ends
+    with: (id_a, id_b, jaccard ≥ threshold) for the (id_a, id_b)
+    candidates. The verify reads the candidates three times (both sides
+    of the document restriction and the pair join), so they are
+    persisted for its one eager pass and released right after it."""
     cand = cand.persist()
     try:
-        exact = jaccard_for_pairs(
-            docs, cand, n=n, id_col=id_col, text_col=text_col,
-            hashed=verify_hashed, mode=verify_mode,
-        )
+        exact = jaccard_for_pairs(docs, cand, n, id_col, text_col)
     finally:
         cand.unpersist()
-        sigs.unpersist()
-    return exact.where(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
-    )
+    return exact.where(F.col("jaccard") >= threshold)
+
+
+def _pair_jaccard(batches):
+    """mapInArrow body of the verify: (id_a, id_b, _ha, _hb) → (id_a,
+    id_b, jaccard), |A∩B| for a whole batch in one
+    ``kernels.batch_intersect_count`` call."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from graphsetintersection_spark.kernels import batch_intersect_count
+
+    for batch in batches:
+        n = batch.num_rows
+        ha, hb = batch.column(2), batch.column(3)
+        la = pc.list_value_length(ha).to_numpy().astype(np.int64)
+        lb = pc.list_value_length(hb).to_numpy().astype(np.int64)
+        va, vb = ha.flatten().to_numpy(), hb.flatten().to_numpy()
+        # the kernel wants each row sorted and < 2^ROW_SHIFT: replace the
+        # hashes by their rank among the hashes of the batch's distinct
+        # documents (each array once, however many pairs name it). The
+        # arrays are sorted as UNSIGNED values, so rank on the uint64
+        # view — signed ranks break the per-row order and miscount
+        _, first = np.unique(
+            np.concatenate([batch.column(0).to_numpy(),
+                            batch.column(1).to_numpy()]),
+            return_index=True,
+        )
+        u = np.unique(np.concatenate([
+            ha.take(first[first < n]).flatten().to_numpy(),
+            hb.take(first[first >= n] - n).flatten().to_numpy(),
+        ]).view(np.uint64))
+        inter = batch_intersect_count(
+            np.searchsorted(u, va.view(np.uint64)), la,
+            np.searchsorted(u, vb.view(np.uint64)), lb,
+        )
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0), batch.column(1),
+             pa.array(inter / (la + lb - inter))],
+            ["id_a", "id_b", "jaccard"],
+        )
 
 
 def jaccard_for_pairs(
@@ -568,97 +563,50 @@ def jaccard_for_pairs(
     n: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = False,
-    mode: str = "pairs",
 ) -> DataFrame:
-    """Exact n-gram Jaccard computed ONLY for the given (id_a, id_b) pairs.
+    """Exact n-gram Jaccard computed ONLY for the given (id_a, id_b) pairs
+    — the reference's intersect_count contract (set_operation.cpp:129)
+    over each pair's sorted, deduplicated shingle-hash sets.
 
-    This is the LSH verify step: a semi-join restricts the shingle table to
-    candidate documents, then each candidate pair's intersection is counted
-    — never an all-pairs shingle self-join over the corpus (which would
-    negate the LSH's whole cost saving at scale). Pairs with zero shared
-    shingles get jaccard 0.
+    1. the candidate documents are collected from the pairs;
+    2. ``hashed_shingles`` builds one row per candidate document holding
+       its sorted unique shingle hashes, in one Arrow pass;
+    3. each pair joins both documents' arrays;
+    4. one Arrow pass counts |A∩B| per row with the engine's batch
+       intersection kernel; Jaccard = i / (|A|+|B|-i).
 
-    ``mode`` picks the intersection join strategy:
-
-    - "pairs" (default): join the pair list through the shingles —
-      cost Σ_pairs |shingles(A)|; right when candidates ≪ all pairs
-      (the production LSH regime).
-    - "index": inverted-index self-join over the candidate DOCUMENTS'
-      shingles (cost Σ_shingle df²), then an equi-join keeps only the
-      candidate pairs; right in high-recall regimes where the candidate
-      set approaches all-pairs-sharing-a-shingle — there the "pairs"
-      strategy degenerates to |pairs| × |shingles| row blowup while the
-      index form stays at the exact ``ngram_jaccard_pairs`` cost.
-
-    ``hashed=True`` swaps the string shingles for the linear
-    ``hashed_shingles`` kernel — required when candidate documents are MB
-    -size (the string shingle transform is O(len²) per doc); Jaccard over
-    hashed shingle sets equals string-shingle Jaccard up to 64-bit hash
-    collisions."""
+    Never an all-pairs shingle self-join over the corpus (which would
+    negate the LSH's whole cost saving at scale), and no shingle-row
+    explode. Every pair is kept in either orientation, and disjoint pairs
+    get jaccard 0; a pair naming a document with no n-gram (null text, or
+    shorter than ``n`` bytes) is dropped. Jaccard over hashed shingle sets
+    equals string-shingle Jaccard up to 64-bit hash collisions (byte
+    n-grams coincide with char n-grams on ASCII text)."""
+    check_lsh_args(n=n)
     ids = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .union(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
     # Restrict to candidate DOCUMENTS before shingling: mapInArrow is a
-    # pushdown barrier, so without this semi-join the hashed kernel
-    # re-scans every byte of the corpus to verify a candidate set that
-    # production regimes keep ≪ corpus (the string path equally avoids
-    # exploding non-candidate docs). Candidate ids also shrink the scan
-    # via the join's runtime filter on the parquet side.
-    docs_c = docs.join(
-        ids.withColumnRenamed("doc_id", "__cand_id"),
-        F.col(id_col) == F.col("__cand_id"),
-        "semi",
-    )
-    if hashed:
-        sh = hashed_shingles(docs_c, n, id_col, text_col).withColumnRenamed(
-            "h", "shingle"
-        )
-    else:
-        sh = shingles(docs_c, n, id_col, text_col)
-    # candidate-restricted shingles feed the sizes aggregate and both join
-    # strategies — released by _materialized below
-    sh_c = sh.persist()
-    sizes = sh_c.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    if mode == "index":
-        a = sh_c.select(F.col("doc_id").alias("id_a"), "shingle")
-        b = sh_c.select(F.col("doc_id").alias("id_b"), "shingle")
-        inter = (
-            a.join(b, "shingle")
-            .where(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("i"))
-            .join(pairs, ["id_a", "id_b"])  # keep candidates only
-        )
-    else:
-        ca = pairs.join(
-            sh_c.withColumnRenamed("doc_id", "id_a"), "id_a"
-        )  # (id_a, id_b, shingle)
-        inter = (
-            ca.join(
-                sh_c.select(F.col("doc_id").alias("id_b"), "shingle"),
-                ["id_b", "shingle"],
-            )
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("i"))
-        )
+    # pushdown barrier, so without this semi-join the kernel re-scans
+    # every byte of the corpus to verify a candidate set that production
+    # regimes keep ≪ corpus. The parallelism probe runs on the plain
+    # document scan: probing the joined frame would run its AQE stages,
+    # which then run a second time.
+    sets = _doc_arrays(
+        _doc_texts(docs, id_col, text_col).join(ids, "doc_id", "semi"),
+        n, "h", lambda h: h,
+    ).persist()
     out = (
-        pairs.join(inter, ["id_a", "id_b"], "left")
-        .join(sizes.withColumnRenamed("doc_id", "id_a")
-              .withColumnRenamed("n_sh", "na"), "id_a")
-        .join(sizes.withColumnRenamed("doc_id", "id_b")
-              .withColumnRenamed("n_sh", "nb"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (F.coalesce(F.col("i"), F.lit(0))
-             / (F.col("na") + F.col("nb") - F.coalesce(F.col("i"), F.lit(0)))
-             ).alias("jaccard"),
-        )
+        pairs.join(sets.select(F.col("doc_id").alias("id_a"),
+                               F.col("h").alias("_ha")), "id_a")
+        .join(sets.select(F.col("doc_id").alias("id_b"),
+                          F.col("h").alias("_hb")), "id_b")
+        .select("id_a", "id_b", "_ha", "_hb")
+        .mapInArrow(_pair_jaccard, "id_a long, id_b long, jaccard double")
     )
-    return _materialized(out, sh_c)
+    return _materialized(out, sets)
 
 
 def simhash_signatures(
@@ -704,7 +652,16 @@ def simhash_pairs(
 
     Block-rotation LSH: split 64 bits into (max_hamming+1) blocks; any pair
     within distance k must agree exactly on ≥1 block (pigeonhole) → join on
-    (block_idx, block_value), verify Hamming distance with bit_count."""
+    (block_idx, block_value), verify Hamming distance with bit_count.
+    Each block needs at least one bit, so 0 ≤ max_hamming ≤ 63."""
+    if (
+        isinstance(max_hamming, bool)
+        or not isinstance(max_hamming, Integral)
+        or not 0 <= max_hamming <= 63
+    ):
+        raise ValueError(
+            f"max_hamming must be an integer in [0, 63], got {max_hamming!r}"
+        )
     # persist: the block self-join references the signature subtree on
     # both sides
     sigs = simhash_signatures(docs, id_col, text_col).persist()
@@ -752,16 +709,14 @@ def simhash_neardup_pairs(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    verify_hashed: bool = True,
-    verify_mode: str = "pairs",
 ) -> DataFrame:
     """SimHash-candidated near-dup pairs VERIFIED with exact n-gram
     Jaccard: (id_a, id_b, jaccard ≥ threshold).
 
     The production near-dup pipeline shape: cheap signature candidates
     (Hamming(simhash) ≤ max_hamming via block-rotation LSH, see
-    ``simhash_pairs``) → exact verify restricted to the candidate set
-    (``jaccard_for_pairs``). Precision is exact by construction (every
+    ``simhash_pairs``) → the one candidate → verify step
+    (``verified_pairs``). Precision is exact by construction (every
     emitted pair carries its true Jaccard); recall is governed by
     max_hamming — near-identical documents share almost all token votes,
     so their signatures sit at Hamming ≲ 5 while unrelated documents
@@ -769,16 +724,8 @@ def simhash_neardup_pairs(
     the emitted set coincides with the exact jaccard ≥ threshold pair
     set, which is what the correctness gate checks against a brute-force
     SQL oracle; pytest covers the tight-budget approximate regime."""
-    # simhash_pairs returns an eagerly-checkpointed frame — the repeated
-    # references inside jaccard_for_pairs re-read its blocks, so no
-    # additional persist is needed (and none to leak)
+    check_lsh_args(n=n, threshold=threshold)
     cand = simhash_pairs(
         docs, max_hamming=max_hamming, id_col=id_col, text_col=text_col
     ).select("id_a", "id_b")
-    exact = jaccard_for_pairs(
-        docs, cand, n=n, id_col=id_col, text_col=text_col,
-        hashed=verify_hashed, mode=verify_mode,
-    )
-    return exact.where(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
-    )
+    return verified_pairs(docs, cand, n, threshold, id_col, text_col)

@@ -281,26 +281,25 @@ def _level_order(
     root_exprs: list,
     order: list,
     max_levels: int,
-    rank_col: str = "new_id",
 ) -> DataFrame:
     """Shared body of the BFS orderings: BFS levels from the first vertex
     under ``root_exprs``, then the two-phase rank over ``order`` (columns
     v, deg, level; vertices the search did not reach get level
-    max_levels + 1). Returns the materialized (v, level, deg, rank) frame,
-    or an empty (v, rank) frame for an empty graph. The BFS working caches
-    are released on every exit path."""
+    max_levels + 1). Returns the materialized (v, level, deg, new_id)
+    frame, new_id the 0-based rank, or an empty (v, new_id) frame for an
+    empty graph. The BFS working caches are released on every exit path."""
     deg = degrees(edges).persist()
     try:
         root_row = deg.orderBy(*root_exprs).first()
         if root_row is None:
-            return edges.sparkSession.createDataFrame([], f"v long, {rank_col} long")
+            return edges.sparkSession.createDataFrame([], "v long, new_id long")
         levels = _bfs_levels(edges, int(root_row["v"]), max_levels, n=deg.count())
         ranked = deg.join(levels, "v", "left").select(
             "v",
             F.coalesce("level", F.lit(max_levels + 1)).alias("level"),
             "deg",
         )
-        out = global_order_stats(ranked, order, rank_col=rank_col)
+        out = global_order_stats(ranked, order, rank_col="new_id")
         # global_order_stats returned an EAGERLY MATERIALIZED frame (its
         # contract) — the BFS levels leaf is no longer referenced by any
         # recomputable lineage and can be dropped safely
@@ -339,24 +338,20 @@ def rcm_order(edges: DataFrame, max_levels: int = 64) -> DataFrame:
     assigned in REVERSE (the reference fills new_id from v_num-1 down).
 
     Distributed re-expression: the same level-synchronous BFS as
-    bfs_order, ranked over (level asc, deg ASC, v asc) — the reference's
-    ascending-degree queue-order class — then reversed:
-    new_id = (V-1) − rank. The reference restarts per component in
-    ascending-degree order (:600-603); unreached vertices here form one
-    final wave under the same (deg asc, v) order — same locality class,
-    deterministic."""
+    bfs_order, in the reverse of the order (level asc, deg ASC, v asc) —
+    the reference's ascending-degree queue-order class — so the ids are
+    ranked directly over (level desc, deg desc, v desc): v makes the
+    order total, so that rank IS (V-1) − the forward rank, with no vertex
+    count. The reference restarts per component in ascending-degree order
+    (:600-603); unreached vertices here form one final wave under the
+    same (deg asc, v) order — same locality class, deterministic."""
     out = _level_order(
         edges,
         [F.col("deg").asc(), F.col("v").asc()],
-        [F.col("level").asc(), F.col("deg").asc(), F.col("v").asc()],
+        [F.col("level").desc(), F.col("deg").desc(), F.col("v").desc()],
         max_levels,
-        rank_col="_r",
     )
-    n = out.count()
-    return out.select(
-        F.col("v").alias("org_id"),
-        (F.lit(int(n) - 1) - F.col("_r")).cast("long").alias("new_id"),
-    )
+    return out.select(F.col("v").alias("org_id"), "new_id")
 
 
 def hybrid_bfsdeg_order(edges: DataFrame, max_levels: int = 64) -> DataFrame:

@@ -38,7 +38,10 @@ from pyspark.sql import functions as F
 
 from graphsetintersection_spark.functions.dedup import (
     banded_rows,
+    check_lsh_args,
+    minhash_estimate,
     minhash_signatures,
+    verified_pairs,
 )
 
 
@@ -56,6 +59,7 @@ def minhash_band_index(
     signature table — num_perm longs × bands per document, the classic
     space-for-a-join trade (at num_perm=128/bands=32 that is ~32 KB per
     document of index, linear in corpus size, shardable by bucket)."""
+    check_lsh_args(n=n, num_perm=num_perm, bands=bands)
     sigs = minhash_signatures(docs, num_perm, n, id_col, text_col)
     return banded_rows(sigs, num_perm, bands, carry=("sig",)).select(
         F.col("doc_id").alias("index_doc_id"),
@@ -162,20 +166,15 @@ def stream_minhash_neardup(
     num_perm/bands at query-build time (one column-pruned aggregate over
     the static side — see ``_validate_index``); pass False to skip when
     the same process built the index this session."""
+    check_lsh_args(n=n, threshold=threshold, num_perm=num_perm, bands=bands)
     if validate:
         _validate_index(index, num_perm, bands)
-    sigs = minhash_signatures(
-        docs_stream, num_perm, n, id_col, text_col, method="kernel"
-    )
+    sigs = minhash_signatures(docs_stream, num_perm, n, id_col, text_col)
     banded = banded_rows(sigs, num_perm, bands, carry=("sig",))
-    est = F.expr(
-        f"size(filter(zip_with(sig, index_sig, (a, b) -> a = b), x -> x))"
-        f" / cast({num_perm} as double)"
-    )
     matches = (
         banded.join(index, ["band", "bucket"])
         .where(F.col("doc_id") != F.col("index_doc_id"))
-        .withColumn("est_jaccard", est)
+        .withColumn("est_jaccard", minhash_estimate("sig", "index_sig", num_perm))
         .where(F.col("est_jaccard") >= threshold)
         .select(
             "doc_id",
@@ -203,7 +202,6 @@ def batch_minhash_neardup(
     id_col: str = "doc_id",
     text_col: str = "text",
     exact_verify_docs: DataFrame | None = None,
-    verify_hashed: bool = True,
 ) -> DataFrame:
     """The batch twin of ``stream_minhash_neardup`` — the SAME plan over a
     batch frame (the function is identical because every operator in it
@@ -213,8 +211,10 @@ def batch_minhash_neardup(
 
     ``exact_verify_docs`` (batch-only — the verify needs BOTH sides'
     texts, which a stream no longer has for the index side): a frame
-    holding every candidate document's text; candidates then carry EXACT
-    n-gram Jaccard instead of the MinHash estimate, thresholded on that.
+    holding every candidate document's text; candidates then go through
+    the one candidate → verify step (``functions.dedup.verified_pairs``)
+    and carry EXACT n-gram Jaccard instead of the MinHash estimate,
+    thresholded on that.
     In the high-recall regime (bands == num_perm) a pair is a candidate
     if ANY signature slot agrees, so the output equals the exact
     cross-set Jaccard pair set up to a (1-j)^num_perm per-pair miss
@@ -223,26 +223,19 @@ def batch_minhash_neardup(
     applies, but a probabilistic bound rather than a set-equality proof
     (the correctness gate's regime; the estimate path is the
     production/streaming regime)."""
+    check_lsh_args(n=n, threshold=threshold, num_perm=num_perm, bands=bands)
     if exact_verify_docs is None:
         return stream_minhash_neardup(
             docs, index, num_perm, bands, n, threshold, id_col, text_col
         )
-    from graphsetintersection_spark.functions.dedup import jaccard_for_pairs
-
     cand = stream_minhash_neardup(
         docs, index, num_perm, bands, n, 0.0, id_col, text_col
     ).select(
         F.col("doc_id").alias("id_a"), F.col("dup_of").alias("id_b")
     )
-    cand = cand.persist()
-    try:
-        exact = jaccard_for_pairs(
-            exact_verify_docs, cand, n=n, id_col=id_col, text_col=text_col,
-            hashed=verify_hashed, mode="pairs",
-        )
-    finally:
-        cand.unpersist()
-    return exact.where(F.col("jaccard") >= threshold).select(
+    return verified_pairs(
+        exact_verify_docs, cand, n, threshold, id_col, text_col
+    ).select(
         F.col("id_a").alias("doc_id"),
         F.col("id_b").alias("dup_of"),
         "jaccard",

@@ -141,7 +141,7 @@ def test_simhash_neardup_pairs_verified(spark, docs_with_dups):
     from graphsetintersection_spark.functions.dedup import simhash_neardup_pairs
 
     out = simhash_neardup_pairs(
-        docs_with_dups, max_hamming=7, threshold=0.5, verify_hashed=False
+        docs_with_dups, max_hamming=7, threshold=0.5
     )
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
     texts = {r["doc_id"]: r["text"] for r in docs_with_dups.collect()}
@@ -153,30 +153,53 @@ def test_simhash_neardup_pairs_verified(spark, docs_with_dups):
     assert sum((i, i + 20000) in got for i in range(20, 40)) >= 18
 
 
-def test_jaccard_for_pairs_mode_parity(spark, docs_with_dups):
-    """verify_mode='index' and 'pairs' must produce identical jaccards
-    for the same candidate set (they are two join strategies, not two
-    semantics)."""
+def test_jaccard_for_pairs_oracle(spark, docs_with_dups):
+    """The one verify against the Python oracle: every candidate pair is
+    kept in the orientation given (the stream's cross-set pairs have
+    id_a > id_b), a disjoint pair gets 0, a pair naming a document with
+    no 5-gram is dropped, and no candidates give no rows."""
     from graphsetintersection_spark.functions.dedup import jaccard_for_pairs
 
-    sub = docs_with_dups.where(F.col("doc_id") < 40)
-    cand = spark.createDataFrame(
-        [(a, b) for a in range(0, 40, 3) for b in range(a + 1, 40, 7)],
-        "id_a long, id_b long",
+    extra = spark.createDataFrame(
+        [(90001, "aaaaaaaaaaaa"), (90002, "bbbbbbbbbbbb"), (90003, "abc")],
+        "doc_id long, text string",
     )
-    jp = {
+    sub = docs_with_dups.where(
+        (F.col("doc_id") < 40)
+        | ((F.col("doc_id") >= 20020) & (F.col("doc_id") < 20040))
+    ).union(extra)
+    texts = {r["doc_id"]: r["text"] for r in sub.collect()}
+    ids = sorted(texts)
+    pairs = [(a, b) for a in ids[::3] for b in ids[1::7] if a != b]
+    pairs += [(90001, 90002), (90003, 0), (20025, 25)]
+    cand = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_for_pairs(sub, cand, mode="pairs").collect()
+        for r in jaccard_for_pairs(sub, cand).collect()
     }
-    ji = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_for_pairs(sub, cand, mode="index").collect()
-    }
-    # both modes keep every candidate pair (left join from pairs),
-    # jaccard 0 when disjoint
-    assert set(jp) == set(ji)
-    for k in jp:
-        assert jp[k] == pytest.approx(ji[k], abs=1e-12)
+    assert set(got) == {(a, b) for a, b in pairs if 90003 not in (a, b)}
+    for (a, b), j in got.items():
+        assert j == pytest.approx(py_jaccard(texts[a], texts[b]), abs=1e-12)
+    assert got[(90001, 90002)] == 0.0
+    assert got[(20025, 25)] > 0.5 and any(a > b for a, b in got)
+    none = spark.createDataFrame([], "id_a long, id_b long")
+    assert jaccard_for_pairs(sub, none).collect() == []
+
+
+def test_minhash_lsh_pairs_job_count(spark, docs_with_dups):
+    """The production call shape (128 permutations, 32 bands, 4σ
+    estimate prefilter) on a fixed corpus. Measured at 4 local cores: 31
+    jobs with the row-form hashed-shingle verify, 22 with the one
+    sorted-array verify."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    start = int(sched.nextJobId())
+    rows = minhash_lsh_pairs(
+        docs_with_dups, num_perm=128, bands=32, threshold=0.5,
+        est_prefilter_sigmas=4.0,
+    ).collect()
+    used = int(sched.nextJobId()) - start
+    assert len(rows) == 81
+    assert used < 31
 
 
 def test_signature_builds_are_map_side_combinable(spark):
@@ -189,13 +212,14 @@ def test_signature_builds_are_map_side_combinable(spark):
         minhash_signatures,
         simhash_signatures,
     )
+    from tests.minhash_agg import minhash_signatures_agg
 
     long_text = " ".join(f"tok{i % 9973}x{i % 31}" for i in range(200_000))
     df = spark.createDataFrame(
         [(1, long_text), (2, long_text + " tail")], "doc_id long, text string"
     )
 
-    mh = minhash_signatures(df, num_perm=64, n=5, method="agg")
+    mh = minhash_signatures_agg(df, num_perm=64, n=5)
     mh_plan = mh._jdf.queryExecution().executedPlan().toString()
     assert "partial_min" in mh_plan and "collect_list" not in mh_plan
     rows = {r["doc_id"]: r["sig"] for r in mh.collect()}
@@ -203,10 +227,10 @@ def test_signature_builds_are_map_side_combinable(spark):
     # near-identical docs share almost all minhash slots
     agree = sum(a == b for a, b in zip(rows[1], rows[2]))
     assert agree >= 48
-    # the fused Arrow kernel (the zero-shuffle "auto" default, including
-    # its 8k-chunked running-min path on this ≥200k-shingle doc) must
-    # produce BIT-IDENTICAL signatures to the relational agg form
-    mhk = minhash_signatures(df, num_perm=64, n=5, method="kernel")
+    # the fused Arrow kernel (including its 8k-chunked running-min path
+    # on this ≥200k-shingle doc) must produce BIT-IDENTICAL signatures to
+    # the relational agg form
+    mhk = minhash_signatures(df, num_perm=64, n=5)
     rows_k = {r["doc_id"]: r["sig"] for r in mhk.collect()}
     assert rows_k == rows
 
@@ -242,14 +266,3 @@ def test_no_cache_leak_after_pipelines(spark, docs_with_dups):
     jaccard_for_pairs(sample, pairs).collect()
     leaked = cache_rdd_ids(spark) - before
     assert not leaked, f"leaked non-checkpoint caches: {leaked}"
-
-
-def test_minhash_sig_method_validation(spark, docs_with_dups):
-    """A typo'd signature method raises instead of silently running the
-    slower relational agg path."""
-    import pytest
-
-    from graphsetintersection_spark.functions.dedup import minhash_signatures
-
-    with pytest.raises(ValueError, match="unknown minhash"):
-        minhash_signatures(docs_with_dups, method="kernal")

@@ -36,6 +36,7 @@ def test_minhash_kernel_signatures_unchanged_by_mersenne(spark):
     relational agg path (whose JVM ``%`` is untouched) — the cross-check
     that the Mersenne rewrite changed no value."""
     from graphsetintersection_spark.functions.dedup import minhash_signatures
+    from tests.minhash_agg import minhash_signatures_agg
 
     docs = spark.createDataFrame(
         [(i, f"document number {i} with some shared text payload {i % 3}")
@@ -43,9 +44,9 @@ def test_minhash_kernel_signatures_unchanged_by_mersenne(spark):
         "doc_id long, text string",
     )
     k = {r["doc_id"]: list(r["sig"])
-         for r in minhash_signatures(docs, 32, method="kernel").collect()}
+         for r in minhash_signatures(docs, 32).collect()}
     a = {r["doc_id"]: list(r["sig"])
-         for r in minhash_signatures(docs, 32, method="agg").collect()}
+         for r in minhash_signatures_agg(docs, 32).collect()}
     assert k == a
 
 

@@ -158,6 +158,19 @@ def test_rcm_order_reversed_min_degree_root(spark):
     assert order[4] > order[5] > order[6]
 
 
+def test_rcm_order_job_count(spark):
+    """rcm_order ranks the reversed order inside the BFS ordering, with no
+    vertex count afterwards. Measured on this graph at 4 local cores: 51
+    jobs with the count, 49 without."""
+    from graphsetintersection_spark.operators.relabel import rcm_order
+
+    df = spark.createDataFrame(random_graph(200, 800, seed=1), "src long, dst long")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    start = int(sched.nextJobId())
+    rcm_order(df)
+    assert int(sched.nextJobId()) - start < 51
+
+
 def test_rcm_order_lowers_comp_ratio_on_band_graph(spark):
     """RCM's purpose is bandwidth reduction: on an id-scrambled grid
     (narrow BFS frontier bands) the RCM relabel must densify packing vs
