@@ -293,13 +293,18 @@ def _level_order(
         root_row = deg.orderBy(*root_exprs).first()
         if root_row is None:
             return edges.sparkSession.createDataFrame([], "v long, new_id long")
-        levels = _bfs_levels(edges, int(root_row["v"]), max_levels, n=deg.count())
+        n = deg.count()
+        levels = _bfs_levels(edges, int(root_row["v"]), max_levels, n=n)
+        # deg left-joined to the levels: exactly n rows, so the ranking
+        # needs no sizing count of its own
         ranked = deg.join(levels, "v", "left").select(
             "v",
             F.coalesce("level", F.lit(max_levels + 1)).alias("level"),
             "deg",
         )
-        out = global_order_stats(ranked, order, rank_col="new_id")
+        out = global_order_stats(
+            ranked, order, rank_col="new_id", approx_rows=n
+        )
         # global_order_stats returned an EAGERLY MATERIALIZED frame (its
         # contract) — the BFS levels leaf is no longer referenced by any
         # recomputable lineage and can be dropped safely

@@ -14,10 +14,13 @@ a test:
 - ``triangle_count_arrays`` — adjacency + ``array_intersect`` built-in;
   JVM-side, no Python.
 - ``triangle_count_kernel`` — adjacency + one vectorized Arrow batch
-  kernel (kernels.batch_intersect_count); the Spark re-expression of the
-  paper's SIMD QFilter loop, with an optional broadcast of hub adjacency
-  (reference select_bignode, src/porder.cpp:353-392) so Zipf hubs don't
-  skew the shuffle.
+  kernel; the Spark re-expression of the paper's SIMD QFilter loop. It
+  takes no options: one planner (``_kernel_count``) picks the route from
+  what it observes — broadcast CSR or the per-edge adjacency join by
+  adjacency size, the dense bit matrix or BSR by id range and density,
+  and on the join path a broadcast of hub adjacency (reference
+  select_bignode, src/porder.cpp:353-392) when Zipf hubs would skew the
+  shuffle.
 
 The multithreaded reference variant (static edge-range partitioning +
 per-thread partials, src/bitpack_triangle_count.cpp:143-206) is exactly
@@ -33,10 +36,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphsetintersection_spark.kernels import (
-    batch_bsr_intersect_count,
-    batch_intersect_count,
-)
+from graphsetintersection_spark.kernels import batch_bsr_intersect_count
 from graphsetintersection_spark.operators.adjacency import lower_adjacency
 from graphsetintersection_spark.operators.edges import orient
 
@@ -51,47 +51,19 @@ def triangle_count_join(edges: DataFrame) -> int:
     return ab.join(bc, "b").join(ac, ["a", "c"]).count()
 
 
-def _join_adj(e: DataFrame, adj: DataFrame, key: str, out: str,
-              hub_deg_ratio: float | None) -> DataFrame:
-    """Join edge rows with adjacency on ``key``, optionally splitting the
-    adjacency into a broadcast hub slice + a shuffled rest.
-
-    Zipf web graphs concentrate degree in few hubs (reference
-    select_bignode, src/porder.cpp:353-392; SlashBurn hub isolation
-    :1009-1114). The hub slice is few ROWS (top vertices covering
-    ``hub_deg_ratio`` of total degree) but most of the JOIN MATCHES — the
-    exact shape where a broadcast beats a shuffle and where a plain
-    shuffle join skews. AQE skew-split remains the backstop for the rest."""
-    renamed = adj.withColumnRenamed("nbrs", out).withColumnRenamed("v", "_k")
-    if hub_deg_ratio is None:
-        return e.join(renamed, e[key] == F.col("_k")).drop("_k")
-    from graphsetintersection_spark.operators.relabel import hub_degree_threshold
-
-    deg = adj.select("v", F.size("nbrs").alias("deg"))
-    t = hub_degree_threshold(deg, hub_deg_ratio)
-    if t is None:
-        return e.join(renamed, e[key] == F.col("_k")).drop("_k")
-    adj_hub = F.broadcast(renamed.where(F.size(out) >= t))
-    adj_rest = renamed.where(F.size(out) < t)
-    part_hub = e.join(adj_hub, e[key] == F.col("_k")).drop("_k")
-    part_rest = e.join(adj_rest, e[key] == F.col("_k")).drop("_k")
-    return part_hub.unionByName(part_rest)
-
-
 AUTO_HUB_RATIO = 0.25
 # below this many total adjacency entries (= oriented edges) the skewed
 # shuffle a hub split would prevent doesn't exist — the whole joined frame
-# fits in a handful of partitions. Small inputs skip the split (and its
-# persist) entirely; this is a scale optimization, not a semantics switch.
+# fits in a handful of partitions. Small inputs skip the split entirely;
+# this is a scale optimization, not a semantics switch.
 AUTO_HUB_MIN_EDGES = 5_000_000
 
 
 def _hub_ratio_from_stats(entries: float, mx, av) -> float | None:
-    """The skew heuristic, shared by every "auto" route (the join-path
-    probe in ``_edge_with_lower_adj`` and the kernel planner's probe in
-    ``_kernel_count`` feed it their already-collected stats): split iff
-    the graph is big enough that a skewed shuffle matters AND the max
-    degree dominates the mean (Zipf-style skew)."""
+    """The join path's skew heuristic, fed the kernel planner's
+    already-collected probe stats: split iff the graph is big enough that
+    a skewed shuffle matters AND the max degree dominates the mean
+    (Zipf-style skew)."""
     if entries < AUTO_HUB_MIN_EDGES:
         return None
     if (mx or 0) >= 1024 and (mx or 0) >= 16 * (av or 1.0):
@@ -99,72 +71,64 @@ def _hub_ratio_from_stats(entries: float, mx, av) -> float | None:
     return None
 
 
-def _auto_hub_ratio(adj: DataFrame) -> float | None:
-    """Decide whether the broadcast-hub split pays. One small aggregate;
-    the decision itself lives in ``_hub_ratio_from_stats``."""
-    row = adj.agg(
-        F.max(F.size("nbrs")).alias("mx"),
-        F.avg(F.size("nbrs")).alias("av"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    if not row["n"]:
-        return None
-    total_entries = float(row["n"]) * float(row["av"] or 0.0)
-    return _hub_ratio_from_stats(total_entries, row["mx"], row["av"])
-
-
 def _edge_with_lower_adj(
-    edges: DataFrame, hub_deg_ratio: float | None | str = None
-) -> tuple[DataFrame, DataFrame | None]:
+    e: DataFrame, adj: DataFrame, hub_ratio: float | None = None
+) -> DataFrame:
     """Joined frame (src, dst, nbrs_a, nbrs_b) of smaller-id adjacency for
-    both endpoints of each oriented edge. Two shuffles; the oriented edge
-    list is reused for both the iteration list and the adjacency source,
-    mirroring the reference build (src/bitpack_triangle_count.cpp:18-68).
-    ``hub_deg_ratio`` enables the broadcast-hub-adjacency split; "auto"
-    turns it on only when the degree distribution is skewed.
+    both endpoints of each oriented edge — the one place the per-edge
+    adjacency join is assembled. Two shuffles; the oriented edge list
+    ``e`` is both the iteration list and the adjacency source
+    (``adj = lower_adjacency(e)``), mirroring the reference build
+    (src/bitpack_triangle_count.cpp:18-68). A persisted ``adj`` builds
+    once and both joins read the cache; a raw aggregate is rebuilt inside
+    each join.
 
-    Returns (joined, persisted_adj_or_None); the caller MUST unpersist the
-    second element once the joined frame has been consumed (a leaked
-    multi-hundred-MB adjacency cache starves executor storage memory)."""
-    e = orient(edges).select("src", "dst")
-    adj = lower_adjacency(e)
-    persisted: DataFrame | None = None
-    if hub_deg_ratio is not None:
-        # Persist BEFORE the auto probe: the probe's aggregate materializes
-        # the cache, so the adjacency groupBy executes exactly once per
-        # count whether or not the split engages — Spark does not dedupe
-        # common subtrees, so an unpersisted adj would otherwise be rebuilt
-        # independently by BOTH joins below (up to 3 builds per count; the
-        # r4 lgraph_triangle_count 7.6s→14.7s regression). The cache is one
-        # row per vertex — cheap insurance at any scale. The caller
-        # unpersists it (see contract above).
-        adj = adj.persist()
-        persisted = adj
-        if hub_deg_ratio == "auto":
-            hub_deg_ratio = _auto_hub_ratio(adj)
-    j1 = _join_adj(e, adj, "src", "nbrs_a", hub_deg_ratio)
-    j2 = _join_adj(j1, adj, "dst", "nbrs_b", hub_deg_ratio)
-    return j2.select("src", "dst", "nbrs_a", "nbrs_b"), persisted
+    ``hub_ratio`` splits the adjacency into a broadcast hub slice + a
+    shuffled rest. Zipf web graphs concentrate degree in few hubs
+    (reference select_bignode, src/porder.cpp:353-392; SlashBurn hub
+    isolation :1009-1114). The hub slice is few ROWS (top vertices
+    covering ``hub_ratio`` of total degree) but most of the JOIN MATCHES —
+    the exact shape where a broadcast beats a shuffle and where a plain
+    shuffle join skews. AQE skew-split remains the backstop for the rest."""
+    t = None
+    if hub_ratio is not None:
+        from graphsetintersection_spark.operators.relabel import (
+            hub_degree_threshold,
+        )
+
+        t = hub_degree_threshold(
+            adj.select(F.size("nbrs").alias("deg")), hub_ratio
+        )
+    joined = e
+    for key, out in (("src", "nbrs_a"), ("dst", "nbrs_b")):
+        side = adj.select(F.col("v").alias("_k"), F.col("nbrs").alias(out))
+        on = joined[key] == F.col("_k")
+        if t is None:
+            joined = joined.join(side, on).drop("_k")
+        else:
+            hub = F.broadcast(side.where(F.size(out) >= t))
+            joined = joined.join(hub, on).drop("_k").unionByName(
+                joined.join(side.where(F.size(out) < t), on).drop("_k")
+            )
+    return joined.select("src", "dst", "nbrs_a", "nbrs_b")
 
 
 def triangle_count_arrays(edges: DataFrame) -> int:
     """Adjacency + JVM ``array_intersect`` — no Python at all."""
-    joined, persisted = _edge_with_lower_adj(edges)
-    row = joined.agg(
+    e = orient(edges).select("src", "dst")
+    row = _edge_with_lower_adj(e, lower_adjacency(e)).agg(
         F.sum(F.size(F.array_intersect("nbrs_a", "nbrs_b"))).alias("tri")
     ).collect()[0]
-    if persisted is not None:
-        persisted.unpersist()
     return int(row["tri"] or 0)
 
 
-def _make_count_batches(kernel_fn, acc_inter=None, acc_cmp=None):
+def _make_count_batches(kernel_fn, acc_inter, acc_cmp):
     """mapInArrow kernel factory: per batch, one vectorized intersect-count
     over the CSR-shaped Arrow list columns (flat values + offsets — zero
     copy). ``kernel_fn`` is any batch kernel with the
     (vals_a, lens_a, vals_b, lens_b) contract.
 
-    ``acc_inter`` / ``acc_cmp`` are optional Spark accumulators mirroring
+    ``acc_inter`` / ``acc_cmp`` are Spark accumulators mirroring
     the reference's per-run profiling counters (``inter_cnt`` /
     ``cmp_cnt``, src/set_operation.cpp:903-905, printed by tc at
     src/tc.cpp:46): intersections performed (= adjacency pairs, one per
@@ -188,10 +152,8 @@ def _make_count_batches(kernel_fn, acc_inter=None, acc_cmp=None):
             va = vals_a[off_a[0]:off_a[-1]] if len(off_a) else vals_a
             vb = vals_b[off_b[0]:off_b[-1]] if len(off_b) else vals_b
             counts = kernel_fn(va, np.diff(off_a), vb, np.diff(off_b))
-            if acc_inter is not None:
-                acc_inter.add(int(batch.num_rows))
-            if acc_cmp is not None:
-                acc_cmp.add(int(len(va) + len(vb)))
+            acc_inter.add(int(batch.num_rows))
+            acc_cmp.add(int(len(va) + len(vb)))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(counts.sum(keepdims=True), type=pa.int64())], ["tri"]
             )
@@ -199,16 +161,7 @@ def _make_count_batches(kernel_fn, acc_inter=None, acc_cmp=None):
     return count_batches
 
 
-_count_batches = _make_count_batches(batch_intersect_count)
-_count_batches_bsr = _make_count_batches(batch_bsr_intersect_count)
-
-
-def triangle_count_kernel_with_stats(
-    edges: DataFrame,
-    hub_deg_ratio: float | None | str = "auto",
-    kernel: str = "auto",
-    strategy: str = "auto",
-) -> tuple[int, dict]:
+def triangle_count_kernel_with_stats(edges: DataFrame) -> tuple[int, dict]:
     """``triangle_count_kernel`` + the reference's profiling counters as
     Spark accumulators: returns (triangles, {"inter_cnt": .., "cmp_cnt":
     ..}) — the engine analog of tc's per-run print (src/tc.cpp:46;
@@ -218,15 +171,13 @@ def triangle_count_kernel_with_stats(
     for the bitset kernel)."""
     sc = edges.sparkSession.sparkContext
     acc_i, acc_c = sc.accumulator(0), sc.accumulator(0)
-    tri = _kernel_count(
-        edges, hub_deg_ratio, kernel, strategy, acc_inter=acc_i, acc_cmp=acc_c
-    )
+    tri = _kernel_count(edges, acc_i, acc_c)
     return tri, {"inter_cnt": int(acc_i.value), "cmp_cnt": int(acc_c.value)}
 
 
-# The broadcast-CSR strategy collects the smaller-id adjacency to the
+# The broadcast-CSR route collects the smaller-id adjacency to the
 # driver and ships it once per executor; above this many total adjacency
-# entries (= oriented edges; 16M ≈ 128 MB of int64) the join strategy
+# entries (= oriented edges; 16M ≈ 128 MB of int64) the join route
 # takes over. Mirrors pagerank's BROADCAST_STATE cutover.
 BROADCAST_ADJ_MAX_ENTRIES = 16_000_000
 
@@ -241,14 +192,11 @@ def _collect_csr(adj: DataFrame):
     ~10× the payload in transient objects, which at the 16M-entry
     BROADCAST_ADJ_MAX_ENTRIES bound is a driver-OOM hazard the budget
     comment never priced in. Callers guard size via
-    BROADCAST_ADJ_MAX_ENTRIES."""
+    BROADCAST_ADJ_MAX_ENTRIES. ``toArrow`` needs pyspark ≥ 4.0."""
     import numpy as np
-
-    try:
-        tbl = adj.select("v", "nbrs").toArrow()
-    except AttributeError:  # pyspark < 4.0 — small-input fallback
-        return _collect_csr_rows(adj)
     import pyarrow.compute as pc
+
+    tbl = adj.select("v", "nbrs").toArrow()
 
     vs = (
         tbl.column("v")
@@ -287,27 +235,6 @@ def _collect_csr(adj: DataFrame):
     else:
         flat = np.empty(0, dtype=np.int64)
     return vs_s, indptr, flat
-
-
-def _collect_csr_rows(adj: DataFrame):
-    """Row-based CSR collection — the pre-Arrow fallback of
-    ``_collect_csr`` (kept only for pyspark < 4.0 sessions)."""
-    import numpy as np
-
-    rows = adj.select("v", "nbrs").collect()
-    rows.sort(key=lambda r: r["v"])
-    vs = np.fromiter((r["v"] for r in rows), dtype=np.int64, count=len(rows))
-    lens = np.fromiter(
-        (len(r["nbrs"]) for r in rows), dtype=np.int64, count=len(rows)
-    )
-    indptr = np.zeros(len(rows) + 1, dtype=np.int64)
-    np.cumsum(lens, out=indptr[1:])
-    flat = (
-        np.concatenate([np.asarray(r["nbrs"], dtype=np.int64) for r in rows])
-        if rows
-        else np.empty(0, dtype=np.int64)
-    )
-    return vs, indptr, flat
 
 
 def _csr_gather(vs, indptr, flat, keys):
@@ -359,7 +286,7 @@ def _build_bitset(vs, indptr, flat):
     return M
 
 
-def _make_bitset_count_batches(bc, acc_inter=None, acc_cmp=None):
+def _make_bitset_count_batches(bc, acc_inter, acc_cmp):
     """mapInArrow kernel over the bare oriented edge frame with a
     broadcast bit-matrix: per edge, popcount(M[u] & M[v]) — the dense
     analog of the reference's bitset path (the BSR states with one global
@@ -382,10 +309,8 @@ def _make_bitset_count_batches(bc, acc_inter=None, acc_cmp=None):
             )
             anded = M[src] & M[dst]
             total = int(_popcount(anded.reshape(-1)).sum())
-            if acc_inter is not None:
-                acc_inter.add(int(batch.num_rows))
-            if acc_cmp is not None:
-                acc_cmp.add(2 * int(batch.num_rows) * W)
+            acc_inter.add(int(batch.num_rows))
+            acc_cmp.add(2 * int(batch.num_rows) * W)
             yield pa.RecordBatch.from_arrays(
                 [pa.array([total], type=pa.int64())], ["tri"]
             )
@@ -393,10 +318,8 @@ def _make_bitset_count_batches(bc, acc_inter=None, acc_cmp=None):
     return count_batches
 
 
-def _pick_broadcast_kernel(
-    kernel: str, vs, flat, entries: int
-) -> str:
-    """Resolve kernel="auto" on the broadcast path: the bit matrix wins
+def _pick_broadcast_kernel(vs, flat, entries: int) -> str:
+    """The broadcast route's kernel, "bitset" or "bsr": the bit matrix wins
     when it fits the broadcast budget AND an edge's W-word AND is cheaper
     than scanning its two sorted lists (W ≤ 8·mean lower-degree — the
     element kernels cost ~10 ops per element vs 1 AND+popcount per word).
@@ -404,8 +327,6 @@ def _pick_broadcast_kernel(
     checked on BOTH the row ids and the neighbor values: the global-min
     vertex never appears as a row of the lower adjacency, only as a
     value, so vs[0] ≥ 0 alone does not rule negatives out)."""
-    if kernel != "auto":
-        return kernel
     if len(vs) == 0 or vs[0] < 0 or (len(flat) and int(flat.min()) < 0):
         return "bsr"
     n = int(vs[-1]) + 1
@@ -417,10 +338,10 @@ def _pick_broadcast_kernel(
     return "bitset"
 
 
-def _make_broadcast_count_batches(bc, kernel_fn, acc_inter=None, acc_cmp=None):
+def _make_broadcast_count_batches(bc, acc_inter, acc_cmp):
     """mapInArrow kernel over the bare oriented EDGE frame (src, dst):
     per batch, gather both endpoints' adjacency from the broadcast CSR and
-    run the same vectorized intersect-count. Nothing but two int64 columns
+    run the BSR intersect-count. Nothing but two int64 columns
     ever moves through the plan — the reference's in-memory-CSR regime
     (src/bitpack_triangle_count.cpp:18-68 builds the index once; the count
     loop reads it in place), re-expressed as broadcast + Arrow batches."""
@@ -436,11 +357,9 @@ def _make_broadcast_count_batches(bc, kernel_fn, acc_inter=None, acc_cmp=None):
             )
             va, la = _csr_gather(vs, indptr, flat, src)
             vb, lb = _csr_gather(vs, indptr, flat, dst)
-            counts = kernel_fn(va, la, vb, lb)
-            if acc_inter is not None:
-                acc_inter.add(int(batch.num_rows))
-            if acc_cmp is not None:
-                acc_cmp.add(int(len(va) + len(vb)))
+            counts = batch_bsr_intersect_count(va, la, vb, lb)
+            acc_inter.add(int(batch.num_rows))
+            acc_cmp.add(int(len(va) + len(vb)))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(counts.sum(keepdims=True), type=pa.int64())], ["tri"]
             )
@@ -448,64 +367,39 @@ def _make_broadcast_count_batches(bc, kernel_fn, acc_inter=None, acc_cmp=None):
     return count_batches
 
 
-def _kernel_count(
-    edges: DataFrame,
-    hub_deg_ratio: float | None | str,
-    kernel: str,
-    strategy: str,
-    acc_inter=None,
-    acc_cmp=None,
-    persist_adjacency: bool = True,
-) -> int:
-    """Shared planner for the kernel triangle counts. ONE probe aggregate
-    over the persisted adjacency decides both the strategy and (on the
-    join path) the hub split, so the adjacency groupBy executes exactly
-    once per count regardless of route:
+def _kernel_count(edges: DataFrame, acc_inter, acc_cmp) -> int:
+    """The kernel triangle count's only planner. ONE probe aggregate over
+    the persisted adjacency picks the route from what it observes, so the
+    adjacency groupBy executes exactly once per count whichever route
+    runs:
 
-    - ``broadcast`` (auto default while total adjacency entries ≤
-      BROADCAST_ADJ_MAX_ENTRIES): collect CSR, broadcast, stream the bare
+    - broadcast CSR while total adjacency entries ≤
+      BROADCAST_ADJ_MAX_ENTRIES: collect CSR, broadcast, stream the bare
       (src, dst) edge list through a batch kernel — zero join, zero
-      neighbor-list duplication. The reference's in-memory regime. With
-      kernel="auto" this further resolves to the dense bit-matrix kernel
-      when the id space is compact (_pick_broadcast_kernel).
-    - ``join`` (auto above the bound — the 100 TB shape): per-edge
-      adjacency equi-joins with the broadcast-hub split for Zipf skew;
-      neighbor lists ship once per incident edge, which is the price of
+      neighbor-list duplication; the reference's in-memory regime, the
+      right one while the adjacency fits executor memory (measured 8.0s →
+      1.4s vs the join route on the 26%-dense 2k-vertex/557k-edge sf0.1
+      lgraph). ``_pick_broadcast_kernel`` then picks the dense bit matrix
+      (compact, dense id space; measured 23× vs the element-wise kernel
+      on that lgraph) or BSR (bit-packed base/state AND+popcount — the
+      reference's BP path, src/bitpack_triangle_count.cpp:43-103;
+      densified further by a degree relabel, see relabel.comp_ratio).
+    - the per-edge adjacency join above the bound (the 100 TB shape):
+      ``_edge_with_lower_adj`` over the persisted adjacency, so both joins
+      read the cache — the lowest measured wall-clock at every size tried
+      (59M edges, local[4]: ~235s pooled-median vs the recompute plan's
+      290s; local[16]: parity) — with the broadcast-hub split when
+      ``_hub_ratio_from_stats`` sees Zipf skew, and the BSR kernel.
+      Neighbor lists ship once per incident edge, which is the price of
       not fitting in memory.
-
-    ``persist_adjacency`` (join path): True (default) caches the
-    adjacency so it builds ONCE and both joins read the cache — the
-    lowest measured wall-clock at every size tried (59M edges, local[4]:
-    ~235s pooled-median vs the recompute plan's 290s; local[16]: parity).
-    False rebuilds the adjacency aggregate inside each join — more total
-    work, but all of it embarrassingly parallel shuffle/aggregate, which
-    is the shape that measured the 0.84 two-size scaling efficiency
-    (BENCH/BASELINE.md round 3 vs round 5 discussion): on a fixed-size
-    single box, deleting redundant parallel work lowers the 4→16 RATIO
-    even as it lowers every absolute time.
     """
-    from graphsetintersection_spark.kernels import (
-        batch_bsr_intersect_count as _bsr,
-        batch_intersect_count as _uint,
-    )
-
-    if strategy not in ("auto", "join", "broadcast"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if kernel not in ("auto", "bsr", "uint", "bitset"):
-        raise ValueError(f"unknown kernel {kernel!r}")
-    if kernel == "bitset" and strategy == "join":
-        raise ValueError(
-            "kernel='bitset' requires the broadcast strategy (the bit "
-            "matrix is a broadcast object)"
-        )
     e = orient(edges).select("src", "dst")
     adj = lower_adjacency(e).persist()
     bc = None
     # try/finally: any failure between the persist and the terminal
     # release (probe, CSR collect, the count job itself) must not leak a
     # session-lifetime CacheManager entry or broadcast — the exact leak
-    # class VERDICT r4 #2 flagged in dedup.py; both calls are idempotent,
-    # so the early releases on the happy paths below stay.
+    # class VERDICT r4 #2 flagged in dedup.py.
     try:
         probe = adj.agg(
             F.sum(F.size("nbrs")).alias("entries"),
@@ -514,40 +408,23 @@ def _kernel_count(
             F.count(F.lit(1)).alias("n"),
         ).collect()[0]
         entries = int(probe["entries"] or 0)
-        use_bcast = strategy == "broadcast" or (
-            strategy == "auto" and entries <= BROADCAST_ADJ_MAX_ENTRIES
-        )
-        if not use_bcast and kernel == "bitset":
-            raise ValueError(
-                "kernel='bitset' needs the broadcast strategy, but the "
-                f"adjacency ({entries} entries) exceeds the broadcast bound"
+        if entries > BROADCAST_ADJ_MAX_ENTRIES:
+            hub_ratio = _hub_ratio_from_stats(entries, probe["mx"], probe["av"])
+            fn = _make_count_batches(
+                batch_bsr_intersect_count, acc_inter, acc_cmp
             )
-        if use_bcast:
+            partials = _edge_with_lower_adj(e, adj, hub_ratio).mapInArrow(
+                fn, "tri long"
+            )
+        else:
             sc = edges.sparkSession.sparkContext
             vs, indptr, flat = _collect_csr(adj)
-            k = _pick_broadcast_kernel(kernel, vs, flat, entries)
-            if k == "bitset" and (
-                (len(vs) and vs[0] < 0)
-                or (len(flat) and int(flat.min()) < 0)
-            ):
-                # only reachable with an explicit kernel="bitset" (the
-                # auto resolver routes negative ids to "bsr"): negative
-                # ids would wrap the bit-matrix fancy indexing and return
-                # a plausible but WRONG count
-                raise ValueError(
-                    "kernel='bitset' requires non-negative vertex ids "
-                    "(the bit matrix is indexed by id); relabel first "
-                    "(gen_continuous_id_graph) or use kernel='bsr'"
-                )
-            if k == "bitset":
+            if _pick_broadcast_kernel(vs, flat, entries) == "bitset":
                 bc = sc.broadcast(_build_bitset(vs, indptr, flat))
                 fn = _make_bitset_count_batches(bc, acc_inter, acc_cmp)
             else:
                 bc = sc.broadcast((vs, indptr, flat))
-                kernel_fn = {"bsr": _bsr, "auto": _bsr, "uint": _uint}[k]
-                fn = _make_broadcast_count_batches(
-                    bc, kernel_fn, acc_inter, acc_cmp
-                )
+                fn = _make_broadcast_count_batches(bc, acc_inter, acc_cmp)
             # choose the cheaper materialization of the oriented edge
             # stream: an already-cached input re-orients straight off its
             # cache, but an expensive DERIVED input (e.g. the
@@ -562,24 +439,6 @@ def _kernel_count(
                     F.explode("nbrs").alias("src"), F.col("v").alias("dst")
                 )
             partials = e_stream.mapInArrow(fn, "tri long")
-            row = partials.agg(F.sum("tri").alias("tri")).collect()[0]
-            return int(row["tri"] or 0)
-        if hub_deg_ratio == "auto":
-            hub_deg_ratio = _hub_ratio_from_stats(
-                entries, probe["mx"], probe["av"]
-            )
-        adj_join = adj
-        if not persist_adjacency:
-            # the probe already ran off the cache; rebuild per join from
-            # the raw aggregate (see persist_adjacency in the docstring)
-            adj.unpersist()
-            adj_join = lower_adjacency(e)
-        j1 = _join_adj(e, adj_join, "src", "nbrs_a", hub_deg_ratio)
-        j2 = _join_adj(j1, adj_join, "dst", "nbrs_b", hub_deg_ratio)
-        joined = j2.select("src", "dst", "nbrs_a", "nbrs_b")
-        kernel_fn = {"bsr": _bsr, "auto": _bsr, "uint": _uint}[kernel]
-        fn = _make_count_batches(kernel_fn, acc_inter, acc_cmp)
-        partials = joined.mapInArrow(fn, "tri long")
         row = partials.agg(F.sum("tri").alias("tri")).collect()[0]
         return int(row["tri"] or 0)
     finally:
@@ -588,58 +447,25 @@ def _kernel_count(
             bc.unpersist()
 
 
-def triangle_count_kernel(
-    edges: DataFrame,
-    hub_deg_ratio: float | None | str = "auto",
-    kernel: str = "auto",
-    strategy: str = "auto",
-    persist_adjacency: bool = True,
-) -> int:
+def triangle_count_kernel(edges: DataFrame) -> int:
     """Adjacency + vectorized numpy batch kernel via mapInArrow.
 
     Each Arrow batch contributes one partial count (the reference's
     per-thread ``con_res[id]`` partials, src/bitpack_triangle_count
-    .cpp:150-205); Spark's ``sum`` does the final reduce. The whole plan
-    is SINGLE-PASS: the per-edge adjacency join streams straight into the
-    count kernel, nothing besides the (small) adjacency is ever persisted
-    — measured 0.84 scaling efficiency 4→16 pinned cores on a 59M-edge
-    corpus (BENCH/BASELINE.md).
-
-    ``strategy``: "broadcast" ships the whole adjacency as a CSR
-    broadcast and streams the bare (src, dst) list through the kernel —
-    no join, no per-edge neighbor-list duplication; the right regime
-    while the adjacency fits executor memory (dense/relabeled graphs —
-    measured 8.0s → 1.4s on the 26%-dense 2k-vertex/557k-edge sf0.1 lgraph).
-    "join" is the shuffle shape that holds at any scale. "auto"
-    (default) picks by adjacency size (BROADCAST_ADJ_MAX_ENTRIES).
-
-    ``hub_deg_ratio`` (e.g. 0.3) turns on the broadcast-hub-adjacency
-    split for Zipf-skewed graphs on the join path; the default "auto"
-    enables it only when the degree distribution is actually skewed.
-
-    ``kernel``: "auto" (default) resolves to "bitset" on the broadcast
-    strategy when the id space is compact enough for the n×⌈n/64⌉ bit
-    matrix and the graph is dense enough that a W-word AND beats scanning
-    the two sorted lists (measured 23× vs "uint" on the 26%-dense sf0.1
-    lgraph), else "bsr". Explicit options: "bsr" (bit-packed base/state
-    AND+popcount — the reference's BP path,
-    src/bitpack_triangle_count.cpp:43-103; densified further by a degree
-    relabel, see relabel.comp_ratio), "uint" (element-wise searchsorted —
-    the Org-path parity twin, kept for differential testing and for
-    extremely sparse id spaces), "bitset" (dense bit matrix; broadcast
-    strategy only)."""
-    return _kernel_count(
-        edges, hub_deg_ratio, kernel, strategy,
-        persist_adjacency=persist_adjacency,
-    )
+    .cpp:150-205); Spark's ``sum`` does the final reduce. There are no
+    options: ``_kernel_count`` picks the route (broadcast CSR or the
+    per-edge adjacency join, bit matrix or BSR, hub split or not) from
+    the adjacency it has built. The count comes from
+    ``triangle_count_kernel_with_stats``, whose counters are always on."""
+    return triangle_count_kernel_with_stats(edges)[0]
 
 
 def triangles_per_edge(edges: DataFrame) -> DataFrame:
     """Per-oriented-edge common-smaller-neighbor count — the engine's
     surfaced form of intersect_count (set_operation.cpp:129-144) over
     adjacency pairs. Returns (src, dst, common) with common > 0 only."""
-    joined, _ = _edge_with_lower_adj(edges)  # no hub split → nothing persisted
-    return joined.select(
+    e = orient(edges).select("src", "dst")
+    return _edge_with_lower_adj(e, lower_adjacency(e)).select(
         "src",
         "dst",
         F.size(F.array_intersect("nbrs_a", "nbrs_b")).alias("common"),

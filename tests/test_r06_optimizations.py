@@ -64,9 +64,10 @@ def test_ensure_min_parallelism(spark):
 
 
 def test_triangle_broadcast_stream_cached_and_uncached_agree(spark):
-    """The broadcast strategy streams edges from the input cache when one
-    exists and from the persisted adjacency (explode) when not — both
-    must count identically."""
+    """The broadcast route (the planner's choice on this small graph)
+    streams edges from the input cache when one exists and from the
+    persisted adjacency (explode) when not — both must count
+    identically."""
     from graphsetintersection_spark.operators.triangle import (
         triangle_count_kernel,
     )
@@ -74,11 +75,11 @@ def test_triangle_broadcast_stream_cached_and_uncached_agree(spark):
     pairs = [(a, b) for a in range(12) for b in range(a + 1, 12)
              if (a * 7 + b) % 3 != 0]
     df = spark.createDataFrame(pairs, "src long, dst long")
-    uncached = triangle_count_kernel(df, strategy="broadcast")
+    uncached = triangle_count_kernel(df)
     cached = df.persist()
     try:
         cached.count()
-        assert triangle_count_kernel(cached, strategy="broadcast") == uncached
+        assert triangle_count_kernel(cached) == uncached
     finally:
         cached.unpersist()
     # and against the relational reference
