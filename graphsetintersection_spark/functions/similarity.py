@@ -4,10 +4,6 @@
   products as JVM expressions (zip_with + aggregate, strictly sequential
   left-to-right double accumulation → bit-reproducible and SQL-oracle-
   comparable). Query side is broadcast (small); candidates stream.
-- ``cosine_topk_kernel``    — the scale path for wide fan-outs: one
-  vectorized numpy GEMM per Arrow batch via mapInPandas (queries broadcast
-  as a dense matrix; candidates × queries = one matmul per batch), then a
-  Spark window top-k. 10-100× the scalar-expression form on real dims.
 - ``lsh_ann_topk``          — random-hyperplane (SimHash) LSH-bucketed
   ANN: probe only candidates sharing a hash bucket with the query;
   recall<1 by construction, verified against brute force in tests.
@@ -86,71 +82,6 @@ def cosine_topk_bruteforce(
     )
 
 
-def cosine_topk_kernel(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Vectorized exact top-k: queries collected to a dense numpy matrix
-    (they are the small side by construction), broadcast into a mapInPandas
-    GEMM over candidate batches; per-batch partial top-k, then a global
-    window finishes. Zero per-row Python."""
-    import pandas as pd
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-30)
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def gemm(batches):
-        ids_q, mat_q = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf["cv"]), dtype=np.float64)
-            c_mat /= np.maximum(
-                np.linalg.norm(c_mat, axis=1, keepdims=True), 1e-30
-            )
-            scores = c_mat @ mat_q.T  # (n_cand, n_query)
-            n_c = len(c_ids)
-            topn = min(k + 1, n_c)
-            # per-query partial top-(k+1) inside the batch
-            part = np.argpartition(-scores, topn - 1, axis=0)[:topn]
-            out_q, out_c, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                sel = part[:, qi]
-                out_q.extend([ids_q[qi]] * len(sel))
-                out_c.extend(c_ids[sel])
-                out_s.extend(scores[sel, qi])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_c, "score": out_s}
-            )
-
-    from graphsetintersection_spark.session import ensure_min_parallelism
-
-    c = ensure_min_parallelism(
-        candidates.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        )
-    )
-    partial = c.mapInPandas(
-        gemm, "query_id long, neighbor_id long, score double"
-    ).where(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
-
-
 def hyperplane_buckets(
     vecs: DataFrame,
     n_planes: int = 12,
@@ -159,110 +90,60 @@ def hyperplane_buckets(
     seed: int = 9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep_vec: bool = False,
-    method: str = "auto",
 ) -> DataFrame:
     """Random-hyperplane LSH: per vector, one bucket per hash table
     (bit i of a table's bucket = sign(v · h_i)). Returns one row per
-    (vector, table): (id, table, bucket) — IDS ONLY by default, so the
-    n_tables-way explode never duplicates the float vectors through the
-    shuffle (vectors are re-joined once after candidate dedup). Hyperplanes
+    (vector, table): (id, table, bucket) — IDS ONLY, so the n_tables-way
+    explode never duplicates the float vectors through the shuffle
+    (vectors are re-joined once after candidate dedup). Hyperplanes
     drawn from a seeded numpy RNG. Multi-table (n_tables > 1) is the
     standard recall lever: candidates = union of same-bucket sets across
     tables.
 
-    ``method``: how the n_tables × n_planes dot-product signs are
-    computed per row —
-    - ``"expr"``   — JVM literal-array aggregate expressions; zero
-      Python, fine for a handful of planes.
-    - ``"kernel"`` — ONE broadcast GEMM per Arrow batch (mapInPandas):
-      signs = (batch @ planes.T) > 0, all tables at once, then the bit
-      pack in vectorized numpy. The expression form costs
-      O(n_tables·n_planes) interpreted lambda reductions PER ROW, which
-      dominated the production bench (64 planes: 22.6s → GEMM sub-s);
-      the kernel is the scale path for any real table count.
-    - ``"auto"``   — kernel when n_tables*n_planes ≥ 16 else expr.
-    Both produce the same buckets (float64 dot both sides; a sign flip
-    needs |v·h| below accumulation error — measure-zero for random
-    planes, and either assignment is a valid LSH bucketing)."""
+    ONE broadcast GEMM per Arrow batch (mapInPandas): signs =
+    (batch @ planes.T) > 0 for all tables at once, then the bit pack in
+    vectorized numpy. A per-row expression form costs
+    O(n_tables·n_planes) interpreted lambda reductions PER ROW, which
+    dominated the production bench (64 planes: 22.6s → GEMM sub-s)."""
+    import pandas as pd
+
     if dim is None:
         first = vecs.select(F.size(vec_col)).first()
         dim = int(first[0])
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_tables, n_planes, dim))
-    if method not in ("auto", "kernel", "expr"):
-        raise ValueError(
-            f"unknown hyperplane method {method!r}; expected 'auto', "
-            "'kernel', or 'expr'"
-        )
-    if method == "kernel" and keep_vec:
-        # refuse rather than silently downgrade: a caller explicitly
-        # requesting the GEMM kernel would otherwise get the
-        # O(n_tables·n_planes)-per-row expression path back with no
-        # signal (the kernel's output contract is ids-only)
-        raise ValueError(
-            "method='kernel' emits ids-only bucket rows; use "
-            "keep_vec=False and re-join the vectors on the id after "
-            "candidate dedup (the cheaper shape), or method='expr'"
-        )
-    if method == "auto":
-        method = (
-            "expr"
-            if keep_vec  # ids-only contract for the kernel path
-            else ("kernel" if n_tables * n_planes >= 16 else "expr")
-        )
-    if method == "kernel":
-        import pandas as pd
+    spark = vecs.sparkSession
+    # (n_tables*n_planes, dim) stacked; bit weights per table slice
+    flat = planes.reshape(n_tables * n_planes, dim)
+    bc = spark.sparkContext.broadcast(flat)
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
 
-        spark = vecs.sparkSession
-        # (n_tables*n_planes, dim) stacked; bit weights per table slice
-        flat = planes.reshape(n_tables * n_planes, dim)
-        bc = spark.sparkContext.broadcast(flat)
-        weights = 1 << np.arange(n_planes, dtype=np.int64)
-
-        def bucketize(batches):
-            h = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                m = np.array(list(pdf["_v"]), dtype=np.float64)
-                bits = (m @ h.T) > 0  # (n_rows, n_tables*n_planes)
-                bits = bits.reshape(len(m), n_tables, n_planes)
-                buckets = (bits * weights).sum(axis=2).astype(np.int64)
-                n_rows = len(m)
-                yield pd.DataFrame(
-                    {
-                        "_id": np.repeat(
-                            pdf["_id"].to_numpy(dtype=np.int64), n_tables
-                        ),
-                        "table": np.tile(
-                            np.arange(n_tables, dtype=np.int64), n_rows
-                        ),
-                        "bucket": buckets.reshape(-1),
-                    }
-                )
-
-        out = vecs.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-        ).mapInPandas(bucketize, "_id long, table long, bucket long")
-        return out.select(F.col("_id").alias(id_col), "table", "bucket")
-    tables = []
-    for t in range(n_tables):
-        bucket = None
-        for i in range(n_planes):
-            h = F.array(*[F.lit(float(x)) for x in planes[t, i]])
-            bit = F.when(_dot(F.col(vec_col), h) > 0, F.lit(1 << i)).otherwise(
-                F.lit(0)
+    def bucketize(batches):
+        h = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            m = np.array(list(pdf["_v"]), dtype=np.float64)
+            bits = (m @ h.T) > 0  # (n_rows, n_tables*n_planes)
+            bits = bits.reshape(len(m), n_tables, n_planes)
+            buckets = (bits * weights).sum(axis=2).astype(np.int64)
+            n_rows = len(m)
+            yield pd.DataFrame(
+                {
+                    "_id": np.repeat(
+                        pdf["_id"].to_numpy(dtype=np.int64), n_tables
+                    ),
+                    "table": np.tile(
+                        np.arange(n_tables, dtype=np.int64), n_rows
+                    ),
+                    "bucket": buckets.reshape(-1),
+                }
             )
-            bucket = bit if bucket is None else bucket.bitwiseOR(bit)
-        tables.append(
-            F.struct(F.lit(t).alias("table"), bucket.cast("long").alias("bucket"))
-        )
-    cols = [F.col(id_col)] + ([F.col(vec_col)] if keep_vec else [])
-    out_cols = [id_col] + ([vec_col] if keep_vec else [])
-    return vecs.select(
-        *cols, F.explode(F.array(*tables)).alias("tb")
-    ).select(*out_cols, "tb.table", "tb.bucket")
+
+    out = vecs.select(
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+    ).mapInPandas(bucketize, "_id long, table long, bucket long")
+    return out.select(F.col("_id").alias(id_col), "table", "bucket")
 
 
 def lsh_ann_topk(

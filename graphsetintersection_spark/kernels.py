@@ -2,26 +2,35 @@
 
 These are the engine core: the Spark re-expression of the reference's
 set-intersection kernel family (scalar merge / galloping / SIMD QFilter /
-BMiss / shuffling — ``/root/reference/src/set_operation.cpp``,
+BMiss / shuffling — ``src/set_operation.cpp``,
 ``src/intersection_algos.cpp``). All thirteen micro-architectural variants
-share four semantic contracts, and each contract collapses here into ONE
-numpy kernel that operates on whole Arrow batches:
+share four semantic contracts; each contract keeps at most one form here,
+the one an operator calls:
 
-1. intersect(A,B) / intersect_count(A,B)     (set_operation.cpp:112-144)
-2. union/merge(A,B)                          (set_operation.cpp:1189-1205)
-3. difference(A,B), incl. vs a visited bitmap (set_operation.cpp:1234-1387)
-4. encode/decode uint <-> BSR packed form    (intersection_algos.cpp:1328-1357)
+1. intersect (set_operation.cpp:112-144) — ``intersect`` for the
+   per-pair sorted sets of the clique search's array kernel, and
+   ``batch_intersect_count`` for whole Arrow batches (the near-duplicate
+   verify; the oracle of the BSR kernel).
+2. union/merge (set_operation.cpp:1189-1205) — no kernel: no operator
+   merges sorted lists in numpy (BFS frontiers are Spark unions).
+3. difference (set_operation.cpp:1234-1387) — ``difference`` for the
+   clique search's pivot extension; the visited-bitmap forms are the BFS
+   levels' anti-joins.
+4. BSR packed form (intersection_algos.cpp:1328-1357,
+   set_operation.cpp:554-591) — ``batch_bsr_intersect_count``, which
+   encodes each batch and ANDs + popcounts it (the triangle count's BSR
+   route); ``relabel.comp_ratio`` counts the packed words relationally.
 
 Inputs are required to be SORTED ASCENDING and DEDUPLICATED — the same
 invariant every reference kernel relies on
 (``src/bitpack_triangle_count.cpp:34-37``).
 
-The batch kernels (``batch_intersect_count``, ``batch_intersect``) process a
-whole Arrow record batch of (listA, listB) pairs in a handful of numpy ops —
-no per-row Python — using a row-offset key trick: row ``i``'s values are
-lifted to ``i * 2^33 + v`` so one global ``searchsorted`` resolves every
-row's memberships at once. This is the Spark analog of the reference's SIMD
-inner loops: data-parallel compares over contiguous buffers.
+The batch kernels process a whole Arrow record batch of (listA, listB)
+pairs in a handful of numpy ops — no per-row Python — using a row-offset
+key trick: row ``i``'s values are lifted to ``i * 2^33 + v`` so one global
+``searchsorted`` resolves every row's memberships at once. This is the
+Spark analog of the reference's SIMD inner loops: data-parallel compares
+over contiguous buffers.
 """
 
 from __future__ import annotations
@@ -37,7 +46,7 @@ PACK_WIDTH = 1 << PACK_SHIFT
 
 
 # ---------------------------------------------------------------------------
-# contract 1: intersect / intersect_count (pairwise)
+# pairwise kernels (contracts 1 and 3) — the clique search's array kernel
 # ---------------------------------------------------------------------------
 
 def intersect(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -45,76 +54,10 @@ def intersect(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.intersect1d(a, b, assume_unique=True)
 
 
-def intersect_count(a: np.ndarray, b: np.ndarray) -> int:
-    """|A ∩ B| via galloping membership (reference set_operation.cpp:129;
-    galloping variant intersection_algos.cpp:88-148). ``searchsorted`` of the
-    smaller side into the larger is O(|small| log |large|) — the vectorized
-    equivalent of the reference's skew-adaptive galloping."""
-    if len(a) > len(b):
-        a, b = b, a
-    if len(a) == 0 or len(b) == 0:
-        return 0
-    idx = np.searchsorted(b, a)
-    idx[idx == len(b)] = len(b) - 1
-    return int(np.count_nonzero(b[idx] == a))
-
-
-# ---------------------------------------------------------------------------
-# contract 2/3: union & difference
-# ---------------------------------------------------------------------------
-
-def union(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Sorted merge/union (reference ``merge``, set_operation.cpp:1189)."""
-    return np.union1d(a, b)
-
-
 def difference(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """A \\ B on sorted unique arrays (reference ``subtract``,
     set_operation.cpp:1342-1387)."""
     return np.setdiff1d(a, b, assume_unique=True)
-
-
-def subtract_visited(a: np.ndarray, visited: np.ndarray) -> np.ndarray:
-    """A \\ visited-bitmap (reference bp_subtract_visited,
-    set_operation.cpp:1306). ``visited`` is a bool mask indexed by vertex."""
-    return a[~visited[a]]
-
-
-def keep_visited(a: np.ndarray, visited: np.ndarray) -> np.ndarray:
-    """A ∩ visited-bitmap (reference bp_subtract_unvisited,
-    set_operation.cpp:1324)."""
-    return a[visited[a]]
-
-
-# ---------------------------------------------------------------------------
-# contract 4: BSR (Base & State Representation) encode / decode / AND
-# ---------------------------------------------------------------------------
-
-def to_bsr(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Sorted unique int array → (bases, states). base = v >> PACK_SHIFT,
-    state = OR of (1 << (v & mask)) per base. Reference:
-    offline_uint_trans_bsr (intersection_algos.cpp:1328-1343)."""
-    if len(a) == 0:
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy()
-    bases_all = a >> PACK_SHIFT
-    bits = np.int64(1) << (a & np.int64(PACK_WIDTH - 1))
-    # a sorted → bases_all sorted; reduce ORs per run of equal bases
-    bases, start_idx = np.unique(bases_all, return_index=True)
-    states = np.bitwise_or.reduceat(bits, start_idx)
-    return bases.astype(np.int64), states.astype(np.int64)
-
-
-def from_bsr(bases: np.ndarray, states: np.ndarray) -> np.ndarray:
-    """(bases, states) → sorted int array. Reference:
-    offline_bsr_trans_uint (intersection_algos.cpp:1345-1357)."""
-    if len(bases) == 0:
-        return np.empty(0, dtype=np.int64)
-    # expand each state word into its set-bit positions
-    bit_positions = np.arange(PACK_WIDTH, dtype=np.int64)
-    mat = (states[:, None] >> bit_positions[None, :]) & np.int64(1)
-    rows, cols = np.nonzero(mat)
-    return (bases[rows] << PACK_SHIFT) | cols
 
 
 # 16-bit popcount lookup table (64 KiB): one gather per uint16 lane.
@@ -140,55 +83,6 @@ def _popcount(x: np.ndarray) -> np.ndarray:
     )
 
 
-def bsr_intersect_count(
-    bases_a: np.ndarray, states_a: np.ndarray,
-    bases_b: np.ndarray, states_b: np.ndarray,
-) -> int:
-    """BSR intersect-count: align equal bases, AND the state words, popcount.
-    Reference bp_intersect_count (set_operation.cpp:554-591, popcount at
-    :581). After degree reordering densifies ids, each base word covers up
-    to 64 neighbors — the whole point of the reorder+BSR design."""
-    common, ia, ib = np.intersect1d(
-        bases_a, bases_b, assume_unique=True, return_indices=True
-    )
-    if len(common) == 0:
-        return 0
-    return int(_popcount(states_a[ia] & states_b[ib]).sum())
-
-
-def bsr_merge_one(
-    bases: np.ndarray, states: np.ndarray, v: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Insert one element into a BSR list (reference bp_merge_one,
-    set_operation.cpp:1207-1232 — the clique search's incremental P/X
-    update). Returns new (bases, states); input arrays are not mutated."""
-    base = np.int64(v) >> PACK_SHIFT
-    bit = np.int64(1) << (np.int64(v) & np.int64(PACK_WIDTH - 1))
-    idx = int(np.searchsorted(bases, base))
-    if idx < len(bases) and bases[idx] == base:
-        out_states = states.copy()
-        out_states[idx] |= bit
-        return bases, out_states
-    return (
-        np.insert(bases, idx, base),
-        np.insert(states, idx, bit),
-    )
-
-
-def bsr_intersect(
-    bases_a: np.ndarray, states_a: np.ndarray,
-    bases_b: np.ndarray, states_b: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray]:
-    """BSR intersect, keeping only nonzero result words (reference
-    bp_intersect, set_operation.cpp:554)."""
-    common, ia, ib = np.intersect1d(
-        bases_a, bases_b, assume_unique=True, return_indices=True
-    )
-    states = states_a[ia] & states_b[ib]
-    nz = states != 0
-    return common[nz], states[nz]
-
-
 # ---------------------------------------------------------------------------
 # batch kernels — whole-Arrow-batch, zero per-row Python
 # ---------------------------------------------------------------------------
@@ -205,15 +99,6 @@ def _check_row_shift(vals_a: np.ndarray, vals_b: np.ndarray) -> None:
                 f"[{vals.min()}, {vals.max()}] — relabel to continuous ids "
                 f"first (operators.relabel.continuous_ids)"
             )
-
-
-def _flatten(lists) -> tuple[np.ndarray, np.ndarray]:
-    """List of int arrays → (concatenated values, row lengths)."""
-    lens = np.fromiter((len(x) for x in lists), dtype=np.int64, count=len(lists))
-    if lens.sum() == 0:
-        return np.empty(0, dtype=np.int64), lens
-    vals = np.concatenate([np.asarray(x, dtype=np.int64) for x in lists])
-    return vals, lens
 
 
 def batch_intersect_count(
@@ -291,72 +176,3 @@ def batch_bsr_intersect_count(
     return np.bincount(
         common >> base_shift, weights=cnt, minlength=n
     ).astype(np.int64)
-
-
-def batch_intersect_count_lists(lists_a, lists_b) -> np.ndarray:
-    """Convenience wrapper over python/pandas lists of arrays."""
-    va, la = _flatten(lists_a)
-    vb, lb = _flatten(lists_b)
-    return batch_intersect_count(va, la, vb, lb)
-
-
-def batch_union(
-    vals_a: np.ndarray, lens_a: np.ndarray,
-    vals_b: np.ndarray, lens_b: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row A_i ∪ B_i for a whole batch — the batch form of contract 2
-    (reference ``merge``, set_operation.cpp:1189-1205). Returns
-    (values, row lengths): one global ``np.union1d`` over the row-lifted
-    keys merges every row at once; lengths come from the row part of the
-    merged keys."""
-    n = len(lens_a)
-    assert len(lens_b) == n
-    if n == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    _check_row_shift(vals_a, vals_b)
-    row_a = np.repeat(np.arange(n, dtype=np.int64), lens_a)
-    row_b = np.repeat(np.arange(n, dtype=np.int64), lens_b)
-    key = np.union1d((row_a << ROW_SHIFT) | vals_a, (row_b << ROW_SHIFT) | vals_b)
-    rows = key >> ROW_SHIFT
-    mask = np.int64((1 << ROW_SHIFT) - 1)
-    return key & mask, np.bincount(rows, minlength=n).astype(np.int64)
-
-
-def batch_difference(
-    vals_a: np.ndarray, lens_a: np.ndarray,
-    vals_b: np.ndarray, lens_b: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row A_i \\ B_i for a whole batch — the batch form of contract 3
-    (reference ``subtract``, set_operation.cpp:1342-1387). Returns
-    (values, row lengths); one membership pass (batch_membership) marks
-    the survivors."""
-    n = len(lens_a)
-    assert len(lens_b) == n
-    if n == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    hit = batch_membership(vals_a, lens_a, vals_b, lens_b)
-    row_a = np.repeat(np.arange(n, dtype=np.int64), lens_a)
-    keep = ~hit
-    return (
-        vals_a[keep],
-        np.bincount(row_a[keep], minlength=n).astype(np.int64),
-    )
-
-
-def batch_membership(
-    vals_a: np.ndarray, lens_a: np.ndarray,
-    vals_b: np.ndarray, lens_b: np.ndarray,
-) -> np.ndarray:
-    """Boolean mask over vals_a: is a-value present in the same row's B?
-    Building block for batch intersect-materialize and difference."""
-    n = len(lens_a)
-    _check_row_shift(vals_a, vals_b)
-    row_a = np.repeat(np.arange(n, dtype=np.int64), lens_a)
-    row_b = np.repeat(np.arange(n, dtype=np.int64), lens_b)
-    key_a = (row_a << ROW_SHIFT) | vals_a
-    key_b = (row_b << ROW_SHIFT) | vals_b
-    if len(key_b) == 0 or len(key_a) == 0:
-        return np.zeros(len(key_a), dtype=bool)
-    idx = np.searchsorted(key_b, key_a)
-    idx[idx == len(key_b)] = len(key_b) - 1
-    return key_b[idx] == key_a

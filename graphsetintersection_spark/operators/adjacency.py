@@ -15,14 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def adjacency(edges: DataFrame, src_col: str = "src", dst_col: str = "dst") -> DataFrame:
-    """Sorted unique neighbor lists per source vertex. One shuffle
-    (hash-partition by v) with map-side partial collect."""
-    return edges.groupBy(F.col(src_col).alias("v")).agg(
-        F.sort_array(F.collect_set(dst_col)).alias("nbrs")
-    )
-
-
 def lower_adjacency(oriented: DataFrame) -> DataFrame:
     """Adjacency of SMALLER-id neighbors: for each v, sorted {u : u < v,
     {u,v} ∈ E}. Input must be the oriented edge table (src < dst).

@@ -13,7 +13,8 @@ embarrassingly parallel, which is exactly what we exploit):
    (``degeneracy_order_distributed``: simultaneous min-degree-stratum
    peeling, the DataFrame re-expression of the reference's bucket queue
    src/org_maximal_clique.cpp:316-370) or degree order (cheaper, same
-   family); a driver-side exact peel is kept for small-graph parity.
+   family). It is the library's only degeneracy order; the driver-side
+   exact peel is the test oracle (``tests/oracles.py``).
 2. per-vertex subproblems shipped as INDUCED NEIGHBORHOOD EDGES: for
    each v, rows (v, u, w) where u,w ∈ N(v) and (u,w) ∈ E — the
    triangle-join dataflow. This ships Θ(Σ_v tri(v)) rows instead of the
@@ -42,59 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphsetintersection_spark.operators.adjacency import adjacency
 from graphsetintersection_spark.operators.edges import canonicalize, symmetrize
-
-
-def degeneracy_order(edges: DataFrame, max_driver_vertices: int = 2_000_000):
-    """(order DataFrame[v, rank], degeneracy) — min-degree-first peeling.
-
-    Reference: bucket-queue peeling (src/org_maximal_clique.cpp:316-370).
-    The peeling loop is sequential by nature; degrees are collected and
-    peeled driver-side in O(V+E) over numpy CSR (fine up to ~10^6-10^7
-    vertices — beyond that callers fall back to degree order, the scalable
-    member of the same ordering family)."""
-    und = symmetrize(canonicalize(edges))
-    adj_rows = adjacency(und).collect()
-    if len(adj_rows) > max_driver_vertices:
-        raise ValueError("graph too large for driver-side degeneracy order")
-    ids = np.array([r["v"] for r in adj_rows], dtype=np.int64)
-    idx_of = {int(v): i for i, v in enumerate(ids)}
-    nbrs = [np.array([idx_of[int(u)] for u in r["nbrs"]], dtype=np.int64)
-            for r in adj_rows]
-    n = len(ids)
-    deg = np.array([len(x) for x in nbrs], dtype=np.int64)
-    removed = np.zeros(n, dtype=bool)
-    order = np.empty(n, dtype=np.int64)
-    degeneracy = 0
-    # bucket queue over degrees
-    buckets: dict[int, set[int]] = {}
-    for i in range(n):
-        buckets.setdefault(int(deg[i]), set()).add(i)
-    cur = 0
-    for pos in range(n):
-        while cur not in buckets or not buckets[cur]:
-            cur += 1
-            if cur > n:  # pragma: no cover
-                break
-        i = min(buckets[cur])  # deterministic tie-break
-        buckets[cur].discard(i)
-        degeneracy = max(degeneracy, cur)
-        removed[i] = True
-        order[pos] = i
-        for j in nbrs[i]:
-            if not removed[j]:
-                d = int(deg[j])
-                buckets[d].discard(int(j))
-                deg[j] = d - 1
-                buckets.setdefault(d - 1, set()).add(int(j))
-        cur = max(cur - 1, 0)
-    spark = edges.sparkSession
-    rank_rows = [(int(ids[i]), int(r)) for r, i in enumerate(order)]
-    return (
-        spark.createDataFrame(rank_rows, "v long, rank long"),
-        int(degeneracy),
-    )
 
 
 def degeneracy_order_distributed(
@@ -124,46 +73,61 @@ def degeneracy_order_distributed(
     waves: DataFrame | None = None
     degeneracy = 0
     wave = 0
-    while wave < max_rounds:
-        deg = (
-            remaining.join(
-                cur.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("d")),
-                "v",
-                "left",
-            ).select("v", F.coalesce("d", F.lit(0)).alias("d"))
-        ).persist()
-        row = deg.agg(F.min("d").alias("m"), F.count(F.lit(1)).alias("n")).collect()[0]
-        if not row["n"]:
+    deg = None
+    # try/finally: a wave that raises (an aggregate, a checkpoint) must not
+    # leave its CacheManager-backed degree frame behind
+    try:
+        while wave < max_rounds:
+            deg = (
+                remaining.join(
+                    cur.groupBy(F.col("src").alias("v")).agg(
+                        F.count("*").alias("d")
+                    ),
+                    "v",
+                    "left",
+                ).select("v", F.coalesce("d", F.lit(0)).alias("d"))
+            ).persist()
+            row = deg.agg(
+                F.min("d").alias("m"), F.count(F.lit(1)).alias("n")
+            ).collect()[0]
+            if not row["n"]:
+                break
+            dmin = int(row["m"])
+            degeneracy = max(degeneracy, dmin)
+            peel = deg.where(F.col("d") == dmin).select("v").localCheckpoint(
+                eager=True
+            )
+            w_df = peel.withColumn("wave", F.lit(wave))
+            waves = w_df if waves is None else waves.unionByName(w_df)
+            old_remaining, old_cur = remaining, cur
+            remaining = remaining.join(peel, "v", "left_anti").localCheckpoint(
+                eager=True
+            )
+            cur = (
+                cur.join(peel.withColumnRenamed("v", "src"), "src", "left_anti")
+                .join(peel.withColumnRenamed("v", "dst"), "dst", "left_anti")
+                .select("src", "dst")
+                .localCheckpoint(eager=True)
+            )
+            # previous wave's remaining/cur snapshots are superseded; the
+            # peel frames stay — `waves` references every wave's rows
+            # until the end
+            old_remaining.unpersist()
+            old_cur.unpersist()
             deg.unpersist()
-            break
-        dmin = int(row["m"])
-        degeneracy = max(degeneracy, dmin)
-        peel = deg.where(F.col("d") == dmin).select("v").localCheckpoint(eager=True)
-        w_df = peel.withColumn("wave", F.lit(wave))
-        waves = w_df if waves is None else waves.unionByName(w_df)
-        old_remaining, old_cur = remaining, cur
-        remaining = remaining.join(peel, "v", "left_anti").localCheckpoint(eager=True)
-        cur = (
-            cur.join(peel.withColumnRenamed("v", "src"), "src", "left_anti")
-            .join(peel.withColumnRenamed("v", "dst"), "dst", "left_anti")
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-        # previous wave's remaining/cur snapshots are superseded; the peel
-        # frames stay — `waves` references every wave's rows until the end
-        old_remaining.unpersist()
-        old_cur.unpersist()
-        deg.unpersist()
-        wave += 1
-    # cap hit: leftovers appended as one final wave (degree-order family)
-    leftover = remaining.withColumn("wave", F.lit(wave))
-    waves = leftover if waves is None else waves.unionByName(leftover)
-    order = global_order_stats(
-        waves, [F.col("wave").asc(), F.col("v").asc()], rank_col="rank"
-    ).select("v", "rank")
-    # global_order_stats materialized its own cache; drop the peel state
-    remaining.unpersist()
-    cur.unpersist()
+            wave += 1
+        # cap hit: leftovers appended as one final wave (degree-order family)
+        leftover = remaining.withColumn("wave", F.lit(wave))
+        waves = leftover if waves is None else waves.unionByName(leftover)
+        order = global_order_stats(
+            waves, [F.col("wave").asc(), F.col("v").asc()], rank_col="rank"
+        ).select("v", "rank")
+    finally:
+        # global_order_stats materialized its own cache; drop the peel state
+        if deg is not None:
+            deg.unpersist()
+        remaining.unpersist()
+        cur.unpersist()
     return order, degeneracy
 
 
@@ -236,7 +200,7 @@ def _bk_arrays(
 ) -> None:
     """Fallback for oversized groups: same BK+pivot over SORTED INDEX
     ARRAYS using the engine set kernels (kernels.intersect /
-    intersect_count — the reference's uint path,
+    difference — the reference's uint path,
     src/org_maximal_clique.cpp:169-314)."""
     from graphsetintersection_spark import kernels
 

@@ -411,9 +411,11 @@ def hybrid_bfsdeg_order_exact(
     cannot reproduce.
 
     A queue's discovery sequence is inherently sequential state, so —
-    like ``dfs_order`` / ``degeneracy_order`` — this runs driver-side
-    over numpy CSR under a vertex cap (checked BEFORE the collect); the
-    scalable family member is ``hybrid_bfsdeg_order``.
+    like ``dfs_order`` — this runs driver-side over numpy CSR under a
+    vertex cap (checked BEFORE the collect). It is the library's only
+    form of the reference's queue-BFS semantics; ``hybrid_bfsdeg_order``
+    is the distributed level-synchronous ordering for graphs past the
+    cap, with the tie-break deviation above.
     """
     import numpy as np
 
@@ -503,9 +505,10 @@ def dfs_order(
     reference's sorted CSR), restarting from the smallest unvisited id.
 
     DFS is inherently sequential (a single stack defines the order), so —
-    like ``degeneracy_order`` and ``greedy_mheap_order`` — it runs
-    driver-side over numpy CSR with a vertex cap; the scalable member of
-    the locality family is ``bfs_order``."""
+    like ``greedy_mheap_order`` — it runs driver-side over numpy CSR with
+    a vertex cap. It is the library's only form of the reference's DFS
+    preorder; past the cap, ``bfs_order`` is the distributed locality
+    ordering (a different order, not a twin)."""
     import numpy as np
 
     spark = edges.sparkSession
@@ -711,11 +714,9 @@ def _bisect_static_gain(left, right, csr4):
 
 def _bisect_refine(left, right, csr4, max_iters, recompute_gains):
     """One bisection's ≤``max_iters`` gain-sorted prefix-swap rounds
-    (reference :917-925) over a half split — THE shared kernel: the
-    driver-exact ``mloggapa_order`` recursion and the distributed
-    ``graph_bisection_order`` per-part tasks both call this, which is
-    what makes their outputs bit-identical (parity pytest). Returns the
-    refined (left, right) arrays."""
+    (reference :917-925) over a half split — the kernel every
+    ``graph_bisection_order`` per-part task runs over its part-local CSR.
+    Returns the refined (left, right) arrays."""
     import numpy as np
 
     gl, gr = _bisect_static_gain(left, right, csr4)
@@ -747,16 +748,43 @@ def graph_bisection_order(
     max_task_vertices: int = 2_000_000,
     max_levels: int = 48,
 ) -> DataFrame:
-    """DISTRIBUTED minimum-log-gap recursive bisection (org_id, new_id) —
-    the scalable family member of ``mloggapa_order`` (same objective,
-    reference src/porder.cpp:634-686,794-930; same KDD'16 scheme).
+    """Minimum-log-gap-arrangement ordering (org_id, new_id) — reference
+    mloggapa_order / graph_bisection2 (src/porder.cpp:634-686, 794-930),
+    the KDD'16 recursive-graph-bisection objective, and the library's
+    only form of it: recursively split the current layout into halves
+    and refine each split with ≤``max_iters`` rounds of gain-sorted
+    prefix swaps, where a member vertex's gain sums, over each neighbor q
+    it touches (separately for out- and in-edges, :809-858), the log-gap
+    cost delta of moving it across:
+
+        cost(n1,q1,n2,q2) = q1·log2(n1/(q1+1)) + q2·log2(n2/(q2+1))
+        gain  += cost(ln, dl, rn, dr) − cost(ln, dl∓1, rn, dr±1)
+
+    with dl/dr = how many of q's incident members sit left/right. Swap
+    rounds (:917-925): sort both halves by gain desc, swap the leading
+    pairs while gain_l+gain_r > 0, stop when a round swaps nothing.
+    Parts below ``min_part`` keep their layout (:799: tot_num < 32).
+
+    ``recompute_gains``: the reference builds the per-half incidence
+    lists ONCE per bisection and never rebuilds them between swap rounds
+    (:809 sits above the :865 iteration loop), so its gain vector is
+    STATIC within a bisection and the refinement converges only by the
+    round cap; ``recompute_gains=False`` reproduces those dynamics
+    exactly. The default ``True`` recomputes dl/dr from the CURRENT
+    membership after each swap round — the KDD'16 refinement the
+    reference's code is aiming at — which genuinely converges. Both
+    dynamics equal a literal dict-based mirror of the reference
+    (parity pytest). Documented deviations: stable descending gain sort
+    (the reference's std::sort tie order is unspecified) and
+    per-neighbor gain scatter via weighted bincount.
 
     Level-synchronous re-expression: the recursion tree's level L holds
     2^L INDEPENDENT parts, so one ``groupBy(part).applyInPandas`` runs
-    every part's refinement concurrently — each task calls the SAME
-    ``_bisect_refine`` kernel as the driver version over a part-local
-    CSR, which makes the two operators' outputs BIT-IDENTICAL whenever
-    every part fits a task (parity pytest). State is one frame
+    every part's refinement concurrently — each task runs
+    ``_bisect_refine`` over a part-local CSR, and the level-synchronous
+    (part, rank) order is the recursion's DFS concatenation order, so
+    the output equals the sequential recursion whenever every part fits
+    a task. State is one frame
     (v, part, rank, out_nbrs, in_nbrs): the adjacency rides with the
     assignment, so a level is exactly ONE hash-partition shuffle of
     O(V + E) rows and zero joins; depth is ⌈log2(n/min_part)⌉ levels.
@@ -772,8 +800,8 @@ def graph_bisection_order(
     with a degree/BFS layout for the same reason, and callers can feed
     ``apply_order``-relabeled edges in).
 
-    Initial layout = ascending vertex id (the driver version's
-    ``np.arange`` over sorted ids — feed relabeled ids to choose a
+    Initial layout = ascending vertex id (the reference's identity
+    layout over continuous ids — feed relabeled ids to choose a
     different seed layout)."""
     import math
 
@@ -914,95 +942,6 @@ def graph_bisection_order(
     return out
 
 
-def mloggapa_order(
-    edges: DataFrame,
-    min_part: int = 32,
-    max_iters: int = 20,
-    recompute_gains: bool = True,
-    max_driver_vertices: int = 2_000_000,
-) -> DataFrame:
-    """Minimum-log-gap-arrangement ordering (org_id, new_id) — reference
-    mloggapa_order / graph_bisection2 (src/porder.cpp:634-686, 794-930),
-    the KDD'16 recursive-graph-bisection objective: recursively split the
-    current layout into halves and refine each split with ≤``max_iters``
-    rounds of gain-sorted prefix swaps, where a member vertex's gain sums,
-    over each neighbor q it touches (separately for out- and in-edges,
-    :809-858), the log-gap cost delta of moving it across:
-
-        cost(n1,q1,n2,q2) = q1·log2(n1/(q1+1)) + q2·log2(n2/(q2+1))
-        gain  += cost(ln, dl, rn, dr) − cost(ln, dl∓1, rn, dr±1)
-
-    with dl/dr = how many of q's incident members sit left/right. Swap
-    rounds (:917-925): sort both halves by gain desc, swap the leading
-    pairs while gain_l+gain_r > 0, stop when a round swaps nothing.
-    Splits below ``min_part`` keep their layout (:799: tot_num < 32).
-
-    ``recompute_gains``: the reference builds the per-half incidence
-    lists ONCE per bisection and never rebuilds them between swap rounds
-    (:809 sits above the :865 iteration loop), so its gain vector is
-    STATIC within a bisection — swapped high-gain pairs still "want" to
-    move and oscillate back, and the refinement converges only by the
-    round cap. ``recompute_gains=False`` mirrors those dynamics exactly
-    (gains computed once, only the sort-and-swap loop re-runs — provably
-    identical since recomputing from static lists yields the same
-    vector). The default ``True`` recomputes dl/dr from the CURRENT
-    membership after each swap round — the actual KDD'16 refinement the
-    reference's code is plainly aiming at — which genuinely converges
-    and is the quality default.
-
-    Driver-side over numpy CSR with the usual vertex cap (the recursion
-    defines a single global layout; the scalable family member is
-    ``bfsr_order``). Documented deviations: stable descending gain sort
-    (the reference's std::sort tie order is unspecified) and per-neighbor
-    gain scatter via weighted bincount (numerically identical)."""
-    import numpy as np
-
-    spark = edges.sparkSession
-    e = canonicalize(edges)
-    _check_driver_cap(e, max_driver_vertices, "mloggapa order")
-    rows = e.groupBy("src").agg(F.collect_list("dst").alias("nbrs")).collect()
-    vs = {int(r["src"]) for r in rows}
-    for r in rows:
-        vs.update(int(u) for u in r["nbrs"])
-    ids = np.array(sorted(vs), dtype=np.int64)
-    idx_of = {int(v): i for i, v in enumerate(ids)}
-    n = len(ids)
-    srcs, dsts = [], []
-    for r in rows:
-        u = idx_of[int(r["src"])]
-        for w in r["nbrs"]:
-            srcs.append(u)
-            dsts.append(idx_of[int(w)])
-    src_a = np.array(srcs, dtype=np.int64)
-    dst_a = np.array(dsts, dtype=np.int64)
-
-    def csr(tail: np.ndarray, head: np.ndarray):
-        order = np.argsort(tail, kind="stable")
-        t, h = tail[order], head[order]
-        indptr = np.zeros(n + 1, dtype=np.int64)
-        np.add.at(indptr, t + 1, 1)
-        np.cumsum(indptr, out=indptr)
-        return indptr, h
-    out_ptr, out_nbr = csr(src_a, dst_a)   # u -> out-neighbors
-    in_ptr, in_nbr = csr(dst_a, src_a)     # u -> in-neighbors
-
-    csr4 = (out_ptr, out_nbr, in_ptr, in_nbr)
-
-    def bisect(part: np.ndarray) -> np.ndarray:
-        if len(part) < min_part:
-            return part
-        mid = len(part) // 2
-        left, right = _bisect_refine(
-            part[:mid].copy(), part[mid:].copy(), csr4, max_iters,
-            recompute_gains,
-        )
-        return np.concatenate([bisect(left), bisect(right)])
-
-    layout = bisect(np.arange(n, dtype=np.int64))
-    out = [(int(ids[v]), pos) for pos, v in enumerate(layout)]
-    return spark.createDataFrame(out, "org_id long, new_id long")
-
-
 def greedy_mheap_order(
     edges: DataFrame,
     window: int = PACK_WIDTH,
@@ -1019,10 +958,11 @@ def greedy_mheap_order(
     64-id pack word.
 
     The greedy is inherently sequential (the reference runs it
-    single-threaded over CSR); like ``degeneracy_order`` it is executed
-    driver-side over numpy CSR and capped at ``max_driver_vertices`` —
-    beyond that, callers use ``degree_order`` (the scalable member of the
-    same family, and the initializer the reference itself applies first).
+    single-threaded over CSR); like ``dfs_order`` it is executed
+    driver-side over numpy CSR and capped at ``max_driver_vertices``. It
+    is the library's only form of GRO; past the cap, callers use
+    ``degree_order`` (a different ordering — the initializer the
+    reference itself applies first).
     Tie-break is the deterministic (score desc, degree desc, id asc)
     triple rather than the reference's history-dependent linked-list-heap
     residual order — same objective, reproducible output.

@@ -5,12 +5,10 @@ Semantics (src/bitpack_triangle_count.cpp:70-103, src/org_triangle_count
 self-loops dropped), sum |N⁻(u) ∩ N⁻(v)| where N⁻(x) = neighbors of x with
 smaller id — each triangle a<b<c counted exactly once, at edge (b,c).
 
-Three interchangeable implementations (mirroring the reference's
-Org / BP / Roaring parity trio, src/tc.cpp:14-16) whose equality is itself
-a test:
+Two implementations whose equality is itself a test, with the 3-way
+relational self-join (``tests/oracles.py``) as the third member of the
+reference's Org / BP / Roaring parity trio (src/tc.cpp:14-16):
 
-- ``triangle_count_join``   — pure relational 3-way self-join; Catalyst
-  picks SMJ/broadcast, AQE splits skewed partitions; 100% JVM codegen.
 - ``triangle_count_arrays`` — adjacency + ``array_intersect`` built-in;
   JVM-side, no Python.
 - ``triangle_count_kernel`` — adjacency + one vectorized Arrow batch
@@ -24,7 +22,7 @@ a test:
 
 The multithreaded reference variant (static edge-range partitioning +
 per-thread partials, src/bitpack_triangle_count.cpp:143-206) is exactly
-Spark's partition-parallel partial ``sum`` — free in all three forms.
+Spark's partition-parallel partial ``sum`` — free in both forms.
 """
 
 from __future__ import annotations
@@ -39,16 +37,6 @@ from pyspark.sql import functions as F
 from graphsetintersection_spark.kernels import batch_bsr_intersect_count
 from graphsetintersection_spark.operators.adjacency import lower_adjacency
 from graphsetintersection_spark.operators.edges import orient
-
-
-def triangle_count_join(edges: DataFrame) -> int:
-    """3-way self-join formulation: count (a,b),(b,c),(a,c) with a<b<c.
-    Fully relational — the form Catalyst optimizes end-to-end."""
-    e = orient(edges).select("src", "dst")
-    ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    ac = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    return ab.join(bc, "b").join(ac, ["a", "c"]).count()
 
 
 AUTO_HUB_RATIO = 0.25
@@ -405,7 +393,6 @@ def _kernel_count(edges: DataFrame, acc_inter, acc_cmp) -> int:
             F.sum(F.size("nbrs")).alias("entries"),
             F.max(F.size("nbrs")).alias("mx"),
             F.avg(F.size("nbrs")).alias("av"),
-            F.count(F.lit(1)).alias("n"),
         ).collect()[0]
         entries = int(probe["entries"] or 0)
         if entries > BROADCAST_ADJ_MAX_ENTRIES:

@@ -222,18 +222,6 @@ def trans_newid_query_ids(
     return out.select(*queries.columns)
 
 
-def trans_newid_queries(queries: list[LabelSubgraph], order: dict[int, int]) -> list[LabelSubgraph]:
-    """Driver-side rewrite of parsed sm query graphs: query-vertex LABELS
-    refer to data labels (already rewritten via trans_newid_labels), but
-    a query file listing concrete data ids (bfs/sssp) maps through the
-    permutation — mirror of python/gen_queries.py:30-44 for the parsed
-    form."""
-    return [
-        LabelSubgraph(q.v_num, list(q.edges), [order.get(l, l) for l in q.labels])
-        for q in queries
-    ]
-
-
 # ---------------------------------------------------------------------------
 # batch sm runner (the reference sm main loop, src/sm.cpp:89-104)
 # ---------------------------------------------------------------------------

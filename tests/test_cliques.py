@@ -3,10 +3,10 @@ reference's Org vs BP cross-checking of mc_num, src/mc.cpp:17-19)."""
 
 import pytest
 
-from tests.conftest import random_graph, undirected_simple
+from tests.conftest import cache_rdd_ids, random_graph, undirected_simple
+from tests.oracles import degeneracy_order
 
 from graphsetintersection_spark.operators.cliques import (
-    degeneracy_order,
     degeneracy_order_distributed,
     maximal_clique_count,
     maximal_cliques,
@@ -75,6 +75,7 @@ def test_degeneracy_value(spark):
     df = spark.createDataFrame(k5 + path, "src long, dst long")
     _, degen = degeneracy_order(df)
     assert degen == 4
+    assert degeneracy_order_distributed(df)[1] == 4
 
 
 def test_degeneracy_distributed_matches_driver(spark):
@@ -90,6 +91,35 @@ def test_degeneracy_distributed_matches_driver(spark):
     # and BK over it reproduces the exact clique set
     got = _collect_cliques(maximal_cliques(df, order=order))
     assert got == python_bk(pairs)
+
+
+def test_degeneracy_distributed_releases_caches_when_a_wave_fails(
+    spark, monkeypatch
+):
+    """A peel wave that raises (here the third localCheckpoint: the first
+    wave's peel set, taken while that wave's degree frame is persisted)
+    leaves no CacheManager entry behind."""
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "src long, dst long"
+    )
+    cls = type(df)
+    real = cls.localCheckpoint
+    calls = []
+
+    def flaky(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("injected wave failure")
+        return real(self, *args, **kwargs)
+
+    before = cache_rdd_ids(spark)
+    monkeypatch.setattr(cls, "localCheckpoint", flaky)
+    with pytest.raises(RuntimeError, match="injected"):
+        degeneracy_order_distributed(df)
+    monkeypatch.setattr(cls, "localCheckpoint", real)
+    assert len(calls) == 3
+    leaked = cache_rdd_ids(spark) - before
+    assert not leaked, f"degeneracy_order_distributed leaked caches: {leaked}"
 
 
 def test_degeneracy_distributed_round_cap(spark):

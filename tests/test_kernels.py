@@ -36,52 +36,44 @@ GRID = [
 ]
 
 
+def _flatten_lists(lists):
+    lens = np.array([len(x) for x in lists], dtype=np.int64)
+    vals = (
+        np.concatenate([np.asarray(x, dtype=np.int64) for x in lists])
+        if lens.sum()
+        else np.empty(0, dtype=np.int64)
+    )
+    return vals, lens
+
+
 @pytest.mark.parametrize("length,skew,select,dense", GRID)
 def test_pairwise_contracts(length, skew, select, dense):
     rng = np.random.default_rng(42)
     a, b = gen_sorted_pair(rng, length, skew, select, dense)
     oracle = np.intersect1d(a, b)
     assert np.array_equal(K.intersect(a, b), oracle)
-    assert K.intersect_count(a, b) == len(oracle)
-    assert np.array_equal(K.union(a, b), np.union1d(a, b))
     assert np.array_equal(K.difference(a, b), np.setdiff1d(a, b))
 
 
 @pytest.mark.parametrize("length,skew,select,dense", GRID)
 def test_bsr_roundtrip_and_intersect(length, skew, select, dense):
+    """The BSR kernel on the per-pair grid: |A∩A| = |A| and |B∩B| = |B|
+    (packing into base/state words and popcounting them back loses no
+    member) and |A∩B| equals the scalar-merge oracle, each pair as a
+    one-row batch and all three as one batch."""
     rng = np.random.default_rng(7)
     a, b = gen_sorted_pair(rng, length, skew, select, dense)
-    ba, sa = K.to_bsr(a)
-    bb, sb = K.to_bsr(b)
-    assert np.array_equal(K.from_bsr(ba, sa), a)
-    assert np.array_equal(K.from_bsr(bb, sb), b)
-    oracle = np.intersect1d(a, b)
-    assert K.bsr_intersect_count(ba, sa, bb, sb) == len(oracle)
-    rb, rs = K.bsr_intersect(ba, sa, bb, sb)
-    assert np.array_equal(K.from_bsr(rb, rs), oracle)
+    oracle = len(np.intersect1d(a, b))
 
+    def bsr(lists_a, lists_b):
+        va, la = _flatten_lists(lists_a)
+        vb, lb = _flatten_lists(lists_b)
+        return K.batch_bsr_intersect_count(va, la, vb, lb).tolist()
 
-def test_bsr_merge_one():
-    rng = np.random.default_rng(5)
-    a = np.unique(rng.integers(0, 500, 60)).astype(np.int64)
-    ba, sa = K.to_bsr(a)
-    for v in (0, 63, 64, 499, 257):
-        nb, ns = K.bsr_merge_one(ba, sa, int(v))
-        assert np.array_equal(
-            K.from_bsr(nb, ns), np.union1d(a, [v])
-        ), f"merge_one failed for {v}"
-    # idempotent on existing member
-    v0 = int(a[0])
-    nb, ns = K.bsr_merge_one(ba, sa, v0)
-    assert np.array_equal(K.from_bsr(nb, ns), a)
-
-
-def test_visited_bitmap_ops():
-    visited = np.zeros(100, dtype=bool)
-    visited[[2, 3, 50]] = True
-    a = np.array([1, 2, 3, 10, 50, 99], dtype=np.int64)
-    assert np.array_equal(K.subtract_visited(a, visited), [1, 10, 99])
-    assert np.array_equal(K.keep_visited(a, visited), [2, 3, 50])
+    assert bsr([a], [a]) == [len(a)]
+    assert bsr([b], [b]) == [len(b)]
+    assert bsr([a], [b]) == [oracle]
+    assert bsr([a, b, a], [a, b, b]) == [len(a), len(b), oracle]
 
 
 def test_batch_intersect_count_matches_rowwise():
@@ -94,25 +86,22 @@ def test_batch_intersect_count_matches_rowwise():
         lists_a.append(a)
         lists_b.append(b)
         expected.append(len(np.intersect1d(a, b)))
-    got = K.batch_intersect_count_lists(lists_a, lists_b)
+    got = K.batch_intersect_count(
+        *_flatten_lists(lists_a), *_flatten_lists(lists_b)
+    )
     assert got.tolist() == expected
 
 
 def test_batch_intersect_count_empty_rows():
     e = np.empty(0, dtype=np.int64)
-    got = K.batch_intersect_count_lists([e, np.array([1, 2])], [np.array([1]), e])
-    assert got.tolist() == [0, 0]
-    assert K.batch_intersect_count_lists([], []).tolist() == []
-
-
-def _flatten_lists(lists):
-    lens = np.array([len(x) for x in lists], dtype=np.int64)
-    vals = (
-        np.concatenate([np.asarray(x, dtype=np.int64) for x in lists])
-        if lens.sum()
-        else np.empty(0, dtype=np.int64)
+    got = K.batch_intersect_count(
+        *_flatten_lists([e, np.array([1, 2])]),
+        *_flatten_lists([np.array([1]), e]),
     )
-    return vals, lens
+    assert got.tolist() == [0, 0]
+    assert K.batch_intersect_count(
+        *_flatten_lists([]), *_flatten_lists([])
+    ).tolist() == []
 
 
 @pytest.mark.parametrize("dense", [0.01, 0.3, 0.9])
@@ -151,39 +140,3 @@ def test_batch_kernels_reject_out_of_range_ids():
             fn(big, one, big, one)
         with pytest.raises(ValueError):
             fn(-one, one, one, one)
-
-
-def test_batch_union_difference_match_rowwise():
-    """Batch forms of contracts 2-3 vs per-row numpy oracles."""
-    rng = np.random.default_rng(7)
-    lists_a, lists_b = [], []
-    for i in range(40):
-        a = np.unique(rng.integers(0, 500, size=rng.integers(0, 60)))
-        b = np.unique(rng.integers(0, 500, size=rng.integers(0, 60)))
-        lists_a.append(a.astype(np.int64))
-        lists_b.append(b.astype(np.int64))
-    va, la = K._flatten(lists_a)
-    vb, lb = K._flatten(lists_b)
-
-    uv, ul = K.batch_union(va, la, vb, lb)
-    off = np.concatenate([[0], np.cumsum(ul)])
-    for i, (a, b) in enumerate(zip(lists_a, lists_b)):
-        got = uv[off[i]:off[i + 1]]
-        assert np.array_equal(got, np.union1d(a, b)), i
-
-    dv, dl = K.batch_difference(va, la, vb, lb)
-    off = np.concatenate([[0], np.cumsum(dl)])
-    for i, (a, b) in enumerate(zip(lists_a, lists_b)):
-        got = dv[off[i]:off[i + 1]]
-        assert np.array_equal(got, np.setdiff1d(a, b, assume_unique=True)), i
-
-
-def test_batch_union_difference_empty():
-    e = np.empty(0, dtype=np.int64)
-    uv, ul = K.batch_union(e, e, e, e)
-    assert len(uv) == 0 and len(ul) == 0
-    va, la = K._flatten([np.array([1, 2], dtype=np.int64)])
-    uv, ul = K.batch_union(va, la, e, np.array([0], dtype=np.int64))
-    assert list(uv) == [1, 2] and list(ul) == [2]
-    dv, dl = K.batch_difference(va, la, e, np.array([0], dtype=np.int64))
-    assert list(dv) == [1, 2] and list(dl) == [2]

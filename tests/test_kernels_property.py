@@ -12,12 +12,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from graphsetintersection_spark.kernels import (
-    ROW_SHIFT,
     _popcount,
     batch_bsr_intersect_count,
-    batch_difference,
     batch_intersect_count,
-    batch_union,
 )
 from graphsetintersection_spark.operators.triangle import (
     _build_bitset,
@@ -56,26 +53,6 @@ def test_batch_intersect_kernels_match_set_semantics(batch):
     got_bsr = batch_bsr_intersect_count(va.copy(), la, vb.copy(), lb)
     assert list(got_uint) == list(expect)
     assert list(got_bsr) == list(expect)
-
-
-@settings(max_examples=200, deadline=None)
-@given(batch_st)
-def test_batch_union_difference_match_set_semantics(batch):
-    rows_a = [a for a, _ in batch]
-    rows_b = [b for _, b in batch]
-    va, la = flatten(rows_a)
-    vb, lb = flatten(rows_b)
-    uv, ul = batch_union(va, la, vb, lb)
-    dv, dl = batch_difference(va, la, vb, lb)
-    off_u = off_d = 0
-    for (a, b), nu, nd in zip(batch, ul, dl):
-        exp_u = sorted(set(a) | set(b))
-        exp_d = sorted(set(a) - set(b))
-        assert list(uv[off_u:off_u + nu]) == exp_u
-        assert list(dv[off_d:off_d + nd]) == exp_d
-        off_u += nu
-        off_d += nd
-    assert off_u == len(uv) and off_d == len(dv)
 
 
 @settings(max_examples=200, deadline=None)

@@ -8,16 +8,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.operators.relabel import apply_order, comp_ratio, degree_order
-from graphsetintersection_spark.operators.triangle import (
-    triangle_count_arrays,
-    triangle_count_join,
-)
+from graphsetintersection_spark.operators.triangle import triangle_count_arrays
 from graphsetintersection_spark.sources.extract import (
     extract_links,
     extract_text,
     link_edges,
 )
 from graphsetintersection_spark.sources.pages import generate_pages
+from tests.oracles import triangle_count_join
 
 
 N_PAGES = 300

@@ -83,9 +83,7 @@ def test_triangle_broadcast_stream_cached_and_uncached_agree(spark):
     finally:
         cached.unpersist()
     # and against the relational reference
-    from graphsetintersection_spark.operators.triangle import (
-        triangle_count_join,
-    )
+    from tests.oracles import triangle_count_join
 
     assert uncached == triangle_count_join(df)
 

@@ -354,13 +354,16 @@ def test_hybrid_bfsdeg_order_deg_then_bfs(spark):
     assert got == expect
 
 
-def _mloggapa_literal(edges, n, min_part=32, max_iters=20):
+def _mloggapa_literal(edges, n, recompute_gains, min_part=32, max_iters=20):
     """Independent literal mirror of the reference's graph_bisection2
-    (src/porder.cpp:794-930): dict incidence lists built once per
-    bisection, gains REcomputed every swap round from those static lists
-    (exactly as the C++ does), stable desc-gain sort, prefix swaps while
-    gain_l+gain_r > 0. Exercises the production code's compute-gains-once
-    shortcut against the literal per-round recomputation."""
+    (src/porder.cpp:794-930) over continuous ids 0..n-1: dict incidence
+    lists, gains REcomputed every swap round from them, stable desc-gain
+    sort, prefix swaps while gain_l+gain_r > 0. With
+    ``recompute_gains=False`` the incidence lists are built once per
+    bisection and stay static (exactly as the C++ does), which exercises
+    the production code's compute-gains-once shortcut; with True they are
+    rebuilt from the current halves before every swap round (the KDD'16
+    refinement)."""
     import math
 
     out_adj = [[] for _ in range(n)]
@@ -380,15 +383,22 @@ def _mloggapa_literal(edges, n, min_part=32, max_iters=20):
         mid = len(part) // 2
         left, right = list(part[:mid]), list(part[mid:])
         ln, rn = len(left), len(right)
-        incid = []  # (q -> members) maps, one per (side, direction)
-        for side in (left, right):
-            for adj in (out_adj, in_adj):
-                mp = {}
-                for u in side:
-                    for q in adj[u]:
-                        mp.setdefault(q, []).append(u)
-                incid.append(mp)
+
+        def incidence():
+            maps = []  # (q -> members) maps, one per (side, direction)
+            for side in (left, right):
+                for adj in (out_adj, in_adj):
+                    mp = {}
+                    for u in side:
+                        for q in adj[u]:
+                            mp.setdefault(q, []).append(u)
+                    maps.append(mp)
+            return maps
+
+        incid = incidence()
         for _ in range(max_iters):
+            if recompute_gains:
+                incid = incidence()
             gain = {u: 0.0 for u in left + right}
             for d in (0, 1):  # direction: out, in
                 lmap, rmap = incid[d], incid[2 + d]
@@ -421,9 +431,13 @@ def _mloggapa_literal(edges, n, min_part=32, max_iters=20):
 
 
 def test_mloggapa_order_matches_literal_mirror(spark):
-    """The vectorized driver implementation must equal the literal
-    per-round-recomputing mirror of src/porder.cpp:794-930 exactly."""
-    from graphsetintersection_spark.operators.relabel import mloggapa_order
+    """The reference's mloggapa_order with its static-gain dynamics
+    (``graph_bisection_order(recompute_gains=False)``) must equal the
+    literal per-round-recomputing mirror of src/porder.cpp:794-930
+    exactly."""
+    from graphsetintersection_spark.operators.relabel import (
+        graph_bisection_order,
+    )
 
     n = 200
     pairs = sorted(
@@ -436,11 +450,11 @@ def test_mloggapa_order_matches_literal_mirror(spark):
     pairs = [(remap[u], remap[v]) for u, v in pairs]
     m = len(verts)
     df = spark.createDataFrame(pairs, "src long, dst long")
-    layout = _mloggapa_literal(pairs, m)
+    layout = _mloggapa_literal(pairs, m, recompute_gains=False)
     expect = {u: pos for pos, u in enumerate(layout)}
     got = {
         r["org_id"]: r["new_id"]
-        for r in mloggapa_order(df, recompute_gains=False).collect()
+        for r in graph_bisection_order(df, recompute_gains=False).collect()
     }
     assert got == expect
 
@@ -448,12 +462,16 @@ def test_mloggapa_order_matches_literal_mirror(spark):
 def test_mloggapa_order_small_graph_identity(spark):
     """Below min_part no bisection happens (reference :799 tot_num < 32):
     the layout is the initial ascending-id order."""
-    from graphsetintersection_spark.operators.relabel import mloggapa_order
+    from graphsetintersection_spark.operators.relabel import (
+        graph_bisection_order,
+    )
 
     df = spark.createDataFrame(
         [(3, 9), (9, 12), (12, 3)], "src long, dst long"
     )
-    got = {r["org_id"]: r["new_id"] for r in mloggapa_order(df).collect()}
+    got = {
+        r["org_id"]: r["new_id"] for r in graph_bisection_order(df).collect()
+    }
     assert got == {3: 0, 9: 1, 12: 2}
 
 
@@ -461,7 +479,9 @@ def test_mloggapa_order_densifies_scrambled_communities(spark):
     """Two id-interleaved dense communities: the bisection objective must
     place each community contiguously, densifying comp_ratio vs the
     original interleaved ids."""
-    from graphsetintersection_spark.operators.relabel import mloggapa_order
+    from graphsetintersection_spark.operators.relabel import (
+        graph_bisection_order,
+    )
 
     import numpy as np
 
@@ -474,7 +494,7 @@ def test_mloggapa_order_densifies_scrambled_communities(spark):
         if u != v:
             pairs.add((int(u), int(v)))
     df = spark.createDataFrame(sorted(pairs), "src long, dst long")
-    order = mloggapa_order(df)
+    order = graph_bisection_order(df)
     rows = {r["org_id"]: r["new_id"] for r in order.collect()}
     assert sorted(rows.values()) == list(range(len(rows)))
     # each community must land in one contiguous half
@@ -565,26 +585,31 @@ def test_hybrid_bfsdeg_exact_multiroot_random(spark):
         assert sorted(got.values()) == list(range(len(expect)))
 
 
+def _continuous(pairs):
+    """(pairs over ids 0..m-1, m, original id of each continuous id)."""
+    verts = sorted({u for e in pairs for u in e})
+    remap = {v: i for i, v in enumerate(verts)}
+    return [(remap[u], remap[v]) for u, v in pairs], len(verts), verts
+
+
 def test_graph_bisection_order_equals_driver_exact(spark):
     """The distributed level-synchronous bisection must be BIT-IDENTICAL
-    to the driver-exact mloggapa_order whenever every part fits a task —
-    both recursions call the shared _bisect_refine kernel on identical
-    part-local inputs, and the level-synchronous (part, rank) order is
-    the DFS concatenation order. Both gain dynamics checked."""
+    to the sequential recursion whenever every part fits a task — the
+    level-synchronous (part, rank) order is the DFS concatenation order.
+    The oracle is the driver-side literal mirror; both gain dynamics
+    checked."""
     from graphsetintersection_spark.operators.relabel import (
         graph_bisection_order,
-        mloggapa_order,
     )
 
     pairs = sorted(
         {(u, v) for u, v in random_graph(180, 1400, seed=23) if u != v}
     )
     df = spark.createDataFrame(pairs, "src long, dst long")
+    cont, m, verts = _continuous(pairs)
     for rg in (True, False):
-        exact = {
-            r["org_id"]: r["new_id"]
-            for r in mloggapa_order(df, recompute_gains=rg).collect()
-        }
+        layout = _mloggapa_literal(cont, m, recompute_gains=rg)
+        exact = {verts[u]: pos for pos, u in enumerate(layout)}
         dist = {
             r["org_id"]: r["new_id"]
             for r in graph_bisection_order(df, recompute_gains=rg).collect()
@@ -599,7 +624,6 @@ def test_graph_bisection_order_oversize_median_cut(spark):
     must return to exact driver parity."""
     from graphsetintersection_spark.operators.relabel import (
         graph_bisection_order,
-        mloggapa_order,
     )
 
     pairs = sorted(
@@ -627,7 +651,9 @@ def test_graph_bisection_order_oversize_median_cut(spark):
         r["org_id"]: r["new_id"]
         for r in graph_bisection_order(df, max_task_vertices=10**6).collect()
     }
-    exact = {r["org_id"]: r["new_id"] for r in mloggapa_order(df).collect()}
+    cont, m, _ = _continuous(pairs)
+    layout = _mloggapa_literal(cont, m, recompute_gains=True)
+    exact = {verts[u]: pos for pos, u in enumerate(layout)}
     assert full == exact
 
 

@@ -8,8 +8,8 @@ from tests.conftest import SF_TINY
 
 from graphsetintersection_spark.functions.similarity import (
     cosine_topk_bruteforce,
-    cosine_topk_kernel,
     embedding_neardup_pairs,
+    hyperplane_buckets,
     lsh_ann_topk,
 )
 from graphsetintersection_spark.session import read_table
@@ -58,17 +58,6 @@ def test_bruteforce_topk_matches_numpy(spark, vecs, oracle):
             qi = int(np.where(ids == qid)[0][0])
             ci = int(np.where(ids == nid)[0][0])
             assert score == pytest.approx(sims[qi, ci], abs=1e-9)
-
-
-def test_kernel_topk_matches_bruteforce(spark, vecs, oracle):
-    _, _, _, topk = oracle
-    q = vecs.where(F.col("vec_id") < N_QUERIES)
-    got = {}
-    for r in cosine_topk_kernel(q, vecs, k=K).collect():
-        got.setdefault(r["query_id"], []).append((r["rank"], r["neighbor_id"]))
-    for qid, lst in got.items():
-        lst.sort()
-        assert [n for _, n in lst] == topk[qid]
 
 
 def test_lsh_ann_recall(spark, vecs, oracle):
@@ -150,19 +139,32 @@ def test_ivf_train_deterministic(spark, vecs):
     assert np.array_equal(c1, c2)
 
 
-def test_hyperplane_method_validation(spark, vecs):
-    """Unknown method strings raise, and an explicit GEMM-kernel request
-    with keep_vec=True refuses instead of silently downgrading to the
-    per-row expression path (the 22.6s regression shape)."""
-    import pytest
-
-    from graphsetintersection_spark.functions.similarity import (
-        hyperplane_buckets,
+@pytest.mark.parametrize(
+    "kwargs", [{}, {"n_planes": 4, "n_tables": 16}], ids=["defaults", "4x16"]
+)
+def test_hyperplane_buckets_match_numpy(spark, vecs, kwargs):
+    """Every (vector, table) bucket is Σ_i 2^i·[v·h_{t,i} > 0] with the
+    planes h drawn from default_rng(seed).standard_normal((n_tables,
+    n_planes, dim)) — at the defaults (12 planes × 1 table, seed 9) and
+    4 × 16."""
+    n_planes = kwargs.get("n_planes", 12)
+    n_tables = kwargs.get("n_tables", 1)
+    rows = vecs.collect()
+    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    planes = np.random.default_rng(9).standard_normal(
+        (n_tables, n_planes, mat.shape[1])
     )
-
-    with pytest.raises(ValueError, match="unknown hyperplane method"):
-        hyperplane_buckets(vecs, method="kernal")
-    with pytest.raises(ValueError, match="ids-only"):
-        hyperplane_buckets(vecs, method="kernel", keep_vec=True)
-    # auto + keep_vec still resolves (to expr) without error
-    hyperplane_buckets(vecs, n_planes=4, keep_vec=True).limit(1).collect()
+    bits = np.einsum("vd,tpd->vtp", mat, planes) > 0
+    expect = {
+        (int(r["vec_id"]), t): int(
+            sum(1 << i for i in range(n_planes) if bits[vi, t, i])
+        )
+        for vi, r in enumerate(rows)
+        for t in range(n_tables)
+    }
+    got = {
+        (r["vec_id"], r["table"]): r["bucket"]
+        for r in hyperplane_buckets(vecs, **kwargs).collect()
+    }
+    assert got == expect
+    assert len(set(expect.values())) > 1

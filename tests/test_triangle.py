@@ -2,8 +2,9 @@
 
 Mirrors the reference's cross-implementation parity testing — Org vs BP vs
 Roaring triangle counters selected at src/tc.cpp:14-16 must print equal
-triangle_num; here the join / array_intersect / Arrow-kernel forms must all
-equal the brute-force count.
+triangle_num; here the relational join oracle (``tests/oracles.py``) and
+the library's array_intersect / Arrow-kernel forms must all equal the
+brute-force count.
 
 ``triangle_count_kernel`` takes no options, so the tests reach each of its
 routes by patching the module constants its planner reads (``ROUTES``)."""
@@ -13,11 +14,11 @@ from contextlib import contextmanager
 import pytest
 
 from tests.conftest import brute_triangles, random_graph
+from tests.oracles import triangle_count_join
 
 from graphsetintersection_spark.operators import triangle as T
 from graphsetintersection_spark.operators.triangle import (
     triangle_count_arrays,
-    triangle_count_join,
     triangle_count_kernel,
     triangles_per_edge,
 )
