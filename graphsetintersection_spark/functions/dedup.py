@@ -16,8 +16,9 @@ Exact and near-duplicate detection over a ``(doc_id, text)`` table:
   4-way block rotation (Charikar / Manku-Jain-Sarma scheme).
 - ``jaccard_for_pairs`` — THE exact verify of every candidate pipeline
   (MinHash, SimHash, the streaming index's batch twin): per candidate
-  pair, |A∩B| of the two documents' sorted shingle-hash arrays
-  (``hashed_shingles``) in one batch intersection pass.
+  pair, |A∩B| of the two documents' sorted shingle-hash arrays (one
+  ``_doc_shingle_hashes`` array per candidate document) in one batch
+  intersection pass.
 
 Scale notes: every op is one or two hash shuffles; the shingle inverted
 index join is skew-prone on stop-shingles — ``ngram_jaccard_pairs`` filters
@@ -142,7 +143,17 @@ def _doc_shingle_hashes(t, n: int):
     shingle arrays and the fused minhash kernel roll. The array is sorted
     as UNSIGNED values (``np.unique`` over uint64, then an int64 view).
     Runs on executors: cloudpickle serializes the closure's reference,
-    workers re-import this module."""
+    workers re-import this module.
+
+    Why not the string ``shingles`` op: Spark's ``substr`` addresses UTF8
+    strings by CODE POINT, scanning from the start of the string on every
+    call — the shingle ``transform`` is therefore O(len²) per document
+    (measured: a 2 MB page effectively never finishes). This kernel rolls
+    a polynomial hash over the UTF-8 bytes with numpy stride tricks —
+    O(len·n), vectorized over each document's bytes. Jaccard over these
+    sets equals string-shingle Jaccard up to 64-bit hash collisions; byte
+    n-grams coincide with char n-grams on ASCII text (multi-byte chars
+    just shift window boundaries)."""
     import numpy as np
 
     if t is None:
@@ -209,29 +220,6 @@ def _doc_arrays(src: DataFrame, n: int, col: str, per_doc) -> DataFrame:
             )
 
     return src.mapInArrow(gen, f"doc_id long, {col} array<long>")
-
-
-def hashed_shingles(
-    docs: DataFrame,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, h: array<long>) — each document's sorted unique hashed
-    character n-gram shingles, one row per document, in ONE LINEAR
-    vectorized Arrow pass. Documents with no n-gram (null, or shorter
-    than ``n`` bytes) get no row.
-
-    Why not the string ``shingles`` op: Spark's ``substr`` addresses UTF8
-    strings by CODE POINT, scanning from the start of the string on every
-    call — the shingle ``transform`` is therefore O(len²) per document
-    (measured: a 2 MB page effectively never finishes). This kernel rolls
-    a polynomial hash over the UTF-8 bytes with numpy stride tricks —
-    O(len·n), vectorized over each document's bytes. Jaccard over these
-    sets equals string-shingle Jaccard up to 64-bit hash collisions; byte
-    n-grams coincide with char n-grams on ASCII text (multi-byte chars
-    just shift window boundaries). ``h`` is sorted as UNSIGNED values."""
-    return _doc_arrays(_doc_texts(docs, id_col, text_col), n, "h", lambda h: h)
 
 
 def ngram_jaccard_pairs(
@@ -569,8 +557,9 @@ def jaccard_for_pairs(
     over each pair's sorted, deduplicated shingle-hash sets.
 
     1. the candidate documents are collected from the pairs;
-    2. ``hashed_shingles`` builds one row per candidate document holding
-       its sorted unique shingle hashes, in one Arrow pass;
+    2. one Arrow pass (``_doc_arrays``) builds one row per candidate
+       document holding its sorted unique shingle hashes
+       (``_doc_shingle_hashes``);
     3. each pair joins both documents' arrays;
     4. one Arrow pass counts |A∩B| per row with the engine's batch
        intersection kernel; Jaccard = i / (|A|+|B|-i).

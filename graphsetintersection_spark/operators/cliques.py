@@ -284,213 +284,219 @@ def maximal_cliques(
     (pivot-free) Bron–Kerbosch variant (src/org_maximal_clique.cpp:50-73)
     in both kernels; output is identical, recursion larger.
 
-    The result is materialized eagerly and the symmetrized edge cache is
-    released before returning (no caller-lifetime persist leak)."""
+    The result is materialized eagerly, and the symmetrized edge and
+    triangle caches are released on every exit path (no caller-lifetime
+    persist leak)."""
     und = symmetrize(canonicalize(edges)).persist()
+    tri = None
+    # try/finally: a failing degree_order, triangle build or bk_group task
+    # must not leave the edge or triangle caches behind
+    try:
+        if order is None:
+            from graphsetintersection_spark.operators.relabel import degree_order
 
-    if order is None:
-        from graphsetintersection_spark.operators.relabel import degree_order
+            order = degree_order(und, descending=False).select(
+                F.col("org_id").alias("v"), F.col("new_id").alias("rank")
+            )
 
-        order = degree_order(und, descending=False).select(
-            F.col("org_id").alias("v"), F.col("new_id").alias("rank")
+        deg = und.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("deg"))
+        vinfo = order.join(deg, "v")  # (v, rank, deg); inner: order defines scope
+        small_v = vinfo.where(F.col("deg") <= max_group_deg).select("v", "rank")
+        hub_v = vinfo.where(F.col("deg") > max_group_deg).select("v", "rank")
+
+        nil = F.lit(None).cast("long")
+        vu = und.select(F.col("src").alias("v"), F.col("dst").alias("u"))
+
+        # ---- the rank-oriented triangle list, computed ONCE --------------------
+        # Every induced-edge row below derives from it. A naive per-group
+        # neighborhood expansion (group rows ⨝ full adjacency, then filter)
+        # materializes Θ(Σ_u deg(u)²) intermediate rows — a 467k-degree Zipf
+        # hub alone yields ~10^11 rows (measured: it filled the sandbox disk).
+        # The triangle list instead uses the TC dataflow (rank-oriented
+        # adjacency join + array_intersect + explode — operators.triangle),
+        # whose intermediates are the adjacency lists themselves, and whose
+        # output is exactly one row per triangle.
+        er = (
+            und.join(order.select(F.col("v").alias("src"),
+                                  F.col("rank").alias("_rs")), "src")
+            .join(order.select(F.col("v").alias("dst"),
+                               F.col("rank").alias("_rd")), "dst")
+            .where(F.col("_rs") < F.col("_rd"))
+            .select(F.col("src").alias("x"), F.col("dst").alias("y"))
+        )
+        adj_r = er.groupBy(F.col("x").alias("av")).agg(
+            F.collect_list("y").alias("nbrs")
+        )
+        tri = (
+            er.join(adj_r.select(F.col("av").alias("x"),
+                                 F.col("nbrs").alias("na")), "x")
+            .join(adj_r.select(F.col("av").alias("y"),
+                               F.col("nbrs").alias("nb")), "y")
+            .select("x", "y", F.explode(F.array_intersect("na", "nb")).alias("w"))
+            .persist()
+        )
+        tri.count()
+        # tri rows (x, y, w) are rank-ascending: x, y the two lowest-rank
+        # vertices of the triangle, w ∈ N⁺(x) ∩ N⁺(y)
+
+        # ---- per-vertex groups (small v): key (v, -1) --------------------------
+        base_s = small_v.select(
+            "v", F.lit(-1).alias("u2"), nil.alias("a"), nil.alias("b"),
+            nil.alias("r"), F.col("rank").alias("br"),
+        )
+        members_s = (
+            vu.join(small_v.select("v"), "v", "left_semi")
+            .join(order.select(F.col("v").alias("u"),
+                               F.col("rank").alias("u_rank")), "u")
+            .select(
+                "v", F.lit(-1).alias("u2"), F.col("u").alias("a"), nil.alias("b"),
+                F.col("u_rank").alias("r"), nil.alias("br"),
+            )
+        )
+        # induced edges of group v = the other two vertices of each triangle
+        # through v (each member-member edge IS a triangle with v)
+        tri3 = (
+            tri.select(F.col("x").alias("v"), F.col("y").alias("a"),
+                       F.col("w").alias("b"))
+            .unionByName(tri.select(F.col("y").alias("v"), F.col("x").alias("a"),
+                                    F.col("w").alias("b")))
+            .unionByName(tri.select(F.col("w").alias("v"), F.col("x").alias("a"),
+                                    F.col("y").alias("b")))
+        )
+        induced_s = tri3.join(small_v.select("v"), "v", "left_semi").select(
+            "v", F.lit(-1).alias("u2"), "a", "b", nil.alias("r"), nil.alias("br")
         )
 
-    deg = und.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("deg"))
-    vinfo = order.join(deg, "v")  # (v, rank, deg); inner: order defines scope
-    small_v = vinfo.where(F.col("deg") <= max_group_deg).select("v", "rank")
-    hub_v = vinfo.where(F.col("deg") > max_group_deg).select("v", "rank")
-
-    nil = F.lit(None).cast("long")
-    vu = und.select(F.col("src").alias("v"), F.col("dst").alias("u"))
-
-    # ---- the rank-oriented triangle list, computed ONCE --------------------
-    # Every induced-edge row below derives from it. A naive per-group
-    # neighborhood expansion (group rows ⨝ full adjacency, then filter)
-    # materializes Θ(Σ_u deg(u)²) intermediate rows — a 467k-degree Zipf
-    # hub alone yields ~10^11 rows (measured: it filled the sandbox disk).
-    # The triangle list instead uses the TC dataflow (rank-oriented
-    # adjacency join + array_intersect + explode — operators.triangle),
-    # whose intermediates are the adjacency lists themselves, and whose
-    # output is exactly one row per triangle.
-    er = (
-        und.join(order.select(F.col("v").alias("src"),
-                              F.col("rank").alias("_rs")), "src")
-        .join(order.select(F.col("v").alias("dst"),
-                           F.col("rank").alias("_rd")), "dst")
-        .where(F.col("_rs") < F.col("_rd"))
-        .select(F.col("src").alias("x"), F.col("dst").alias("y"))
-    )
-    adj_r = er.groupBy(F.col("x").alias("av")).agg(
-        F.collect_list("y").alias("nbrs")
-    )
-    tri = (
-        er.join(adj_r.select(F.col("av").alias("x"),
-                             F.col("nbrs").alias("na")), "x")
-        .join(adj_r.select(F.col("av").alias("y"),
-                           F.col("nbrs").alias("nb")), "y")
-        .select("x", "y", F.explode(F.array_intersect("na", "nb")).alias("w"))
-        .persist()
-    )
-    tri.count()
-    # tri rows (x, y, w) are rank-ascending: x, y the two lowest-rank
-    # vertices of the triangle, w ∈ N⁺(x) ∩ N⁺(y)
-
-    # ---- per-vertex groups (small v): key (v, -1) --------------------------
-    base_s = small_v.select(
-        "v", F.lit(-1).alias("u2"), nil.alias("a"), nil.alias("b"),
-        nil.alias("r"), F.col("rank").alias("br"),
-    )
-    members_s = (
-        vu.join(small_v.select("v"), "v", "left_semi")
-        .join(order.select(F.col("v").alias("u"),
-                           F.col("rank").alias("u_rank")), "u")
-        .select(
-            "v", F.lit(-1).alias("u2"), F.col("u").alias("a"), nil.alias("b"),
-            F.col("u_rank").alias("r"), nil.alias("br"),
+        # ---- pair groups (hub v, u ∈ P(v)): key (v, u) -------------------------
+        hp = (
+            vu.join(hub_v.select("v", F.col("rank").alias("v_rank")), "v")
+            .join(order.select(F.col("v").alias("u"),
+                               F.col("rank").alias("u_rank")), "u")
+            .where(F.col("u_rank") > F.col("v_rank"))
+            .select("v", "u", "u_rank")
         )
-    )
-    # induced edges of group v = the other two vertices of each triangle
-    # through v (each member-member edge IS a triangle with v)
-    tri3 = (
-        tri.select(F.col("x").alias("v"), F.col("y").alias("a"),
-                   F.col("w").alias("b"))
-        .unionByName(tri.select(F.col("y").alias("v"), F.col("x").alias("a"),
-                                F.col("w").alias("b")))
-        .unionByName(tri.select(F.col("w").alias("v"), F.col("x").alias("a"),
-                                F.col("y").alias("b")))
-    )
-    induced_s = tri3.join(small_v.select("v"), "v", "left_semi").select(
-        "v", F.lit(-1).alias("u2"), "a", "b", nil.alias("r"), nil.alias("br")
-    )
-
-    # ---- pair groups (hub v, u ∈ P(v)): key (v, u) -------------------------
-    hp = (
-        vu.join(hub_v.select("v", F.col("rank").alias("v_rank")), "v")
-        .join(order.select(F.col("v").alias("u"), F.col("rank").alias("u_rank")), "u")
-        .where(F.col("u_rank") > F.col("v_rank"))
-        .select("v", "u", "u_rank")
-    )
-    base_p = hp.select(
-        "v", F.col("u").alias("u2"), nil.alias("a"), nil.alias("b"),
-        nil.alias("r"), F.col("u_rank").alias("br"),
-    )
-    # per-edge triangle view: (p1, p2) a rank-oriented edge, ap the apex
-    tri_pairs = (
-        tri.select(F.col("x").alias("p1"), F.col("y").alias("p2"),
-                   F.col("w").alias("ap"))
-        .unionByName(tri.select(F.col("x").alias("p1"), F.col("w").alias("p2"),
-                                F.col("y").alias("ap")))
-        .unionByName(tri.select(F.col("y").alias("p1"), F.col("w").alias("p2"),
-                                F.col("x").alias("ap")))
-    )
-    # members of pair group (v,u) = common neighbors = apexes of edge (v,u)
-    members_p = (
-        tri_pairs.withColumnRenamed("p1", "v").withColumnRenamed("p2", "u")
-        .join(hp.select("v", "u"), ["v", "u"], "left_semi")
-        .join(order.select(F.col("v").alias("ap"),
-                           F.col("rank").alias("ap_rank")), "ap")
-        .select(
-            "v", F.col("u").alias("u2"), F.col("ap").alias("a"),
-            nil.alias("b"), F.col("ap_rank").alias("r"), nil.alias("br"),
+        base_p = hp.select(
+            "v", F.col("u").alias("u2"), nil.alias("a"), nil.alias("b"),
+            nil.alias("r"), F.col("u_rank").alias("br"),
         )
-    )
-    # induced edge (w1,w2) of pair group (v,u) ⟺ both {v,w1,w2} and
-    # {u,w1,w2} are triangles — a self-join of the per-edge triangle view
-    # restricted to hub/u-side apexes FIRST (both restrictions are small
-    # sets, so the per-edge apex product cannot blow up)
-    a_side = tri_pairs.join(
-        hub_v.select(F.col("v").alias("ap")), "ap", "left_semi"
-    ).select("p1", "p2", F.col("ap").alias("v"))
-    b_side = tri_pairs.join(
-        hp.select(F.col("u").alias("ap")).distinct(), "ap", "left_semi"
-    ).select("p1", "p2", F.col("ap").alias("u"))
-    induced_p = (
-        a_side.join(b_side, ["p1", "p2"])
-        .where(F.col("v") != F.col("u"))
-        .join(hp.select("v", "u"), ["v", "u"], "left_semi")
-        .select(
-            "v", F.col("u").alias("u2"), F.col("p1").alias("a"),
-            F.col("p2").alias("b"), nil.alias("r"), nil.alias("br"),
+        # per-edge triangle view: (p1, p2) a rank-oriented edge, ap the apex
+        tri_pairs = (
+            tri.select(F.col("x").alias("p1"), F.col("y").alias("p2"),
+                       F.col("w").alias("ap"))
+            .unionByName(tri.select(F.col("x").alias("p1"), F.col("w").alias("p2"),
+                                    F.col("y").alias("ap")))
+            .unionByName(tri.select(F.col("y").alias("p1"), F.col("w").alias("p2"),
+                                    F.col("x").alias("ap")))
         )
-    )
+        # members of pair group (v,u) = common neighbors = apexes of edge (v,u)
+        members_p = (
+            tri_pairs.withColumnRenamed("p1", "v").withColumnRenamed("p2", "u")
+            .join(hp.select("v", "u"), ["v", "u"], "left_semi")
+            .join(order.select(F.col("v").alias("ap"),
+                               F.col("rank").alias("ap_rank")), "ap")
+            .select(
+                "v", F.col("u").alias("u2"), F.col("ap").alias("a"),
+                nil.alias("b"), F.col("ap_rank").alias("r"), nil.alias("br"),
+            )
+        )
+        # induced edge (w1,w2) of pair group (v,u) ⟺ both {v,w1,w2} and
+        # {u,w1,w2} are triangles — a self-join of the per-edge triangle view
+        # restricted to hub/u-side apexes FIRST (both restrictions are small
+        # sets, so the per-edge apex product cannot blow up)
+        a_side = tri_pairs.join(
+            hub_v.select(F.col("v").alias("ap")), "ap", "left_semi"
+        ).select("p1", "p2", F.col("ap").alias("v"))
+        b_side = tri_pairs.join(
+            hp.select(F.col("u").alias("ap")).distinct(), "ap", "left_semi"
+        ).select("p1", "p2", F.col("ap").alias("u"))
+        induced_p = (
+            a_side.join(b_side, ["p1", "p2"])
+            .where(F.col("v") != F.col("u"))
+            .join(hp.select("v", "u"), ["v", "u"], "left_semi")
+            .select(
+                "v", F.col("u").alias("u2"), F.col("p1").alias("a"),
+                F.col("p2").alias("b"), nil.alias("r"), nil.alias("br"),
+            )
+        )
 
-    grouped = base_s.unionByName(members_s).unionByName(induced_s).unionByName(
-        base_p
-    ).unionByName(members_p).unionByName(induced_p)
+        grouped = base_s.unionByName(members_s).unionByName(induced_s).unionByName(
+            base_p
+        ).unionByName(members_p).unionByName(induced_p)
 
-    def bk_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        v, u2 = int(key[0]), int(key[1])
-        base = [v] if u2 < 0 else [v, u2]
-        br = int(pdf.loc[pdf["br"].notna(), "br"].iloc[0])
+        def bk_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            v, u2 = int(key[0]), int(key[1])
+            base = [v] if u2 < 0 else [v, u2]
+            br = int(pdf.loc[pdf["br"].notna(), "br"].iloc[0])
 
-        mem = pdf[pdf["r"].notna()]
-        ids = mem["a"].to_numpy(dtype=np.int64)
-        rks = mem["r"].to_numpy(dtype=np.int64)
-        o = np.argsort(ids)
-        ids, rks = ids[o], rks[o]
-        n = len(ids)
+            mem = pdf[pdf["r"].notna()]
+            ids = mem["a"].to_numpy(dtype=np.int64)
+            rks = mem["r"].to_numpy(dtype=np.int64)
+            o = np.argsort(ids)
+            ids, rks = ids[o], rks[o]
+            n = len(ids)
 
-        out: list[list[int]] = []
-        if n == 0:
-            # pair group with empty common neighborhood: base is maximal
-            out.append(sorted(base))
-        else:
-            ev = pdf[pdf["b"].notna()]
-            ea = ev["a"].to_numpy(dtype=np.int64)
-            eb = ev["b"].to_numpy(dtype=np.int64)
-            # membership guard: drop edge rows whose endpoints are not
-            # members (a caller-supplied partial order must not KeyError)
-            ia = np.searchsorted(ids, ea)
-            ib = np.searchsorted(ids, eb)
-            ok = (ia < n) & (ib < n)
-            ia, ib = ia[ok], ib[ok]
-            ok2 = (ids[ia] == ea[ok]) & (ids[ib] == eb[ok])
-            ia, ib = ia[ok2], ib[ok2]
-
-            p_idx = np.nonzero(rks > br)[0].astype(np.int64)
-            x_idx = np.nonzero(rks < br)[0].astype(np.int64)
-            cliques: list[list[int]] = []
-            if n <= _BITSET_MAX_MEMBERS:
-                words = (n + 63) // 64
-                adj = np.zeros((n, words), dtype=np.uint64)
-                bits_b = np.uint64(1) << (ib.astype(np.uint64) & np.uint64(63))
-                bits_a = np.uint64(1) << (ia.astype(np.uint64) & np.uint64(63))
-                np.bitwise_or.at(adj, (ia, ib >> 6), bits_b)
-                np.bitwise_or.at(adj, (ib, ia >> 6), bits_a)
-                _bk_bitset(
-                    adj,
-                    _mask_from_idx(p_idx, words),
-                    _mask_from_idx(x_idx, words),
-                    [],
-                    cliques,
-                    use_pivot,
-                )
+            out: list[list[int]] = []
+            if n == 0:
+                # pair group with empty common neighborhood: base is maximal
+                out.append(sorted(base))
             else:
-                # symmetrize explicitly: induced rows carry each edge once
-                ia2 = np.concatenate([ia, ib])
-                ib2 = np.concatenate([ib, ia])
-                order_e = np.argsort(ia2, kind="stable")
-                ia_s, ib_s = ia2[order_e], ib2[order_e]
-                starts = np.searchsorted(ia_s, np.arange(n + 1))
-                adj_list = [
-                    np.unique(ib_s[starts[k]:starts[k + 1]]) for k in range(n)
-                ]
-                _bk_arrays(adj_list, p_idx, x_idx, [], cliques, use_pivot)
-            for c in cliques:
-                out.append(sorted(base + [int(ids[k]) for k in c]))
-        rows = [c for c in out if len(c) >= min_size]
-        return pd.DataFrame({"clique": rows}) if rows else pd.DataFrame(
-            {"clique": pd.Series([], dtype=object)}
-        )
+                ev = pdf[pdf["b"].notna()]
+                ea = ev["a"].to_numpy(dtype=np.int64)
+                eb = ev["b"].to_numpy(dtype=np.int64)
+                # membership guard: drop edge rows whose endpoints are not
+                # members (a caller-supplied partial order must not KeyError)
+                ia = np.searchsorted(ids, ea)
+                ib = np.searchsorted(ids, eb)
+                ok = (ia < n) & (ib < n)
+                ia, ib = ia[ok], ib[ok]
+                ok2 = (ids[ia] == ea[ok]) & (ids[ib] == eb[ok])
+                ia, ib = ia[ok2], ib[ok2]
 
-    result = (
-        grouped.groupBy("v", "u2")
-        .applyInPandas(bk_group, "clique array<long>")
-        .localCheckpoint(eager=True)
-    )
-    tri.unpersist()
-    und.unpersist()
-    return result
+                p_idx = np.nonzero(rks > br)[0].astype(np.int64)
+                x_idx = np.nonzero(rks < br)[0].astype(np.int64)
+                cliques: list[list[int]] = []
+                if n <= _BITSET_MAX_MEMBERS:
+                    words = (n + 63) // 64
+                    adj = np.zeros((n, words), dtype=np.uint64)
+                    bits_b = np.uint64(1) << (ib.astype(np.uint64) & np.uint64(63))
+                    bits_a = np.uint64(1) << (ia.astype(np.uint64) & np.uint64(63))
+                    np.bitwise_or.at(adj, (ia, ib >> 6), bits_b)
+                    np.bitwise_or.at(adj, (ib, ia >> 6), bits_a)
+                    _bk_bitset(
+                        adj,
+                        _mask_from_idx(p_idx, words),
+                        _mask_from_idx(x_idx, words),
+                        [],
+                        cliques,
+                        use_pivot,
+                    )
+                else:
+                    # symmetrize explicitly: induced rows carry each edge once
+                    ia2 = np.concatenate([ia, ib])
+                    ib2 = np.concatenate([ib, ia])
+                    order_e = np.argsort(ia2, kind="stable")
+                    ia_s, ib_s = ia2[order_e], ib2[order_e]
+                    starts = np.searchsorted(ia_s, np.arange(n + 1))
+                    adj_list = [
+                        np.unique(ib_s[starts[k]:starts[k + 1]]) for k in range(n)
+                    ]
+                    _bk_arrays(adj_list, p_idx, x_idx, [], cliques, use_pivot)
+                for c in cliques:
+                    out.append(sorted(base + [int(ids[k]) for k in c]))
+            rows = [c for c in out if len(c) >= min_size]
+            return pd.DataFrame({"clique": rows}) if rows else pd.DataFrame(
+                {"clique": pd.Series([], dtype=object)}
+            )
+
+        return (
+            grouped.groupBy("v", "u2")
+            .applyInPandas(bk_group, "clique array<long>")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        if tri is not None:
+            tri.unpersist()
+        und.unpersist()
 
 
 def maximal_clique_count(edges: DataFrame, order: DataFrame | None = None) -> int:

@@ -22,6 +22,13 @@ Also here:
   salting decisions.
 - ``continuous_ids`` — arbitrary → continuous 0-based ids
   (``python/trans_graph.py:3-22``, required by README.md:44).
+
+The sequential orderings (``dfs_order``, ``bfsr_order``, GRO's
+``greedy_mheap_order``, ``hybrid_bfsdeg_order_exact``) walk one sorted CSR
+on the driver, as the reference does (``src/util.hpp:46-51``):
+``adjacency.driver_csr`` checks the vertex cap, collects the adjacency
+through Arrow and maps ids to positions, and ``_order_frame`` returns the
+permutation as one Arrow table.
 """
 
 from __future__ import annotations
@@ -30,6 +37,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.kernels import PACK_SHIFT, PACK_WIDTH
+from graphsetintersection_spark.operators.adjacency import driver_csr
 from graphsetintersection_spark.operators.edges import canonicalize, degrees, symmetrize
 from graphsetintersection_spark.operators.iterative import BROADCAST_STATE_MAX_VERTICES
 from graphsetintersection_spark.plans.assign import global_order_stats
@@ -392,6 +400,18 @@ def hybrid_bfsdeg_order(edges: DataFrame, max_levels: int = 64) -> DataFrame:
     return out.select(F.col("v").alias("org_id"), "new_id")
 
 
+def _order_frame(spark, ids, new_id) -> DataFrame:
+    """The (org_id, new_id) frame of a driver-side permutation, built from
+    one Arrow table of the two numpy columns — no per-row Python tuples."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({"org_id": pa.array(ids, pa.int64()),
+                  "new_id": pa.array(new_id, pa.int64())}),
+        "org_id long, new_id long",
+    )
+
+
 def hybrid_bfsdeg_order_exact(
     edges: DataFrame, max_driver_vertices: int = 2_000_000
 ) -> DataFrame:
@@ -417,37 +437,13 @@ def hybrid_bfsdeg_order_exact(
     is the distributed level-synchronous ordering for graphs past the
     cap, with the tie-break deviation above.
     """
-    import numpy as np
-
-    spark = edges.sparkSession
-    e = canonicalize(edges)
-    _check_driver_cap(e, max_driver_vertices, "hybrid_bfsdeg exact")
-    rows = (
-        e.groupBy("src").agg(
-            F.sort_array(F.collect_list("dst")).alias("nbrs"),
-        ).collect()
-    )
-    in_rows = e.groupBy("dst").agg(F.count("*").alias("in_deg")).collect()
-    vs = {int(r["src"]) for r in rows}
-    for r in rows:
-        vs.update(int(u) for u in r["nbrs"])
-    if not vs:
-        return spark.createDataFrame([], "org_id long, new_id long")
-    ids = np.array(sorted(vs), dtype=np.int64)
-    idx_of = {int(v): i for i, v in enumerate(ids)}
-    n = len(ids)
-    nbrs: list = [np.empty(0, dtype=np.int64)] * n
-    deg = np.zeros(n, dtype=np.int64)  # out_deg + in_deg, directed
-    for r in rows:
-        u = idx_of[int(r["src"])]
-        nbrs[u] = np.array(
-            [idx_of[int(w)] for w in r["nbrs"]], dtype=np.int64
-        )
-        deg[u] += len(nbrs[u])
-    for r in in_rows:
-        deg[idx_of[int(r["dst"])]] += int(r["in_deg"])
     from collections import deque
 
+    import numpy as np
+
+    ids, ptr, nbr = driver_csr(edges, max_driver_vertices, "hybrid_bfsdeg exact")
+    n = len(ids)
+    deg = np.diff(ptr) + np.bincount(nbr, minlength=n)  # out + in, directed
     bfs_idx = np.full(n, -1, dtype=np.int64)
     cur = 0
     q: deque = deque()
@@ -459,7 +455,7 @@ def hybrid_bfsdeg_order_exact(
         q.append(root)
         while q:
             u = q.popleft()
-            for w in nbrs[u]:
+            for w in nbr[ptr[u]:ptr[u + 1]]:
                 if bfs_idx[w] == -1:
                     bfs_idx[w] = cur
                     cur += 1
@@ -468,32 +464,12 @@ def hybrid_bfsdeg_order_exact(
     perm = np.lexsort((bfs_idx, -deg))
     new_id = np.empty(n, dtype=np.int64)
     new_id[perm] = np.arange(n, dtype=np.int64)
-    out = [(int(ids[i]), int(new_id[i])) for i in range(n)]
-    return spark.createDataFrame(out, "org_id long, new_id long")
+    return _order_frame(edges.sparkSession, ids, new_id)
 
 
 def leaf_node_count(edges: DataFrame) -> int:
     """Count degree-1 vertices (src/porder.cpp:82-91)."""
     return degrees(edges).where(F.col("deg") == 1).count()
-
-
-def _check_driver_cap(und_or_e: DataFrame, cap: int, opname: str) -> None:
-    """Raise BEFORE collecting the grouped adjacency when the vertex count
-    exceeds the driver cap — one cheap distinct-count aggregate, so the
-    cap can actually prevent the driver OOM it exists for (ADVICE r3 #2;
-    the post-collect check it replaces fired only after the damage)."""
-    n = (
-        und_or_e.select(F.col("src").alias("v"))
-        .union(und_or_e.select(F.col("dst").alias("v")))
-        .distinct()
-        .count()
-    )
-    if n > cap:
-        raise ValueError(
-            f"graph too large for driver-side {opname} ({n:,} vertices > "
-            f"cap {cap:,}) — use a distributed ordering (degree/bfs/"
-            f"slashburn) instead"
-        )
 
 
 def dfs_order(
@@ -511,26 +487,10 @@ def dfs_order(
     ordering (a different order, not a twin)."""
     import numpy as np
 
-    spark = edges.sparkSession
-    e = canonicalize(edges)
-    _check_driver_cap(e, max_driver_vertices, "dfs order")
-    rows = (
-        e.groupBy("src").agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-        .collect()
-    )
-    vs = {int(r["src"]) for r in rows}
-    for r in rows:
-        vs.update(int(u) for u in r["nbrs"])
-    ids = np.array(sorted(vs), dtype=np.int64)
-    idx_of = {int(v): i for i, v in enumerate(ids)}
+    ids, ptr, nbr = driver_csr(edges, max_driver_vertices, "dfs order")
     n = len(ids)
-    nbrs: list = [np.empty(0, dtype=np.int64)] * n
-    for r in rows:
-        nbrs[idx_of[int(r["src"])]] = np.array(
-            [idx_of[int(u)] for u in r["nbrs"]], dtype=np.int64
-        )
     new_id = np.full(n, -1, dtype=np.int64)
-    ptr = np.zeros(n, dtype=np.int64)  # per-vertex resume position
+    nxt = ptr[:-1].copy()  # per-vertex resume position in nbr
     cur = 0
     for root in range(n):
         if new_id[root] != -1:
@@ -541,9 +501,9 @@ def dfs_order(
         while stack:
             u = stack[-1]
             advanced = False
-            while ptr[u] < len(nbrs[u]):
-                v = int(nbrs[u][ptr[u]])
-                ptr[u] += 1
+            while nxt[u] < ptr[u + 1]:
+                v = int(nbr[nxt[u]])
+                nxt[u] += 1
                 if new_id[v] == -1:
                     new_id[v] = cur
                     cur += 1
@@ -552,8 +512,7 @@ def dfs_order(
                     break
             if not advanced:
                 stack.pop()
-    out = [(int(ids[i]), int(new_id[i])) for i in range(n)]
-    return spark.createDataFrame(out, "org_id long, new_id long")
+    return _order_frame(edges.sparkSession, ids, new_id)
 
 
 def bfsr_order(
@@ -576,22 +535,10 @@ def bfsr_order(
     in-place swap residue — same bisection scheme, reproducible output."""
     import numpy as np
 
-    spark = edges.sparkSession
-    und = symmetrize(canonicalize(edges))
-    _check_driver_cap(und, max_driver_vertices, "bfsr order")
-    rows = (
-        und.groupBy("src").agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-        .collect()
+    ids, ptr, nbr = driver_csr(
+        edges, max_driver_vertices, "bfsr order", undirected=True
     )
-    ids = np.array(sorted(r["src"] for r in rows), dtype=np.int64)
-    idx_of = {int(v): i for i, v in enumerate(ids)}
     n = len(ids)
-    nbrs: list = [np.empty(0, dtype=np.int64)] * n
-    for r in rows:
-        nbrs[idx_of[int(r["src"])]] = np.array(
-            [idx_of[int(u)] for u in r["nbrs"]], dtype=np.int64
-        )
-
     in_part = np.full(n, -1, dtype=np.int64)
     part_label = [0]
 
@@ -612,7 +559,7 @@ def bfsr_order(
             while qi < len(queue) and len(out) < limit:
                 u = queue[qi]
                 qi += 1
-                for v in nbrs[u]:
+                for v in nbr[ptr[u]:ptr[u + 1]]:
                     if in_part[v] == label:
                         in_part[v] = -label
                         queue.append(int(v))
@@ -642,9 +589,9 @@ def bfsr_order(
         right = [v for v in part if v not in left_set]
         return bisect(left) + bisect(right)
 
-    layout = bisect(list(range(n)))
-    out = [(int(ids[v]), pos) for pos, v in enumerate(layout)]
-    return spark.createDataFrame(out, "org_id long, new_id long")
+    new_id = np.empty(n, dtype=np.int64)
+    new_id[bisect(list(range(n)))] = np.arange(n, dtype=np.int64)
+    return _order_frame(edges.sparkSession, ids, new_id)
 
 
 def _bisect_member_pairs(members, indptr, nbr):
@@ -974,25 +921,15 @@ def greedy_mheap_order(
 
     import numpy as np
 
-    spark = edges.sparkSession
-    und = symmetrize(canonicalize(edges))
-    _check_driver_cap(und, max_driver_vertices, "greedy (GRO) order")
-    rows = (
-        und.groupBy("src").agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-        .collect()
+    ids, ptr, nbr = driver_csr(
+        edges, max_driver_vertices, "greedy (GRO) order", undirected=True
     )
-    ids = np.array(sorted(r["src"] for r in rows), dtype=np.int64)
-    idx_of = {int(v): i for i, v in enumerate(ids)}
-    nbrs = [None] * len(ids)
-    for r in rows:
-        nbrs[idx_of[int(r["src"])]] = np.array(
-            [idx_of[int(u)] for u in r["nbrs"]], dtype=np.int64
-        )
     n = len(ids)
-    deg = np.array([len(x) for x in nbrs], dtype=np.int64)
+    deg = np.diff(ptr)
 
-    # window-start order: (deg desc, id asc) — reference vertex_temp sort
-    start_order = sorted(range(n), key=lambda i: (-int(deg[i]), int(ids[i])))
+    # window-start order: (deg desc, id asc) — reference vertex_temp sort;
+    # positions ascend with ids, so a stable sort keeps the id tie-break
+    start_order = np.argsort(-deg, kind="stable").tolist()
     start_ptr = 0
     placed = np.zeros(n, dtype=bool)
     score = np.zeros(n, dtype=np.int64)
@@ -1007,7 +944,7 @@ def greedy_mheap_order(
             epoch[w] = cur_epoch
             score[w] = 0
         score[w] += 1
-        heapq.heappush(heap, (-int(score[w]), -int(deg[w]), int(ids[w]), w))
+        heapq.heappush(heap, (-int(score[w]), -int(deg[w]), w))
 
     for pos in range(n):
         if pos % window == 0:
@@ -1019,7 +956,7 @@ def greedy_mheap_order(
         else:
             u = -1
             while heap:
-                s, _, _, cand = heapq.heappop(heap)
+                s, _, cand = heapq.heappop(heap)
                 if placed[cand] or epoch[cand] != cur_epoch or -s != score[cand]:
                     continue  # stale entry
                 u = cand
@@ -1032,16 +969,15 @@ def greedy_mheap_order(
         new_id[u] = pos
         # score every 2-hop co-neighbor of u through each unprocessed
         # neighbor v (one pass per v per window)
-        for v in nbrs[u]:
+        for v in nbr[ptr[u]:ptr[u + 1]]:
             if nbr_mark[v] == cur_epoch:
                 continue
             nbr_mark[v] = cur_epoch
-            for w in nbrs[v]:
+            for w in nbr[ptr[v]:ptr[v + 1]]:
                 if not placed[w]:
                     bump(int(w))
 
-    out = [(int(ids[i]), int(new_id[i])) for i in range(n)]
-    return spark.createDataFrame(out, "org_id long, new_id long")
+    return _order_frame(edges.sparkSession, ids, new_id)
 
 
 def slashburn_order(
@@ -1070,129 +1006,132 @@ def slashburn_order(
     assigned (the reference only discovers components adjacent to the
     slashed hubs); both keep the same ordering family. Final leftovers:
     v-ascending front ids (reference :1096-1098)."""
-    spark = edges.sparkSession
-    und = symmetrize(canonicalize(edges)).persist()
+    import numpy as np
+
     from graphsetintersection_spark.operators.components import (
         connected_components_starcontraction,
     )
     from graphsetintersection_spark.operators.edges import vertices as _verts
 
-    rem_verts = _verts(und).localCheckpoint(eager=True)
-    n = rem_verts.count()
-    cur = und
-    assigned: list[DataFrame] = []
-    front_idx = 0
-    back_idx = n - 1
-    remaining = n
+    spark = edges.sparkSession
+    und = symmetrize(canonicalize(edges)).persist()
+    # try/finally: a round that raises (a component search, an aggregate,
+    # a checkpoint) must not leave the symmetrized edge cache behind
+    try:
+        rem_verts = _verts(und).localCheckpoint(eager=True)
+        n = rem_verts.count()
+        cur = und
+        assigned: list[DataFrame] = []
+        front_idx = 0
+        back_idx = n - 1
+        remaining = n
 
-    for _ in range(max_rounds):
-        k = max(1, min(remaining // k_div, k_cap))
-        if remaining < max(k, 2):
-            break
-        deg_cur = cur.groupBy(F.col("src").alias("v")).agg(
-            F.count("*").alias("deg")
-        )
-        hub_rows = (
-            rem_verts.join(deg_cur, "v", "left")
-            .select("v", F.coalesce("deg", F.lit(0)).alias("deg"))
-            .orderBy(F.col("deg").desc(), F.col("v").asc())
-            .limit(k)
-            .collect()
-        )
-        hubs = [(int(r["v"]), front_idx + i) for i, r in enumerate(hub_rows)]
-        front_idx += len(hubs)
-        hub_df = spark.createDataFrame(hubs, "org_id long, new_id long")
-        assigned.append(hub_df)
-        hub_v = hub_df.select(F.col("org_id").alias("v"))
-
-        rem2 = rem_verts.join(hub_v, "v", "left_anti").localCheckpoint(eager=True)
-        cur2 = (
-            cur.join(hub_v.withColumnRenamed("v", "src"), "src", "left_anti")
-            .join(hub_v.withColumnRenamed("v", "dst"), "dst", "left_anti")
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-        comp = connected_components_starcontraction(cur2).components
-        # vertices isolated by the slash are singleton components
-        comp_all = rem2.join(comp, "v", "left").select(
-            "v", F.coalesce("component", F.col("v")).alias("component")
-        )
-        sizes = comp_all.groupBy("component").agg(F.count("*").alias("csize"))
-        giant = (
-            sizes.orderBy(F.col("csize").desc(), F.col("component").asc())
-            .limit(1)
-            .collect()
-        )
-        if not giant:
-            # mirror the normal round-end cleanup: the superseded
-            # rem_verts snapshot and this round's cur2 checkpoint are
-            # dead on this exit path too (ADVICE r3 #3)
-            old_rem = rem_verts
-            rem_verts = rem2
-            if old_rem is not rem_verts:
-                old_rem.unpersist()
-            if cur is not und:
-                cur.unpersist()
-            cur2.unpersist()
-            remaining = 0
-            break
-        gcomp = int(giant[0]["component"])
-        non_giant = comp_all.where(F.col("component") != gcomp).join(
-            sizes, "component"
-        )
-        ranked = global_order_stats(
-            non_giant,
-            [F.col("csize").desc(), F.col("component").asc(), F.col("v").asc()],
-            rank_col="_r",
-        )
-        ng_count = ranked.count()
-        assigned.append(
-            ranked.select(
-                F.col("v").alias("org_id"),
-                (F.lit(back_idx) - F.col("_r")).cast("long").alias("new_id"),
+        for _ in range(max_rounds):
+            k = max(1, min(remaining // k_div, k_cap))
+            if remaining < max(k, 2):
+                break
+            deg_cur = cur.groupBy(F.col("src").alias("v")).agg(
+                F.count("*").alias("deg")
             )
-        )
-        back_idx -= ng_count
+            hub_rows = (
+                rem_verts.join(deg_cur, "v", "left")
+                .select("v", F.coalesce("deg", F.lit(0)).alias("deg"))
+                .orderBy(F.col("deg").desc(), F.col("v").asc())
+                .limit(k)
+                .collect()
+            )
+            hub_df = _order_frame(
+                spark,
+                np.array([r["v"] for r in hub_rows], dtype=np.int64),
+                front_idx + np.arange(len(hub_rows), dtype=np.int64),
+            )
+            front_idx += len(hub_rows)
+            assigned.append(hub_df)
+            hub_v = hub_df.select(F.col("org_id").alias("v"))
 
-        giant_v = comp_all.where(F.col("component") == gcomp).select("v")
-        old_rem, old_cur = rem_verts, cur
-        rem_verts = giant_v.localCheckpoint(eager=True)
-        cur = (
-            cur2.join(rem_verts.withColumnRenamed("v", "src"), "src", "left_semi")
-            .join(rem_verts.withColumnRenamed("v", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        if old_rem is not rem_verts:
+            rem2 = rem_verts.join(hub_v, "v", "left_anti").localCheckpoint(eager=True)
+            cur2 = (
+                cur.join(hub_v.withColumnRenamed("v", "src"), "src", "left_anti")
+                .join(hub_v.withColumnRenamed("v", "dst"), "dst", "left_anti")
+                .select("src", "dst")
+                .localCheckpoint(eager=True)
+            )
+            comp = connected_components_starcontraction(cur2).components
+            # vertices isolated by the slash are singleton components
+            comp_all = rem2.join(comp, "v", "left").select(
+                "v", F.coalesce("component", F.col("v")).alias("component")
+            )
+            sizes = comp_all.groupBy("component").agg(F.count("*").alias("csize"))
+            giant = (
+                sizes.orderBy(F.col("csize").desc(), F.col("component").asc())
+                .limit(1)
+                .collect()
+            )
+            if not giant:
+                # mirror the normal round-end cleanup: the superseded
+                # rem_verts snapshot and this round's cur2 checkpoint are
+                # dead on this exit path too (ADVICE r3 #3); cur goes below
+                rem_verts.unpersist()
+                rem_verts = rem2
+                cur2.unpersist()
+                remaining = 0
+                break
+            gcomp = int(giant[0]["component"])
+            non_giant = comp_all.where(F.col("component") != gcomp).join(
+                sizes, "component"
+            )
+            ranked = global_order_stats(
+                non_giant,
+                [F.col("csize").desc(), F.col("component").asc(), F.col("v").asc()],
+                rank_col="_r",
+            )
+            ng_count = ranked.count()
+            assigned.append(
+                ranked.select(
+                    F.col("v").alias("org_id"),
+                    (F.lit(back_idx) - F.col("_r")).cast("long").alias("new_id"),
+                )
+            )
+            back_idx -= ng_count
+
+            giant_v = comp_all.where(F.col("component") == gcomp).select("v")
+            old_rem, old_cur = rem_verts, cur
+            rem_verts = giant_v.localCheckpoint(eager=True)
+            cur = (
+                cur2.join(rem_verts.withColumnRenamed("v", "src"), "src", "left_semi")
+                .join(rem_verts.withColumnRenamed("v", "dst"), "dst", "left_semi")
+                .localCheckpoint(eager=True)
+            )
             old_rem.unpersist()
-        if old_cur is not und:
-            old_cur.unpersist()
-        cur2.unpersist()
-        rem2.unpersist()
-        remaining = rem_verts.count()
-        if remaining == 0:
-            break
+            if old_cur is not und:
+                old_cur.unpersist()
+            cur2.unpersist()
+            rem2.unpersist()
+            remaining = rem_verts.count()
+            if remaining == 0:
+                break
 
-    # leftovers: v-ascending front ids (reference :1096-1098)
-    if remaining:
-        left = global_order_stats(
-            rem_verts, [F.col("v").asc()], rank_col="_r", approx_rows=remaining
-        )
-        assigned.append(
-            left.select(
-                F.col("v").alias("org_id"),
-                (F.lit(front_idx) + F.col("_r")).cast("long").alias("new_id"),
+        # leftovers: v-ascending front ids (reference :1096-1098)
+        if remaining:
+            left = global_order_stats(
+                rem_verts, [F.col("v").asc()], rank_col="_r", approx_rows=remaining
             )
-        )
+            assigned.append(
+                left.select(
+                    F.col("v").alias("org_id"),
+                    (F.lit(front_idx) + F.col("_r")).cast("long").alias("new_id"),
+                )
+            )
 
-    if not assigned:
+        if not assigned:
+            return spark.createDataFrame([], "org_id long, new_id long")
+        out = assigned[0]
+        for frame in assigned[1:]:
+            out = out.unionByName(frame)
+        out = out.localCheckpoint(eager=True)
+        rem_verts.unpersist()
+        if cur is not und:
+            cur.unpersist()
+        return out
+    finally:
         und.unpersist()
-        return spark.createDataFrame([], "org_id long, new_id long")
-    out = assigned[0]
-    for frame in assigned[1:]:
-        out = out.unionByName(frame)
-    out = out.localCheckpoint(eager=True)
-    und.unpersist()
-    rem_verts.unpersist()
-    if cur is not und:
-        cur.unpersist()
-    return out

@@ -14,11 +14,12 @@ reference's Org / BP / Roaring parity trio (src/tc.cpp:14-16):
 - ``triangle_count_kernel`` — adjacency + one vectorized Arrow batch
   kernel; the Spark re-expression of the paper's SIMD QFilter loop. It
   takes no options: one planner (``_kernel_count``) picks the route from
-  what it observes — broadcast CSR or the per-edge adjacency join by
-  adjacency size, the dense bit matrix or BSR by id range and density,
-  and on the join path a broadcast of hub adjacency (reference
-  select_bignode, src/porder.cpp:353-392) when Zipf hubs would skew the
-  shuffle.
+  what it observes — broadcast CSR (collected by
+  ``adjacency._collect_csr``, which the driver orderings share) or the
+  per-edge adjacency join by adjacency size, the dense bit matrix or BSR
+  by id range and density, and on the join path a broadcast of hub
+  adjacency (reference select_bignode, src/porder.cpp:353-392) when Zipf
+  hubs would skew the shuffle.
 
 The multithreaded reference variant (static edge-range partitioning +
 per-thread partials, src/bitpack_triangle_count.cpp:143-206) is exactly
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.kernels import batch_bsr_intersect_count
-from graphsetintersection_spark.operators.adjacency import lower_adjacency
+from graphsetintersection_spark.operators.adjacency import _collect_csr, lower_adjacency
 from graphsetintersection_spark.operators.edges import orient
 
 
@@ -168,61 +169,6 @@ def triangle_count_kernel_with_stats(edges: DataFrame) -> tuple[int, dict]:
 # entries (= oriented edges; 16M ≈ 128 MB of int64) the join route
 # takes over. Mirrors pagerank's BROADCAST_STATE cutover.
 BROADCAST_ADJ_MAX_ENTRIES = 16_000_000
-
-
-def _collect_csr(adj: DataFrame):
-    """Driver-side CSR of the (v, nbrs) adjacency: (vs_sorted, indptr,
-    flat_vals) numpy arrays, vertices sorted so batch lookups are one
-    ``searchsorted``. Collection goes through Arrow (``toArrow``): the
-    list column arrives as ONE contiguous values buffer + offsets, so the
-    driver-side footprint is ~the int64 payload itself — a Row-based
-    ``collect()`` materializes per-row Python lists of Python ints,
-    ~10× the payload in transient objects, which at the 16M-entry
-    BROADCAST_ADJ_MAX_ENTRIES bound is a driver-OOM hazard the budget
-    comment never priced in. Callers guard size via
-    BROADCAST_ADJ_MAX_ENTRIES. ``toArrow`` needs pyspark ≥ 4.0."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    tbl = adj.select("v", "nbrs").toArrow()
-
-    vs = (
-        tbl.column("v")
-        .combine_chunks()
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64, copy=False)
-    )
-    lst = tbl.column("nbrs").combine_chunks()
-    lens = (
-        pc.list_value_length(lst)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64, copy=False)
-    )
-    flat = (
-        lst.flatten()
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64, copy=False)
-    )
-    if len(vs) == 0:
-        return vs, np.zeros(1, dtype=np.int64), flat
-    # sort rows by vertex id; reorder the ragged values with one gather
-    order = np.argsort(vs, kind="stable")
-    indptr_un = np.zeros(len(vs) + 1, dtype=np.int64)
-    np.cumsum(lens, out=indptr_un[1:])
-    vs_s, lens_s = vs[order], lens[order]
-    indptr = np.zeros(len(vs) + 1, dtype=np.int64)
-    np.cumsum(lens_s, out=indptr[1:])
-    total = int(indptr[-1])
-    if total:
-        shift = np.zeros(len(lens_s), dtype=np.int64)
-        np.cumsum(lens_s[:-1], out=shift[1:])
-        gather = np.repeat(indptr_un[order] - shift, lens_s) + np.arange(
-            total, dtype=np.int64
-        )
-        flat = flat[gather]
-    else:
-        flat = np.empty(0, dtype=np.int64)
-    return vs_s, indptr, flat
 
 
 def _csr_gather(vs, indptr, flat, keys):

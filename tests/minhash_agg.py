@@ -12,8 +12,9 @@ from pyspark.sql import functions as F
 
 from graphsetintersection_spark.functions.dedup import (
     _MH_PRIME,
+    _doc_arrays,
+    _doc_texts,
     _perm_params,
-    hashed_shingles,
 )
 
 
@@ -24,7 +25,7 @@ def minhash_signatures_agg(
     ``minhash_signatures(docs, num_perm, n, seed=seed)``."""
     params = _perm_params(num_perm, seed)
     per_shingle = (
-        hashed_shingles(docs, n)
+        _doc_arrays(_doc_texts(docs, "doc_id", "text"), n, "h", lambda h: h)
         .select("doc_id", F.explode("h").alias("h"))
         .select("doc_id", F.pmod("h", F.lit(_MH_PRIME)).alias("_h"))
     )

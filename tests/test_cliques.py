@@ -294,3 +294,39 @@ def test_plain_bk_matches_pivot(spark):
         assert sorted(out_b) == sorted(out_a)
         res[use_pivot] = sorted(out_b)
     assert res[True] == res[False]
+
+
+def test_maximal_cliques_release_caches_when_a_step_fails(spark, monkeypatch):
+    """A default ordering that fails after reading the edge cache (before
+    the triangle list exists) and a failing result checkpoint (after the
+    triangle list is persisted) both leave no CacheManager entry behind."""
+    from graphsetintersection_spark.operators import relabel
+
+    df = spark.createDataFrame(random_graph(20, 60, seed=3), "src long, dst long")
+    order = spark.createDataFrame(
+        [(v, v) for v in range(20)], "v long, rank long"
+    )
+    cls = type(df)
+    real = cls.localCheckpoint
+
+    real_order = relabel.degree_order
+
+    def failing_order(*args, **kwargs):
+        real_order(*args, **kwargs).count()  # the edge cache is filled
+        raise RuntimeError("injected degree_order failure")
+
+    def failing_checkpoint(self, *args, **kwargs):
+        raise RuntimeError("injected checkpoint failure")
+
+    for target, attr, fake, kwargs in (
+        (relabel, "degree_order", failing_order, {}),
+        (cls, "localCheckpoint", failing_checkpoint, {"order": order}),
+    ):
+        before = cache_rdd_ids(spark)
+        monkeypatch.setattr(target, attr, fake)
+        with pytest.raises(RuntimeError, match="injected"):
+            maximal_cliques(df, **kwargs)
+        monkeypatch.undo()
+        leaked = cache_rdd_ids(spark) - before
+        assert not leaked, f"{attr} failure leaked caches: {leaked}"
+    assert cls.localCheckpoint is real

@@ -73,7 +73,6 @@ KEPT_TEST_ONLY = {
     "maximal_clique_count": "mc_num, the mc binary's headline (mc.cpp:39-47)",
     "embedding_neardup_pairs": "the only embedding near-duplicate op",
     "extract_text": "the batch (url, text) form of the pages extractor",
-    "hashed_shingles": "the per-document shingle-hash array op",
 }
 
 

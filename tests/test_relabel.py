@@ -729,3 +729,99 @@ def test_bfs_orderings_release_caches_when_a_level_fails(spark, monkeypatch):
         monkeypatch.setattr(cls, "localCheckpoint", real)
         leaked = cache_rdd_ids(spark) - before
         assert not leaked, f"{fn.__name__} leaked caches: {leaked}"
+
+
+# Jobs of one call on random_graph(200, 800, seed=1) at 4 local cores,
+# measured on the Row-collect implementations this replaced: dfs 7,
+# bfsr 9, GRO 9, hybrid_bfsdeg exact 10 (its separate in-degree collect
+# cost 3). Now: 7, 9, 9, 7.
+DRIVER_ORDERING_JOBS = {
+    "dfs_order": 7,
+    "bfsr_order": 9,
+    "greedy_mheap_order": 9,
+    "hybrid_bfsdeg_order_exact": 7,
+}
+
+
+def _recorded_orderings():
+    import json
+    from pathlib import Path
+
+    path = Path(__file__).parent / "data" / "driver_orderings.json"
+    return json.loads(path.read_text())
+
+
+@pytest.mark.parametrize(
+    "graph", ["directed_sinks_island", "sparse_negative_ids", "empty"]
+)
+def test_driver_orderings_match_recorded_outputs(spark, graph):
+    """The four driver-side orderings reproduce, pair for pair, the
+    permutations recorded before they moved onto the shared Arrow CSR:
+    a directed graph with sink-only vertices and an island (the directed
+    orderings keep sinks in their id set), sparse ids with negatives, and
+    the empty graph."""
+    from graphsetintersection_spark.operators import relabel
+
+    rec = _recorded_orderings()
+    df = spark.createDataFrame(
+        [tuple(e) for e in rec["graphs"][graph]], "src long, dst long"
+    )
+    for key, (fn, kwargs) in rec["calls"].items():
+        out = getattr(relabel, fn)(df, **kwargs)
+        assert out.columns == ["org_id", "new_id"]
+        got = sorted([r["org_id"], r["new_id"]] for r in out.collect())
+        assert got == rec["orders"][graph][key], key
+
+
+@pytest.mark.parametrize("fn", list(DRIVER_ORDERING_JOBS))
+def test_driver_orderings_cap_fails_before_collect(spark, monkeypatch, fn):
+    """Each driver-side ordering raises ValueError when its vertex cap is
+    below the vertex count, and does so before any adjacency collect: the
+    collect is patched to fail if it is ever reached (at the cap itself it
+    is reached, so the patch is live)."""
+    from graphsetintersection_spark.operators import adjacency, relabel
+
+    def no_collect(adj):
+        raise AssertionError("adjacency collected")
+
+    monkeypatch.setattr(adjacency, "_collect_csr", no_collect)
+    df = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long"
+    )
+    order = getattr(relabel, fn)
+    with pytest.raises(ValueError, match="too large"):
+        order(df, max_driver_vertices=3)
+    with pytest.raises(AssertionError, match="adjacency collected"):
+        order(df, max_driver_vertices=4)
+
+
+@pytest.mark.parametrize("fn", list(DRIVER_ORDERING_JOBS))
+def test_driver_orderings_job_count(spark, fn):
+    """One cap count and one Arrow adjacency collect per ordering (with
+    their shuffle stages); hybrid_bfsdeg exact takes its in-degrees from
+    the collected CSR instead of a second aggregate collect."""
+    from graphsetintersection_spark.operators import relabel
+
+    df = spark.createDataFrame(random_graph(200, 800, seed=1), "src long, dst long")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    start = int(sched.nextJobId())
+    getattr(relabel, fn)(df)
+    assert int(sched.nextJobId()) - start <= DRIVER_ORDERING_JOBS[fn]
+
+
+def test_slashburn_releases_caches_when_a_round_fails(spark, monkeypatch):
+    """A round whose component search raises leaves no CacheManager entry
+    behind (the symmetrized edge cache included)."""
+    from graphsetintersection_spark.operators import components
+    from graphsetintersection_spark.operators.relabel import slashburn_order
+
+    def failing(edges, *args, **kwargs):
+        raise RuntimeError("injected round failure")
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(6)], "src long, dst long")
+    before = cache_rdd_ids(spark)
+    monkeypatch.setattr(components, "connected_components_starcontraction", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        slashburn_order(df, k_div=1, k_cap=1)
+    leaked = cache_rdd_ids(spark) - before
+    assert not leaked, f"slashburn_order leaked caches: {leaked}"

@@ -299,9 +299,11 @@ def test_collect_csr_arrow_matches_rows(spark):
     """The Arrow CSR collection (one contiguous buffer, no per-row Python
     objects) must return exactly the collected adjacency rows — vertices
     sorted, each vertex's sorted neighbors at its indptr slice."""
-    from graphsetintersection_spark.operators.adjacency import lower_adjacency
+    from graphsetintersection_spark.operators.adjacency import (
+        _collect_csr,
+        lower_adjacency,
+    )
     from graphsetintersection_spark.operators.edges import orient
-    from graphsetintersection_spark.operators.triangle import _collect_csr
 
     pairs = random_graph(120, 900, seed=23)
     df = spark.createDataFrame(pairs, "src long, dst long")
