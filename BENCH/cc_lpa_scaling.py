@@ -12,8 +12,12 @@ is the unit that repeats at scale, exactly like a PageRank iteration;
 full-convergence wall time is round-count × these. BOTH join strategies
 from operators.iterative.prepare_undirected are measured per JVM:
 
-- ``shuffle`` (broadcast_labels=False + salted hubs) — the AT-SCALE path,
-  active whenever V > 10M, i.e. the north rule's 10^12-document regime.
+- ``shuffle`` (the shuffle layout + the skew probe's salted hubs) — the
+  AT-SCALE path, active whenever V > 10M, i.e. the north rule's
+  10^12-document regime. The worker forces it by lowering
+  ``iterative.BROADCAST_STATE_MAX_VERTICES`` below the vertex count
+  before the prepare, so ``ships_state`` picks it exactly as it would
+  above the cutover.
   Per round: labels exchange+sort onto the stationary src-partitioned
   sorted edge cache, one salted dst-keyed aggregation (the real work),
   one small join. This is the headline scaling number.
@@ -76,11 +80,15 @@ spark = get_spark(app_name=f"gsi-cclpa-{cores}-{config}",
 edges = spark.read.parquet(%(edges)r)
 
 # ---- prepare (timed once): the operators' own index-build phase
-# (operators.iterative.prepare_undirected — strategy choice, partitioned
-# symmetrize + persist, skew probe), shared by both algorithms
+# (operators.iterative.prepare_undirected — layout choice, partitioned
+# symmetrize + persist, skew probe), shared by both algorithms. The
+# shuffle config lowers the layout cutover below any vertex count, the
+# only way to put a corpus of this size on the at-scale layout.
+from graphsetintersection_spark.operators import iterative
+if config == "shuffle":
+    iterative.BROADCAST_STATE_MAX_VERTICES = -1
 t0 = time.perf_counter()
-prep = prepare_undirected(
-    edges, broadcast_labels=(None if config == "broadcast" else False))
+prep = prepare_undirected(edges)
 verts, plan = prep.verts, prep.salt_plan
 assert prep.broadcast_labels == (config == "broadcast")
 n_und, n_verts = prep.n_und, prep.n
@@ -144,10 +152,10 @@ def main():
     configs = (
         sys.argv[2].split(",") if len(sys.argv) > 2 else ["shuffle", "broadcast"]
     )
-    # Validate up front: a typo like "bcast" would otherwise silently run
-    # the shuffle path (the worker's broadcast_labels assert passes with both
-    # sides False) and log results under the bogus label; passes=0 would leave
-    # `out` empty and KeyError in the summary loop.
+    # Validate up front: a typo like "bcast" would otherwise launch a JVM
+    # on the broadcast layout only to fail the worker's broadcast_labels
+    # assert; passes=0 would leave `out` empty and KeyError in the summary
+    # loop.
     bad = [c for c in configs if c not in ("shuffle", "broadcast")]
     if bad:
         raise SystemExit(f"unknown config(s) {bad}; use shuffle,broadcast")

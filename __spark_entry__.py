@@ -159,20 +159,25 @@ def _q_pagerank(spark, sf_dir):
 
 
 def _q_pagerank_kernel(spark, sf_dir):
-    """The shuffle-path PageRank round (``broadcast_ranks=False``, the
-    shape that carries the scaling evidence), checked against the SAME
-    unrolled-SQL oracle as ``pagerank``, whose graph always takes the
-    broadcast path. The key name is historical: it once ran a separate
-    numpy kernel engine, since retired."""
+    """The shuffle-path PageRank round (the shape that carries the scaling
+    evidence), checked against the SAME unrolled-SQL oracle as
+    ``pagerank``, whose graph always takes the broadcast path. The call
+    lowers ``iterative.BROADCAST_STATE_MAX_VERTICES`` below any vertex
+    count for its duration, so ``ships_state`` picks the shuffle layout
+    and the run has production's above-cutover shape; the constant is
+    restored on every exit. The key name is historical: it once ran a
+    separate numpy kernel engine, since retired."""
+    from graphsetintersection_spark.operators import iterative
     from graphsetintersection_spark.operators.pagerank import pagerank
 
-    res = pagerank(
-        _lgraph(spark, sf_dir),
-        alpha=PR_ALPHA,
-        max_iter=PR_ITERS,
-        tol=None,
-        broadcast_ranks=False,
-    )
+    cutover = iterative.BROADCAST_STATE_MAX_VERTICES
+    iterative.BROADCAST_STATE_MAX_VERTICES = -1
+    try:
+        res = pagerank(
+            _lgraph(spark, sf_dir), alpha=PR_ALPHA, max_iter=PR_ITERS, tol=None
+        )
+    finally:
+        iterative.BROADCAST_STATE_MAX_VERTICES = cutover
     return res.ranks.select(
         "v", F.round(F.col("rank") * 1e6, 0).cast("long").alias("rank_ppm")
     )

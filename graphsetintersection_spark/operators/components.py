@@ -8,8 +8,10 @@ at convergence).
    each round every vertex takes min(own label, neighbors' labels) over the
    symmetrized edge set, which carries one (v, v) row per vertex, so a
    round is one state join plus one map-side-combinable ``min`` aggregate
-   (hub-skew safe) that emits every vertex. Converges in O(diameter)
-   rounds; web graphs have small effective diameter.
+   that emits every vertex. The layout is ``operators.iterative``'s
+   (``ships_state``), and hub dsts are salted only when the shuffle
+   layout's skew probe engages it. Converges in O(diameter) rounds; web
+   graphs have small effective diameter.
 
 2. ``connected_components_starcontraction`` — alternating large-star /
    small-star contraction (Kiveris et al., "Connected Components in
@@ -56,10 +58,10 @@ def cc_minlabel_round(prep, labels):
     flows through the join and min(own, neighbors) IS the aggregate — the
     round is join + one aggregation, one output row per vertex.
 
-    min is map-side combinable; with the prep's salt plan, hub dsts
-    pre-combine under salts so no single reducer owns a whole hub (the
-    Zipf-hub shuffle-skew guard shared with PageRank/LPA, plans.skew). On
-    the broadcast path (und cached dst-partitioned) the join and the
+    min is map-side combinable; when the prep carries a salt plan (the
+    shuffle layout's skew probe found Zipf hubs), hub dsts pre-combine
+    under salts so no single reducer owns a whole hub (plans.skew). On
+    the broadcast layout (und cached dst-partitioned) the join and the
     dst-keyed min both run without exchanging the edge frame."""
     from graphsetintersection_spark.operators.iterative import state_join
     from graphsetintersection_spark.plans.skew import two_stage_agg
@@ -84,25 +86,23 @@ def connected_components_minlabel(
     edges: DataFrame,
     max_rounds: int = 50,
     checkpointer: CheckpointManager | None = None,
-    salt_hubs: str | int | None = "auto",
 ) -> ComponentsResult:
     """Synchronous min-label propagation.
 
     Convergence is detected with ONE aggregate per round — the
     (count, bit_xor) content signature of the materialized label frame
     (plans.skew.content_signature) — instead of a join of consecutive
-    label vectors (a full extra shuffle per round). ``salt_hubs`` enables
-    two-stage salted aggregation of the per-round neighbor-min for
-    Zipf-hub dst keys; "auto" probes skew only on graphs large enough for
-    it to matter (plans.skew.decide_hub_salting)."""
+    label vectors (a full extra shuffle per round). The layout and the
+    hub salting of the per-round neighbor-min are observed, not chosen:
+    ``prepare_undirected`` asks ``ships_state`` for the layout and, on
+    the shuffle layout, ``decide_hub_salting`` probes for Zipf hubs on
+    graphs large enough for them to matter."""
     from graphsetintersection_spark.operators.iterative import (
         prepare_undirected,
     )
 
-    check_round_args(
-        "connected_components_minlabel", "max_rounds", max_rounds, salt_hubs=salt_hubs
-    )
-    prep = prepare_undirected(edges, salt_hubs=salt_hubs)
+    check_round_args("connected_components_minlabel", "max_rounds", max_rounds)
+    prep = prepare_undirected(edges)
     try:
         labels, rounds, converged, _ = run_rounds(
             prep.verts.select("v", F.col("v").alias("component")),
@@ -220,7 +220,6 @@ def connected_components_auto(
     edges: DataFrame,
     probe_rounds: int = 8,
     max_rounds: int = 30,
-    salt_hubs: str | int | None = "auto",
 ) -> ComponentsResult:
     """Strategy-auto connected components (VERDICT r4 next-round #7).
 
@@ -247,11 +246,9 @@ def connected_components_auto(
     to both underlying implementations (their parity is pytest-pinned).
     """
     op = "connected_components_auto"
-    check_round_args(op, "probe_rounds", probe_rounds, salt_hubs=salt_hubs)
+    check_round_args(op, "probe_rounds", probe_rounds)
     check_round_args(op, "max_rounds", max_rounds)
-    pre = connected_components_minlabel(
-        edges, max_rounds=probe_rounds, salt_hubs=salt_hubs
-    )
+    pre = connected_components_minlabel(edges, max_rounds=probe_rounds)
     if pre.converged:
         return pre
     lab = pre.components  # (v, component) — partial, component ∈ component(v)

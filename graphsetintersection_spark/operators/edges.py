@@ -44,10 +44,7 @@ def symmetrize(edges: DataFrame) -> DataFrame:
 
 
 def symmetrize_partitioned(
-    edges: DataFrame,
-    self_pairs: DataFrame,
-    key: str = "dst",
-    num_partitions: int | None = None,
+    edges: DataFrame, self_pairs: DataFrame, key: str = "dst"
 ) -> DataFrame:
     """Symmetrized canonical view hash-partitioned by ``key`` in ONE
     shuffle: cast/null/self-loop-filter both directions, union,
@@ -70,12 +67,7 @@ def symmetrize_partitioned(
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     v = F.col(self_pairs.columns[0]).cast("long")
     und = e.union(rev).union(self_pairs.select(v.alias("src"), v.alias("dst")))
-    und = (
-        und.repartition(num_partitions, key)
-        if num_partitions
-        else und.repartition(key)
-    )
-    return und.dropDuplicates()
+    return und.repartition(key).dropDuplicates()
 
 
 def orient(edges: DataFrame) -> DataFrame:

@@ -17,18 +17,21 @@ Execution strategy mirrors operators/pagerank.py:
   correctly-partitioned cache per key is what keeps the rounds
   exchange-free (the iterative-graph discipline of
   operators/iterative.py);
-- below the ~10M-vertex cutover the score vectors are BROADCAST each
-  half-step and the matching edge cache makes the aggregation
-  exchange-free: zero per-iteration shuffle. Both caches carry one
-  synthetic (v, v) row per vertex (src == dst marks them), so each
-  half-step aggregation emits every vertex and its L2 norm is a lazy
-  view over the one materialized raw vector;
+- the layout is ``operators.iterative.ships_state``'s, asked with the
+  vertex count; no option picks it. Below the ~10M-vertex cutover the
+  score vectors are BROADCAST each half-step and the matching edge
+  cache makes the aggregation exchange-free: zero per-iteration
+  shuffle. Both caches carry one synthetic (v, v) row per vertex
+  (src == dst marks them), so each half-step aggregation emits every
+  vertex and its L2 norm is a lazy view over the one materialized raw
+  vector;
 - above it, the scores shuffle into a sort-merge join against the
   pre-sorted opposite cache and the aggregation is the one exchange per
   half-step, with the shared salted two-stage aggregation
-  (plans/skew.two_stage_agg) engaged per aggregation key when that key's
-  degree distribution is Zipf-skewed; the sparse result is left-joined
-  onto the previous round's normalized view, which is total;
+  (plans/skew.two_stage_agg) engaged per aggregation key when
+  ``decide_hub_salting``'s probe sees that key's degree distribution
+  Zipf-skewed at scale; the sparse result is left-joined onto the
+  previous round's normalized view, which is total;
 - the loop is ``plans.checkpoint.run_rounds``, one round per half-step
   (auth on even rounds, hub on odd ones). The state is the raw total
   score vector (v, s[, carried]), normalized by the lazy ``_l2_view``.
@@ -49,9 +52,7 @@ from graphsetintersection_spark.operators.edges import (
     drop_nulls_and_loops,
     vertices,
 )
-from graphsetintersection_spark.operators.iterative import (
-    BROADCAST_STATE_MAX_VERTICES,
-)
+from graphsetintersection_spark.operators.iterative import ships_state
 from graphsetintersection_spark.plans.checkpoint import check_round_args, run_rounds
 
 
@@ -81,19 +82,17 @@ def hits(
     edges: DataFrame,
     max_iter: int = 10,
     tol: float | None = None,
-    broadcast_scores: bool | None = None,
-    salt_hubs: int | str | None = "auto",
 ) -> HITSResult:
     """Run HITS for ``max_iter`` iterations (or until the hub vector's max
     absolute change drops below ``tol``). Returns per-vertex (hub, auth)
     scores, both L2-normalized. Null endpoints, self-loops and duplicate
     edges do not count.
 
-    ``broadcast_scores`` None picks by vertex count (the pagerank
-    cutover); ``salt_hubs`` engages the salted two-stage aggregation on
-    the shuffle path per aggregation key ("auto" probes each key's skew,
-    an int forces that salt count, None disables)."""
-    check_round_args("hits", "max_iter", max_iter, tol, salt_hubs, minimum=1)
+    The layout follows the vertex count (``ships_state``, the PageRank
+    cutover). On the shuffle layout each aggregation key is probed for
+    skew (``decide_hub_salting``) and salted two-stage when the probe
+    finds Zipf hubs at scale."""
+    check_round_args("hits", "max_iter", max_iter, tol, minimum=1)
     spark = edges.sparkSession
     # transient cache for the SETUP phase only: the filtered edge frame
     # feeds the vertex count, up to two skew probes, and both stationary
@@ -106,14 +105,19 @@ def hits(
     if not edges.is_cached:
         e = e.persist()
     verts = vertices(e).persist()
-    n = verts.count()
+    try:
+        n = verts.count()
+    except BaseException:
+        # the rounds' try/finally below is not entered yet
+        verts.unpersist()
+        e.unpersist()
+        raise
     if n == 0:
         empty = spark.createDataFrame([], "v long, hub double, auth double")
         verts.unpersist()
         e.unpersist()
         return HITSResult(empty, 0, True)
-    if broadcast_scores is None:
-        broadcast_scores = n <= BROADCAST_STATE_MAX_VERTICES
+    broadcast_scores = ships_state(n)
 
     from graphsetintersection_spark.plans.skew import (
         decide_hub_salting,
@@ -199,13 +203,9 @@ def hits(
         # broadcast rounds aggregate on the cache's own partitioning, no
         # skewed exchange exists to protect)
         plan_dst = plan_src = None
-        if not broadcast_scores and salt_hubs:
-            if salt_hubs == "auto":
-                plan_dst = decide_hub_salting(e, "dst")
-                plan_src = decide_hub_salting(e, "src")
-            else:
-                plan_dst = decide_hub_salting(e, "dst", salts=salt_hubs, force=True)
-                plan_src = decide_hub_salting(e, "src", salts=salt_hubs, force=True)
+        if not broadcast_scores:
+            plan_dst = decide_hub_salting(e, "dst")
+            plan_src = decide_hub_salting(e, "src")
 
         # two stationary caches — one per aggregation key. Broadcast
         # rounds aggregate ON the partitioning key (exchange-free);

@@ -14,9 +14,11 @@ join) + one count aggregate + one max-struct aggregate — every aggregate
 map-side combinable (the argmax is ``max(struct(cnt, -label))``, NOT a
 row_number window: a hub's window partition would sort all its distinct
 neighbor labels on one reducer, while the partial-max combines
-everywhere). Zipf-hub dst keys optionally
-pre-combine under salts (plans.skew two-stage aggregation — the north
-rule's "salted high-degree hubs"). Deterministic tie-break makes the
+everywhere). The layout is ``operators.iterative``'s (``ships_state``);
+on the shuffle layout, Zipf-hub dst keys pre-combine under salts when
+``plans.skew.decide_hub_salting``'s probe sees skew at scale (two-stage
+aggregation — the north rule's "salted high-degree hubs"). No option
+picks either. Deterministic tie-break makes the
 fixpoint (or the state after a fixed number of rounds) exactly equal
 across engines, which is what the DuckDB oracle checks.
 
@@ -91,18 +93,19 @@ def label_propagation(
     max_rounds: int = 10,
     fixed_rounds: bool = True,
     checkpointer: CheckpointManager | None = None,
-    salt_hubs: str | int | None = "auto",
 ) -> LabelPropResult:
     """``fixed_rounds=True`` runs exactly ``max_rounds`` rounds (oracle
     parity mode — LPA need not converge); False stops early at fixpoint.
-    ``salt_hubs``: "auto" probes for Zipf-hub skew on graphs large enough
-    for it to matter; an int forces that salt count; None disables."""
+    The layout and the hub salting come from ``prepare_undirected``:
+    broadcast state below the ``ships_state`` cutover, and above it the
+    shuffle layout, salted when its probe sees Zipf-hub skew on a graph
+    large enough for it to matter."""
     from graphsetintersection_spark.operators.iterative import (
         prepare_undirected,
     )
 
-    check_round_args("label_propagation", "max_rounds", max_rounds, salt_hubs=salt_hubs)
-    prep = prepare_undirected(edges, salt_hubs=salt_hubs)
+    check_round_args("label_propagation", "max_rounds", max_rounds)
+    prep = prepare_undirected(edges)
     try:
         labels, rounds, converged, _ = run_rounds(
             prep.verts.select("v", F.col("v").alias("label")),

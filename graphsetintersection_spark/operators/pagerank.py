@@ -10,8 +10,10 @@ data model and the set-kernel substrate, not PageRank itself):
 
 Execution shape. ``pagerank_df_prepare`` builds the graph index once and
 every round reuses it: the edge table stays put and only per-vertex state
-moves, the reference's index-then-iterate split (src/tc.cpp:28-29).
-Below the 10M-vertex cutover (the broadcast path):
+moves, the reference's index-then-iterate split (src/tc.cpp:28-29). The
+layout is ``operators.iterative.ships_state``'s, asked with the vertex
+count; no option picks it. Below the 10M-vertex cutover (the broadcast
+path):
     prepare = distinct vertex ids (small exchange, partial aggregation);
               edges ∪ one (v, v) self row per vertex → repartition(dst) →
               dropDuplicates, cached (the ONE exchange of the edge table:
@@ -25,8 +27,9 @@ Below the 10M-vertex cutover (the broadcast path):
               vertex and needs no finalize join
 Above the cutover (the shuffle path) edges carry out_deg, cached by src
 and src-sorted; each round exchanges the rank vector for the join and the
-contributions for the dst aggregation (salted two-stage for Zipf-hub dst
-keys), then verts ⟕ contribs plus the closed-form dangling/teleport
+contributions for the dst aggregation (salted two-stage when
+``plans.skew.decide_hub_salting``'s probe sees Zipf-hub dst keys at
+scale), then verts ⟕ contribs plus the closed-form dangling/teleport
 terms. The prepare reads the input through ``drop_nulls_and_loops``, so
 on the broadcast path src == dst marks exactly the synthetic self rows.
 
@@ -54,9 +57,7 @@ from graphsetintersection_spark.operators.edges import (
     drop_nulls_and_loops,
     vertices,
 )
-from graphsetintersection_spark.operators.iterative import (
-    BROADCAST_STATE_MAX_VERTICES,
-)
+from graphsetintersection_spark.operators.iterative import ships_state
 from graphsetintersection_spark.plans.checkpoint import (
     CheckpointManager,
     check_round_args,
@@ -72,12 +73,12 @@ class PageRankResult:
     deltas: list = field(default_factory=list)
 
 
-def _check_args(alpha, max_iter, tol, salt_hubs="auto") -> None:
+def _check_args(alpha, max_iter, tol) -> None:
     """Reject a misconfigured run before it starts any Spark job (NaN
     fails every test)."""
     if not 0.0 <= alpha <= 1.0:
         raise ValueError(f"pagerank: alpha must be in [0, 1], got {alpha!r}")
-    check_round_args("pagerank", "max_iter", max_iter, tol, salt_hubs)
+    check_round_args("pagerank", "max_iter", max_iter, tol)
 
 
 def pagerank(
@@ -86,23 +87,20 @@ def pagerank(
     max_iter: int = 20,
     tol: float | None = 1e-8,
     checkpointer: CheckpointManager | None = None,
-    broadcast_ranks: bool | None = None,
-    salt_hubs: int | str | None = "auto",
 ) -> PageRankResult:
     """Run PageRank to convergence (or ``max_iter``). ``tol=None`` runs a
     fixed iteration count (used for oracle parity). Resumes automatically
     from ``checkpointer``'s last committed iteration if present.
 
-    ``salt_hubs``: explicit two-stage salted aggregation of contributions
-    for high-in-degree dst keys (the north rule's "salted hubs"). Only
-    active on the SHUFFLE path — in broadcast mode the contribution
-    aggregation is already exchange-free (edges stationary by dst), so
-    salting would add cost for nothing. "auto" enables S=16 salts when the
-    in-degree distribution is skewed; an int forces that salt count."""
-    _check_args(alpha, max_iter, tol, salt_hubs)
-    prep = pagerank_df_prepare(
-        edges, broadcast_ranks=broadcast_ranks, salt_hubs=salt_hubs
-    )
+    The layout follows the vertex count (``ships_state``): broadcast
+    ranks onto a stationary dst-partitioned edge cache below the cutover,
+    the shuffle path above it. Only the shuffle path salts, two-stage
+    over high-in-degree dst keys (the north rule's "salted hubs"), and
+    only when ``decide_hub_salting``'s probe sees skew at scale; in
+    broadcast mode the contribution aggregation is already exchange-free
+    (edges stationary by dst), so salting would add cost for nothing."""
+    _check_args(alpha, max_iter, tol)
+    prep = pagerank_df_prepare(edges)
     try:
         return pagerank_df_iterate(
             prep,
@@ -123,8 +121,6 @@ def personalized_pagerank(
     tol: float | None = 1e-8,
     weight_col: str | None = None,
     checkpointer: CheckpointManager | None = None,
-    broadcast_ranks: bool | None = None,
-    salt_hubs: int | str | None = "auto",
 ) -> PageRankResult:
     """Personalized PageRank: random walks restart at the SEED set instead
     of uniformly — the standard link-graph primitive for topical ranking,
@@ -139,10 +135,8 @@ def personalized_pagerank(
     broadcast-state exchange-free rounds below the 10M-vertex cutover and
     the salted shuffle path above it; per-iteration lineage truncation;
     checkpoint/resume."""
-    _check_args(alpha, max_iter, tol, salt_hubs)
-    prep = pagerank_df_prepare(
-        edges, broadcast_ranks=broadcast_ranks, salt_hubs=salt_hubs
-    )
+    _check_args(alpha, max_iter, tol)
+    prep = pagerank_df_prepare(edges)
     try:
         w = (
             F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
@@ -209,16 +203,14 @@ class PreparedDFGraph:
             c.unpersist(blocking=True)
 
 
-def pagerank_df_prepare(
-    edges: DataFrame,
-    broadcast_ranks: bool | None = None,
-    salt_hubs: int | str | None = "auto",
-) -> PreparedDFGraph:
+def pagerank_df_prepare(edges: DataFrame) -> PreparedDFGraph:
     """One-time index build for the DataFrame path, separated from the
     loop so repeated runs (and the scaling bench) pay it once per graph —
     the analog of the reference's printed index-build phase
     (src/tc.cpp:28-29). The input is cast to long with null endpoints and
     self-loops dropped (``drop_nulls_and_loops``) and deduplicated below.
+    The distinct vertex ids are counted first, and ``ships_state(n)``
+    picks the layout.
 
     On the broadcast path the edge table crosses the network ONCE: the
     distinct vertex ids (a small, partially aggregated exchange) give n
@@ -245,14 +237,13 @@ def pagerank_df_prepare(
     scan_once = (lambda df: df) if edges.is_cached else cache
     prep = None
     try:
-        if broadcast_ranks is not False:
-            e = scan_once(e)
-            ids = cache(vertices(e))
-            n = ids.count()
-            if broadcast_ranks or n <= BROADCAST_STATE_MAX_VERTICES:
-                prep = _prepare_dst_layout(e, ids, n, cache)
-                return prep
-        prep = _prepare_edge_out_deg(scan_once(e.distinct()), salt_hubs, cache)
+        e = scan_once(e)
+        ids = cache(vertices(e))
+        n = ids.count()
+        if ships_state(n):
+            prep = _prepare_dst_layout(e, ids, n, cache)
+        else:
+            prep = _prepare_edge_out_deg(scan_once(e.distinct()), cache)
         return prep
     finally:
         # the setup caches must not outlive this call on ANY exit path,
@@ -281,7 +272,7 @@ def _prepare_dst_layout(e, ids, n, cache) -> PreparedDFGraph:
     return PreparedDFGraph(verts, n, e_deg, True, None, (e_deg, verts))
 
 
-def _prepare_edge_out_deg(e, salt_hubs, cache) -> PreparedDFGraph:
+def _prepare_edge_out_deg(e, cache) -> PreparedDFGraph:
     # ONE union + aggregate yields the complete vertex set AND each
     # vertex's out-degree (dst-only vertices fall out with out_deg 0) —
     # replacing the previous vertices-distinct + out-degree aggregate +
@@ -308,14 +299,8 @@ def _prepare_edge_out_deg(e, salt_hubs, cache) -> PreparedDFGraph:
     # and LPA: plans.skew.
     from graphsetintersection_spark.plans.skew import decide_hub_salting, mark_hubs
 
-    salt_s: int | None = None
-    plan = None
-    if salt_hubs and n:
-        if salt_hubs == "auto":
-            plan = decide_hub_salting(e, "dst")
-        else:
-            plan = decide_hub_salting(e, "dst", salts=int(salt_hubs), force=True)
-        salt_s = plan.salts if plan is not None else None
+    plan = decide_hub_salting(e, "dst") if n else None
+    salt_s = plan.salts if plan is not None else None
 
     e_deg = e.join(out_deg.withColumnRenamed("v", "src"), "src")
     if plan is not None:

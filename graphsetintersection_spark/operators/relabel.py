@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from graphsetintersection_spark.kernels import PACK_SHIFT, PACK_WIDTH
 from graphsetintersection_spark.operators.adjacency import driver_csr
 from graphsetintersection_spark.operators.edges import canonicalize, degrees, symmetrize
-from graphsetintersection_spark.operators.iterative import BROADCAST_STATE_MAX_VERTICES
+from graphsetintersection_spark.operators.iterative import ships_state
 from graphsetintersection_spark.plans.assign import global_order_stats
 from graphsetintersection_spark.plans.checkpoint import run_rounds
 
@@ -194,29 +194,27 @@ def _bfs_levels(
     edges: DataFrame,
     root: int,
     max_levels: int,
-    n: int | None = None,
-    broadcast_state: bool | None = None,
+    n: int,
 ) -> DataFrame:
     """Level-synchronous BFS from ``root`` over out-edges, one
     ``run_rounds`` round per level (round r expands level r). Returns the
     (v, level) leaf; the caller unpersists it once a downstream result is
     materialized.
 
-    Join strategy per level — the same stationary-graph/ship-state
-    switch as the CC/LPA/PageRank rounds (operators/iterative.py):
+    Join strategy per level — ``ships_state(n)`` for the ``n`` vertices,
+    the same stationary-graph/ship-state layout as the CC/LPA/PageRank
+    rounds (operators/iterative.py):
 
-    - BROADCAST (default while the VERTEX set fits the state cutover,
-      ``n`` ≤ BROADCAST_STATE_MAX_VERTICES): the edge frame is cached
-      ONCE and each level broadcast-joins the frontier into it and
-      broadcast-anti-joins the visited set — the 100-TB edge object is
-      never exchanged per round; only the candidate frontier (bounded by
-      one level's reach) shuffles for its distinct.
-    - SHUFFLE (above the cutover, or forced): the original
-      frontier⨝edges hash join — each level exchanges the frontier AND
-      the edge frame; correct at any state size, the fallback shape."""
+    - BROADCAST (while the vertex set fits the state cutover): the edge
+      frame is cached ONCE and each level broadcast-joins the frontier
+      into it and broadcast-anti-joins the visited set — the 100-TB edge
+      object is never exchanged per round; only the candidate frontier
+      (bounded by one level's reach) shuffles for its distinct.
+    - SHUFFLE (above the cutover): the original frontier⨝edges hash join
+      — each level exchanges the frontier AND the edge frame; correct at
+      any state size, the fallback shape."""
     spark = edges.sparkSession
-    if broadcast_state is None:
-        broadcast_state = n is not None and n <= BROADCAST_STATE_MAX_VERTICES
+    broadcast_state = ships_state(n)
     ej = edges.select("src", "dst")
     # an already-cached input needs no second cache copy — the per-level
     # joins read the caller's cache through the cheap projection

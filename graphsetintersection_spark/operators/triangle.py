@@ -38,26 +38,7 @@ from pyspark.sql import functions as F
 from graphsetintersection_spark.kernels import batch_bsr_intersect_count
 from graphsetintersection_spark.operators.adjacency import _collect_csr, lower_adjacency
 from graphsetintersection_spark.operators.edges import orient
-
-
-AUTO_HUB_RATIO = 0.25
-# below this many total adjacency entries (= oriented edges) the skewed
-# shuffle a hub split would prevent doesn't exist — the whole joined frame
-# fits in a handful of partitions. Small inputs skip the split entirely;
-# this is a scale optimization, not a semantics switch.
-AUTO_HUB_MIN_EDGES = 5_000_000
-
-
-def _hub_ratio_from_stats(entries: float, mx, av) -> float | None:
-    """The join path's skew heuristic, fed the kernel planner's
-    already-collected probe stats: split iff the graph is big enough that
-    a skewed shuffle matters AND the max degree dominates the mean
-    (Zipf-style skew)."""
-    if entries < AUTO_HUB_MIN_EDGES:
-        return None
-    if (mx or 0) >= 1024 and (mx or 0) >= 16 * (av or 1.0):
-        return AUTO_HUB_RATIO
-    return None
+from graphsetintersection_spark.plans.skew import hub_split_ratio
 
 
 def _edge_with_lower_adj(
@@ -323,7 +304,7 @@ def _kernel_count(edges: DataFrame, acc_inter, acc_cmp) -> int:
       read the cache — the lowest measured wall-clock at every size tried
       (59M edges, local[4]: ~235s pooled-median vs the recompute plan's
       290s; local[16]: parity) — with the broadcast-hub split when
-      ``_hub_ratio_from_stats`` sees Zipf skew, and the BSR kernel.
+      ``plans.skew.hub_split_ratio`` sees Zipf skew, and the BSR kernel.
       Neighbor lists ship once per incident edge, which is the price of
       not fitting in memory.
     """
@@ -342,7 +323,7 @@ def _kernel_count(edges: DataFrame, acc_inter, acc_cmp) -> int:
         ).collect()[0]
         entries = int(probe["entries"] or 0)
         if entries > BROADCAST_ADJ_MAX_ENTRIES:
-            hub_ratio = _hub_ratio_from_stats(entries, probe["mx"], probe["av"])
+            hub_ratio = hub_split_ratio(entries, probe["mx"], probe["av"])
             fn = _make_count_batches(
                 batch_bsr_intersect_count, acc_inter, acc_cmp
             )

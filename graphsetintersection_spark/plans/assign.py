@@ -50,7 +50,6 @@ def global_order_stats(
     rank_col: str | None = None,
     cumsum_of: str | None = None,
     cumsum_col: str | None = None,
-    num_partitions: int | None = None,
     approx_rows: int | None = None,
 ) -> DataFrame:
     """Append global-order statistics to ``df`` without a global window.
@@ -77,24 +76,22 @@ def global_order_stats(
         raise ValueError("cumsum_col and cumsum_of go together")
 
     cached_here = False
-    if approx_rows is not None:
-        n_rows = approx_rows
-    elif df.is_cached:
-        n_rows = df.count()
-    else:
-        df = df.persist()
-        cached_here = True
-        n_rows = df.count()
     try:
-        return _ranked(df, order_exprs, rank_col, cumsum_of, cumsum_col,
-                       num_partitions, n_rows)
+        if approx_rows is not None:
+            n_rows = approx_rows
+        elif df.is_cached:
+            n_rows = df.count()
+        else:
+            df = df.persist()
+            cached_here = True
+            n_rows = df.count()
+        return _ranked(df, order_exprs, rank_col, cumsum_of, cumsum_col, n_rows)
     finally:
         if cached_here:
             df.unpersist()
 
 
-def _ranked(df, order_exprs, rank_col, cumsum_of, cumsum_col,
-            num_partitions, n_rows):
+def _ranked(df, order_exprs, rank_col, cumsum_of, cumsum_col, n_rows):
     spark = df.sparkSession
     if n_rows <= SMALL_INPUT_ROWS:
         # fast path: one reducer sorts the whole (small) frame. The window
@@ -116,7 +113,7 @@ def _ranked(df, order_exprs, rank_col, cumsum_of, cumsum_col,
             )
         return out.drop("_pid").localCheckpoint(eager=True)
 
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     # persisted only WITHIN this call: the partition ids observed by the
     # count job and by the final ranking job must be the same physical
     # blocks (range-boundary sampling after a shuffle is not replay-stable)

@@ -182,20 +182,16 @@ class CheckpointManager:
 
 
 def check_round_args(
-    op: str, rounds_name: str, rounds, tol=None, salt_hubs="auto", minimum: int = 0
+    op: str, rounds_name: str, rounds, tol=None, minimum: int = 0
 ) -> None:
     """Reject a misconfigured iterative run before its first Spark job: the
-    round count must be an int >= ``minimum``, ``tol`` None or >= 0 and
-    ``salt_hubs`` "auto", None or an int >= 0. Each test is written so
-    that NaN (false under every comparison) fails it."""
+    round count must be an int >= ``minimum`` and ``tol`` None or >= 0.
+    Each test is written so that NaN (false under every comparison) fails
+    it."""
     if not isinstance(rounds, int) or rounds < minimum:
         name, value, want = rounds_name, rounds, f"an int >= {minimum}"
     elif tol is not None and not tol >= 0.0:
         name, value, want = "tol", tol, "None or >= 0"
-    elif salt_hubs not in ("auto", None) and not (
-        isinstance(salt_hubs, int) and salt_hubs >= 0
-    ):
-        name, value, want = "salt_hubs", salt_hubs, "'auto', None or an int >= 0"
     else:
         return
     raise ValueError(f"{op}: {name} must be {want}, got {value!r}")

@@ -6,8 +6,8 @@ toward one reducer. Spark's partial (map-side) aggregation already bounds
 the damage for combinable aggregates (each map task emits one row per
 distinct key), and AQE skew-join splitting backstops the join side — but at
 cluster scale with thousands of map tasks, a mega-hub still concentrates
-one row per map task on a single reducer. The explicit remedy, generalized
-here from the PageRank implementation, is TWO-STAGE SALTED AGGREGATION
+one row per map task on a single reducer. The remedy, generalized here
+from the PageRank implementation, is TWO-STAGE SALTED AGGREGATION
 (the north rule's "salted high-degree hubs"; the hub-isolation idea of the
 reference's SlashBurn, src/porder.cpp:1009-1114):
 
@@ -15,9 +15,14 @@ reference's SlashBurn, src/porder.cpp:1009-1114):
                                   salts, so S reducers share each hub;
   stage 2: groupBy(key)         — combines at most S rows per hub.
 
-``decide_hub_salting`` is the shared probe: engage only when the key
-distribution is actually skewed AND the frame is big enough for skew to
-matter (small inputs must not pay scale-insurance premiums — VERDICT r2).
+``hub_split_ratio`` is the one skew-at-scale predicate: a frame of at
+least ``SALT_MIN_ROWS`` rows whose max key degree is both at least
+``SALT_MIN_MAX_DEG`` and ``SALT_SKEW_FACTOR`` × the mean (small inputs
+must not pay scale-insurance premiums — VERDICT r2). Two planners ask it:
+``decide_hub_salting``, the probe that is the only way the iterative
+engines salt (called on their shuffle layout), and the triangle join
+route's broadcast-hub split. Both read the constants below at call time;
+the salt count and the hub ratio are these constants, not arguments.
 """
 
 from __future__ import annotations
@@ -28,8 +33,6 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# same thresholds as the PageRank auto decision (operators.pagerank) and the
-# triangle hub-broadcast probe (operators.triangle.AUTO_HUB_MIN_EDGES)
 SALT_MIN_ROWS = 5_000_000
 SALT_MIN_MAX_DEG = 1024
 SALT_SKEW_FACTOR = 16
@@ -46,48 +49,47 @@ class HubSaltPlan:
     salts: int
 
 
+def hub_split_ratio(rows: float, mx, av) -> float | None:
+    """``HUB_DEG_RATIO`` when a frame of ``rows`` rows whose key degrees
+    have max ``mx`` and mean ``av`` is skewed at scale, else None: the
+    share of total degree the hub set covers when hubs are split off."""
+    mx = mx or 0
+    if rows >= SALT_MIN_ROWS and mx >= SALT_MIN_MAX_DEG and (
+        mx >= SALT_SKEW_FACTOR * (av or 1.0)
+    ):
+        return HUB_DEG_RATIO
+    return None
+
+
 def decide_hub_salting(
-    df: DataFrame,
-    key: str,
-    total_rows: int | None = None,
-    salts: int = DEFAULT_SALTS,
-    deg_ratio: float = HUB_DEG_RATIO,
-    force: bool = False,
+    df: DataFrame, key: str, total_rows: int | None = None
 ) -> HubSaltPlan | None:
-    """Probe ``df``'s ``key`` distribution and return a salting plan iff
-    skew-at-scale is present. ``total_rows`` (when the caller already
-    counted the frame) gates the probe for free: below SALT_MIN_ROWS no
-    aggregate even runs. ``force=True`` skips the size/skew gates (the
-    caller explicitly asked for salting) but still derives the hub set."""
-    if not force and total_rows is not None and total_rows < SALT_MIN_ROWS:
+    """Probe ``df``'s ``key`` distribution and return a salting plan of
+    ``DEFAULT_SALTS`` salts iff ``hub_split_ratio`` sees skew at scale.
+    ``total_rows`` (when the caller already counted the frame) gates the
+    probe for free: below SALT_MIN_ROWS no aggregate even runs."""
+    if total_rows is not None and total_rows < SALT_MIN_ROWS:
         return None
     from graphsetintersection_spark.operators.relabel import hub_degree_threshold
 
     key_deg = df.groupBy(key).agg(F.count("*").alias("deg"))
-    if not force:
-        row = key_deg.agg(
-            F.max("deg").alias("mx"),
-            F.avg("deg").alias("av"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        if not row["n"]:
-            return None
-        if total_rows is None:
-            total = float(row["n"]) * float(row["av"] or 0.0)
-            if total < SALT_MIN_ROWS:
-                return None
-        if not (
-            row["mx"] >= SALT_MIN_MAX_DEG
-            and row["mx"] >= SALT_SKEW_FACTOR * (row["av"] or 1.0)
-        ):
-            return None
-    t = hub_degree_threshold(key_deg, deg_ratio)
+    row = key_deg.agg(
+        F.max("deg").alias("mx"),
+        F.avg("deg").alias("av"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()[0]
+    if not row["n"]:
+        return None
+    if total_rows is None:
+        total_rows = float(row["n"]) * float(row["av"] or 0.0)
+    ratio = hub_split_ratio(total_rows, row["mx"], row["av"])
+    t = None if ratio is None else hub_degree_threshold(key_deg, ratio)
     if t is None:
         return None
     hub_keys = key_deg.where(F.col("deg") >= t).select(
         key, F.lit(True).alias("_hub")
     )
-    return HubSaltPlan(hub_keys=hub_keys, salts=salts)
+    return HubSaltPlan(hub_keys=hub_keys, salts=DEFAULT_SALTS)
 
 
 def mark_hubs(df: DataFrame, key: str, plan: HubSaltPlan) -> DataFrame:
@@ -104,7 +106,7 @@ def two_stage_agg(
     first_agg: Column,
     second_agg: Callable[[Column], Column],
     salt_from: str,
-    salts: int = DEFAULT_SALTS,
+    salts: int,
     out_col: str = "_agg",
 ) -> DataFrame:
     """Salted two-stage aggregation over a frame carrying a ``_hub`` flag.

@@ -5,6 +5,8 @@ differential testing, src/exp/test_intersection_algos.cpp:102-127)."""
 from __future__ import annotations
 
 import itertools
+import sys
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -21,16 +23,82 @@ def spark():
     yield s
 
 
-def cache_rdd_ids(spark) -> set:
-    """Ids of the persisted RDDs that never auto-release. Local
+def cache_snapshot(spark) -> set:
+    """What a call can leave cached for the session's lifetime: the
+    persisted RDDs that never auto-release, plus every CacheManager entry.
+    ``persist()`` registers an entry at once, while its RDD only appears
+    after the first action, so an entry alone is a leak too. Local
     checkpoints are reference-tracked by ContextCleaner (cleaned when the
-    frame is dropped), so only the CacheManager-backed kind counts: a
-    leak test compares this set before and after a call."""
+    frame is dropped) and count in neither. A leak test compares this set
+    before and after a call."""
     m = spark.sparkContext._jsc.getPersistentRDDs()
-    return {
-        k for k in m.keySet().toArray()
+    rdds = {
+        ("rdd", k) for k in m.keySet().toArray()
         if not m.get(k).rdd().isLocallyCheckpointed()
     }
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    ident = spark._jvm.java.lang.System.identityHashCode
+    return rdds | {("cached", ident(cached.apply(i))) for i in range(cached.size())}
+
+
+class Route:
+    """What the layout and salting planners decided inside a
+    ``forced_route`` block: one ``ships_state`` result per layout
+    decision, one ``decide_hub_salting`` result per skew probe."""
+
+    def __init__(self):
+        self.ships: list[bool] = []
+        self.plans: list = []
+
+    @property
+    def shuffled(self) -> bool:
+        return bool(self.ships) and not any(self.ships)
+
+    def salted(self, salts: int) -> bool:
+        return bool(self.plans) and all(
+            p is not None and p.salts == salts for p in self.plans
+        )
+
+
+@contextmanager
+def forced_route(shuffle: bool = False, salts: int | None = None):
+    """Force the iterative engines onto the shuffle layout and/or hub
+    salting of ``salts`` salts for the block, the only way either is
+    forced: by lowering the planners' module constants, which they read
+    at call time. Salting is decided on the shuffle layout only, so it
+    needs ``shuffle=True`` to engage. Yields a ``Route`` recording what
+    the planners decided, so a test can assert the route was taken (a
+    patch that no longer reaches the planner then fails)."""
+    # the spies patch loaded modules only, so every caller is loaded first
+    from graphsetintersection_spark.operators import hits, pagerank, relabel  # noqa: F401
+    from graphsetintersection_spark.operators import iterative
+    from graphsetintersection_spark.plans import skew
+
+    route = Route()
+    with pytest.MonkeyPatch.context() as m:
+        if shuffle:
+            m.setattr(iterative, "BROADCAST_STATE_MAX_VERTICES", -1)
+        if salts is not None:
+            for attr in ("SALT_MIN_ROWS", "SALT_MIN_MAX_DEG", "SALT_SKEW_FACTOR"):
+                m.setattr(skew, attr, 0)
+            m.setattr(skew, "DEFAULT_SALTS", salts)
+        for real, seen in (
+            (iterative.ships_state, route.ships),
+            (skew.decide_hub_salting, route.plans),
+        ):
+
+            def spy(*args, _real=real, _seen=seen, **kwargs):
+                _seen.append(_real(*args, **kwargs))
+                return _seen[-1]
+
+            # every library module holding the function, whether it
+            # imported it at load time or looks it up at call time
+            for name, mod in list(sys.modules.items()):
+                if name.startswith("graphsetintersection_spark") and (
+                    getattr(mod, real.__name__, None) is real
+                ):
+                    m.setattr(mod, real.__name__, spy)
+        yield route
 
 
 def random_graph(n_vertices: int, n_edges: int, seed: int) -> list[tuple[int, int]]:

@@ -3,7 +3,7 @@ reference's Org vs BP cross-checking of mc_num, src/mc.cpp:17-19)."""
 
 import pytest
 
-from tests.conftest import cache_rdd_ids, random_graph, undirected_simple
+from tests.conftest import cache_snapshot, random_graph, undirected_simple
 from tests.oracles import degeneracy_order
 
 from graphsetintersection_spark.operators.cliques import (
@@ -112,13 +112,13 @@ def test_degeneracy_distributed_releases_caches_when_a_wave_fails(
             raise RuntimeError("injected wave failure")
         return real(self, *args, **kwargs)
 
-    before = cache_rdd_ids(spark)
+    before = cache_snapshot(spark)
     monkeypatch.setattr(cls, "localCheckpoint", flaky)
     with pytest.raises(RuntimeError, match="injected"):
         degeneracy_order_distributed(df)
     monkeypatch.setattr(cls, "localCheckpoint", real)
     assert len(calls) == 3
-    leaked = cache_rdd_ids(spark) - before
+    leaked = cache_snapshot(spark) - before
     assert not leaked, f"degeneracy_order_distributed leaked caches: {leaked}"
 
 
@@ -322,11 +322,11 @@ def test_maximal_cliques_release_caches_when_a_step_fails(spark, monkeypatch):
         (relabel, "degree_order", failing_order, {}),
         (cls, "localCheckpoint", failing_checkpoint, {"order": order}),
     ):
-        before = cache_rdd_ids(spark)
+        before = cache_snapshot(spark)
         monkeypatch.setattr(target, attr, fake)
         with pytest.raises(RuntimeError, match="injected"):
             maximal_cliques(df, **kwargs)
         monkeypatch.undo()
-        leaked = cache_rdd_ids(spark) - before
+        leaked = cache_snapshot(spark) - before
         assert not leaked, f"{attr} failure leaked caches: {leaked}"
     assert cls.localCheckpoint is real

@@ -3,7 +3,12 @@
 
 import pytest
 
-from tests.conftest import cache_rdd_ids, random_graph, undirected_simple
+from tests.conftest import (
+    cache_snapshot,
+    forced_route,
+    random_graph,
+    undirected_simple,
+)
 
 from graphsetintersection_spark.operators.components import (
     connected_components_minlabel,
@@ -127,8 +132,9 @@ def test_components_resume(spark, tmp_path, engine):
 
 
 def test_minlabel_salted_parity_on_hub_graph(spark):
-    """Forced two-stage salted aggregation (plans.skew) must give the
-    exact same components as the plain aggregate on a Zipf-hub fixture."""
+    """Forced two-stage salted aggregation (plans.skew, on the shuffle
+    layout) must give the exact same components as the plain aggregate
+    on a Zipf-hub fixture."""
     from graphsetintersection_spark.operators.components import (
         connected_components_minlabel,
     )
@@ -136,8 +142,10 @@ def test_minlabel_salted_parity_on_hub_graph(spark):
     hub = [(0, i) for i in range(1, 200)]
     chain = [(i, i + 1) for i in range(200, 240)]
     df = spark.createDataFrame(hub + chain, "src long, dst long")
-    plain = connected_components_minlabel(df, salt_hubs=None)
-    salted = connected_components_minlabel(df, salt_hubs=8)
+    plain = connected_components_minlabel(df)
+    with forced_route(shuffle=True, salts=8) as route:
+        salted = connected_components_minlabel(df)
+    assert route.shuffled and route.salted(8)
     assert plain.converged and salted.converged
     a = sorted((r["v"], r["component"]) for r in plain.components.collect())
     b = sorted((r["v"], r["component"]) for r in salted.components.collect())
@@ -213,7 +221,7 @@ def test_failed_round_releases_caches(spark, tmp_path):
 
     pairs = [(u, v) for u, v in random_graph(60, 150, seed=17) if u != v]
     df = spark.createDataFrame(pairs, "src long, dst long")
-    before = cache_rdd_ids(spark)
+    before = cache_snapshot(spark)
     with pytest.raises(RuntimeError, match="commit failed"):
         connected_components_minlabel(
             df, checkpointer=_FailingCommit(str(tmp_path), "cc", "cc")
@@ -223,12 +231,15 @@ def test_failed_round_releases_caches(spark, tmp_path):
             df, fixed_rounds=False,
             checkpointer=_FailingCommit(str(tmp_path), "lpa", "lpa"),
         )
-    with pytest.raises(RuntimeError, match="commit failed"):
+    with forced_route(shuffle=True) as route, pytest.raises(
+        RuntimeError, match="commit failed"
+    ):
         pagerank(
-            df, broadcast_ranks=False, tol=None,
+            df, tol=None,
             checkpointer=_FailingCommit(str(tmp_path), "pr", "pagerank"),
         )
-    leaked = cache_rdd_ids(spark) - before
+    assert route.shuffled
+    leaked = cache_snapshot(spark) - before
     assert not leaked, f"leaked caches: {leaked}"
 
 

@@ -13,6 +13,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from tests.conftest import SF_TINY, forced_route
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -79,6 +80,18 @@ def test_query_matches_oracle(spark, name):
         f"{name}: {len(mismatches)} value mismatches; first: "
         f"spark={ns[mismatches[0]]} duck={nd[mismatches[0]]}"
     )
+
+
+def test_pagerank_kernel_gate_takes_the_shuffle_layout(spark):
+    """The ``pagerank_kernel`` gate lowers the layout cutover for its call,
+    so ``ships_state`` picks the shuffle layout, and restores it after."""
+    from graphsetintersection_spark.operators import iterative
+
+    cutover = iterative.BROADCAST_STATE_MAX_VERTICES
+    with forced_route() as route:  # forces nothing; records the decision
+        entry_mod.queries()["pagerank_kernel"](spark, SF_TINY).collect()
+    assert route.shuffled
+    assert iterative.BROADCAST_STATE_MAX_VERTICES == cutover
 
 
 def test_entry_smoke(spark):

@@ -4,7 +4,7 @@ cache hygiene."""
 import numpy as np
 import pytest
 
-from tests.conftest import cache_rdd_ids, random_graph
+from tests.conftest import cache_snapshot, forced_route, random_graph
 
 from graphsetintersection_spark.operators.hits import hits
 
@@ -62,16 +62,17 @@ def test_hits_known_star(spark):
 
 
 def test_hits_broadcast_shuffle_salted_parity(spark):
-    """All three execution paths must return identical scores."""
+    """All three execution paths must return identical scores: the
+    broadcast layout, the shuffle layout, and the shuffle layout with
+    both aggregation keys salted."""
     pairs = random_graph(200, 1500, seed=31)
     df = spark.createDataFrame(pairs, "src long, dst long")
     hub_exp, auth_exp = numpy_hits(pairs, iters=8)
-    for kwargs in (
-        {"broadcast_scores": True},
-        {"broadcast_scores": False, "salt_hubs": None},
-        {"broadcast_scores": False, "salt_hubs": 4},
-    ):
-        res = hits(df, max_iter=8, tol=None, **kwargs)
+    for force in ({}, {"shuffle": True}, {"shuffle": True, "salts": 4}):
+        with forced_route(**force) as route:
+            res = hits(df, max_iter=8, tol=None)
+        assert route.ships == [not force]
+        assert route.salted(4) == ("salts" in force)
         _assert_scores_allclose(res, hub_exp, auth_exp)
 
 
@@ -92,13 +93,14 @@ def test_hits_releases_caches(spark, tiny_graph):
     """The two stationary edge caches and the vertex cache are released
     when the call returns. Iteration snapshots are localCheckpoints —
     reference-tracked by ContextCleaner (cleaned when the frames drop),
-    so per the engine-wide convention (tests/test_dedup.py leak test)
-    only non-checkpoint persistent RDDs count as leaks."""
+    so per the engine-wide convention (``conftest.cache_snapshot``) only
+    CacheManager entries and non-checkpoint persistent RDDs count as
+    leaks."""
     _, df = tiny_graph
-    before = cache_rdd_ids(spark)
+    before = cache_snapshot(spark)
     res = hits(df, max_iter=4, tol=None)
     res.scores.count()
-    leaked = cache_rdd_ids(spark) - before
+    leaked = cache_snapshot(spark) - before
     assert not leaked, f"leaked non-checkpoint caches: {leaked}"
 
 
@@ -118,7 +120,7 @@ def test_hits_round_job_counts(spark):
     then runs one job fewer (once in six suite runs), so the max_iter=2
     count is the larger of two calls."""
     df = spark.createDataFrame(random_graph(200, 1500, seed=31), "src long, dst long")
-    kw = {"tol": None, "broadcast_scores": True}
+    kw = {"tol": None}  # 200 vertices: the broadcast layout
     two = max(_hits_jobs(spark, df, max_iter=2, **kw) for _ in range(2))
     six = _hits_jobs(spark, df, max_iter=6, **kw)
     assert two < 37

@@ -3,7 +3,7 @@ deterministic tie-break (max count, then min label)."""
 
 from collections import Counter
 
-from tests.conftest import random_graph
+from tests.conftest import forced_route, random_graph
 
 from graphsetintersection_spark.operators.labelprop import label_propagation
 
@@ -64,15 +64,18 @@ def test_lpa_fixpoint_on_two_cliques(spark):
 
 
 def test_lpa_salted_parity_on_hub_graph(spark):
-    """Forced salted two-stage counts must reproduce the deterministic LPA
-    labels exactly (sum of salted count partials == plain count)."""
+    """Forced salted two-stage counts (on the shuffle layout) must
+    reproduce the deterministic LPA labels exactly (sum of salted count
+    partials == plain count)."""
     from graphsetintersection_spark.operators.labelprop import label_propagation
 
     hub = [(0, i) for i in range(1, 150)]
     ring = [(i, (i + 1) % 30 + 200) for i in range(200, 230)]
     df = spark.createDataFrame(hub + ring, "src long, dst long")
-    plain = label_propagation(df, max_rounds=3, fixed_rounds=True, salt_hubs=None)
-    salted = label_propagation(df, max_rounds=3, fixed_rounds=True, salt_hubs=8)
+    plain = label_propagation(df, max_rounds=3, fixed_rounds=True)
+    with forced_route(shuffle=True, salts=8) as route:
+        salted = label_propagation(df, max_rounds=3, fixed_rounds=True)
+    assert route.shuffled and route.salted(8)
     a = sorted((r["v"], r["label"]) for r in plain.labels.collect())
     b = sorted((r["v"], r["label"]) for r in salted.labels.collect())
     assert a == b

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import random_graph, undirected_simple
+from tests.conftest import forced_route, random_graph, undirected_simple
 
 from graphsetintersection_spark.operators.pagerank import pagerank
 from graphsetintersection_spark.plans.checkpoint import CheckpointManager
@@ -90,11 +90,8 @@ _BAD_ARGS = [
     ("pagerank", {"max_iter": 2.5}),
     ("pagerank", {"tol": -1.0}),
     ("pagerank", {"tol": float("nan")}),
-    ("pagerank", {"salt_hubs": "bogus", "broadcast_ranks": False}),
-    ("pagerank", {"salt_hubs": -2, "broadcast_ranks": False}),
     ("personalized_pagerank", {"alpha": float("nan")}),
     ("personalized_pagerank", {"tol": -1.0}),
-    ("personalized_pagerank", {"salt_hubs": "bogus"}),
     ("pagerank_df_iterate", {"alpha": 1.5}),
     ("pagerank_df_iterate", {"max_iter": -3}),
     ("pagerank_df_iterate", {"tol": float("nan")}),
@@ -290,10 +287,9 @@ def test_ppr_shuffle_salted_path_parity(spark, tiny_graph):
     pairs, df = tiny_graph
     seeds_list = sorted({x for e in pairs for x in e})[:3]
     seeds = spark.createDataFrame([(s,) for s in seeds_list], "v long")
-    res = personalized_pagerank(
-        df, seeds, max_iter=20, tol=None,
-        broadcast_ranks=False, salt_hubs=4,
-    )
+    with forced_route(shuffle=True, salts=4) as route:
+        res = personalized_pagerank(df, seeds, max_iter=20, tol=None)
+    assert route.shuffled and route.salted(4)
     _assert_allclose(res.ranks, numpy_ppr(pairs, seeds_list, iters=20))
 
 
@@ -333,10 +329,14 @@ def test_pagerank_matches_previous_prepare(spark, tiny_graph, case):
             max_iter=8, tol=None,
         )
     else:
-        kw = {"shuffle": {"broadcast_ranks": False},
-              "shuffle_salted": {"broadcast_ranks": False, "salt_hubs": 4},
-              }.get(case, {})
-        res = pagerank(df, max_iter=8, tol=None, **kw)
+        # the salted case was recorded at 4 salts
+        force = {"shuffle": {"shuffle": True},
+                 "shuffle_salted": {"shuffle": True, "salts": 4},
+                 }.get(case, {})
+        with forced_route(**force) as route:
+            res = pagerank(df, max_iter=8, tol=None)
+        assert route.shuffled == (case != "pagerank")
+        assert route.salted(4) == (case == "shuffle_salted")
     _assert_matches(res.ranks, expected)
 
 

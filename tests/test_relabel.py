@@ -4,7 +4,12 @@ src/porder.cpp:471-495, metric :295-351)."""
 
 import pytest
 
-from tests.conftest import brute_triangles, cache_rdd_ids, random_graph
+from tests.conftest import (
+    brute_triangles,
+    cache_snapshot,
+    forced_route,
+    random_graph,
+)
 
 from graphsetintersection_spark.operators.relabel import (
     apply_order,
@@ -669,8 +674,12 @@ def test_bfs_levels_broadcast_equals_shuffle(spark):
     )
     df = spark.createDataFrame(pairs, "src long, dst long")
     root = pairs[0][0]
-    lv_b = _bfs_levels(df, root, 32, broadcast_state=True)
-    lv_s = _bfs_levels(df, root, 32, broadcast_state=False)
+    n = len({v for e in pairs for v in e})
+    with forced_route() as route:
+        lv_b = _bfs_levels(df, root, 32, n)
+    with forced_route(shuffle=True) as forced:
+        lv_s = _bfs_levels(df, root, 32, n)
+    assert route.ships == [True] and forced.shuffled
     got_b = {(r["v"], r["level"]) for r in lv_b.collect()}
     got_s = {(r["v"], r["level"]) for r in lv_s.collect()}
     assert got_b == got_s and got_b
@@ -693,7 +702,7 @@ def test_bfs_levels_job_count_per_level(spark):
             [(i, i + 1) for i in range(k)], "src long, dst long"
         )
         start = int(sched.nextJobId())
-        levels = _bfs_levels(df, 0, 64, broadcast_state=True)
+        levels = _bfs_levels(df, 0, 64, k + 1)
         used = int(sched.nextJobId()) - start
         assert {(r["v"], r["level"]) for r in levels.collect()} == {
             (i, i) for i in range(k + 1)
@@ -722,12 +731,12 @@ def test_bfs_orderings_release_caches_when_a_level_fails(spark, monkeypatch):
                 raise RuntimeError("injected level failure")
             return real(self, *args, **kwargs)
 
-        before = cache_rdd_ids(spark)
+        before = cache_snapshot(spark)
         monkeypatch.setattr(cls, "localCheckpoint", flaky)
         with pytest.raises(RuntimeError, match="injected"):
             fn(df)
         monkeypatch.setattr(cls, "localCheckpoint", real)
-        leaked = cache_rdd_ids(spark) - before
+        leaked = cache_snapshot(spark) - before
         assert not leaked, f"{fn.__name__} leaked caches: {leaked}"
 
 
@@ -819,9 +828,9 @@ def test_slashburn_releases_caches_when_a_round_fails(spark, monkeypatch):
         raise RuntimeError("injected round failure")
 
     df = spark.createDataFrame([(i, i + 1) for i in range(6)], "src long, dst long")
-    before = cache_rdd_ids(spark)
+    before = cache_snapshot(spark)
     monkeypatch.setattr(components, "connected_components_starcontraction", failing)
     with pytest.raises(RuntimeError, match="injected"):
         slashburn_order(df, k_div=1, k_cap=1)
-    leaked = cache_rdd_ids(spark) - before
+    leaked = cache_snapshot(spark) - before
     assert not leaked, f"slashburn_order leaked caches: {leaked}"

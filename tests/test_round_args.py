@@ -18,24 +18,18 @@ _FNS = {
 
 # Before the shared check, on the 4-edge graph below: hits(max_iter=2.5)
 # raised a TypeError after 13 jobs; tol=nan/-1.0 ran 95 jobs each and never
-# converged; salt_hubs="bogus" raised int()'s ValueError after 4 jobs (8 for
-# CC/LPA, after the prepare); salt_hubs=-2 ran silently (115 / 23 jobs); a
-# round count of -1 returned 0 rounds and 2.5 ran 3 / 3 / 2 rounds.
+# converged; a round count of -1 returned 0 rounds and 2.5 ran 3 / 3 / 2
+# rounds.
 _BAD_ARGS = [
     ("hits", {"max_iter": 2.5}),
     ("hits", {"tol": float("nan")}),
     ("hits", {"tol": -1.0}),
-    ("hits", {"broadcast_scores": False, "salt_hubs": "bogus"}),
-    ("hits", {"broadcast_scores": False, "salt_hubs": -2}),
-    ("cc_minlabel", {"salt_hubs": -2}),
     ("cc_minlabel", {"max_rounds": -1}),
     ("label_propagation", {"max_rounds": -1}),
     ("starcontraction", {"max_rounds": -1}),
     ("cc_minlabel", {"max_rounds": 2.5}),
     ("label_propagation", {"max_rounds": 2.5}),
     ("starcontraction", {"max_rounds": 2.5}),
-    ("cc_minlabel", {"salt_hubs": "bogus"}),
-    ("label_propagation", {"salt_hubs": "bogus"}),
     ("cc_auto", {"probe_rounds": -1}),
     ("cc_auto", {"max_rounds": 2.5}),
 ]

@@ -30,7 +30,7 @@ ROUTES = {
     "join": {"BROADCAST_ADJ_MAX_ENTRIES": -1},
     "hub_split": {
         "BROADCAST_ADJ_MAX_ENTRIES": -1,
-        "_hub_ratio_from_stats": lambda entries, mx, av: 0.3,
+        "hub_split_ratio": lambda entries, mx, av: 0.3,
     },
     "bsr": {"BITSET_MAX_BYTES": 0},
     "bitset": {},
