@@ -161,12 +161,15 @@ def lsh_ann_topk(
     (table, bucket) instead of a cross join — the scale path; recall is
     tuned by (n_planes ↓, n_tables ↑). Buckets carry ids only; the float
     vectors are joined back exactly once per side AFTER the candidate-pair
-    dedup, so a 16-table setup shuffles 1× the vector bytes, not 16×."""
-    qb = hyperplane_buckets(queries, n_planes, n_tables, seed=seed,
+    dedup, so a 16-table setup shuffles 1× the vector bytes, not 16×.
+    Both sides hash with the same planes, so the dimension is probed once,
+    on the candidates."""
+    dim = int(candidates.select(F.size(vec_col)).first()[0])
+    qb = hyperplane_buckets(queries, n_planes, n_tables, dim, seed,
                             id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("query_id"), "table", "bucket"
     )
-    cb = hyperplane_buckets(candidates, n_planes, n_tables, seed=seed,
+    cb = hyperplane_buckets(candidates, n_planes, n_tables, dim, seed,
                             id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("neighbor_id"), "table", "bucket"
     )

@@ -38,14 +38,20 @@ Execution strategy mirrors operators/pagerank.py:
   The hub round carries the auth scores, so the result is one projection
   of the last leaf; with ``tol`` the auth round carries the hub it read,
   so the stop test reads one leaf with no join. Each round is a
-  localCheckpoint leaf, released once the next exists.
+  localCheckpoint leaf, released once the next exists;
+- the norm is a literal: each half-step observes Σ s² on the raw vector
+  it returns (DataFrame.observe), the leaf's localCheckpoint fills it,
+  and the next half-step, the stop test and the final view read it (the
+  start vector is all 1s, Σ = n). A broadcast half-step is 2 Spark jobs
+  (the score broadcast and the leaf's localCheckpoint) and the final view
+  is 1, its localCheckpoint.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.operators.edges import (
@@ -64,16 +70,16 @@ class HITSResult:
     deltas: list = field(default_factory=list)
 
 
-def _l2_view(raw: DataFrame) -> DataFrame:
+def _l2_view(raw: DataFrame, ss) -> DataFrame:
     """L2-normalized VIEW over a total score vector (v, s, carried...),
-    one row per vertex, null s = no incident edges: the norm is a 1-row
-    broadcast folded into a lazy projection over the leaf, so no
-    half-step materializes its normalized form. Zeros/nulls add nothing
-    to the norm. The carried columns pass through."""
-    nm = raw.agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("_nm"))
-    return raw.crossJoin(F.broadcast(nm)).select(
+    one row per vertex, null s = no incident edges, given its Σ s²
+    ``ss`` (observed on the round that produced it): a lazy projection
+    over the leaf, so no half-step materializes its normalized form and
+    the norm costs no job. Zeros/nulls add nothing to the norm. The
+    carried columns pass through."""
+    return raw.select(
         "v",
-        (F.coalesce(F.col("s"), F.lit(0.0)) / F.col("_nm")).alias("s"),
+        (F.coalesce(F.col("s"), F.lit(0.0)) / F.sqrt(F.lit(ss))).alias("s"),
         *[c for c in raw.columns if c not in ("v", "s")],
     )
 
@@ -168,25 +174,36 @@ def hits(
             )
         return scores.drop("s").join(agg, "v", "left")
 
+    # Σ s² of the latest leaf: observed on the round that built it and
+    # filled by the driver's localCheckpoint of it; the start is all 1s
+    obs = None
+
+    def squares() -> float:
+        return obs.get["ss"] if obs is not None else float(n)
+
     def step(state: DataFrame, rnd: int, cache) -> DataFrame:
         """Even rounds: auth from the hub view (kept as ``hub_prev`` for
         the stop test). Odd rounds: hub from the auth view, kept as
         ``auth`` for the result."""
-        view = _l2_view(state)
+        nonlocal obs
+        view = _l2_view(state, squares())
         if rnd % 2 == 0:
             keep = [F.col("s").alias("hub_prev")] if tol is not None else []
             scores = view.select("v", "s", *keep)
-            return half_step(e_dst, scores, "src", "dst", plan_dst)
-        keep = ["hub_prev"] if tol is not None else []
-        scores = view.select("v", "s", F.col("s").alias("auth"), *keep)
-        return half_step(e_src, scores, "dst", "src", plan_src)
+            raw = half_step(e_dst, scores, "src", "dst", plan_dst)
+        else:
+            keep = ["hub_prev"] if tol is not None else []
+            scores = view.select("v", "s", F.col("s").alias("auth"), *keep)
+            raw = half_step(e_src, scores, "dst", "src", plan_src)
+        obs = Observation()
+        return raw.observe(obs, F.sum(F.col("s") * F.col("s")).alias("ss"))
 
     def stop(prev: DataFrame, new: DataFrame):
         """max |Δhub|, off the new leaf alone; auth rounds run no job."""
         if "auth" not in new.columns:
             return False, {}
         delta = float(
-            _l2_view(new)
+            _l2_view(new, squares())
             .agg(F.max(F.abs(F.col("s") - F.col("hub_prev"))))
             .collect()[0][0]
         )
@@ -268,7 +285,7 @@ def hits(
         )
         # the last round is a hub round: its leaf carries the auth scores
         scores = (
-            _l2_view(state)
+            _l2_view(state, squares())
             .select("v", F.col("s").alias("hub"), "auth")
             .localCheckpoint(eager=True)
         )

@@ -24,7 +24,14 @@ path):
               groupBy(dst) with no exchange (the cache is dst-partitioned):
               Σ rank/out_deg over src != dst rows, and the vertex's own
               state read off its self row, so the aggregate emits every
-              vertex and needs no finalize join
+              vertex and needs no finalize join. The dangling mass D is a
+              literal: each round observes Σ_{_dang} rank on the vector it
+              returns (DataFrame.observe), the driver's materialization of
+              that vector fills it, and the next round reads it. A round
+              is 2 Spark jobs (the rank broadcast and the leaf's
+              materialization); round 0 reads D off the prepare (the
+              dangling count) or off the PPR restart vector's checkpoint,
+              and only a restored leaf runs one aggregate for it
 Above the cutover (the shuffle path) edges carry out_deg, cached by src
 and src-sorted; each round exchanges the rank vector for the join and the
 contributions for the dst aggregation (salted two-stage when
@@ -50,7 +57,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graphsetintersection_spark.operators.edges import (
@@ -183,14 +190,17 @@ class PreparedDFGraph:
 
     ``verts`` is the vertex state: ``v`` and the no-out-edges flag
     ``_dang``, plus ``out_deg`` on the broadcast path (where the edge rows
-    do not carry it). ``e_deg`` is the cached edge table in the layout the
-    join strategy needs; on the broadcast path it holds one synthetic
-    (v, v) row per vertex, marked by src == dst (the prepare drops real
-    self-loops). ``unpersist()`` releases every cache the prepare made
-    (``_caches``)."""
+    do not carry it). ``n_dang`` counts the dangling vertices on the
+    broadcast path (round 0's dangling mass is n_dang/n) and is None on
+    the shuffle path, whose rounds take D from Σcontrib. ``e_deg`` is the
+    cached edge table in the layout the join strategy needs; on the
+    broadcast path it holds one synthetic (v, v) row per vertex, marked by
+    src == dst (the prepare drops real self-loops). ``unpersist()``
+    releases every cache the prepare made (``_caches``)."""
 
     verts: DataFrame
     n: int
+    n_dang: int | None
     e_deg: DataFrame
     broadcast_ranks: bool
     salt_s: int | None
@@ -218,7 +228,8 @@ def pagerank_df_prepare(edges: DataFrame) -> PreparedDFGraph:
     are repartitioned by dst and deduplicated on that partitioning (dst is
     a dedup key, so no further exchange) and cached; out-degree and the
     dangling flag are one per-src count over that cache, cached as the
-    vertex state. One count materializes both caches.
+    vertex state. One aggregate materializes both caches and counts the
+    dangling vertices.
 
     The shuffle path joins the out-degree onto the distinct edge rows
     instead: one union + aggregate gives the vertex set and out-degrees,
@@ -267,9 +278,10 @@ def _prepare_dst_layout(e, ids, n, cache) -> PreparedDFGraph:
         .agg(F.count(F.when(F.col("src") != F.col("dst"), 1)).alias("out_deg"))
         .withColumn("_dang", F.col("out_deg") == 0)
     )
-    if n:
-        verts.count()  # builds e_deg on the way
-    return PreparedDFGraph(verts, n, e_deg, True, None, (e_deg, verts))
+    n_dang = 0
+    if n:  # builds e_deg on the way
+        n_dang = verts.agg(F.count(F.when(F.col("_dang"), 1))).collect()[0][0]
+    return PreparedDFGraph(verts, n, n_dang, e_deg, True, None, (e_deg, verts))
 
 
 def _prepare_edge_out_deg(e, cache) -> PreparedDFGraph:
@@ -311,7 +323,7 @@ def _prepare_edge_out_deg(e, cache) -> PreparedDFGraph:
     e_deg = cache(e_deg.repartition("src").sortWithinPartitions("src"))
     if n:
         e_deg.count()  # materialize once
-    return PreparedDFGraph(verts, n, e_deg, False, salt_s, (verts, e_deg))
+    return PreparedDFGraph(verts, n, None, e_deg, False, salt_s, (verts, e_deg))
 
 
 def pagerank_df_iterate(
@@ -341,10 +353,15 @@ def pagerank_df_iterate(
     if teleport is not None:
         # vertex-aligned restart vector, materialized ONCE (it is joined
         # every iteration; localCheckpoint keeps the per-round plan a
-        # leaf and its blocks are reference-tracked for release)
+        # leaf and its blocks are reference-tracked for release). Its
+        # checkpoint job also observes Σ_{dang} p, the PPR start's
+        # dangling mass.
+        seeded = Observation()
         vp = (
             verts.join(teleport, "v", "left")
-            .select("v", F.coalesce(F.col("p"), F.lit(0.0)).alias("p"))
+            .select("v", F.coalesce(F.col("p"), F.lit(0.0)).alias("p"), "_dang")
+            .observe(seeded, _dangling_mass(F.col("p")))
+            .select("v", "p")
             .localCheckpoint(eager=True)
         )
 
@@ -358,10 +375,25 @@ def pagerank_df_iterate(
         carried = verts.columns[1:] if broadcast_ranks else []
         ranks = verts.select("v", F.lit(1.0 / n).alias("rank"), *carried)
 
-    body = _broadcast_round if broadcast_ranks else _shuffle_round
+    obs = None  # the last broadcast round's observed dangling mass
 
     def step(ranks: DataFrame, it: int, cache) -> DataFrame:
-        return body(prep, ranks, vp, alpha, teleport, cache)
+        nonlocal obs
+        if not broadcast_ranks:
+            return _shuffle_round(prep, ranks, vp, alpha, teleport, cache)
+        # D of the vector this round reads: observed when the driver
+        # materialized it, known without a job at round 0, and aggregated
+        # once from a restored leaf (None)
+        if obs is not None:
+            dm = obs.get["_dm"]
+        elif it == 0:
+            dm = seeded.get["_dm"] if teleport is not None else prep.n_dang / n
+        else:
+            dm = None
+        obs = Observation()
+        return _broadcast_round(prep, ranks, vp, alpha, teleport, dm).observe(
+            obs, _dangling_mass(F.col("rank"))
+        )
 
     def stop(ranks: DataFrame, new_ranks: DataFrame):
         delta = float(
@@ -386,15 +418,23 @@ def pagerank_df_iterate(
     return PageRankResult(ranks.select("v", "rank"), it, converged, deltas)
 
 
-def _broadcast_round(prep, ranks, vp, alpha, teleport, cache) -> DataFrame:
+def _dangling_mass(value):
+    """Σ ``value`` over the dangling (``_dang``) rows, 0.0 when there are
+    none: the aggregate a round observes and a restored leaf runs."""
+    return F.coalesce(
+        F.sum(F.when(F.col("_dang"), value)), F.lit(0.0)
+    ).alias("_dm")
+
+
+def _broadcast_round(prep, ranks, vp, alpha, teleport, dm) -> DataFrame:
     """BROADCAST ROUND: join-broadcast → one exchange-free dst aggregation
     → project. The self rows make the aggregation total (one row per
     vertex), and each self row joins its own vertex's broadcast row, so
     the group reads the vertex's carried state off it: no verts ⟕ contribs
-    finalize join. The dangling mass D = Σ_{outdeg=0} rank — the oracle's
-    own form — is one filter-aggregate over the previous rank leaf folded
-    in as a 1-row broadcast, so contribs is referenced exactly once: no
-    per-iteration transient cache."""
+    finalize join. The dangling mass ``dm`` = D = Σ_{outdeg=0} rank — the
+    oracle's own form — of the vector read is a literal (None: aggregate
+    it once here), so contribs is referenced exactly once: no
+    per-iteration transient cache and no scalar job."""
     verts, n = prep.verts, prep.n
     # attach the state the vector lacks: the PPR start has none, and a
     # restored snapshot may hold only (v, rank) or predate out_deg on the
@@ -404,6 +444,8 @@ def _broadcast_round(prep, ranks, vp, alpha, teleport, cache) -> DataFrame:
         ranks = ranks.select("v", *own).join(verts, "v")
     if teleport is not None and "p" not in ranks.columns:
         ranks = ranks.join(vp, "v")
+    if dm is None:
+        dm = ranks.agg(_dangling_mass(F.col("rank"))).collect()[0][0]
     is_self = F.col("src") == F.col("dst")
     carried = [c for c in ranks.columns if c not in ("v", "rank")]
     ranks_src = F.broadcast(ranks.withColumnRenamed("v", "src"))
@@ -417,21 +459,16 @@ def _broadcast_round(prep, ranks, vp, alpha, teleport, cache) -> DataFrame:
             *[F.max(F.when(is_self, F.col(c))).alias(c) for c in carried],
         )
     )
-    dm_df = ranks.where(F.col("_dang")).agg(
-        F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-    )
     if teleport is not None:
         restart = F.lit(1.0 - alpha) * F.col("p") + F.lit(alpha) * (
-            F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("_dm") * F.col("p")
+            F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dm) * F.col("p")
         )
     else:
         restart = F.lit((1.0 - alpha) / n) + F.lit(alpha) * (
             F.coalesce(F.col("contrib"), F.lit(0.0))
-            + F.col("_dm") / F.lit(float(n))
+            + F.lit(dm) / F.lit(float(n))
         )
-    return contribs.crossJoin(F.broadcast(dm_df)).select(
-        "v", restart.alias("rank"), *carried
-    )
+    return contribs.select("v", restart.alias("rank"), *carried)
 
 
 def _shuffle_round(prep, ranks, vp, alpha, teleport, cache) -> DataFrame:

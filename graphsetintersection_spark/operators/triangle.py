@@ -346,6 +346,17 @@ def _kernel_count(edges: DataFrame, acc_inter, acc_cmp) -> int:
             # there, explode the persisted adjacency instead (edge (a, b),
             # a < b ⇔ a ∈ lower-nbrs(b); guide §2.4: don't compute
             # things twice)
+            # NOTE (measured dead end): the cached branch is not free —
+            # ``orient`` re-runs a distinct shuffle of the edges. Streaming
+            # the persisted adjacency for cached inputs too took the
+            # perfbench triangle step (traced, seed 1, local[4]) from 8 to 7
+            # jobs and its shuffle from 1,015,151 to 450,454 B on
+            # lgraph_iterative and from 1,839,443 to 945,344 B on webgraph,
+            # but its warm wall rose on both (lgraph 0.49/0.56 s →
+            # 0.55/0.59 s, webgraph 0.62/0.69 s → 0.70/0.72 s over two
+            # interleaved reps). The fork stays until the adjacency
+            # stream is made as fast; its parallelism is the first suspect,
+            # not yet isolated.
             if edges.is_cached:
                 e_stream = e
             else:

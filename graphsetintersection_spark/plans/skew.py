@@ -147,8 +147,12 @@ def content_signature(df: DataFrame, *cols: str) -> tuple[int, int]:
     # at sf0.1 despite 46 → 36 jobs; minlabel flat) — the CollectMetrics
     # node sits in the round plan's codegen pipeline, and the separate
     # aggregate over the already-cached leaf it replaces was nearly free.
-    # The BFS level loop DOES use an observed row count (relabel.py),
-    # where it replaces a whole extra checkpoint, not just an aggregate.
+    # The scalars that ARE observed replace more than an aggregate over a
+    # cached leaf: the BFS level loop's row count (relabel.py) replaces a
+    # whole extra checkpoint, and PageRank's dangling mass and HITS's
+    # Σ s² (pagerank.py, hits.py) each replace an aggregate job plus a
+    # 1-row broadcast job per round. The signature stays an aggregate:
+    # the star contraction measured slower with it observed.
 
 
 def signature_stop(cols: tuple[str, ...], metrics):

@@ -41,6 +41,16 @@ def cache_snapshot(spark) -> set:
     return rdds | {("cached", ident(cached.apply(i))) for i in range(cached.size())}
 
 
+def jobs_run(spark, fn):
+    """(fn(), the number of Spark jobs it submitted): the scheduler's
+    next job id before and after the call, so jobs fn submits from worker
+    threads count too."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    start = int(sched.nextJobId())
+    out = fn()
+    return out, int(sched.nextJobId()) - start
+
+
 class Route:
     """What the layout and salting planners decided inside a
     ``forced_route`` block: one ``ships_state`` result per layout

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_TINY, cache_snapshot
+from tests.conftest import SF_TINY, cache_snapshot, jobs_run
 
 from graphsetintersection_spark.functions.dedup import (
     dedup_keep_first,
@@ -191,13 +191,10 @@ def test_minhash_lsh_pairs_job_count(spark, docs_with_dups):
     estimate prefilter) on a fixed corpus. Measured at 4 local cores: 31
     jobs with the row-form hashed-shingle verify, 22 with the one
     sorted-array verify."""
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    start = int(sched.nextJobId())
-    rows = minhash_lsh_pairs(
+    rows, used = jobs_run(spark, lambda: minhash_lsh_pairs(
         docs_with_dups, num_perm=128, bands=32, threshold=0.5,
         est_prefilter_sigmas=4.0,
-    ).collect()
-    used = int(sched.nextJobId()) - start
+    ).collect())
     assert len(rows) == 81
     assert used < 31
 

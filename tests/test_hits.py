@@ -4,7 +4,7 @@ cache hygiene."""
 import numpy as np
 import pytest
 
-from tests.conftest import cache_snapshot, forced_route, random_graph
+from tests.conftest import cache_snapshot, forced_route, jobs_run, random_graph
 
 from graphsetintersection_spark.operators.hits import hits
 
@@ -104,27 +104,23 @@ def test_hits_releases_caches(spark, tiny_graph):
     assert not leaked, f"leaked non-checkpoint caches: {leaked}"
 
 
-def _hits_jobs(spark, df, **kwargs) -> int:
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    start = int(sched.nextJobId())
-    hits(df, **kwargs)
-    return int(sched.nextJobId()) - start
-
-
 def test_hits_round_job_counts(spark):
-    """One driver round per half-step: the broadcast path's fixed cost
-    (setup, first and final rounds) stays below the hand-rolled loop's,
-    and each extra iteration costs no more than it did. Measured on this
-    graph at 4 local cores before the move to run_rounds: 37 jobs at
-    max_iter=2 and 32 more at max_iter=6; after: 33 and 32. A call now and
-    then runs one job fewer (once in six suite runs), so the max_iter=2
-    count is the larger of two calls."""
+    """One driver round per half-step, 2 jobs each on the broadcast path
+    (the score broadcast and the leaf's localCheckpoint): each half-step's
+    Σ s² is observed on the leaf it builds, so neither the next half-step
+    nor the final normalized view runs a norm aggregate. Measured on this
+    graph at 4 local cores, counting the result's count: 35 jobs at
+    max_iter=2 and 67 at max_iter=6 with the norm as an aggregate and a
+    1-row broadcast per view; 25 and 41 now."""
     df = spark.createDataFrame(random_graph(200, 1500, seed=31), "src long, dst long")
-    kw = {"tol": None}  # 200 vertices: the broadcast layout
-    two = max(_hits_jobs(spark, df, max_iter=2, **kw) for _ in range(2))
-    six = _hits_jobs(spark, df, max_iter=6, **kw)
-    assert two < 37
-    assert six - two <= 32
+
+    def jobs(max_iter):  # 200 vertices: the broadcast layout
+        return jobs_run(
+            spark, lambda: hits(df, max_iter=max_iter, tol=None).scores.count()
+        )[1]
+
+    assert jobs(2) == 25
+    assert jobs(6) == 41
 
 
 def test_hits_first_delta_from_normalized_uniform(spark, tiny_graph):

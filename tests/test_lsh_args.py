@@ -4,7 +4,7 @@ job starts (functions.dedup.check_lsh_args and its simhash twin)."""
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_TINY
+from tests.conftest import SF_TINY, jobs_run
 
 from graphsetintersection_spark.functions.dedup import (
     minhash_lsh_pairs,
@@ -72,8 +72,8 @@ _BAD_ARGS = [
 def test_bad_lsh_args_fail_before_any_job(spark, fn, kwargs):
     docs = read_table(spark, SF_TINY, "documents").where(F.col("doc_id") < 60)
     index = minhash_band_index(docs.where(F.col("doc_id") < 30), num_perm=64, bands=16)
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    start = int(sched.nextJobId())
-    with pytest.raises(ValueError):
-        _FNS[fn](docs, index, **kwargs)
-    assert int(sched.nextJobId()) == start
+    def fails():
+        with pytest.raises(ValueError):
+            _FNS[fn](docs, index, **kwargs)
+
+    assert jobs_run(spark, fails)[1] == 0

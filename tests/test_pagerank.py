@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import forced_route, random_graph, undirected_simple
+from tests.conftest import forced_route, jobs_run, random_graph, undirected_simple
 
 from graphsetintersection_spark.operators.pagerank import pagerank
 from graphsetintersection_spark.plans.checkpoint import CheckpointManager
@@ -115,12 +115,13 @@ def test_misconfigured_run_fails_before_any_job(spark, fn, kwargs):
     else:
         prep = pr.pagerank_df_prepare(df)
         call = lambda: pr.pagerank_df_iterate(prep, **kwargs)
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    start = int(sched.nextJobId())
-    try:
+
+    def fails():
         with pytest.raises(ValueError):
             call()
-        assert int(sched.nextJobId()) == start
+
+    try:
+        assert jobs_run(spark, fails)[1] == 0
     finally:
         if fn == "pagerank_df_iterate":
             prep.unpersist()
@@ -487,15 +488,24 @@ def test_checkpointed_stop_test_runs_each_round_once(spark, tmp_path):
     """With a stop test and a durable checkpoint, the stop test and the
     commit read one staged round: the checkpointed run costs at most one
     job per round more than the plain run (the snapshot write)."""
-    sc = spark.sparkContext
     df = spark.createDataFrame(random_graph(400, 3000, seed=5), "src long, dst long")
 
     def jobs(**kw):
-        start = int(sc._jsc.sc().dagScheduler().nextJobId())
-        res = pagerank(df, max_iter=6, tol=1e-12, **kw)
+        res, used = jobs_run(spark, lambda: pagerank(df, max_iter=6, tol=1e-12, **kw))
         assert res.iterations == 6 and not res.converged
-        return int(sc._jsc.sc().dagScheduler().nextJobId()) - start
+        return used
 
     plain = jobs()
     ck = CheckpointManager(str(tmp_path), "pr-staged", "pagerank")
     assert jobs(checkpointer=ck) <= plain + 6
+
+
+def test_pagerank_broadcast_round_job_count(spark):
+    """A broadcast round is 2 Spark jobs: the rank vector's broadcast and
+    the leaf's localCheckpoint. Its dangling mass is observed on the
+    round it reads, not aggregated and broadcast again (4 jobs a round
+    before)."""
+    df = spark.createDataFrame(random_graph(200, 1500, seed=31), "src long, dst long")
+    one = jobs_run(spark, lambda: pagerank(df, max_iter=1, tol=None))[1]
+    three = jobs_run(spark, lambda: pagerank(df, max_iter=3, tol=None))[1]
+    assert three - one == 4

@@ -8,6 +8,7 @@ from tests.conftest import (
     brute_triangles,
     cache_snapshot,
     forced_route,
+    jobs_run,
     random_graph,
 )
 
@@ -172,10 +173,8 @@ def test_rcm_order_job_count(spark):
     from graphsetintersection_spark.operators.relabel import rcm_order
 
     df = spark.createDataFrame(random_graph(200, 800, seed=1), "src long, dst long")
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    start = int(sched.nextJobId())
-    rcm_order(df)
-    assert int(sched.nextJobId()) - start <= 46
+    _, jobs = jobs_run(spark, lambda: rcm_order(df))
+    assert jobs <= 46
 
 
 def test_bfs_order_job_count(spark):
@@ -185,10 +184,8 @@ def test_bfs_order_job_count(spark):
     from graphsetintersection_spark.operators.relabel import bfs_order
 
     df = spark.createDataFrame(random_graph(200, 800, seed=1), "src long, dst long")
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    start = int(sched.nextJobId())
-    bfs_order(df)
-    assert int(sched.nextJobId()) - start <= 38
+    _, jobs = jobs_run(spark, lambda: bfs_order(df))
+    assert jobs <= 38
 
 
 def test_rcm_order_lowers_comp_ratio_on_band_graph(spark):
@@ -695,15 +692,11 @@ def test_bfs_levels_job_count_per_level(spark):
     run_rounds (21 jobs for the 4-edge chain, 37 for the 8-edge one)."""
     from graphsetintersection_spark.operators.relabel import _bfs_levels
 
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-
     def jobs(k):
         df = spark.createDataFrame(
             [(i, i + 1) for i in range(k)], "src long, dst long"
         )
-        start = int(sched.nextJobId())
-        levels = _bfs_levels(df, 0, 64, k + 1)
-        used = int(sched.nextJobId()) - start
+        levels, used = jobs_run(spark, lambda: _bfs_levels(df, 0, 64, k + 1))
         assert {(r["v"], r["level"]) for r in levels.collect()} == {
             (i, i) for i in range(k + 1)
         }
@@ -812,10 +805,8 @@ def test_driver_orderings_job_count(spark, fn):
     from graphsetintersection_spark.operators import relabel
 
     df = spark.createDataFrame(random_graph(200, 800, seed=1), "src long, dst long")
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    start = int(sched.nextJobId())
-    getattr(relabel, fn)(df)
-    assert int(sched.nextJobId()) - start <= DRIVER_ORDERING_JOBS[fn]
+    _, jobs = jobs_run(spark, lambda: getattr(relabel, fn)(df))
+    assert jobs <= DRIVER_ORDERING_JOBS[fn]
 
 
 def test_slashburn_releases_caches_when_a_round_fails(spark, monkeypatch):

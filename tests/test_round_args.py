@@ -4,6 +4,8 @@ Spark job starts (plans.checkpoint.check_round_args)."""
 
 import pytest
 
+from tests.conftest import jobs_run
+
 from graphsetintersection_spark.operators import components as cc
 from graphsetintersection_spark.operators.hits import hits
 from graphsetintersection_spark.operators.labelprop import label_propagation
@@ -42,9 +44,9 @@ _BAD_ARGS = [
 )
 def test_misconfigured_round_run_fails_before_any_job(spark, fn, kwargs):
     df = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    start = int(sched.nextJobId())
-    with pytest.raises(ValueError):
-        _FNS[fn](df, **kwargs)
-    assert int(sched.nextJobId()) == start
+    def fails():
+        with pytest.raises(ValueError):
+            _FNS[fn](df, **kwargs)
+
+    assert jobs_run(spark, fails)[1] == 0
 

@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_TINY
+from tests.conftest import SF_TINY, jobs_run
 
 from graphsetintersection_spark.functions.similarity import (
     cosine_topk_bruteforce,
@@ -73,6 +73,17 @@ def test_lsh_ann_recall(spark, vecs, oracle):
         len(got.get(qid, set()) & set(topk[qid])) / K for qid in topk
     ]
     assert sum(recalls) / len(recalls) >= 0.5
+
+
+def test_lsh_ann_topk_probes_the_dimension_once(spark, vecs):
+    """Both sides hash with one set of planes, so building the ANN frame
+    runs one job, the candidates' dimension probe (one probe per side
+    before)."""
+    q = vecs.where(F.col("vec_id") < N_QUERIES)
+    _, jobs = jobs_run(
+        spark, lambda: lsh_ann_topk(q, vecs, k=K, n_planes=4, n_tables=16)
+    )
+    assert jobs == 1
 
 
 def test_embedding_neardup_pairs_precision(spark, vecs, oracle):

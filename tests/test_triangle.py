@@ -13,7 +13,7 @@ from contextlib import contextmanager
 
 import pytest
 
-from tests.conftest import brute_triangles, random_graph
+from tests.conftest import brute_triangles, jobs_run, random_graph
 from tests.oracles import triangle_count_join
 
 from graphsetintersection_spark.operators import triangle as T
@@ -327,7 +327,6 @@ def test_triangle_default_route_job_count(spark):
     7 jobs."""
     pairs = random_graph(250, 2500, seed=11)
     df = spark.createDataFrame(pairs, "src long, dst long")
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    start = int(sched.nextJobId())
-    assert triangle_count_kernel(df) == brute_triangles(pairs)
-    assert int(sched.nextJobId()) - start <= 7
+    count, jobs = jobs_run(spark, lambda: triangle_count_kernel(df))
+    assert count == brute_triangles(pairs)
+    assert jobs <= 7
