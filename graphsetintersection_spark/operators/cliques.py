@@ -57,20 +57,26 @@ def degeneracy_order_distributed(
     degeneracy and every vertex's later-ordered neighbors number ≤
     degeneracy (the bound BK-degeneracy relies on). Reference semantics:
     the bucket-queue peel of src/org_maximal_clique.cpp:316-370, re-run as
-    an iterative DataFrame job (per round: one degree aggregate + two
+    an iterative DataFrame job (per round: one degree aggregate, the
+    wave stamped on the peeled vertices of one (v, wave) frame, two
     anti-joins, lineage truncated). Round count = number of distinct peel
     waves (tens on web-shaped graphs; worst case O(V) on paths — cap with
     ``max_rounds``, leftovers are appended in degree order).
 
     Final dense ranks come from the two-phase distributed assign over
-    (wave, v)."""
+    (wave, v), read off that one frame, so its plan does not grow with
+    the wave count."""
     from graphsetintersection_spark.operators.edges import vertices
     from graphsetintersection_spark.plans.assign import global_order_stats
 
     und = symmetrize(canonicalize(edges))
-    remaining = vertices(und).localCheckpoint(eager=True)
+    # one checkpointed per-wave frame: every vertex and the wave that
+    # peeled it (null while it remains), so the frame the final ranking
+    # reads is one leaf whatever the wave count
+    peeled = vertices(und).select(
+        "v", F.lit(None).cast("int").alias("wave")
+    ).localCheckpoint(eager=True)
     cur = und.localCheckpoint(eager=True)
-    waves: DataFrame | None = None
     degeneracy = 0
     wave = 0
     deg = None
@@ -79,7 +85,7 @@ def degeneracy_order_distributed(
     try:
         while wave < max_rounds:
             deg = (
-                remaining.join(
+                peeled.where(F.col("wave").isNull()).join(
                     cur.groupBy(F.col("src").alias("v")).agg(
                         F.count("*").alias("d")
                     ),
@@ -94,39 +100,42 @@ def degeneracy_order_distributed(
                 break
             dmin = int(row["m"])
             degeneracy = max(degeneracy, dmin)
-            peel = deg.where(F.col("d") == dmin).select("v").localCheckpoint(
-                eager=True
+            old_peeled, old_cur = peeled, cur
+            peeled = (
+                peeled.join(
+                    deg.where(F.col("d") == dmin).select(
+                        "v", F.lit(wave).alias("_now")
+                    ),
+                    "v",
+                    "left",
+                )
+                .select("v", F.coalesce("wave", "_now").alias("wave"))
+                .localCheckpoint(eager=True)
             )
-            w_df = peel.withColumn("wave", F.lit(wave))
-            waves = w_df if waves is None else waves.unionByName(w_df)
-            old_remaining, old_cur = remaining, cur
-            remaining = remaining.join(peel, "v", "left_anti").localCheckpoint(
-                eager=True
-            )
+            peel = peeled.where(F.col("wave") == wave).select("v")
             cur = (
                 cur.join(peel.withColumnRenamed("v", "src"), "src", "left_anti")
                 .join(peel.withColumnRenamed("v", "dst"), "dst", "left_anti")
                 .select("src", "dst")
                 .localCheckpoint(eager=True)
             )
-            # previous wave's remaining/cur snapshots are superseded; the
-            # peel frames stay — `waves` references every wave's rows
-            # until the end
-            old_remaining.unpersist()
+            # the previous wave's snapshots are superseded
+            old_peeled.unpersist()
             old_cur.unpersist()
             deg.unpersist()
             wave += 1
-        # cap hit: leftovers appended as one final wave (degree-order family)
-        leftover = remaining.withColumn("wave", F.lit(wave))
-        waves = leftover if waves is None else waves.unionByName(leftover)
+        # cap hit: leftovers are ranked as one final wave (degree-order
+        # family)
         order = global_order_stats(
-            waves, [F.col("wave").asc(), F.col("v").asc()], rank_col="rank"
+            peeled.select("v", F.coalesce("wave", F.lit(wave)).alias("wave")),
+            [F.col("wave").asc(), F.col("v").asc()],
+            rank_col="rank",
         ).select("v", "rank")
     finally:
         # global_order_stats materialized its own cache; drop the peel state
         if deg is not None:
             deg.unpersist()
-        remaining.unpersist()
+        peeled.unpersist()
         cur.unpersist()
     return order, degeneracy
 

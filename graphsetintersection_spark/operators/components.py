@@ -66,19 +66,12 @@ def cc_minlabel_round(prep, labels):
     from graphsetintersection_spark.operators.iterative import state_join
     from graphsetintersection_spark.plans.skew import two_stage_agg
 
-    joined = state_join(prep, labels)
-    if prep.salt_plan is not None:
-        return two_stage_agg(
-            joined.withColumnRenamed("dst", "v"),
-            ["v"],
-            F.min("component"),
-            F.min,
-            salt_from="src",
-            salts=prep.salt_plan.salts,
-            out_col="component",
-        )
-    return joined.groupBy(F.col("dst").alias("v")).agg(
-        F.min("component").alias("component")
+    return two_stage_agg(
+        state_join(prep, labels),
+        [F.col("dst").alias("v")],
+        {"component": (F.min("component"), F.min)},
+        "src",
+        prep.plan,
     )
 
 
@@ -106,7 +99,7 @@ def connected_components_minlabel(
     try:
         labels, rounds, converged, _ = run_rounds(
             prep.verts.select("v", F.col("v").alias("component")),
-            lambda labels, rnd, cache: cc_minlabel_round(prep, labels),
+            lambda labels, rnd: cc_minlabel_round(prep, labels),
             max_rounds,
             signature_stop(
                 ("v", "component"), lambda old, new: {"changed": old != new}
@@ -175,7 +168,7 @@ def connected_components_starcontraction(
         .localCheckpoint(eager=True)
     )
 
-    def step(pairs: DataFrame, rnd: int, cache) -> DataFrame:
+    def step(pairs: DataFrame, rnd: int) -> DataFrame:
         # large-star operates on symmetric neighborhoods (Kiveris alg. 2);
         # its output edges always point larger→smaller, which is exactly
         # the orientation small-star consumes (alg. 3). The initial pairs

@@ -43,33 +43,6 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     return edges.select("src", "dst").union(rev).distinct()
 
 
-def symmetrize_partitioned(
-    edges: DataFrame, self_pairs: DataFrame, key: str = "dst"
-) -> DataFrame:
-    """Symmetrized canonical view hash-partitioned by ``key`` in ONE
-    shuffle: cast/null/self-loop-filter both directions, union,
-    repartition by ``key``, then ``dropDuplicates`` — which runs WITHOUT a
-    further exchange because HashPartitioning(key) already clusters equal
-    (src, dst) rows (key ∈ {src, dst} is a subset of the dedup keys), and
-    it subsumes ``canonicalize``'s distinct. The Catalyst-visible output
-    partitioning is the point: iterative operators cache this frame once
-    and every per-round join or aggregation keyed on ``key`` reuses it,
-    so the multi-GB edge side is shuffled once per RUN instead of once
-    per ROUND (``symmetrize(canonicalize(e))`` + per-round joins was
-    re-exchanging it every iteration).
-
-    ``self_pairs`` (its first column holds vertex ids) adds one synthetic
-    (v, v) row per id — real self-loops were filtered above, so src == dst
-    unambiguously marks them downstream. Iterative rounds use them to fold
-    a vertex's OWN state into the per-dst aggregation (min includes own
-    label; counts skip them via src != dst), with no finalize join."""
-    e = drop_nulls_and_loops(edges)
-    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    v = F.col(self_pairs.columns[0]).cast("long")
-    und = e.union(rev).union(self_pairs.select(v.alias("src"), v.alias("dst")))
-    return und.repartition(key).dropDuplicates()
-
-
 def orient(edges: DataFrame) -> DataFrame:
     """Canonical undirected orientation: one row per undirected edge with
     ``src < dst`` (reference keeps u<v edges as the triangle iteration list,

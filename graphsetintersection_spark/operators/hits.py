@@ -10,34 +10,31 @@ use cases the north rule's Common-Crawl corpus exists for.
 
 Execution strategy mirrors operators/pagerank.py:
 
-- the input is cleaned once (``drop_nulls_and_loops``) and the edge table
-  is cached TWICE, hash-partitioned by ``dst`` and by ``src`` and
-  deduplicated on that partitioning (no further exchange) — HITS
-  aggregates alternately on both keys, and a stationary
-  correctly-partitioned cache per key is what keeps the rounds
-  exchange-free (the iterative-graph discipline of
-  operators/iterative.py);
-- the layout is ``operators.iterative.ships_state``'s, asked with the
-  vertex count; no option picks it. Below the ~10M-vertex cutover the
-  score vectors are BROADCAST each half-step and the matching edge
-  cache makes the aggregation exchange-free: zero per-iteration
-  shuffle. Both caches carry one synthetic (v, v) row per vertex
-  (src == dst marks them), so each half-step aggregation emits every
-  vertex and its L2 norm is a lazy view over the one materialized raw
-  vector;
-- above it, the scores shuffle into a sort-merge join against the
-  pre-sorted opposite cache and the aggregation is the one exchange per
-  half-step, with the shared salted two-stage aggregation
-  (plans/skew.two_stage_agg) engaged per aggregation key when
-  ``decide_hub_salting``'s probe sees that key's degree distribution
-  Zipf-skewed at scale; the sparse result is left-joined onto the
-  previous round's normalized view, which is total;
+- the input is cleaned once (``drop_nulls_and_loops``) and
+  ``operators.iterative.stationary_edges`` caches the edge table TWICE,
+  once per aggregation key (auth sums on dst, hub on src), deduplicated
+  on its partitioning and carrying one synthetic (v, v) row per vertex
+  (src == dst marks them) — a stationary cache per key is what keeps
+  the edge side put while only scores move;
+- every half-step has one form: ``state_join`` of the normalized score
+  view onto the key's cache, then one ``plans.skew.two_stage_agg`` call
+  that sums the other side's score over src ≠ dst rows and reads the
+  carried columns off the self rows, so it emits every vertex. The
+  layout is ``operators.iterative.ships_state``'s, asked with the vertex
+  count, and picks only the join hint and the caches' partitioning:
+  below the ~10M-vertex cutover the scores are BROADCAST onto caches
+  partitioned by their aggregation key (zero per-iteration shuffle);
+  above it they are exchanged into a sort-merge join against caches
+  partitioned and sorted by the join key, and the aggregation is salted
+  two-stage when ``decide_hub_salting``'s probe sees that key's degree
+  distribution Zipf-skewed at scale;
 - the loop is ``plans.checkpoint.run_rounds``, one round per half-step
   (auth on even rounds, hub on odd ones). The state is the raw total
   score vector (v, s[, carried]), normalized by the lazy ``_l2_view``.
-  The hub round carries the auth scores, so the result is one projection
-  of the last leaf; with ``tol`` the auth round carries the hub it read,
-  so the stop test reads one leaf with no join. Each round is a
+  The last hub round carries the auth scores (with ``tol``, every hub
+  round, as any may be the last), so the result is one projection of the
+  last leaf; with ``tol`` the auth round carries the hub it read, so the
+  stop test reads one leaf with no join. Each round is a
   localCheckpoint leaf, released once the next exists;
 - the norm is a literal: each half-step observes Σ s² on the raw vector
   it returns (DataFrame.observe), the leaf's localCheckpoint fills it,
@@ -58,8 +55,12 @@ from graphsetintersection_spark.operators.edges import (
     drop_nulls_and_loops,
     vertices,
 )
-from graphsetintersection_spark.operators.iterative import ships_state
+from graphsetintersection_spark.operators.iterative import (
+    state_join,
+    stationary_edges,
+)
 from graphsetintersection_spark.plans.checkpoint import check_round_args, run_rounds
+from graphsetintersection_spark.plans.skew import two_stage_agg
 
 
 @dataclass
@@ -99,169 +100,94 @@ def hits(
     skew (``decide_hub_salting``) and salted two-stage when the probe
     finds Zipf hubs at scale."""
     check_round_args("hits", "max_iter", max_iter, tol, minimum=1)
-    spark = edges.sparkSession
-    # transient cache for the SETUP phase only: the filtered edge frame
-    # feeds the vertex count, up to two skew probes, and both stationary
-    # cache builds — uncached that is four full scans of the raw edge
-    # table (the 100 TB input) instead of one. An input the caller
-    # already cached/checkpointed needs no second copy (same check as
-    # pagerank_df_prepare). Released once the two per-key caches hold
-    # their own copies, which also deduplicate.
+    # transient cache of the filtered input: it feeds the vertex count
+    # and both stationary cache builds — uncached that is three full
+    # scans of the raw edge table (the 100 TB input) instead of one. An
+    # input the caller already cached/checkpointed needs no second copy
+    # (same check as pagerank_df_prepare). On the broadcast layout the
+    # first two half-steps build the caches, so it is held until then.
     e = drop_nulls_and_loops(edges)
     if not edges.is_cached:
         e = e.persist()
     verts = vertices(e).persist()
+    preps = []
+    # try/finally: an exception anywhere must not leave the two edge
+    # caches (multi-GB at corpus scale) or the vertex cache registered
+    # for the session lifetime; blocking drops, because a back-to-back
+    # rerun (bench repeats, retries) would otherwise build its caches
+    # while these blocks are still being released.
     try:
         n = verts.count()
-    except BaseException:
-        # the rounds' try/finally below is not entered yet
-        verts.unpersist()
-        e.unpersist()
-        raise
-    if n == 0:
-        empty = spark.createDataFrame([], "v long, hub double, auth double")
-        verts.unpersist()
-        e.unpersist()
-        return HITSResult(empty, 0, True)
-    broadcast_scores = ships_state(n)
+        if n == 0:
+            empty = edges.sparkSession.createDataFrame(
+                [], "v long, hub double, auth double"
+            )
+            return HITSResult(empty, 0, True)
+        # one stationary cache per aggregation key: auth sums over
+        # in-edges (dst), hub over out-edges (src)
+        preps = stationary_edges(e, verts, n, ("dst", "src"))
+        by_dst, by_src = preps
 
-    from graphsetintersection_spark.plans.skew import (
-        decide_hub_salting,
-        mark_hubs,
-        two_stage_agg,
-    )
-
-    # e_dst/e_src alias the setup cache until reassigned below, so the
-    # finally at the bottom releases whatever exists at ANY failure point
-    # (repeat unpersists are idempotent no-ops)
-    e_dst = e
-    e_src = e
-
-    def half_step(edge_cache, scores, join_key, agg_key, plan):
-        """Σ over incident edges of the other side's score, grouped on
-        ``agg_key``: the normalized view (v, s, carried...) in, the next
-        raw total vector (v, s, carried...) out. On the broadcast path the
-        synthetic (v, v) self rows make the aggregation total: the src ≠
-        dst guard drops their score and the carried columns are read off
-        them. The shuffle path exchanges only (v, s) and left-joins the
-        sparse aggregate onto the view, which is total."""
-        cols = scores.columns if broadcast_scores else ["v", "s"]
-        sc = scores.select(*cols).withColumnRenamed("v", join_key)
-        if broadcast_scores:
+        def half_step(g, scores):
+            """Σ over incident edges of the other side's score, grouped on
+            ``g.agg``: the normalized view (v, s, carried...) in, the next
+            raw total vector (v, s, carried...) out. The synthetic (v, v)
+            self rows make the aggregation total: the src ≠ dst guard
+            drops their score and the carried columns are read off
+            them."""
             is_self = F.col("src") == F.col("dst")
-            return (
-                edge_cache.join(F.broadcast(sc), join_key)
-                .groupBy(F.col(agg_key).alias("v"))
-                .agg(
-                    F.sum(F.when(~is_self, F.col("s"))).alias("s"),
-                    *[F.max(F.when(is_self, F.col(c))).alias(c) for c in cols[2:]],
-                )
+            return two_stage_agg(
+                state_join(g, scores),
+                [F.col(g.agg).alias("v")],
+                {
+                    "s": (F.sum(F.when(~is_self, F.col("s"))), F.sum),
+                    **{
+                        c: (F.max(F.when(is_self, F.col(c))), F.max)
+                        for c in scores.columns[2:]
+                    },
+                },
+                g.join,
+                g.plan,
             )
-        joined = edge_cache.join(sc, join_key)
-        if plan is not None:
-            agg = two_stage_agg(
-                joined.withColumnRenamed(agg_key, "v"),
-                ["v"],
-                F.sum("s"),
-                F.sum,
-                salt_from=join_key,
-                salts=plan.salts,
-                out_col="s",
+
+        # Σ s² of the latest leaf: observed on the round that built it and
+        # filled by the driver's localCheckpoint of it; the start is all 1s
+        obs = None
+
+        def squares() -> float:
+            return obs.get["ss"] if obs is not None else float(n)
+
+        def step(state: DataFrame, rnd: int) -> DataFrame:
+            """Even rounds: auth from the hub view (kept as ``hub_prev``
+            for the stop test). Odd rounds: hub from the auth view, which
+            the last one keeps as ``auth`` for the result."""
+            nonlocal obs
+            if rnd == 2:
+                e.unpersist()  # half-steps 0 and 1 built both caches off it
+            view = _l2_view(state, squares())
+            if rnd % 2 == 0:
+                keep = [F.col("s").alias("hub_prev")] if tol is not None else []
+                raw = half_step(by_dst, view.select("v", "s", *keep))
+            else:
+                # the result reads auth off the last hub leaf; with tol any
+                # hub round may be the last
+                last = tol is not None or rnd == 2 * max_iter - 1
+                auth = [F.col("s").alias("auth")] if last else []
+                keep = ["hub_prev"] if tol is not None else []
+                raw = half_step(by_src, view.select("v", "s", *auth, *keep))
+            obs = Observation()
+            return raw.observe(obs, F.sum(F.col("s") * F.col("s")).alias("ss"))
+
+        def stop(prev: DataFrame, new: DataFrame):
+            """max |Δhub|, off the new leaf alone; auth rounds run no job."""
+            if "auth" not in new.columns:
+                return False, {}
+            delta = float(
+                _l2_view(new, squares())
+                .agg(F.max(F.abs(F.col("s") - F.col("hub_prev"))))
+                .collect()[0][0]
             )
-        else:
-            agg = joined.groupBy(F.col(agg_key).alias("v")).agg(
-                F.sum("s").alias("s")
-            )
-        return scores.drop("s").join(agg, "v", "left")
-
-    # Σ s² of the latest leaf: observed on the round that built it and
-    # filled by the driver's localCheckpoint of it; the start is all 1s
-    obs = None
-
-    def squares() -> float:
-        return obs.get["ss"] if obs is not None else float(n)
-
-    def step(state: DataFrame, rnd: int, cache) -> DataFrame:
-        """Even rounds: auth from the hub view (kept as ``hub_prev`` for
-        the stop test). Odd rounds: hub from the auth view, kept as
-        ``auth`` for the result."""
-        nonlocal obs
-        view = _l2_view(state, squares())
-        if rnd % 2 == 0:
-            keep = [F.col("s").alias("hub_prev")] if tol is not None else []
-            scores = view.select("v", "s", *keep)
-            raw = half_step(e_dst, scores, "src", "dst", plan_dst)
-        else:
-            keep = ["hub_prev"] if tol is not None else []
-            scores = view.select("v", "s", F.col("s").alias("auth"), *keep)
-            raw = half_step(e_src, scores, "dst", "src", plan_src)
-        obs = Observation()
-        return raw.observe(obs, F.sum(F.col("s") * F.col("s")).alias("ss"))
-
-    def stop(prev: DataFrame, new: DataFrame):
-        """max |Δhub|, off the new leaf alone; auth rounds run no job."""
-        if "auth" not in new.columns:
-            return False, {}
-        delta = float(
-            _l2_view(new, squares())
-            .agg(F.max(F.abs(F.col("s") - F.col("hub_prev"))))
-            .collect()[0][0]
-        )
-        return delta < tol, {"delta": delta}
-
-    # try/finally: an exception anywhere in the rounds must not leave the
-    # two edge caches (multi-GB at corpus scale) or the vertex cache
-    # registered for the session lifetime; blocking drops, because a
-    # back-to-back rerun (bench repeats, retries) would otherwise build
-    # its caches while these blocks are still being released
-    # (PreparedDFGraph.unpersist documents the same hazard).
-    try:
-        # per-aggregation-key salting plans (shuffle path only —
-        # broadcast rounds aggregate on the cache's own partitioning, no
-        # skewed exchange exists to protect)
-        plan_dst = plan_src = None
-        if not broadcast_scores:
-            plan_dst = decide_hub_salting(e, "dst")
-            plan_src = decide_hub_salting(e, "src")
-
-        # two stationary caches — one per aggregation key. Broadcast
-        # rounds aggregate ON the partitioning key (exchange-free);
-        # shuffle rounds sort-merge-join on the OPPOSITE key, so that
-        # path also pre-sorts.
-        if plan_dst is not None:
-            e_dst = mark_hubs(e_dst, "dst", plan_dst)
-        if plan_src is not None:
-            e_src = mark_hubs(e_src, "src", plan_src)
-        # each cache deduplicates on its own partitioning: the partition
-        # key is a dedup key, so the dedup adds no exchange
-        if broadcast_scores:
-            # synthetic self rows → total (one-row-per-vertex) half-step
-            # aggregations: no verts ⟕ raw finalize join and no separate
-            # normalized-vector materialization per half-step (guide §2.4)
-            diag = verts.select(F.col("v").alias("src"), F.col("v").alias("dst"))
-            e_dst = e_dst.unionByName(diag).repartition("dst").dropDuplicates()
-            e_src = e_src.unionByName(diag).repartition("src").dropDuplicates()
-        else:
-            e_dst = (
-                e_dst.repartition("src").dropDuplicates()
-                .sortWithinPartitions("src")
-            )
-            e_src = (
-                e_src.repartition("dst").dropDuplicates()
-                .sortWithinPartitions("dst")
-            )
-        e_dst, e_src = e_dst.persist(), e_src.persist()
-        # materialize the two stationary caches CONCURRENTLY: the builds
-        # are independent jobs over the same setup cache, and submitting
-        # them from one thread would serialize two shuffle latencies
-        # (Spark job submission is thread-safe; the cluster schedules
-        # both at once)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [pool.submit(e_dst.count), pool.submit(e_src.count)]:
-                f.result()
-        e.unpersist()  # the per-key caches are self-contained from here
+            return delta < tol, {"delta": delta}
 
         # NOTE (r6): deferring the per-half-step localCheckpoint to a
         # periodic barrier (lazy transient caches in between, checkpoint
@@ -295,5 +221,5 @@ def hits(
     finally:
         verts.unpersist(blocking=True)
         e.unpersist()
-        e_dst.unpersist(blocking=True)
-        e_src.unpersist(blocking=True)
+        for g in preps:
+            g.edges.unpersist(blocking=True)

@@ -60,26 +60,19 @@ def lpa_round(prep, labels: DataFrame) -> DataFrame:
     per-v argmax both reuse the dst partitioning.
 
     The prepared frame's synthetic (v, v) rows vote with COUNT ZERO —
-    ``count(src != v)`` — so a vertex's own label enters every argmax as
+    ``count(src != dst)`` — so a vertex's own label enters every argmax as
     the (0, own) floor: real neighbor votes (cnt ≥ 1) always beat it, and
     a vertex with no neighbors keeps its label. The round emits one row
     per vertex straight off the aggregate."""
     from graphsetintersection_spark.operators.iterative import state_join
 
-    nbr_labels = state_join(prep, labels).withColumnRenamed("dst", "v")
-    first = F.count(F.when(F.col("src") != F.col("v"), F.lit(1)))
-    if prep.salt_plan is not None:
-        counts = two_stage_agg(
-            nbr_labels,
-            ["v", "label"],
-            first,
-            F.sum,
-            salt_from="src",
-            salts=prep.salt_plan.salts,
-            out_col="cnt",
-        )
-    else:
-        counts = nbr_labels.groupBy("v", "label").agg(first.alias("cnt"))
+    counts = two_stage_agg(
+        state_join(prep, labels),
+        [F.col("dst").alias("v"), "label"],
+        {"cnt": (F.count(F.when(F.col("src") != F.col("dst"), F.lit(1))), F.sum)},
+        "src",
+        prep.plan,
+    )
     # argmax with (cnt desc, label asc) tie-break as ONE combinable
     # aggregate: max over struct(cnt, -label) — labels are non-negative
     # vertex ids, so -label inverts the order safely in int64
@@ -109,7 +102,7 @@ def label_propagation(
     try:
         labels, rounds, converged, _ = run_rounds(
             prep.verts.select("v", F.col("v").alias("label")),
-            lambda labels, rnd, cache: lpa_round(prep, labels),
+            lambda labels, rnd: lpa_round(prep, labels),
             max_rounds,
             None if fixed_rounds else signature_stop(
                 ("v", "label"), lambda old, new: {"changed": old != new}

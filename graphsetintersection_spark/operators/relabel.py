@@ -173,21 +173,28 @@ def hub_degree_threshold(deg: DataFrame, deg_ratio: float) -> int | None:
 
     ``deg`` is any frame with a ``deg`` column. Returns None for an empty
     frame."""
-    hist = (
-        deg.groupBy("deg")
-        .agg(F.sum("deg").cast("long").alias("s"))
-        .collect()
-    )
+    return _degree_threshold(_degree_histogram(deg), deg_ratio)
+
+
+def _degree_histogram(deg: DataFrame) -> list[tuple[int, int]]:
+    """(degree, Σ degree) per distinct value of ``deg``'s ``deg`` column,
+    collected: the one aggregate ``hub_degree_threshold`` and the
+    salting probe read."""
+    hist = deg.groupBy("deg").agg(F.sum("deg").cast("long").alias("s")).collect()
+    return [(int(r["deg"]), int(r["s"])) for r in hist]
+
+
+def _degree_threshold(hist: list[tuple[int, int]], deg_ratio: float) -> int | None:
+    """``hub_degree_threshold`` over a collected ``_degree_histogram``."""
     if not hist:
         return None
-    total = sum(r["s"] for r in hist)
-    want = float(total) * deg_ratio
+    want = float(sum(s for _, s in hist)) * deg_ratio
     acc = 0
-    for r in sorted(hist, key=lambda r: -r["deg"]):
-        acc += r["s"]
+    for d, s in sorted(hist, reverse=True):
+        acc += s
         if acc >= want:
-            return int(r["deg"])
-    return int(min(r["deg"] for r in hist))
+            return d
+    return min(d for d, _ in hist)
 
 
 def _bfs_levels(
@@ -201,20 +208,22 @@ def _bfs_levels(
     (v, level) leaf; the caller unpersists it once a downstream result is
     materialized.
 
-    Join strategy per level — ``ships_state(n)`` for the ``n`` vertices,
-    the same stationary-graph/ship-state layout as the CC/LPA/PageRank
-    rounds (operators/iterative.py):
+    One level body on both layouts of ``ships_state(n)`` for the ``n``
+    vertices (operators/iterative.py): the frontier joins the edges, the
+    candidates' distinct anti-joins the visited set. The layout picks
+    only the hints and the edge cache, as in the CC/LPA/PageRank rounds:
 
     - BROADCAST (while the vertex set fits the state cutover): the edge
       frame is cached ONCE and each level broadcast-joins the frontier
       into it and broadcast-anti-joins the visited set — the 100-TB edge
       object is never exchanged per round; only the candidate frontier
       (bounded by one level's reach) shuffles for its distinct.
-    - SHUFFLE (above the cutover): the original frontier⨝edges hash join
-      — each level exchanges the frontier AND the edge frame; correct at
-      any state size, the fallback shape."""
+    - SHUFFLE (above the cutover): no hint and no cache — each level
+      exchanges the frontier AND the edge frame; correct at any state
+      size."""
     spark = edges.sparkSession
     broadcast_state = ships_state(n)
+    hint = F.broadcast if broadcast_state else (lambda df: df)
     ej = edges.select("src", "dst")
     # an already-cached input needs no second cache copy — the per-level
     # joins read the caller's cache through the cheap projection
@@ -235,26 +244,17 @@ def _bfs_levels(
     # instead of a separate isEmpty job. 5 jobs/level → 3 (r6); 4 as counted now.
     n_prev, obs = 1, None  # visited rows (the root row); the round's count
 
-    def step(levels: DataFrame, rnd: int, cache) -> DataFrame:
+    def step(levels: DataFrame, rnd: int) -> DataFrame:
         nonlocal obs
-        frontier = levels.where(F.col("level") == rnd)
-        if broadcast_state:
-            nxt = (
-                ej.join(
-                    F.broadcast(frontier.select(F.col("v").alias("src"))),
-                    "src",
-                )
-                .select(F.col("dst").alias("v"))
-                .distinct()
-                .join(F.broadcast(levels.select("v")), "v", "left_anti")
-            )
-        else:
-            nxt = (
-                frontier.join(ej.withColumnRenamed("src", "v"), "v")
-                .select(F.col("dst").alias("v"))
-                .distinct()
-                .join(levels, "v", "left_anti")
-            )
+        frontier = levels.where(F.col("level") == rnd).select(
+            F.col("v").alias("src")
+        )
+        nxt = (
+            ej.join(hint(frontier), "src")
+            .select(F.col("dst").alias("v"))
+            .distinct()
+            .join(hint(levels.select("v")), "v", "left_anti")
+        )
         obs = Observation()
         return levels.unionByName(nxt.withColumn("level", F.lit(rnd + 1))).observe(
             obs, F.count(F.lit(1)).alias("n")

@@ -19,7 +19,7 @@ min-label CC, label propagation, star contraction, HITS (one round per
 half-step) and the BFS levels of the BFS orderings. The engines supply a
 lazy round body and an optional stop test, and the driver restores,
 materializes or commits every round, releases the superseded leaf and
-the round's transient caches, and counts rounds; ``check_round_args``
+a staged round, and counts rounds; ``check_round_args``
 rejects a misconfigured run before its first job. The reference's shape
 is the same: build the index once, then one plain loop over it
 (src/tc.cpp:28-29).
@@ -197,7 +197,7 @@ def check_round_args(
     raise ValueError(f"{op}: {name} must be {want}, got {value!r}")
 
 
-Step = Callable[[DataFrame, int, Callable[[DataFrame], DataFrame]], DataFrame]
+Step = Callable[[DataFrame, int], DataFrame]
 StopTest = Callable[[DataFrame, DataFrame], tuple[bool, dict[str, Any]]]
 
 
@@ -213,9 +213,8 @@ def run_rounds(
     has been through ``max_rounds`` rounds; returns (state, rounds,
     converged, the metrics of each round run by this call).
 
-    ``step(state, round, cache)`` builds the next state lazily; a frame
-    the round reads twice goes through ``cache`` (a persist), released
-    when the round ends, on every exit path. ``stop(prev, new)`` returns
+    ``step(state, round)`` builds the next state lazily. ``stop(prev,
+    new)`` returns
     (done, metrics), and the round records both, done as ``converged``;
     ``record`` holds metrics every round records.
 
@@ -240,18 +239,13 @@ def run_rounds(
     history: list[dict[str, Any]] = []
     leaf: DataFrame | None = None  # this call's latest materialized round
     while not converged and rounds < max_rounds:
-        transient: list[DataFrame] = []
-
-        def cache(df: DataFrame) -> DataFrame:
-            transient.append(df.persist())
-            return df
-
+        staged: DataFrame | None = None
         try:
-            new = step(state, rounds, cache)
+            new = step(state, rounds)
             if checkpointer is None:
                 new = new.localCheckpoint(eager=True)
             elif stop is not None:
-                new = cache(new)
+                staged = new = new.persist()
             metrics = dict(record or {})
             if stop is not None:
                 converged, found = stop(state, new)
@@ -259,8 +253,8 @@ def run_rounds(
             if checkpointer is not None:
                 new = checkpointer.commit(new, rounds, metrics)
         finally:
-            for df in transient:
-                df.unpersist()
+            if staged is not None:
+                staged.unpersist()
         if leaf is not None:
             leaf.unpersist()  # a no-op on a committed round's read-back
         state = leaf = new

@@ -70,20 +70,22 @@ def decide_hub_salting(
     probe for free: below SALT_MIN_ROWS no aggregate even runs."""
     if total_rows is not None and total_rows < SALT_MIN_ROWS:
         return None
-    from graphsetintersection_spark.operators.relabel import hub_degree_threshold
+    from graphsetintersection_spark.operators.relabel import (
+        _degree_histogram,
+        _degree_threshold,
+    )
 
     key_deg = df.groupBy(key).agg(F.count("*").alias("deg"))
-    row = key_deg.agg(
-        F.max("deg").alias("mx"),
-        F.avg("deg").alias("av"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    if not row["n"]:
+    # one collected histogram serves both the skew test and the threshold
+    hist = _degree_histogram(key_deg)
+    if not hist:
         return None
+    total = sum(s for _, s in hist)
+    av = total / sum(s // d for d, s in hist)
     if total_rows is None:
-        total_rows = float(row["n"]) * float(row["av"] or 0.0)
-    ratio = hub_split_ratio(total_rows, row["mx"], row["av"])
-    t = None if ratio is None else hub_degree_threshold(key_deg, ratio)
+        total_rows = total
+    ratio = hub_split_ratio(total_rows, max(d for d, _ in hist), av)
+    t = None if ratio is None else _degree_threshold(hist, ratio)
     if t is None:
         return None
     hub_keys = key_deg.where(F.col("deg") >= t).select(
@@ -102,29 +104,33 @@ def mark_hubs(df: DataFrame, key: str, plan: HubSaltPlan) -> DataFrame:
 
 def two_stage_agg(
     df: DataFrame,
-    keys: list[str],
-    first_agg: Column,
-    second_agg: Callable[[Column], Column],
+    keys: list,
+    aggs: dict[str, tuple[Column, Callable[[Column], Column]]],
     salt_from: str,
-    salts: int,
-    out_col: str = "_agg",
+    plan: HubSaltPlan | None,
 ) -> DataFrame:
-    """Salted two-stage aggregation over a frame carrying a ``_hub`` flag.
+    """The one aggregation of an iterative round: ``aggs`` maps each output
+    column to its (stage-1 aggregate, combining function) pair, e.g.
+    ``(F.sum(x), F.sum)`` for sums and counts, ``(F.min(x), F.min)``.
 
-    Hub rows are pre-aggregated under ``salts`` deterministic sub-keys
-    (hashed from ``salt_from``) so no single reducer combines a whole hub
-    alone; stage 2 merges ≤ ``salts`` partials per hub. Non-hub rows keep
-    salt 0 — one stage-1 row per key, stage 2 is a near-no-op for them.
-
-    ``first_agg`` runs in stage 1; ``second_agg`` is the combining function
-    (e.g. ``F.sum`` for sum/count partials, ``F.min`` for min)."""
-    stage1 = df.groupBy(
-        *keys,
-        F.when(
-            F.col("_hub"), F.pmod(F.xxhash64(salt_from), F.lit(salts))
-        ).otherwise(F.lit(0)).alias("_salt"),
-    ).agg(first_agg.alias("_c"))
-    return stage1.groupBy(*keys).agg(second_agg(F.col("_c")).alias(out_col))
+    With no ``plan`` it is one ``groupBy(keys)`` of the stage-1
+    aggregates. With one, ``df`` carries a ``_hub`` flag (``mark_hubs``)
+    and hub rows are pre-aggregated under ``plan.salts`` deterministic
+    sub-keys (hashed from ``salt_from``), so no single reducer combines a
+    whole hub alone; stage 2 combines ≤ ``plan.salts`` partials per hub.
+    Non-hub rows keep salt 0 — one stage-1 row per key, so stage 2 is a
+    near-no-op for them. Every aggregate rides through the salts, so a
+    round's carried columns take the same call."""
+    first = [agg.alias(out) for out, (agg, _) in aggs.items()]
+    if plan is None:
+        return df.groupBy(*keys).agg(*first)
+    salt = F.when(
+        F.col("_hub"), F.pmod(F.xxhash64(salt_from), F.lit(plan.salts))
+    ).otherwise(F.lit(0))
+    stage1 = df.groupBy(*keys, salt.alias("_salt")).agg(*first)
+    return stage1.groupBy(*stage1.columns[: len(keys)]).agg(
+        *[combine(F.col(out)).alias(out) for out, (_, combine) in aggs.items()]
+    )
 
 
 def content_signature(df: DataFrame, *cols: str) -> tuple[int, int]:

@@ -97,8 +97,8 @@ def test_degeneracy_distributed_releases_caches_when_a_wave_fails(
     spark, monkeypatch
 ):
     """A peel wave that raises (here the third localCheckpoint: the first
-    wave's peel set, taken while that wave's degree frame is persisted)
-    leaves no CacheManager entry behind."""
+    wave's (v, wave) frame, taken while that wave's degree frame is
+    persisted) leaves no CacheManager entry behind."""
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "src long, dst long"
     )
@@ -132,6 +132,51 @@ def test_degeneracy_distributed_round_cap(spark):
     assert sorted(r["rank"] for r in rows) == list(range(11))
     got = _collect_cliques(maximal_cliques(df, order=order))
     assert got == python_bk(path)
+
+
+def _wave_order(pairs):
+    """Rank of each vertex under simultaneous min-degree peeling, ordered
+    by (wave, v): the order ``degeneracy_order_distributed`` defines."""
+    adj = {}
+    for e in undirected_simple(pairs):
+        u, v = tuple(e)
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    remaining, wave_of, wave = set(adj), {}, 0
+    while remaining:
+        deg = {v: len(adj[v] & remaining) for v in remaining}
+        low = min(deg.values())
+        for v in [v for v in remaining if deg[v] == low]:
+            wave_of[v] = wave
+            remaining.discard(v)
+        wave += 1
+    ranked = sorted(adj, key=lambda v: (wave_of[v], v))
+    return {v: i for i, v in enumerate(ranked)}
+
+
+def test_degeneracy_distributed_plan_does_not_grow_with_waves(spark, monkeypatch):
+    """A path peels its two ends a wave, so 400 vertices take 200 waves.
+    The order is the (wave, v) ranking, and the frame handed to the final
+    ranking has the same plan size as a 5-wave path's: each vertex's wave
+    rides on one checkpointed frame, not on a union of one frame per
+    wave."""
+    from graphsetintersection_spark.plans import assign
+
+    real = assign.global_order_stats
+    seen = []
+
+    def spy(df, *args, **kwargs):
+        seen.append(len(df._jdf.queryExecution().analyzed().treeString().splitlines()))
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(assign, "global_order_stats", spy)
+    for k in (10, 400):
+        path = [(i, i + 1) for i in range(k - 1)]
+        df = spark.createDataFrame(path, "src long, dst long")
+        order, degen = degeneracy_order_distributed(df)
+        assert degen == 1
+        assert {r["v"]: r["rank"] for r in order.collect()} == _wave_order(path)
+    assert seen[0] == seen[1]
 
 
 def test_cliques_hub_split_matches_unsplit(spark):

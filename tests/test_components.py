@@ -171,7 +171,7 @@ def test_minlabel_round_plan_is_join_plus_aggregate(spark):
     pairs = [(u, v) for u, v in random_graph(60, 300, seed=13) if u != v]
     df = spark.createDataFrame(pairs, "src long, dst long")
     prep = prepare_undirected(df)
-    assert prep.broadcast_labels
+    assert prep.broadcast
 
     comp = prep.verts.select("v", F.col("v").alias("component"))
     r = cc_minlabel_round(prep, comp)

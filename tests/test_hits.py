@@ -111,7 +111,9 @@ def test_hits_round_job_counts(spark):
     nor the final normalized view runs a norm aggregate. Measured on this
     graph at 4 local cores, counting the result's count: 35 jobs at
     max_iter=2 and 67 at max_iter=6 with the norm as an aggregate and a
-    1-row broadcast per view; 25 and 41 now."""
+    1-row broadcast per view; 25 and 41 with the norm observed; 21 and 37
+    now that the first two half-steps build the two edge caches instead
+    of a count of each."""
     df = spark.createDataFrame(random_graph(200, 1500, seed=31), "src long, dst long")
 
     def jobs(max_iter):  # 200 vertices: the broadcast layout
@@ -119,8 +121,8 @@ def test_hits_round_job_counts(spark):
             spark, lambda: hits(df, max_iter=max_iter, tol=None).scores.count()
         )[1]
 
-    assert jobs(2) == 25
-    assert jobs(6) == 41
+    assert jobs(2) == 21
+    assert jobs(6) == 37
 
 
 def test_hits_first_delta_from_normalized_uniform(spark, tiny_graph):
@@ -133,3 +135,23 @@ def test_hits_first_delta_from_normalized_uniform(spark, tiny_graph):
     expected = max(abs(h - h0) for h in hub1.values())
     assert len(res.deltas) == 2
     assert res.deltas[0] == pytest.approx(expected, abs=1e-12)
+
+
+def test_hits_shuffle_half_step_job_count(spark):
+    """A shuffle-layout half-step has the broadcast half-step's shape, 3
+    Spark jobs: the score vector, carried columns included, exchanged
+    into the sort-merge join against the sorted cache, the aggregation's
+    exchange, and the leaf's localCheckpoint. The half-step it replaced
+    aggregated the edges alone and left-joined the result onto the score
+    view: 5 jobs a half-step."""
+    df = spark.createDataFrame(random_graph(200, 1500, seed=31), "src long, dst long")
+
+    def jobs(max_iter):
+        with forced_route(shuffle=True) as route:
+            used = jobs_run(
+                spark, lambda: hits(df, max_iter=max_iter, tol=None).scores.count()
+            )[1]
+        assert route.shuffled
+        return used
+
+    assert jobs(3) - jobs(1) == 4 * 3

@@ -152,7 +152,6 @@ PARAMETERS = {
         "drop_nulls_and_loops": "edges",
         "canonicalize": "edges",
         "symmetrize": "edges",
-        "symmetrize_partitioned": "edges self_pairs key",
         "orient": "edges",
         "degrees": "edges",
         "vertices": "edges",
@@ -162,9 +161,10 @@ PARAMETERS = {
     },
     "operators.iterative": {
         "ships_state": "n",
-        "PreparedUnd.unpersist": "",
+        "PreparedGraph.unpersist": "",
+        "stationary_edges": "edges verts n aggs",
         "prepare_undirected": "edges",
-        "state_join": "prep labels",
+        "state_join": "prep state",
     },
     "operators.labelprop": {
         "lpa_round": "prep labels",
@@ -179,7 +179,6 @@ PARAMETERS = {
         "personalized_pagerank": (
             "edges seeds alpha max_iter tol weight_col checkpointer"
         ),
-        "PreparedDFGraph.unpersist": "",
         "pagerank_df_prepare": "edges",
         "pagerank_df_iterate": "prep alpha max_iter tol checkpointer teleport",
     },
@@ -230,7 +229,7 @@ PARAMETERS = {
         "hub_split_ratio": "rows mx av",
         "decide_hub_salting": "df key total_rows",
         "mark_hubs": "df key plan",
-        "two_stage_agg": "df keys first_agg second_agg salt_from salts out_col",
+        "two_stage_agg": "df keys aggs salt_from plan",
         "content_signature": "df *cols",
         "signature_stop": "cols metrics",
     },

@@ -509,3 +509,21 @@ def test_pagerank_broadcast_round_job_count(spark):
     one = jobs_run(spark, lambda: pagerank(df, max_iter=1, tol=None))[1]
     three = jobs_run(spark, lambda: pagerank(df, max_iter=3, tol=None))[1]
     assert three - one == 4
+
+
+def test_pagerank_shuffle_round_job_count(spark):
+    """A shuffle-layout round has the broadcast round's shape, 3 Spark
+    jobs: the rank vector (carrying out_deg and _dang) exchanged into the
+    sort-merge join, the dst aggregation's exchange, and the leaf's
+    localCheckpoint, which fills the observed dangling mass. The round it
+    replaced also cached its contributions, cross-joined 1 − Σcontrib and
+    left-joined the vertex set: 8 jobs a round."""
+    df = spark.createDataFrame(random_graph(200, 1500, seed=31), "src long, dst long")
+
+    def jobs(max_iter):
+        with forced_route(shuffle=True) as route:
+            used = jobs_run(spark, lambda: pagerank(df, max_iter=max_iter, tol=None))[1]
+        assert route.shuffled
+        return used
+
+    assert jobs(3) - jobs(1) == 2 * 3
